@@ -5,35 +5,37 @@
     {"metric": "suite_wall_sec", "value": N, "unit": "sec",
      "queries": {name: sec, ...}, "sf": 0.1}
 
+It measures and records; it does not judge. Each row gets its warm wall
+time, and the Spark jobs and stages its last warm pass launched, counted
+by DAG-scheduler id range (so jobs submitted from pool threads count too).
+The counts are deterministic, so they are the cross-run signal: the
+artifact lists the rows whose counts differ from the committed
+BENCH_DETAIL.md. Wall times are host-dependent and are reported raw.
+
 Execution is forced with the ``noop`` sink so every column is actually
 computed (a bare ``count()`` would let Catalyst prune the scored columns).
 
 Measurement protocol: one COLD pass over the whole suite (pays plan/codegen
 compilation, reported in aggregate as ``cold_first_run_sec``), then THREE
-timed passes; each query reports the MEDIAN of its three warm runs (r4's
-min-of-2 swung 3× round-over-round on unchanged code — the median absorbs
-one outlier in either direction). Full passes rather than back-to-back
-repeats so a transient load/GC spike can't hit every measurement of the
-same query, and a JVM GC is forced between passes so localCheckpoint /
-shuffle blocks released by the previous pass can't bleed GC pressure into
-the next (the suite grew 60→68 queries in r4 and warm times drifted
-~1.3-1.5× uniformly — exactly the shared-JVM-pressure signature). The warm
-number is the steady state a resident engine delivers — the
-apples-to-apples comparison against the reference's resident in-memory
-service.
+timed passes; each row reports the MEDIAN of its three warm runs, which
+absorbs one outlier in either direction. Full passes rather than
+back-to-back repeats, so a transient load/GC spike cannot hit every
+measurement of one query, and a JVM GC is forced between passes so blocks
+released by the previous pass cannot bleed GC pressure into the next.
 
-Index-backed searches (lsh/ivf) time the SEARCH path; their build cost is
-reported separately as ``lsh_build``/``ivf_build`` — at deployment scale
-builds are periodic batch jobs, searches are the hot path. The ANN query
-vector is drawn FROM the corpus (find-similar-to-this-item), so
-``recall_at_10`` is measured where recall is meaningful — a random
-Gaussian query has no true neighbors in the data.
+Index-backed searches (lsh/ivf/pq) time the SEARCH path; their build cost
+is reported separately as ``lsh_build``/``ivf_build``/``pq_build``, since
+builds are periodic batch jobs and searches are the hot path. The ANN
+query vector is drawn FROM the corpus (find-similar-to-this-item), so
+``recall_at_10`` is measured where recall is meaningful; a random Gaussian
+query has no true neighbors in the data.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
@@ -41,6 +43,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
+from perfbench.sparkcount import SparkCounter
 from vector_db_api_spark import suite
 from vector_db_api_spark.session import get_spark
 
@@ -58,9 +61,9 @@ HEADLINE = [
     "ngram_jaccard_pairs",
     "simhash",
     "exact_duplicates",
-    # r12: cross-document duplicated-span removal (substring dedup)
+    # cross-document duplicated-span removal (substring dedup)
     "doc_span_dedup",
-    # r13: CCNet-style line-level boilerplate removal
+    # CCNet-style line-level boilerplate removal
     "doc_line_dedup",
     "embedding_neardup",
     "embedding_neardup_np",
@@ -98,11 +101,11 @@ HEADLINE = [
     "events_gapfill",
     # decontamination / repetition / lexical+hybrid retrieval
     "doc_decontaminate",
-    # r13: the embedding form (paraphrase leaks; broadcast-NLJ eval side)
-    # — fold oracle twin + Arrow/BLAS production twin
+    # the embedding form (paraphrase leaks; broadcast-NLJ eval side):
+    # fold oracle twin + Arrow/BLAS production twin
     "doc_semantic_decontaminate",
     "doc_semantic_decontaminate_np",
-    # r14: the cell-blocked production path for large eval sides
+    # the cell-blocked production path for large eval sides
     # (fold oracle twin + probe-and-score-fused BLAS twin)
     "doc_semantic_decontaminate_blocked",
     "doc_semantic_decontaminate_blocked_np",
@@ -110,8 +113,8 @@ HEADLINE = [
     "doc_repetition_np",
     "doc_bm25",
     "doc_hybrid_rrf",
-    # DSIR data selection (r8): fit + score + top-k over the pool;
-    # _fast = the production plain-SUM scoring twin (r8 verdict #4)
+    # DSIR data selection: fit + score + top-k over the pool;
+    # _fast = the plain-SUM scoring twin
     "doc_dsir_select",
     "doc_dsir_select_fast",
     # chunking / span overlap / pii / layout / profile
@@ -124,8 +127,8 @@ HEADLINE = [
     "corpus_vocabulary",
     "doc_lm_nll",
     "doc_lm_nll_join",
-    # r12: CCNet perplexity buckets (exact-NTILE oracle twin benched;
-    # the approx production twin is pytest-pinned plan-only)
+    # CCNet perplexity buckets (the exact-NTILE oracle twin; the approx
+    # production twin is pinned plan-only in pytest)
     "doc_ccnet_buckets",
     "multimodal_embed",
     "doc_leakage_split",
@@ -135,976 +138,117 @@ HEADLINE = [
     "crud_upsert",
 ]
 
+# the scale the committed BENCH_DETAIL.md is measured at; a run at any
+# other sf writes BENCH_SF{sf}.md with a raw scaling table instead
+CANONICAL_SF = 0.1
+
 
 def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _cpu_baseline() -> dict[str, float]:
-    """Fixed-work CPU probe, independent of Spark: lets rounds NORMALIZE
-    query times across machines. Diagnosed in r5: fresh-session single-query
-    times were already 1.5-2× r3's records before any suite pressure — the
-    per-round container/host speed varies, so absolute seconds are only
-    comparable through this baseline (see BENCH_DETAIL.md)."""
-    import numpy as np
-
-    a = np.random.default_rng(0).standard_normal((1500, 1500))
-    t0 = time.time()
-    for _ in range(3):
-        a @ a
-    blas = time.time() - t0
-    t0 = time.time()
-    s = 0
-    for i in range(2_000_000):
-        s += i * i
-    return {
-        "blas_matmul_sec": round(blas, 3),
-        "python_loop_sec": round(time.time() - t0, 3),
-    }
-
-
-def _jvm_probe(spark) -> float:
-    """Fixed-work JVM/Spark probe (VERDICT r7 #4): a constant range-sum
-    (2e8 rows through whole-stage codegen) plus one fixed 32-partition
-    shuffle + groupBy, median of 3 after one warmup run. ``python_loop_sec``
-    measures only single-thread interpreter speed and r7 proved it can
-    move OPPOSITE to JVM/container throughput (probe got faster while
-    every Spark wall time drifted +15-30%); this probe exercises the same
-    executor threads, codegen, and shuffle machinery the suite does, so
-    rounds that record it can adjudicate "machine or plan?" on the
-    component that actually dominates wall time. Recorded r8+; cross-round
-    jvm-normalized ratios appear in the delta table once both sides of a
-    comparison carry the probe."""
-
-    def once() -> float:
-        t0 = time.time()
-        spark.range(200_000_000).selectExpr("sum(id)").collect()
-        (
-            spark.range(2_000_000)
-            .repartition(32, "id")
-            .selectExpr("id % 1024 AS k", "id AS v")
-            .groupBy("k")
-            .sum("v")
-            .collect()
-        )
-        return time.time() - t0
-
-    once()  # warm codegen/JIT for these exact plans
-    return round(sorted(once() for _ in range(3))[1], 3)
-
-
-def _norm_probe_jvm(cb) -> float | None:
-    """JVM-side normalizer (``jvm_fixed_work_sec``), when the record has
-    one — only r8+ records do."""
-    if isinstance(cb, dict) and cb.get("jvm_fixed_work_sec"):
-        return float(cb["jvm_fixed_work_sec"])
-    return None
-
-
-def _norm_probe(cb) -> float | None:
-    """The cross-round normalizer from a ``cpu_baseline`` dict:
-    ``python_loop_sec`` (single-thread interpreter speed), ONLY.
-
-    r6 showed ``blas_matmul_sec`` can swing 4× between containers purely
-    from BLAS threading configuration while the python probe AND the raw
-    JVM suite wall stay ~flat — normalizing by blas manufactures uniform
-    fake "regressions". There is deliberately NO blas fallback: mixing
-    sec/python and sec/blas units in one best-prior comparison would
-    re-create the same artifact (both probes shipped together in r5, so a
-    blas-only record does not exist; a record without the python probe
-    simply contributes raw-only rows)."""
-    if not isinstance(cb, dict):
-        return None
-    if cb.get("python_loop_sec"):
-        return float(cb["python_loop_sec"])
-    return None
-
-
-# bench-query → the tests/test_plan_shapes.py test that freezes its physical
-# plan shape. Consumed by the machine-written flag adjudication (r9 verdict
-# #1): a flagged query whose plan is pinned by a green test cannot be a
-# silent plan regression — the excess over the machine band is runtime
-# variance or a within-plan data change, and the artifact says which test to
-# re-check. Conservative by design: only entries whose bench thunk runs the
-# EXACT pinned plan are listed; anything else falls through to NEEDS-HUMAN
-# (tests/test_bench_delta.py asserts every value here names a real test).
-PLAN_PINS = {
-    "knn_cosine_top10": "test_knn_single_is_take_ordered_no_shuffle",
-    "knn_batch_top5": "test_knn_batch_partial_limit_before_shuffle",
-    "search_e2e": "test_hydration_join_broadcasts",
-    "exact_duplicates": "test_exact_dedup_partial_aggregates",
-    "lsh_search": "test_lsh_selfcontained_probe_has_no_corpus_join",
-    "lsh_search_mp1": "test_lsh_selfcontained_probe_has_no_corpus_join",
-    "lsh_search_batch32": "test_batch_ann_plans_broadcast_probes_and_partial_limit",
-    "ivf_search": "test_ivf_flat_probe_has_no_corpus_join",
-    "ivf_search_np8": "test_ivf_flat_probe_has_no_corpus_join",
-    "ivf_search_batch32": "test_batch_ann_plans_broadcast_probes_and_partial_limit",
-    "knn_self_join_ivf": "test_batch_ann_plans_broadcast_probes_and_partial_limit",
-    "knn_self_join_ivf_sym": "test_ivf_self_join_plan_is_equi_join_no_cartesian",
-    "pq_search": "test_pq_search_candidate_selection_is_take_ordered",
-    "pq_search_batch32": "test_pq_search_candidate_selection_is_take_ordered",
-    "ivfpq_search": "test_ivfpq_search_cells_prunes_codes_and_keeps_take_ordered_tail",
-    "knn_self_join_np": "test_knn_batch_numpy_partial_topk_single_exchange",
-    # the cached route dispatches the same exact plan on this corpus
-    # (random regime -> exact), with the probe skipped
-    "knn_self_join_auto_cached": "test_knn_batch_numpy_partial_topk_single_exchange",
-    "doc_lm_nll": "test_doc_nll_literal_scoring_is_zero_shuffle_pure_expressions",
-    "doc_temperature_sample": "test_temperature_sample_is_windowed_no_join",
-    "doc_packing": "test_doc_packing_sharded_window_no_global_sort",
-    "embedding_neardup_np":
-        "test_embedding_neardup_np_groups_blocks_no_cross_join",
-    "pq_build": "test_pq_encode_fuses_with_scan_no_shuffle",
-    "rel_pricing_summary":
-        "test_rel_pricing_summary_partial_agg_single_exchange",
-    "events_first_seen":
-        "test_events_first_seen_partial_group_limit_before_shuffle",
-    "events_asof": "test_events_asof_is_union_window_no_join",
-    "doc_sample_hash": "test_doc_sample_hash_single_stage_no_shuffle",
-    "crud_upsert": "test_upsert_is_equi_joins_and_union_no_cartesian",
-    "simhash_np": "test_simhash_kernel_is_shuffle_free",
-    "multimodal_embed": "test_embed_texts_fuses_with_scan_no_shuffle",
-    "doc_decontaminate": "test_decontaminate_broadcasts_benchmark",
-    "doc_bm25": "test_bm25_scores_single_scan_no_join",
-    "doc_repetition": "test_repetition_stats_two_stacked_aggs_one_wide_shuffle",
-    "doc_repetition_np": "test_repetition_kernel_is_shuffle_free",
-    "span_overlap_pairs": "test_span_overlap_explodes_materialized_fps_not_expression",
-    "doc_lm_nll_join": "test_doc_nll_join_broadcasts_model_one_group_shuffle",
-    "events_gapfill": "test_gapfill_numeric_grid_two_shuffles",
-    "doc_leakage_split": "test_leakage_split_label_join_is_unhinted",
-    "semdedup_drop_np": "test_semdedup_pair_join_is_equi_keyed_on_cell",
-    "semdedup_drop_np_hotcell": "test_semdedup_pair_join_is_equi_keyed_on_cell",
-    "embedding_neardup_mp": "test_multiprobe_neardup_join_is_equi_keyed_on_cell",
-    "embedding_neardup_mp_np": "test_multiprobe_neardup_join_is_equi_keyed_on_cell",
-    "events_distinct_kmv": "test_kmv_limits_per_partition_before_shuffle",
-    "events_value_histogram": "test_histogram_two_scans_no_sort",
-    "doc_dsir_select": "test_dsir_scoring_broadcasts_model_and_takes_ordered_topk",
-    "doc_dsir_select_fast": "test_dsir_scoring_broadcasts_model_and_takes_ordered_topk",
-    # r13 verdict #4: the four r13 NEEDS-HUMAN flags get shape pins so
-    # future regens machine-classify them
-    "knn_quantized_top10": "test_knn_quantized_two_stage_scan_then_semi_rerank",
-    "embedding_neardup": "test_embedding_neardup_blocked_join_is_equi_keyed_no_cartesian",
-    "events_interval_join": "test_interval_join_is_binned_equi_join_no_nested_loop",
-    "ivf_build": "test_ivf_build_assign_is_single_scan_no_shuffle",
-    # r14: blocked semantic decontamination (cell equi-join / fused kernel)
-    "doc_semantic_decontaminate_blocked":
-        "test_semantic_contamination_blocked_plan_broadcast_hash_no_corpus_shuffle",
-    "doc_semantic_decontaminate_blocked_np":
-        "test_semantic_contamination_blocked_np_plan_is_fused_single_pass",
-}
-
-# a machine band estimated from fewer shared queries than this is noise —
-# below it the adjudicator refuses to classify a flag as band-member
-_BAND_MIN_SAMPLE = 8
-
-# bench queries whose hot path runs in PYTHON workers (Arrow-batched
-# pandas_udf / mapInPandas / numpy kernels), so their wall time tracks the
-# interpreter probe (python_loop_sec), not the JVM probe. The r10 round
-# proved the need: ivfpq_search / knn_quantized_top10 / knn_batch_numpy_top5
-# flagged 1.57-1.78x on the jvm axis and needed HUMAN adjudication, while
-# the python probe had drifted 1.26x — the machine verdict was simply
-# normalizing on the wrong axis (r10 verdict #8). Classified here →
-# adjudicated against the python band automatically.
-PYTHON_AXIS_QUERIES = frozenset({
-    "knn_batch_numpy_top5", "knn_quantized_top10", "knn_self_join_np",
-    "knn_self_join_auto", "knn_self_join_auto_cached",
-    "doc_semantic_decontaminate_np",
-    "doc_semantic_decontaminate_blocked_np",
-    "pq_build", "pq_search", "pq_search_batch32", "ivfpq_search",
-    "ivf_search_np8", "embedding_neardup_np", "embedding_neardup_mp_np",
-    "semdedup_drop_np", "semdedup_drop_np_hotcell", "doc_winnowing_np",
-    "simhash_np", "doc_repetition_np", "multimodal_embed",
-})
-
-# the scale the cross-round artifact chain (BENCH_DETAIL.md, BENCH_r*.json
-# priors) is measured at; runs at any other sf write their own artifact and
-# a SCALING table instead (time ratios vs the canonical run, compared to
-# the data growth) — cross-sf "regressions" against sf0.1 priors would all
-# be flags and all be meaningless
-CANONICAL_SF = 0.1
-
-
-def _scaling_section(here: str, timings: dict[str, float],
-                     sf_val: float | str,
-                     cpu_baseline: dict | None = None) -> str:
-    """Markdown scaling table for a non-canonical sf run (r9 verdict #2):
-    per-query wall vs the committed canonical BENCH_DETAIL.md, read against
-    the data growth factor. Machine verdicts: ``scales`` (time grew no more
-    than 1.2x the data), ``sub-linear`` (grew less than half the data
-    growth — index probes, top-k, broadcast paths), ``SUPER-LINEAR`` (grew
-    >1.2x the data — needs a named cause before the scale claim stands).
-
-    Time ratios are machine-NORMALIZED (r10 advice #3): both artifacts
-    carry ``cpu_baseline`` probes and per-round host speed swings 1.5-2x,
-    so raw ratios on a slower host would inflate SUPER-LINEAR verdicts
-    (and mask them on a faster one). The probe is chosen PER QUERY (r11
-    advice — the same axis rule the round-over-round delta adopted in
-    r10 #8): ``PYTHON_AXIS_QUERIES`` (Arrow/pandas-UDF/numpy hot paths)
-    normalize on the python interpreter probe, everything else on the
-    jvm probe, falling back to whichever the two artifacts share. A
-    downscale run (growth < 1) is annotated and exempt from SUPER-LINEAR
-    flags — per-query fixed overhead (session, plan, probe collects)
-    dominates small inputs and would misclassify as super-linear."""
+def _detail_json(body: str) -> dict | None:
+    """The JSON block of a BENCH_DETAIL.md / BENCH_SF*.md body."""
     try:
-        with open(os.path.join(here, "BENCH_DETAIL.md")) as f:
-            blob = f.read().split("```json", 1)[1].split("```", 1)[0]
-        det = json.loads(blob)
-        base_q = det.get("queries") or {}
-        base_sf = float(det.get("sf", CANONICAL_SF))
-    except (OSError, IndexError, ValueError, json.JSONDecodeError):
+        det = json.loads(body.split("```json", 1)[1].split("```", 1)[0])
+    except (IndexError, ValueError):
+        return None
+    return det if isinstance(det, dict) else None
+
+
+def _head_detail(here: str) -> dict | None:
+    """The JSON of BENCH_DETAIL.md as committed at HEAD: a working-tree
+    copy may be left over from any earlier run."""
+    try:
+        res = subprocess.run(
+            ["git", "-C", here, "show", "HEAD:BENCH_DETAIL.md"],
+            capture_output=True, text=True, timeout=30,
+        )
+    except (OSError, subprocess.SubprocessError):
+        return None
+    return _detail_json(res.stdout) if res.returncode == 0 else None
+
+
+def _counter_diff_section(prior: dict | None, detail: dict) -> str:
+    """Markdown table of the rows whose job or stage count differs from
+    ``prior`` (HEAD's detail JSON), with both counts and the raw warm
+    seconds of this run."""
+    head = "\n## Job and stage counts vs HEAD\n\n"
+    if not prior or "jobs" not in prior or "stages" not in prior:
+        return head + ("HEAD has no BENCH_DETAIL.md with job/stage counts; "
+                       "nothing to compare.\n")
+    pj, ps = prior["jobs"], prior["stages"]
+    jobs, stages = detail["jobs"], detail["stages"]
+    changed = [n for n in jobs
+               if (pj.get(n), ps.get(n)) != (jobs[n], stages[n])]
+    if not changed:
+        return head + f"All {len(jobs)} rows match HEAD's counts.\n"
+
+    def _c(v) -> str:
+        return "—" if v is None else str(v)
+
+    lines = [
+        f"{len(changed)} of {len(jobs)} rows differ from HEAD.\n",
+        "| row | jobs before | jobs after | stages before | stages after "
+        "| warm s |",
+        "|---|---|---|---|---|---|",
+    ]
+    for n in changed:
+        lines.append(
+            f"| {n} | {_c(pj.get(n))} | {jobs[n]} | {_c(ps.get(n))} "
+            f"| {stages[n]} | {detail['queries'][n]:.3f} |"
+        )
+    return head + "\n".join(lines) + "\n"
+
+
+def _scaling_section(base: dict | None, timings: dict[str, float],
+                     sf_val: float | str) -> str:
+    """Markdown table of raw warm-time ratios of a non-canonical sf run
+    against ``base`` (the canonical detail JSON), next to the data growth
+    factor. Host speed is not divided out, so a ratio means something only
+    when both runs used the same host."""
+    if not base or not base.get("queries"):
         return "\n(no canonical BENCH_DETAIL.md to scale against)\n"
+    base_q = base["queries"]
+    base_sf = float(base.get("sf", CANONICAL_SF))
     try:
         growth = float(sf_val) / base_sf
     except (TypeError, ValueError):
         return "\n(non-numeric sf; no scaling table)\n"
-    norms: dict[str, float] = {}
-    for probe_fn, axis_name in ((_norm_probe_jvm, "jvm"), (_norm_probe, "python")):
-        b, n = probe_fn(det.get("cpu_baseline")), probe_fn(cpu_baseline)
-        if b and n:
-            norms[axis_name] = n / b  # >1: this host slower than canonical
-
-    def _axis_for(name: str) -> tuple[float, str]:
-        want = "python" if name in PYTHON_AXIS_QUERIES else "jvm"
-        if want in norms:
-            return norms[want], want
-        if norms:
-            other = next(iter(norms))
-            return norms[other], other
-        return 1.0, "raw"
-
-    downscale = growth < 1
-    norm_note = ", ".join(
-        f"{a} {v:.2f}x" for a, v in sorted(norms.items())
-    ) or "unnormalized (no shared probe)"
+    rows = sorted(
+        ((now / base_q[name], name, base_q[name], now)
+         for name, now in timings.items() if base_q.get(name, 0) > 0),
+        reverse=True,
+    )
     lines = [
         f"\n## Scaling vs canonical sf{base_sf} (data growth {growth:.2f}x)\n",
-        f"Machine normalization: this host / canonical host = "
-        f"**{norm_note}**; each query normalizes on its own axis "
-        f"(python probe for PYTHON_AXIS_QUERIES, jvm otherwise); "
-        f"normalized ratio = (now / axis norm) / canonical.\n"
-        + ("\n**Downscale run (growth < 1): verdicts are informational "
-           "only** — per-query fixed overhead dominates small inputs, so "
-           "the SUPER-LINEAR classifier is disabled.\n" if downscale else ""),
-        "| query | sf{0} (s) | sf{1} (s) | raw ratio | norm ratio (axis) | verdict |".format(
-            base_sf, sf_val),
-        "|---|---|---|---|---|---|",
+        f"| query | sf{base_sf} (s) | sf{sf_val} (s) | ratio |",
+        "|---|---|---|---|",
     ]
-    supers = []
-    rows = []
-    for name, now in timings.items():
-        base = base_q.get(name)
-        if not base or base <= 0:
-            continue
-        raw = now / base
-        norm, axis = _axis_for(name)
-        r = raw / norm
-        if downscale:
-            verdict = "(downscale — informational)"
-        elif r <= growth * 0.5:
-            verdict = "sub-linear"
-        elif r <= growth * 1.2:
-            verdict = "scales"
-        else:
-            verdict = "**SUPER-LINEAR** — name a cause"
-            supers.append((r, name))
-        rows.append((r, name, base, now, raw, verdict, axis))
-    for r, name, base, now, raw, verdict, axis in sorted(rows, reverse=True):
-        lines.append(f"| {name} | {base:.2f} | {now:.2f} | {raw:.2f}x "
-                     f"| {r:.2f}x ({axis}) | {verdict} |")
-    ratios = sorted(r for r, *_ in rows)
-    if ratios:
-        lines.append(
-            f"\nMedian normalized time ratio: "
-            f"**{ratios[len(ratios) // 2]:.2f}x** over "
-            f"{len(ratios)} shared queries at {growth:.2f}x the data. "
-            f"{len(supers)} super-linear flag(s)."
-            + (" Flags: " + ", ".join(
-                f"{n} ({r:.2f}x)" for r, n in sorted(supers, reverse=True))
-               if supers else "")
-            + "\n"
-        )
-    return "\n".join(lines) + "\n"
-
-
-def _round_over_round_delta(
-    here: str,
-    timings: dict[str, float],
-    probe_now: float | None = None,
-    probe_now_jvm: float | None = None,
-) -> tuple[str, list[str]]:
-    """(markdown delta table, flagged query names) of this run vs prior
-    rounds, in BOTH raw seconds and machine-NORMALIZED units (time / that
-    round's :func:`_norm_probe` value, VERDICT r5 #4). Raw ratios detect
-    within-machine drift; normalized ratios are the cross-round signal — a
-    normalized regression >1.2× is a plan/code problem, a uniform RAW shift
-    with flat normalized ratios is just machine speed. The returned flag
-    list feeds ``main``'s stability re-run (r8 verdict #3): flagged queries
-    get extra timed passes and the table is recomputed on the merged
-    medians, so a single-run Arrow/GC spike can't publish a flag."""
-    import glob
-    import re
-
-    def _mine(data) -> tuple[dict[str, float], float | None, float | None]:
-        """(per-query warm seconds, python probe, jvm probe) from a driver
-        bench record: a top-level ``queries`` dict, else the record's
-        truncated-stdout ``tail`` — the tail's LAST line is bench.py's
-        compact headline (parseable JSON), and the tail's leading fragment
-        is the middle of the detail line's queries dict."""
-        out: dict[str, float] = {}
-        probe: float | None = _norm_probe(data.get("cpu_baseline"))
-        jprobe: float | None = _norm_probe_jvm(data.get("cpu_baseline"))
-        qs = data.get("queries")
-        if isinstance(qs, dict):
-            out.update(
-                {k: float(v) for k, v in qs.items() if isinstance(v, (int, float))}
-            )
-        tail = data.get("tail")
-        if isinstance(tail, str) and tail:
-            frag = tail.split("}", 1)[0]
-            if '"queries": {' in frag:
-                frag = frag.split('"queries": {', 1)[1]
-            for k, v in re.findall(r'"([A-Za-z0-9_]+)": ([0-9.]+)', frag):
-                out.setdefault(k, float(v))
-            last = tail.strip().rsplit("\n", 1)[-1]
-            try:
-                head = json.loads(last)
-                hq = head.get("queries") or {}
-                out.update(
-                    {k: float(v) for k, v in hq.items()
-                     if isinstance(v, (int, float))}
-                )
-                hb = _norm_probe(head.get("cpu_baseline"))
-                if hb:
-                    probe = hb
-                hj = _norm_probe_jvm(head.get("cpu_baseline"))
-                if hj:
-                    jprobe = hj
-            except (ValueError, AttributeError):
-                pass
-        return out, probe, jprobe
-
-    prior: dict[str, dict[str, float]] = {}
-    baselines: dict[str, float] = {}
-    baselines_jvm: dict[str, float] = {}
-    for path in sorted(glob.glob(os.path.join(here, "BENCH_r*.json"))):
-        m = re.search(r"BENCH_r(\d+)", path)
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, ValueError, json.JSONDecodeError):
-            continue
-        if not isinstance(data, dict):
-            continue  # valid JSON but not a record object
-        mined, probe, jprobe = _mine(data)
-        if mined:
-            rnd = f"r{int(m.group(1)) if m else '?'}"
-            prior[rnd] = mined
-            if probe:
-                baselines[rnd] = probe
-            if jprobe:
-                baselines_jvm[rnd] = jprobe
-    # the previous COMMITTED BENCH_DETAIL.md carries its full per-query
-    # dict + cpu_baseline (the driver tail holds only ~17). Mined from git
-    # (HEAD), never the working tree (r11 verdict #8): a working-tree file
-    # is whatever some prior run left behind — citing it as "best prior"
-    # made the comparison unreproducible. The row label carries the commit
-    # that last touched the file, so every best-prior cite resolves to a
-    # committed artifact.
-    try:
-        import subprocess
-
-        body = subprocess.run(
-            ["git", "-C", here, "show", "HEAD:BENCH_DETAIL.md"],
-            capture_output=True, text=True, timeout=30,
-        ).stdout
-        sha = subprocess.run(
-            ["git", "-C", here, "log", "-n1", "--format=%h", "--",
-             "BENCH_DETAIL.md"],
-            capture_output=True, text=True, timeout=30,
-        ).stdout.strip()
-        blob = body.split("```json", 1)[1].split("```", 1)[0]
-        det = json.loads(blob)
-        if not isinstance(det, dict):
-            raise ValueError("BENCH_DETAIL json block is not an object")
-        mined, probe, jprobe = _mine(det)
-        if mined and sha:
-            tag = f"detail@{sha}"
-            prior[tag] = mined
-            if probe:
-                baselines[tag] = probe
-            if jprobe:
-                baselines_jvm[tag] = jprobe
-    except (OSError, IndexError, ValueError, json.JSONDecodeError,
-            subprocess.SubprocessError):
-        pass
-    if not prior:
-        return "", []
-
-    def _prior_ok(name: str, rnd: str) -> bool:
-        """r15 verdict #7 (recorded r16): the three index-build rows were
-        timed COLD through r14 and WARM from r15 (a22d72e) — a protocol
-        change, not a code change — so pre-r15 build rows are not
-        comparable priors and are excluded from best-prior mining
-        (detail@<sha> priors are the committed r15+ BENCH_DETAIL and
-        already warm-timed)."""
-        if name not in ("lsh_build", "ivf_build", "pq_build"):
-            return True
-        m2 = re.match(r"r(\d+)$", rnd)
-        return not (m2 and int(m2.group(1)) < 15)
-
-    lines = [
-        "\n## Round-over-round delta (this run vs prior rounds)\n",
-        "Normalized unit = seconds / that round's `python_loop_sec` probe "
-        "(single-thread interpreter speed; cross-machine comparable, "
-        "available r5+; `blas_matmul_sec` was demoted in r6 after swinging "
-        "4.4x on BLAS threading while python and the raw JVM wall stayed "
-        "flat — records without the python probe contribute raw-only "
-        "rows). Raw 'best prior' spans all rounds; every prior is a "
-        "COMMITTED artifact — BENCH_r*.json or the committed "
-        "BENCH_DETAIL.md, cited as detail@<commit> (r11 verdict #8: the "
-        "working tree is never a best-prior source). The three build rows "
-        "(lsh/ivf/pq_build) changed timing protocol at r15 — cold-timed "
-        "through r14, warm-timed since — so their best-prior mining "
-        "starts at r15 (r15 verdict #7).\n",
-        "| query | now (s) | now (norm) | best prior (s) | round | raw ratio"
-        " | best prior (norm) | round | norm ratio | jvm ratio |",
-        "|---|---|---|---|---|---|---|---|---|---|",
-    ]
-    rows = []
-    for name, now in timings.items():
-        best_val, best_round = None, None
-        for rnd, qs in prior.items():
-            if not _prior_ok(name, rnd):
-                continue
-            v = qs.get(name)
-            if v is not None and v > 0 and (best_val is None or v < best_val):
-                best_val, best_round = v, rnd
-        if best_val is None:
-            continue
-        bn_val, bn_round = None, None
-        for rnd, probe in baselines.items():
-            if not _prior_ok(name, rnd):
-                continue
-            v = prior[rnd].get(name)
-            if v is not None and v > 0:
-                nv = v / probe
-                if bn_val is None or nv < bn_val:
-                    bn_val, bn_round = nv, rnd
-        # jvm-normalized best prior — only rounds that recorded the probe
-        # (r8+) participate, so the units never mix with python-loop units
-        jn_val = None
-        for rnd, jp in baselines_jvm.items():
-            if not _prior_ok(name, rnd):
-                continue
-            v = prior[rnd].get(name)
-            if v is not None and v > 0:
-                nv = v / jp
-                if jn_val is None or nv < jn_val:
-                    jn_val = nv
-        now_norm = now / probe_now if probe_now else None
-        now_jnorm = now / probe_now_jvm if probe_now_jvm else None
-        rows.append(
-            (now / best_val, name, now, now_norm, best_val, best_round,
-             bn_val, bn_round, jn_val, now_jnorm)
-        )
-    norm_regressions = []
-    flag_axis: dict[str, str] = {}
-    axis_pool: dict[str, list[float]] = {"jvm": [], "python": []}
-    for (raw_ratio, name, now, now_norm, best_val, best_round, bn_val,
-         bn_round, jn_val, now_jnorm) in sorted(rows, reverse=True):
-        nr = (now_norm / bn_val) if (now_norm and bn_val) else None
-        jr = (now_jnorm / jn_val) if (now_jnorm and jn_val) else None
-        if jr is not None:
-            axis_pool["jvm"].append(jr)
-        if nr is not None:
-            axis_pool["python"].append(nr)
-        # the jvm probe is the authoritative machine axis when both sides
-        # carry it (r7: python_loop moved OPPOSITE to JVM throughput) —
-        # EXCEPT for Python-worker-bound queries (Arrow/pandas/numpy hot
-        # paths), whose wall tracks the interpreter probe (r10 verdict #8)
-        if name in PYTHON_AXIS_QUERIES and nr is not None:
-            flag, axis = nr, "python"
-        elif jr is not None:
-            flag, axis = jr, "jvm"
-        else:
-            flag, axis = nr, "python"
-        if flag is not None and flag > 1.2:
-            norm_regressions.append((flag, name))
-            flag_axis[name] = axis
-        lines.append(
-            f"| {name} | {now:.2f} | "
-            f"{f'{now_norm:.2f}' if now_norm else '—'} | "
-            f"{best_val:.2f} | {best_round} | {raw_ratio:.2f}x | "
-            f"{f'{bn_val:.2f}' if bn_val else '—'} | {bn_round or '—'} | "
-            f"{f'{nr:.2f}x' if nr else '—'} | "
-            f"{f'{jr:.2f}x' if jr else '—'} |"
-        )
+    lines += [f"| {name} | {b:.2f} | {now:.2f} | {r:.2f}x |"
+              for r, name, b, now in rows]
     if rows:
-        ratios = sorted(r[0] for r in rows)
-        med = ratios[len(ratios) // 2]
-        nratios = sorted(
-            (r[3] / r[6]) for r in rows if r[3] and r[6]
-        )
-        med_norm = nratios[len(nratios) // 2] if nratios else None
         lines.append(
-            f"\nMedian RAW ratio vs best prior: **{med:.2f}x** over "
-            f"{len(rows)} shared queries"
-            + (
-                f"; median NORMALIZED ratio: **{med_norm:.2f}x** over "
-                f"{len(nratios)} queries with a baselined prior."
-                if med_norm is not None
-                else "."
-            )
-            + "\n"
+            f"\nMedian time ratio: **{rows[len(rows) // 2][0]:.2f}x** over "
+            f"{len(rows)} shared queries at {growth:.2f}x the data.\n"
         )
-        if norm_regressions:
-            worst = ", ".join(
-                f"{n} ({r:.2f}x)" for r, n in sorted(norm_regressions,
-                                                     reverse=True)[:10]
-            )
-            lines.append(
-                f"\n**Normalized regressions >1.2x (need a named root "
-                f"cause): {worst}**\n"
-            )
-            # machine-written per-flag adjudication (r9 verdict #1): the
-            # generator already holds everything needed to classify a flag
-            # — the suite-wide machine band (median ratio on the flag's own
-            # axis) and the plan-pin map — so emit the verdict HERE, at
-            # artifact-generation time. A regenerated BENCH_DETAIL.md can
-            # then never publish a flag without a named root-cause class,
-            # no matter who regenerates it (builder or driver).
-            band = {
-                axis: sorted(vals)[len(vals) // 2]
-                for axis, vals in axis_pool.items()
-                if len(vals) >= _BAND_MIN_SAMPLE
-            }
-            lines.append("\n### Flag adjudication (machine-written)\n")
-            lines.append(
-                "Band = the suite-wide MEDIAN ratio on the flag's own "
-                "normalization axis"
-                + (
-                    " (this run: "
-                    + ", ".join(
-                        f"{a} {v:.2f}x/{len(axis_pool[a])}q"
-                        for a, v in sorted(band.items())
-                    )
-                    + ")"
-                    if band
-                    else f" (unavailable: <{_BAND_MIN_SAMPLE} shared "
-                         "queries per axis)"
-                )
-                + ". Axis choice (r10 verdict #8): Python-worker-bound "
-                "queries (`PYTHON_AXIS_QUERIES` — Arrow/pandas-UDF/numpy "
-                "hot paths) flag and classify on the python "
-                "(interpreter-probe) band, since their wall tracks the "
-                "Python workers, not the JVM; everything else uses the jvm "
-                "probe when both rounds carry it. "
-                "Verdicts: `band-member` = within 1.2x of the band — "
-                "the query moved with the machine, covered; "
-                "`pinned-residual` = above the band but the physical plan "
-                "is frozen by the named (green) tests/test_plan_shapes.py "
-                "test, so a silent plan regression is excluded — re-examine "
-                "only if that test fails; `NEEDS-HUMAN` = no pin and above "
-                "the band — the builder must name a root cause in the "
-                "Root-cause adjudication section before commit.\n"
-            )
-            lines.append("| flag | ratio (axis) | band | over band | verdict |")
-            lines.append("|---|---|---|---|---|")
-            for r, n in sorted(norm_regressions, reverse=True):
-                axis = flag_axis[n]
-                b = band.get(axis)
-                excess = (r / b) if b else None
-                if excess is not None and excess <= 1.2:
-                    verdict = "band-member"
-                elif n in PLAN_PINS:
-                    verdict = f"pinned-residual (`{PLAN_PINS[n]}`)"
-                else:
-                    verdict = "**NEEDS-HUMAN** — name a root cause below"
-                lines.append(
-                    f"| {n} | {r:.2f}x ({axis}) | "
-                    f"{f'{b:.2f}x' if b else '—'} | "
-                    f"{f'{excess:.2f}x' if excess else '—'} | {verdict} |"
-                )
-            lines.append("")
-        if med_norm is None or not (0.83 <= (med_norm or med) <= 1.2):
-            # machine-speed note only when the distribution actually shifted
-            # (ADVICE r5: don't restate the r5 diagnosis on a ~1.0 run)
-            lines.append(
-                "\nHistorical note (diagnosed r5): per-round container/host "
-                "speed varies ~1.5-2x; a UNIFORM raw shift with flat "
-                "normalized ratios is machine speed, not a plan regression. "
-                "Compare rounds through `cpu_baseline`; within-round "
-                "comparisons (twins, plan changes) remain valid in raw "
-                "seconds.\n"
-            )
-    return (
-        "\n".join(lines) + "\n",
-        [n for _, n in sorted(norm_regressions, reverse=True)],
-    )
-
-
-# one flag row of the machine adjudication table: name, ratio, axis, band,
-# over-band, verdict — shared by the skeleton, the auto-carry eligibility
-# scan, and the machine-carry section writer
-_FLAG_ROW_RE = (
-    r"\| (\S+) \| ([\d.]+x) \((\w+)\) \| ([\d.]+x|—) \| ([\d.]+x|—) "
-    r"\| ([^|]+) \|"
-)
-
-#: auto-carry spread slack: a raw wall up to this factor above the committed
-#: 5-warm-run max still counts as in-spread (single-shot timer noise on a
-#: multi-run envelope); anything past it demands human prose.
-_SPREAD_SLACK = 1.15
-
-
-def _committed_spreads(here: str):
-    """(spreads dict, short sha) from the COMMITTED BENCH_SPREADS.json —
-    the working-tree file is ignored for the same reason best-prior mining
-    ignores it (r11 verdict #8): only a committed record is a reproducible
-    baseline. Format: {query: {"lo": s, "hi": s, "runs": [...],
-    "round": N, "sf": x}} written by tools/measure_spread.py."""
-    import subprocess
-
-    try:
-        blob = subprocess.run(
-            ["git", "-C", here, "show", "HEAD:BENCH_SPREADS.json"],
-            capture_output=True, text=True, timeout=30,
-        )
-        if blob.returncode != 0:
-            return {}, None
-        sha = subprocess.run(
-            ["git", "-C", here, "log", "-n1", "--format=%h", "--",
-             "BENCH_SPREADS.json"],
-            capture_output=True, text=True, timeout=30,
-        ).stdout.strip()
-        return json.loads(blob.stdout), sha or None
-    except Exception:
-        return {}, None
-
-
-def _pins_green(here: str, pins) -> bool:
-    """Re-run the named plan-pin tests RIGHT NOW on this tree (one pytest
-    subprocess for the whole set). Green means a silent plan regression is
-    excluded at regen time — not 'was green when someone last ran the
-    suite'. Conservative on any failure mode: non-zero exit, no tests
-    collected, pytest missing — all read as not-green."""
-    import subprocess
-    import sys
-
-    if not pins:
-        return False
-    try:
-        res = subprocess.run(
-            [sys.executable, "-m", "pytest", "tests/test_plan_shapes.py",
-             "-q", "--no-header", "-p", "no:cacheprovider",
-             "-k", " or ".join(sorted(pins))],
-            cwd=here, capture_output=True, text=True, timeout=900,
-        )
-        # exit 5 = no tests collected (a renamed pin) — NOT green
-        return res.returncode == 0 and " passed" in res.stdout
-    except Exception:
-        return False
-
-
-def _compute_auto_carry(here: str, fresh_delta_md: str, timings: dict,
-                        pins_green_fn=None) -> dict:
-    """{flag: carried-cause prose} for every flag the regen may carry
-    WITHOUT human prose (r14 verdict #2 — three rounds of STALE banners
-    whose TODOs were machine-derivable). A flag qualifies iff ALL THREE:
-
-    1. its table verdict is pinned-residual (a named plan pin exists);
-    2. that pin test re-runs GREEN on this tree, at regen time;
-    3. its raw wall is within the COMMITTED 5-warm-run spread
-       (BENCH_SPREADS.json, +``_SPREAD_SLACK`` timer slack).
-
-    band-member flags need no carry (covered by the band verdict);
-    NEEDS-HUMAN flags and any pinned flag failing 2 or 3 stay human-owned
-    — their presence forces the STALE banner + skeleton path."""
-    import re
-
-    rows = re.findall(_FLAG_ROW_RE, fresh_delta_md)
-    pinned = [name for name, *_rest, verdict in rows
-              if verdict.strip().startswith("pinned-residual")]
-    if not pinned:
-        return {}
-    spreads, sha = _committed_spreads(here)
-    eligible = []
-    for name in pinned:
-        sp = spreads.get(name)
-        raw = timings.get(name)
-        if sp and raw is not None and raw <= sp["hi"] * _SPREAD_SLACK:
-            eligible.append(name)
-    if not eligible:
-        return {}
-    pins = sorted({PLAN_PINS[n] for n in eligible if n in PLAN_PINS})
-    green = (pins_green_fn or _pins_green)(here, pins)
-    if not green:
-        return {}
-    carry = {}
-    for name in eligible:
-        sp = spreads[name]
-        carry[name] = (
-            f"CARRIED (machine): plan frozen by `{PLAN_PINS[name]}` — "
-            f"re-run GREEN on this tree at regen time; raw "
-            f"{timings[name]:.2f}s inside the committed 5-warm-run spread "
-            f"[{sp['lo']:.2f}, {sp['hi']:.2f}]s "
-            f"(r{sp.get('round', '?')}, spreads@{sha}, "
-            f"+{round((_SPREAD_SLACK - 1) * 100)}% slack); the over-band "
-            f"ratio is probe-normalization inflation, not a plan or raw "
-            f"regression."
-        )
-    return carry
-
-
-def _machine_carry_section(fresh_delta_md: str,
-                           current_round: int | None,
-                           auto_carry: dict) -> str:
-    """The adjudication section the regen writes ITSELF when every flag is
-    band-member or auto-carried — replaces the banner+skeleton cycle for
-    the case where nothing actually needs a human (r14 verdict #2). Carries
-    the fresh ``Adjudicated bands:`` line, so the committed-artifact
-    consistency test passes without a rewrite."""
-    import re
-
-    fresh = re.search(r"\(this run: ([^)]+)\)", fresh_delta_md)
-    rows = re.findall(_FLAG_ROW_RE, fresh_delta_md)
-    rn = f"r{current_round}" if current_round is not None else "r<N>"
-    lines = [
-        f"\n## Root-cause adjudication ({rn} machine carry)\n",
-        "Written BY THE REGEN: every over-band flag in the table above is "
-        "either band-member (moved with the machine) or auto-carried — "
-        "pinned-residual whose plan pin re-ran GREEN on this tree at regen "
-        "time AND whose raw wall sits inside the committed 5-warm-run "
-        "spread (BENCH_SPREADS.json). The pin excludes a silent plan "
-        "regression, the spread excludes a raw regression; what remains is "
-        "probe-normalization inflation, recorded by the band string below. "
-        "A flag failing any condition forces the stale-banner + human "
-        "rewrite path instead of this section.\n",
-    ]
-    for name, ratio, axis, band, over, verdict in rows:
-        if name in auto_carry:
-            lines.append(f"- **{name}** {ratio} ({axis} axis), band {band}, "
-                         f"over band {over}: {auto_carry[name]}")
-        else:
-            lines.append(f"- {name} {ratio} ({axis} axis): band-member — "
-                         f"moved with the machine.")
-    if fresh:
-        lines += ["", f"Adjudicated bands: {fresh.group(1).strip()}", ""]
-    return "\n".join(lines)
-
-
-def _carry_root_causes(old_body: str | None,
-                       current_round: int | None = None,
-                       fresh_delta_md: str | None = None,
-                       auto_carry: dict | None = None) -> str:
-    """The builder writes a '## Root-cause adjudication' section into
-    BENCH_DETAIL.md after analyzing a run; bench.py regenerates the file on
-    every run (including the driver's end-of-round run), so the section is
-    carried over — but a carried section adjudicates the run it was written
-    against, so it is STALE-bannered when either signal mismatches:
-
-    - the round tag in its OWN header doesn't match ``current_round`` (r8
-      advice: a stale adjudication next to fresh numbers reads as covering
-      them);
-    - (r11 verdict #1) its ``Adjudicated bands:`` line doesn't match the
-      fresh machine table's band string in ``fresh_delta_md`` — a SAME-round
-      regeneration (the driver re-runs bench after the builder's run) can
-      produce a materially different table, and the round tag alone let the
-      old prose silently claim the new numbers. The bands are the
-      adjudication's whole frame of reference, so band equality is the
-      staleness test; a prose section WITHOUT the line is treated as stale
-      whenever the fresh table adjudicates flags.
-
-    The builder's rewrite drops the banner by rewriting the whole section
-    (including a fresh ``Adjudicated bands:`` line copied from the table).
-
-    r15 (r14 verdict #2 — three consecutive rounds ended in a STALE banner
-    whose TODOs were machine-derivable): when ``auto_carry`` is provided
-    and EVERY flag in the fresh table is band-member or auto-carried
-    (see :func:`_compute_auto_carry`), the regen writes the adjudication
-    itself instead of bannering — the banner+skeleton path remains for any
-    table with a NEEDS-HUMAN flag or a pinned flag failing the pin-green /
-    in-spread conditions, with carried causes pre-filled for the flags
-    that do qualify."""
-    import re
-
-    if not old_body:
-        return ""
-    idx = old_body.find("\n## Root-cause adjudication")
-    if idx == -1:
-        return ""
-    section = old_body[idx:]
-    # drop any banner / rewrite skeleton a previous regeneration inserted
-    # (never stack them — each regen re-derives both from ITS table)
-    section = re.sub(r"\n> \*\*STALE[^\n]*\*\*\n", "", section)
-    section = re.sub(
-        r"\n<!-- adjudication-skeleton:start -->.*?"
-        r"<!-- adjudication-skeleton:end -->\n",
-        "", section, flags=re.S)
-    banner = None
-    m = re.search(r"## Root-cause adjudication \(r(\d+)", section)
-    if current_round is not None and m and int(m.group(1)) != current_round:
-        banner = (
-            f"\n> **STALE: this adjudication covers r{m.group(1)}; the "
-            f"table above is from an r{current_round} run — the r"
-            f"{current_round} builder must rewrite this section before "
-            f"its flags can be read against these numbers.**\n"
-        )
-    elif fresh_delta_md:
-        fresh = re.search(r"\(this run: ([^)]+)\)", fresh_delta_md)
-        prose = re.search(r"Adjudicated bands: ([^\n]+)", section)
-        if fresh and (not prose or prose.group(1).strip().rstrip(".")
-                      != fresh.group(1).strip()):
-            banner = (
-                f"\n> **STALE: this adjudication was written against bands "
-                f"`{prose.group(1).strip() if prose else '(none recorded)'}`"
-                f" but the regenerated table above computed `"
-                f"{fresh.group(1).strip()}` — the table changed under the "
-                f"prose; rewrite this section (and its Adjudicated bands "
-                f"line) against the new numbers.**\n"
-            )
-    if banner is not None:
-        if auto_carry is not None and fresh_delta_md:
-            rows = re.findall(_FLAG_ROW_RE, fresh_delta_md)
-            human_needed = [
-                name for name, *_r, verdict in rows
-                if verdict.strip() != "band-member" and name not in auto_carry
-            ]
-            if rows and not human_needed:
-                # nothing in the fresh table needs a human: the regen
-                # writes the adjudication itself and the cycle ends here
-                return _machine_carry_section(
-                    fresh_delta_md, current_round, auto_carry)
-        hdr_end = section.index("\n", section.index("## Root-cause"))
-        skeleton = _adjudication_skeleton(fresh_delta_md, current_round,
-                                          auto_carry=auto_carry)
-        section = (section[:hdr_end + 1] + banner + skeleton
-                   + section[hdr_end + 1:])
-    return section
-
-
-def _adjudication_skeleton(fresh_delta_md: str | None,
-                           current_round: int | None,
-                           auto_carry: dict | None = None) -> str:
-    """Machine-written rewrite skeleton emitted next to a STALE banner
-    (r12 verdict #1): per-flag rows pre-filled with axis, band, over-band
-    ratio and pin status from the fresh machine table, so a driver regen
-    leaves the next builder a fill-in, not a from-scratch rewrite. The
-    skeleton deliberately never contains the literal ``Adjudicated
-    bands: `` line — only the filled-in prose may carry it, so a skeleton
-    can never satisfy the bands-equality staleness check by itself."""
-    import re
-
-    if not fresh_delta_md:
-        return ""
-    fresh = re.search(r"\(this run: ([^)]+)\)", fresh_delta_md)
-    rows = re.findall(_FLAG_ROW_RE, fresh_delta_md)
-    if not fresh or not rows:
-        return ""
-    rn = f"r{current_round}" if current_round is not None else "r<N>"
-    lines = [
-        "\n<!-- adjudication-skeleton:start -->",
-        "",
-        f"**Machine-written rewrite skeleton** — replace this whole "
-        f"section with a fresh `## Root-cause adjudication ({rn} builder "
-        f"run)` whose `Adjudicated bands:` line reads exactly "
-        f"`{fresh.group(1).strip()}`, delete the banner and this "
-        f"skeleton, then fill the TODO causes below (protocol: 5-warm-run "
-        f"re-measure on this tree, compare steady-state raw vs the prior "
-        f"round's raw, then name settling-head / host-asymmetry / "
-        f"plan-change):",
-        "",
-    ]
-    for name, ratio, axis, band, over, verdict in rows:
-        verdict = verdict.strip()
-        if auto_carry and name in auto_carry:
-            tail = auto_carry[name]
-        elif "NEEDS-HUMAN" in verdict:
-            tail = ("**TODO: name the root cause** (no plan pin — "
-                    "a human cause is REQUIRED before commit)")
-        elif verdict.startswith("pinned-residual"):
-            pin = verdict[len("pinned-residual"):].strip() or "(pin)"
-            tail = (f"TODO: carry or restate the prior cause — plan "
-                    f"frozen by {pin}, silent plan regression excluded")
-        else:
-            tail = ("band-member — moved with the machine; no prose "
-                    "needed unless the band itself needs explaining")
-        lines.append(
-            f"- {name} {ratio} ({axis} axis), band {band}, "
-            f"over band {over}: {tail}"
-        )
-    lines += ["", "<!-- adjudication-skeleton:end -->"]
     return "\n".join(lines) + "\n"
-
-
-def _spread_mode_args():
-    """Parse ``--spread q1,q2`` from argv; None when absent (normal run)."""
-    import sys
-
-    if "--spread" in sys.argv:
-        i = sys.argv.index("--spread")
-        if i + 1 < len(sys.argv):
-            return [s for s in sys.argv[i + 1].split(",") if s]
-        return []
-    return None
-
-
-def _write_spreads(here: str, results: dict, sf, rnd) -> None:
-    """Merge 5-warm-run spreads into BENCH_SPREADS.json (working tree —
-    the builder reviews and COMMITS it; the auto-carry reads only the
-    committed blob, mirroring the best-prior rule).
-
-    Samples ACCUMULATE across measurement windows (keep the newest 15):
-    this virtualized host oscillates well past the auto-carry's 15%
-    slack between windows (suite walls 120s and 136s within one evening,
-    r15), so an envelope from a single window under-covers — the honest
-    spread is the union of every window measured at the same sf."""
-    path = os.path.join(here, "BENCH_SPREADS.json")
-    try:
-        with open(path) as f:
-            data = json.load(f)
-    except Exception:
-        data = {}
-    for name, samples in results.items():
-        prior = data.get(name)
-        if prior and prior.get("sf") == sf:
-            samples = (prior.get("runs", []) + samples)[-15:]
-        data[name] = {
-            "runs": samples,
-            "lo": min(samples),
-            "hi": max(samples),
-            "round": rnd,
-            "sf": sf,
-        }
-    with open(path, "w") as f:
-        json.dump(data, f, indent=1, sort_keys=True)
-        f.write("\n")
-
-
-def _current_round(here: str) -> int | None:
-    """The in-progress round number: max committed BENCH_r{N} + 1 (the
-    driver writes BENCH_r{N}.json only AFTER the round-N bench run)."""
-    import glob
-    import re
-
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
-        if (m := re.search(r"BENCH_r(\d+)", p))
-    ]
-    return max(rounds) + 1 if rounds else None
 
 
 def main() -> None:
     spark = get_spark("bench")
     qs = suite.queries()
+    counter = SparkCounter(spark)
+    jobs: dict[str, int] = {}
+    stages: dict[str, int] = {}
+
+    def _count(name: str, mark: tuple[int, int]) -> None:
+        j1, s1 = counter.mark()
+        jobs[name], stages[name] = j1 - mark[0], s1 - mark[1]
 
     # warm the JVM/codegen once on a trivial job so query 1 isn't charged
     # for session startup
     spark.range(1000).selectExpr("sum(id)").collect()
-    # fixed-work JVM probe BEFORE the suite touches caches — quietest
-    # point in the session, so the probe measures the machine, not the
-    # suite's memory pressure
-    jvm_probe_sec = _jvm_probe(spark)
 
     # -- build the full thunk list (headline + ANN search paths) ----------
     from vector_db_api_spark.operators.ivf import IVFIndex
@@ -1114,13 +258,11 @@ def main() -> None:
 
     emb = load_table(spark, SF_DIR, "embeddings").cache()
     emb.count()
-    # corpus-drawn ANN query: "find items similar to this one".
-    # r16 (r15 verdict #2): sort-then-limit, NOT a bare limit() — the
-    # loader's round-robin spread (r15) made limit() partition-order-
-    # dependent under AQE, which silently moved the recall_at_10 /
-    # candidate_fraction diagnostics between runs. Every query-sampling
-    # site in this file now picks by id order so two same-tree regens
-    # produce identical recall numbers (re-pinned in OPTIMIZATION_r16.md).
+    # corpus-drawn ANN query: "find items similar to this one". Sorted
+    # before limit(): the loader's round-robin spread makes a bare limit()
+    # partition-order-dependent under AQE, which would move recall_at_10 /
+    # candidate_fraction between runs. Every query-sampling site in this
+    # file picks by id order for the same reason.
     qrows = emb.orderBy("vec_id").limit(32).collect()
     qv = [float(x) for x in qrows[0]["embedding"]]
     qdf = spark.createDataFrame(
@@ -1132,35 +274,35 @@ def main() -> None:
     build: dict[str, float] = {}
     n_corpus = emb.count()
 
-    # Builds follow the same warm-once-then-time protocol as every query
-    # thunk (r15): through r14 they were timed COLD — the only cold rows
-    # in the table — so a build flag was first-touch JIT/Arrow codegen
-    # noise in three separate rounds (pq_build one-shot 3.19s vs steady
-    # 1.03-1.14s, r13; cold 1.69s vs warm 0.83-0.87s, r15), never a plan
-    # change. The cold head is still visible in cold_first_run_sec.
-    def _warm_build(make):
+    # Builds are run once warm and then timed, like every query thunk: a
+    # cold build time is mostly first-touch JIT/Arrow codegen. The cold
+    # head is still visible in cold_first_run_sec.
+    def _warm_build(name, make):
         """make() -> (model, cached_df); run once warm, discard, re-run
-        timed — train + layout + cache-materialize, end to end."""
+        timed and counted — train + layout + cache-materialize."""
         _, df = make()
         df.count()
         df.unpersist()
+        mark = counter.mark()
         t0 = time.time()
         model, df = make()
         df.count()
-        return model, df, round(time.time() - t0, 3)
+        build[name] = round(time.time() - t0, 3)
+        _count(name, mark)
+        return model, df
 
     # H auto-derived from corpus size (bounded probed-rows per table under
-    # the multiprobe-1 default) — the r2 bench's fixed H=8 was sized for
-    # sf0.01 and gave deep buckets / 0.2 recall at sf0.1.
+    # the multiprobe-1 default); a fixed H sized for sf0.01 gives deep
+    # buckets and poor recall at sf0.1.
     # Self-contained bucket table (vectors co-located, the L× space/time
-    # trade): single-query probes re-rank in place with NO corpus join —
-    # one job instead of probe + broadcast-semi-join (r8 verdict #1)
+    # trade): single-query probes re-rank in place with NO corpus join,
+    # one job instead of probe + broadcast-semi-join.
     def _mk_lsh():
         m = SignLSH.auto_size(n_corpus, dim=64, seed=42)
         return m, build_bucket_table(
             m, emb, id_col="vec_id", include_vectors=True).cache()
 
-    model, buckets, build["lsh_build"] = _warm_build(_mk_lsh)
+    model, buckets = _warm_build("lsh_build", _mk_lsh)
 
     # IVF-Flat posting layout (vectors in the posting rows, one copy per
     # id): probes re-rank in place with no corpus hydration join
@@ -1168,7 +310,7 @@ def main() -> None:
         m = IVFIndex.auto_train(emb, n_rows=n_corpus, seed=42)
         return m, m.assign(emb, id_col="vec_id", include_vectors=True).cache()
 
-    ivf, assignments, build["ivf_build"] = _warm_build(_mk_ivf)
+    ivf, assignments = _warm_build("ivf_build", _mk_ivf)
 
     from vector_db_api_spark.operators.pq import PQIndex
 
@@ -1176,7 +318,7 @@ def main() -> None:
         m = PQIndex.train(emb, m=8, k=64, seed=42)
         return m, m.encode(emb, id_col="vec_id").cache()
 
-    pqm, pq_codes, build["pq_build"] = _warm_build(_mk_pq)
+    pqm, pq_codes = _warm_build("pq_build", _mk_pq)
 
     thunks = {
         name: (lambda n=name: _force(qs[n](spark, SF_DIR))) for name in HEADLINE
@@ -1232,9 +374,9 @@ def main() -> None:
     thunks["knn_self_join_ivf"] = lambda: _force(
         ivf.search_batch(emb, assignments, corpus_queries, 4, id_col="vec_id")
     )
-    # symmetric multi-probe self-join (r10 verdict #3): both sides probe 2
-    # cells, pairs candidate on probe-set intersection — the boundary-recall
-    # upgrade; recall/candidate-fraction curve lives in BENCH_SCALE.md
+    # symmetric multi-probe self-join: both sides probe 2 cells, pairs
+    # candidate on probe-set intersection, which recovers boundary recall;
+    # the recall/candidate-fraction curve lives in BENCH_SCALE.md
     thunks["knn_self_join_ivf_sym"] = lambda: _force(
         ivf.self_join(emb, 4, id_col="vec_id", nprobe_sym=2)
     )
@@ -1247,26 +389,25 @@ def main() -> None:
     all_queries = [
         (str(r["vec_id"]), [float(x) for x in r["embedding"]])
         # id-ordered so the [:64] recall sample below is deterministic
-        # under the spread's repartitioned row order (r15 verdict #2)
+        # whatever the loader's row order
         for r in emb.orderBy("vec_id").collect()
     ]
     thunks["knn_self_join_np"] = lambda: _force(
         knn_batch_numpy(emb, all_queries, 4, id_col="vec_id")
     )
-    # auto-routed self-join (r12): the measured wall INCLUDES the routing
-    # probe (ranked probe pass + per-p pair-count histograms + sampled
-    # recall) plus whichever plan it dispatches — on this isotropic corpus
-    # that is the exact numpy plan, so the delta vs knn_self_join_np IS the
+    # auto-routed self-join: the measured wall INCLUDES the routing probe
+    # (ranked probe pass + per-p pair-count histograms + sampled recall)
+    # plus whichever plan it dispatches — on this isotropic corpus that is
+    # the exact numpy plan, so the delta vs knn_self_join_np IS the
     # router's decision cost
     thunks["knn_self_join_auto"] = lambda: _force(
         ivf.self_join_auto(emb, 4, id_col="vec_id", sample_queries=64)
     )
-    # r13: the repeat-caller path — the routing decision persisted through
-    # the catalog (IndexLifecycle.self_join_auto). The bench protocol's
-    # warm pass measures + caches the decision; the timed pass hits the
-    # cache, so this row IS the probe-skipped second call. Delta vs
-    # knn_self_join_auto = the per-call routing cost the cache removes
-    # (minus one fingerprint scan).
+    # the repeat-caller path: the routing decision persisted through the
+    # catalog (IndexLifecycle.self_join_auto). The cold pass measures and
+    # caches the decision; the timed passes hit the cache, so this row IS
+    # the probe-skipped second call. Delta vs knn_self_join_auto = the
+    # per-call routing cost the cache removes (minus one fingerprint scan).
     import tempfile as _tf
 
     from vector_db_api_spark.lifecycle import IndexConfig, IndexLifecycle
@@ -1290,51 +431,6 @@ def main() -> None:
             pass
         time.sleep(0.5)
 
-    # -- spread mode (r14 verdict #2): `bench.py --spread q1,q2` runs ONLY
-    # the named thunks, 5 warm passes each, and records the raw spread in
-    # BENCH_SPREADS.json — the committed envelope _compute_auto_carry reads.
-    # Same session, same caches, same thunk shapes as the normal pass, so
-    # the spread measures exactly what the flag table times.
-    spread_names = _spread_mode_args()
-    if spread_names is not None:
-        # build spreads re-run the full build body (train + layout +
-        # cache) on a throwaway cache each pass — the same warm protocol
-        # the flag table times builds with since r15
-        def _rebuild(make):
-            df = make()
-            df.count()
-            df.unpersist()
-
-        thunks = dict(thunks)
-        thunks["lsh_build"] = lambda: _rebuild(
-            lambda: build_bucket_table(
-                SignLSH.auto_size(n_corpus, dim=64, seed=42), emb,
-                id_col="vec_id", include_vectors=True).cache())
-        thunks["ivf_build"] = lambda: _rebuild(
-            lambda: IVFIndex.auto_train(emb, n_rows=n_corpus, seed=42)
-            .assign(emb, id_col="vec_id", include_vectors=True).cache())
-        thunks["pq_build"] = lambda: _rebuild(
-            lambda: PQIndex.train(emb, m=8, k=64, seed=42)
-            .encode(emb, id_col="vec_id").cache())
-        missing = sorted(set(spread_names) - set(thunks))
-        assert not missing, f"--spread names not in the thunk list: {missing}"
-        here_ = os.path.dirname(os.path.abspath(__file__))
-        sf_ = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-        spread_out: dict[str, list[float]] = {}
-        for name in spread_names:
-            thunks[name]()  # first touch excluded — the 5-WARM-run protocol
-            samples = []
-            for _ in range(5):
-                t0 = time.time()
-                thunks[name]()
-                samples.append(round(time.time() - t0, 3))
-            spread_out[name] = samples
-        _write_spreads(here_, spread_out, sf_, _current_round(here_))
-        print(json.dumps({"metric": "spread_runs", "unit": "sec",
-                          "queries": spread_out, "sf": sf_}))
-        spark.stop()
-        return
-
     cold: dict[str, float] = {}
     for name, thunk in thunks.items():
         t0 = time.time()
@@ -1346,47 +442,13 @@ def main() -> None:
     for _ in range(3):
         _gc_flush()
         for name, thunk in thunks.items():
+            mark = counter.mark()
             t0 = time.time()
             thunk()
             runs[name].append(time.time() - t0)
+            _count(name, mark)  # overwritten each pass: the last one stays
     for name, samples in runs.items():
         timings[name] = round(sorted(samples)[len(samples) // 2], 3)
-
-    # -- stability re-run of flagged queries (r8 verdict #3) ---------------
-    # a >1.2x normalized flag computed from one median-of-3 can still be an
-    # Arrow/GC spike (r8: three queries swung +35-72% between same-tree
-    # runs while the jvm probe moved 8.6%); give every flagged query two
-    # more timed passes and recompute its median over all 5 samples BEFORE
-    # any artifact is written, so two same-tree runs converge on the same
-    # flag list. Build-phase entries aren't in `thunks` (not re-runnable in
-    # isolation) and keep their single measurement.
-    here = os.path.dirname(os.path.abspath(__file__))
-    probe_base = dict(_cpu_baseline(), jvm_fixed_work_sec=jvm_probe_sec)
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    try:
-        sf_val: float | str = float(sf)
-    except ValueError:
-        sf_val = sf
-    canonical = sf_val == CANONICAL_SF
-    # non-canonical sf: priors are all sf0.1 records, so the cross-round
-    # delta (and its flag-stabilization re-runs) would flag everything and
-    # mean nothing — the scaling table below is that run's analysis
-    delta_md, flagged = ("", []) if not canonical else _round_over_round_delta(
-        here, timings, _norm_probe(probe_base), _norm_probe_jvm(probe_base)
-    )
-    rerun = [n for n in flagged if n in thunks]
-    if rerun:
-        for _ in range(2):
-            _gc_flush()
-            for name in rerun:
-                t0 = time.time()
-                thunks[name]()
-                runs[name].append(time.time() - t0)
-        for name in rerun:
-            timings[name] = round(sorted(runs[name])[len(runs[name]) // 2], 3)
-        delta_md, flagged = _round_over_round_delta(
-            here, timings, _norm_probe(probe_base), _norm_probe_jvm(probe_base)
-        )
 
     # recall@10 of the ANN paths vs the exact scan — the bar is speedup AT
     # BOUNDED RECALL, so the bench reports both sides of the tradeoff
@@ -1501,12 +563,11 @@ def main() -> None:
         c_ivf_frac.append(casg.filter(
             F.col("centroid_id").isin(civf.probe_centroids(cq))
         ).count() / n_corpus)
-        # PQ's rerank pool must cover the cluster multiplicity (r11, found
-        # by the sf1 run: the 4n default pool recalled 0.25 at n=20k where
-        # clusters hold ~n/64 members; ADC cannot rank within a tight
-        # cluster, so the pool IS the recall knob — measured curve in
-        # BENCH_SCALE.md "PQ rerank pool"). n/50 = 2% of the corpus,
-        # still a ~50x scan reduction before the exact re-rank.
+        # PQ's rerank pool must cover the cluster multiplicity: ADC cannot
+        # rank within a tight cluster, so the pool IS the recall knob (the
+        # 4k default recalled 0.25 at n=20k, where clusters hold ~n/64
+        # members; curve in BENCH_SCALE.md "PQ rerank pool"). n/50 = 2% of
+        # the corpus, still a ~50x scan reduction before the exact re-rank.
         c_pq = {x["id"] for x in cpq.search(
             cdf, ccodes, cq, 10, rerank=max(40, n_corpus // 50)
         ).collect()}
@@ -1549,28 +610,32 @@ def main() -> None:
                     and selectivity["ivf_clustered"] <= 0.05),
     }
 
+    here = os.path.dirname(os.path.abspath(__file__))
+    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
+    try:
+        sf_val: float | str = float(sf)
+    except ValueError:
+        sf_val = sf
     total = round(sum(timings.values()), 3)
     detail = {
         "metric": "suite_wall_sec",
         "value": total,
         "unit": "sec",
         "queries": timings,
+        "jobs": {name: jobs[name] for name in timings},
+        "stages": {name: stages[name] for name in timings},
         "recall_at_10": recall,
         "candidate_fraction": selectivity,
         "recall_bar": recall_bar,
         "cold_first_run_sec": round(sum(cold.values()), 3),
-        "cpu_baseline": probe_base,
         "sf": sf_val,
     }
     # Full detail: an early stdout line + a committed artifact. The driver
     # captures only the last ~2000 chars of stdout, so the LAST line must be
-    # a compact headline (r3's full line overflowed and recorded no bench).
-    detail_line = json.dumps(detail)
-    print(detail_line)
-    # what's benched and why (r9 verdict #6): the subset rule lived only in
-    # this file's HEADLINE list; state it in the artifact with machine-
-    # computed counts so a reader can't mistake the benched subset for the
-    # registry size.
+    # a compact headline.
+    print(json.dumps(detail))
+    # the subset rule, with computed counts, so a reader can't mistake the
+    # benched subset for the registry size
     subset_note = (
         f"\n## What's benched and why\n\n"
         f"This artifact times {len(thunks)} query thunks + {len(build)} "
@@ -1584,37 +649,18 @@ def main() -> None:
         f"Every registered entry — benched or not — runs under the driver's "
         f"correctness sweep and tools/check_correctness.py.\n"
     )
+    body = "```json\n" + json.dumps(detail, indent=1) + "\n```\n"
     try:
-        if canonical:
-            # delta_md/flagged were computed (and flag-stabilized) above,
-            # before any artifact write
-            dpath = os.path.join(here, "BENCH_DETAIL.md")
-            # auto-carry eligibility (r14 verdict #2): computed ONLY when
-            # the fresh table flags something — the pin re-run costs one
-            # pytest subprocess, paid per flagged regen, not per run
-            auto = (_compute_auto_carry(here, delta_md, timings)
-                    if flagged else {})
-            try:
-                with open(dpath) as f:
-                    carry = _carry_root_causes(f.read(), _current_round(here),
-                                               fresh_delta_md=delta_md,
-                                               auto_carry=auto)
-            except OSError:
-                carry = ""
-            with open(dpath, "w") as f:
-                f.write("# Bench detail (written by bench.py)\n\n```json\n"
-                        + json.dumps(detail, indent=1) + "\n```\n" + delta_md
-                        + subset_note + carry)
+        if sf_val == CANONICAL_SF:
+            with open(os.path.join(here, "BENCH_DETAIL.md"), "w") as f:
+                f.write("# Bench detail (written by bench.py)\n\n" + body
+                        + _counter_diff_section(_head_detail(here), detail)
+                        + subset_note)
         else:
-            # scale run: own artifact (never touch the canonical sf0.1
-            # cross-round chain) + scaling-vs-canonical table (r9 #2)
-            spath = os.path.join(here, f"BENCH_SF{sf}.md")
-            with open(spath, "w") as f:
-                f.write(f"# Bench at sf{sf} (written by bench.py)\n\n"
-                        "```json\n" + json.dumps(detail, indent=1)
-                        + "\n```\n"
-                        + _scaling_section(here, timings, sf_val,
-                                           detail["cpu_baseline"])
+            # a scale run never touches the canonical artifact
+            with open(os.path.join(here, f"BENCH_SF{sf}.md"), "w") as f:
+                f.write(f"# Bench at sf{sf} (written by bench.py)\n\n" + body
+                        + _scaling_section(_head_detail(here), timings, sf_val)
                         + subset_note)
     except OSError:
         pass
@@ -1640,7 +686,6 @@ def main() -> None:
             "pq": recall.get("pq_clustered"),
         },
         "cold_first_run_sec": round(sum(cold.values()), 2),
-        "cpu_baseline": detail["cpu_baseline"],
         "sf": sf_val,
         "detail": "BENCH_DETAIL.md",
     }

@@ -1,670 +1,84 @@
-"""bench.py's round-over-round delta miner against REAL driver records.
-
-The driver's BENCH_r{N}.json wraps a truncated stdout tail; the miner must
-recover per-query warm times from (a) the tail's last line (the compact
-headline bench.py prints last) and (b) the truncated detail fragment —
-and tolerate malformed or non-dict records without crashing the bench.
-No Spark needed: pure parsing.
+"""bench.py's two artifact tables: the job/stage counter diff against HEAD's
+committed BENCH_DETAIL.md, and the raw scaling table of a non-canonical sf
+run. Pure functions of their inputs: no Spark session needed.
 """
 
 from __future__ import annotations
 
-import json
+import importlib.util
 import os
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _load_bench_ns():
-    """bench.py's pre-main namespace (helpers only, no Spark session)."""
-    src = open(os.path.join(HERE, "bench.py")).read()
-    ns = {"__name__": "bench_under_test", "__file__": os.path.join(HERE, "bench.py")}
-    exec(src.split("def main")[0], ns)
-    return ns
+def _bench():
+    spec = importlib.util.spec_from_file_location(
+        "bench_under_test", os.path.join(HERE, "bench.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
 
 
-def _load_delta_fn():
-    return _load_bench_ns()["_round_over_round_delta"]
+def _detail(jobs, stages, secs):
+    return {"queries": secs, "jobs": jobs, "stages": stages}
 
 
-def test_mines_real_driver_records():
-    fn = _load_delta_fn()
-    # timings resembling a current run, overlapping the r4 record's queries
-    out, _ = fn(HERE, {"doc_bm25": 1.0, "events_hourly": 0.3, "crud_upsert": 0.7})
-    if not os.path.exists(os.path.join(HERE, "BENCH_r04.json")):
-        return  # artifact layout changed; nothing to mine
-    assert "Round-over-round delta" in out
-    assert "doc_bm25" in out and "| r" in out
-    assert "Median RAW ratio" in out
-    # normalized columns present: r5+ records carry cpu_baseline, so at
-    # least one row must show a baselined prior (a number, not the em dash)
-    assert "norm ratio" in out
+def test_counter_diff_lists_only_changed_rows():
+    bench = _bench()
+    prior = _detail({"a": 3, "b": 5, "c": 1}, {"a": 4, "b": 9, "c": 1},
+                    {"a": 9.0, "b": 9.0, "c": 9.0})
+    now = _detail({"a": 3, "b": 5, "c": 2, "new": 1},
+                  {"a": 4, "b": 8, "c": 1, "new": 2},
+                  {"a": 1.0, "b": 2.5, "c": 0.25, "new": 0.5})
+    out = bench._counter_diff_section(prior, now)
+    assert "3 of 4 rows differ from HEAD." in out
+    assert "| b | 5 | 5 | 9 | 8 | 2.500 |" in out  # stages moved
+    assert "| c | 1 | 2 | 1 | 1 | 0.250 |" in out  # jobs moved
+    assert "| new | — | 1 | — | 2 | 0.500 |" in out  # not in HEAD
+    assert "| a |" not in out  # unchanged counts are not listed
+    # wall time alone never lists a row
+    same = bench._counter_diff_section(prior, _detail(
+        prior["jobs"], prior["stages"], {"a": 99.0, "b": 99.0, "c": 99.0}))
+    assert "All 3 rows match HEAD's counts." in same and "|" not in same
 
 
-def test_tolerates_malformed_and_nondict_records(tmp_path):
-    fn = _load_delta_fn()
-    (tmp_path / "BENCH_r01.json").write_text("[1, 2, 3]")       # valid, non-dict
-    (tmp_path / "BENCH_r02.json").write_text("{not json")        # invalid
-    (tmp_path / "BENCH_r03.json").write_text("null")             # valid, non-dict
-    assert fn(str(tmp_path), {"q": 1.0}) == ("", [])  # no priors, no crash
+def test_counter_diff_when_head_has_no_counters():
+    bench = _bench()
+    now = _detail({"a": 1}, {"a": 2}, {"a": 1.0})
+    for prior in (None, {"queries": {"a": 1.0}}):
+        out = bench._counter_diff_section(prior, now)
+        body = out.strip().splitlines()
+        assert body[-1] == ("HEAD has no BENCH_DETAIL.md with job/stage "
+                            "counts; nothing to compare.")
+        assert "|" not in out
 
 
-def test_mines_tail_headline_and_detail_fragment(tmp_path):
-    fn = _load_delta_fn()
-    detail_frag = '"doc_x": 2.5, "doc_y": 1.25}, "recall_at_10": {"doc_x": 0.4}'
-    headline = json.dumps(
-        {"metric": "suite_wall_sec", "value": 9.9, "queries": {"doc_z": 0.5}}
-    )
-    rec = {"n": 1, "rc": 0, "tail": detail_frag + "\n" + headline}
-    (tmp_path / "BENCH_r01.json").write_text(json.dumps(rec))
-    out, _ = fn(str(tmp_path), {"doc_x": 5.0, "doc_z": 0.5, "unknown": 1.0})
-    # detail fragment mined up to its closing brace; recall dict NOT mined;
-    # r1 has no cpu_baseline → normalized columns are em dashes
-    assert "| doc_x | 5.00 | — | 2.50 | r1 | 2.00x | — | — | — |" in out
-    assert "| doc_z | 0.50 | — | 0.50 | r1 | 1.00x | — | — | — |" in out
-    assert "unknown" not in out
+def test_scaling_section_is_raw_ratios():
+    bench = _bench()
+    base = {"queries": {"q_lin": 1.0, "q_sub": 2.0, "q_zero": 0.0},
+            "sf": 0.1}
+    out = bench._scaling_section(
+        base, {"q_lin": 9.0, "q_sub": 4.0, "q_zero": 1.0, "unknown": 5.0},
+        1.0)
+    assert "data growth 10.00x" in out
+    lines = [ln for ln in out.splitlines() if ln.startswith("| q_")]
+    # largest ratio first
+    assert lines == ["| q_lin | 1.00 | 9.00 | 9.00x |",
+                     "| q_sub | 2.00 | 4.00 | 2.00x |"]
+    assert "unknown" not in out and "q_zero" not in out
+    assert "Median time ratio: **2.00x** over 2 shared queries" in out
+    assert "no canonical" in bench._scaling_section(None, {"q": 1.0}, 1.0)
+    assert "non-numeric" in bench._scaling_section(base, {"q_lin": 1.0}, "x")
 
 
-def test_normalized_ratio_uses_per_round_baseline(tmp_path):
-    """VERDICT r5 #4: rounds WITH a cpu_baseline compare in normalized
-    units (sec / python_loop_sec — the single-thread probe; r6 demoted
-    blas_matmul after it swung 4.4x on BLAS threading alone); a 2x-slower
-    machine running identical plans shows raw ratio 2.0 but norm ratio
-    1.0."""
-    fn = _load_delta_fn()
-    headline = json.dumps({
-        "metric": "suite_wall_sec", "value": 9.9,
-        "queries": {"q_a": 1.0},
-        "cpu_baseline": {"blas_matmul_sec": 0.5, "python_loop_sec": 0.1},
-    })
-    (tmp_path / "BENCH_r05.json").write_text(
-        json.dumps({"n": 5, "rc": 0, "tail": headline})
-    )
-    # now: machine is 2x slower (python probe 0.2 vs 0.1), query took 2x raw
-    out, _ = fn(str(tmp_path), {"q_a": 2.0}, 0.2)
-    assert "| q_a | 2.00 | 10.00 | 1.00 | r5 | 2.00x | 10.00 | r5 | 1.00x |" in out
-    assert "median NORMALIZED ratio: **1.00x**" in out
-
-
-def test_jvm_probe_ratio_and_flagging(tmp_path):
-    """VERDICT r7 #4: rounds that record ``jvm_fixed_work_sec`` (r8+) get a
-    jvm-normalized ratio column, and the >1.2x regression flag uses the JVM
-    axis when available — a query that doubled while the JVM probe also
-    doubled is machine drift (jvm ratio 1.0, not flagged), even if the
-    python probe stayed flat (which would have flagged it in r7)."""
-    fn = _load_delta_fn()
-    headline = json.dumps({
-        "metric": "suite_wall_sec", "value": 9.9,
-        "queries": {"q_a": 1.0, "q_b": 1.0},
-        "cpu_baseline": {"python_loop_sec": 0.1, "jvm_fixed_work_sec": 2.0},
-    })
-    (tmp_path / "BENCH_r08.json").write_text(
-        json.dumps({"n": 8, "rc": 0, "tail": headline})
-    )
-    # q_a doubled with the JVM probe (machine), q_b doubled against a flat
-    # JVM probe (plan regression)
-    out, flags = fn(str(tmp_path), {"q_a": 2.0, "q_b": 2.0}, 0.1, 4.0)
-    assert "| q_a | 2.00 | 20.00 | 1.00 | r8 | 2.00x | 10.00 | r8 | 2.00x | 1.00x |" in out
-    # python-normalized says 2x, jvm says 1x -> NOT flagged
-    assert "q_a (" not in out.split("Normalized regressions")[-1] if \
-        "Normalized regressions" in out else True
-    out2, flags2 = fn(str(tmp_path), {"q_b": 2.0}, 0.1, 2.0)
-    assert "| q_b | 2.00 | 20.00 | 1.00 | r8 | 2.00x | 10.00 | r8 | 2.00x | 2.00x |" in out2
-    assert "Normalized regressions >1.2x" in out2 and "q_b (2.00x)" in out2
-    # the returned flag list is what main's stability re-run consumes
-    # first call: jvm probe doubled too -> both machine drift, no flags
-    assert flags2 == ["q_b"] and flags == []
-
-
-def test_jvm_probe_units_never_mix_with_python(tmp_path):
-    """A prior round WITHOUT the jvm probe yields an em-dash jvm ratio —
-    never a python-unit number smuggled into the jvm column."""
-    fn = _load_delta_fn()
-    headline = json.dumps({
-        "metric": "suite_wall_sec", "value": 9.9,
-        "queries": {"q_a": 1.0},
-        "cpu_baseline": {"python_loop_sec": 0.1},
-    })
-    (tmp_path / "BENCH_r07.json").write_text(
-        json.dumps({"n": 7, "rc": 0, "tail": headline})
-    )
-    out, _ = fn(str(tmp_path), {"q_a": 1.0}, 0.1, 2.0)
-    assert "| q_a | 1.00 | 10.00 | 1.00 | r7 | 1.00x | 10.00 | r7 | 1.00x | — |" in out
-
-
-def test_root_cause_section_carries_across_regeneration():
-    """bench.py rewrites BENCH_DETAIL.md every run (including the driver's
-    end-of-round run); the builder's '## Root-cause adjudication' section
-    must survive the rewrite verbatim."""
-    carry = _load_bench_ns()["_carry_root_causes"]
-    body = "# Bench detail\n\n```json\n{}\n```\ntable...\n## Root-cause adjudication (r8)\n\ncauses here\n"
-    assert carry(body) == "\n## Root-cause adjudication (r8)\n\ncauses here\n"
-    assert carry("# Bench detail\nno section\n") == ""
-    assert carry(None) == ""
-    assert carry("") == ""
-
-
-def test_norm_probe_is_python_loop_only():
-    """The normalizer is python_loop_sec ONLY — a blas-only record must
-    contribute raw-only rows (no fallback: mixing sec/python and sec/blas
-    units in one best-prior comparison would re-create the fake-regression
-    artifact the r6 probe change eliminated)."""
-    probe = _load_bench_ns()["_norm_probe"]
-    assert probe({"blas_matmul_sec": 0.5, "python_loop_sec": 0.1}) == 0.1
-    assert probe({"blas_matmul_sec": 0.5}) is None
-    assert probe({}) is None
-    assert probe(None) is None
-
-
-def test_root_cause_stale_banner_on_round_mismatch():
-    """r8 advice: a carried adjudication whose header names a different
-    round than the run regenerating the file gets a STALE banner inserted
-    under the header; a matching round carries verbatim; banners never
-    stack across repeated regenerations."""
-    carry = _load_bench_ns()["_carry_root_causes"]
-    body = (
-        "# Bench detail\n\n```json\n{}\n```\ntable...\n"
-        "## Root-cause adjudication (r8, per the r6 discipline)\n\ncauses\n"
-    )
-    # matching round: verbatim, no banner
-    assert "STALE" not in carry(body, 8)
-    # mismatched round: banner under the header, original text intact
-    stale = carry(body, 9)
-    assert "> **STALE: this adjudication covers r8" in stale
-    assert "r9 run" in stale and "\ncauses\n" in stale
-    assert stale.index("## Root-cause") < stale.index("STALE")
-    # regenerating an already-bannered body doesn't stack banners
-    again = carry("# x\n" + stale, 9)
-    assert again.count("STALE") == 1
-    # and a later builder rewrite for the right round clears it
-    assert "STALE" not in carry("# x\n" + stale, 8)
-    # no round info available -> verbatim carry (old behavior)
-    assert carry(body) == body[body.index("\n## Root-cause"):]
-
-
-def test_current_round_is_max_bench_record_plus_one(tmp_path):
-    cur = _load_bench_ns()["_current_round"]
-    assert cur(str(tmp_path)) is None
-    (tmp_path / "BENCH_r01.json").write_text("{}")
-    (tmp_path / "BENCH_r08.json").write_text("{}")
-    assert cur(str(tmp_path)) == 9
-
-
-def test_plan_pins_name_real_plan_shape_tests():
-    """Every PLAN_PINS value must be an actual test in
-    tests/test_plan_shapes.py — a pin naming a deleted/renamed test would
-    let the adjudicator claim coverage that no longer exists."""
-    ns = _load_bench_ns()
-    pins = ns["PLAN_PINS"]
-    src = open(os.path.join(HERE, "tests", "test_plan_shapes.py")).read()
-    missing = sorted(
-        {t for t in pins.values() if f"def {t}(" not in src}
-    )
-    assert not missing, f"PLAN_PINS reference missing tests: {missing}"
-    # and every pinned bench name is a real bench row: HEADLINE, one of the
-    # ANN thunks bench.py registers by string literal, or a timed index
-    # build (build["..."] — r14: ivf_build got a pin)
-    bench_src = open(os.path.join(HERE, "bench.py")).read()
-    unknown = sorted(
-        n for n in pins
-        if n not in ns["HEADLINE"]
-        and f'thunks["{n}"]' not in bench_src
-        and f'build["{n}"]' not in bench_src
-    )
-    assert not unknown, f"PLAN_PINS name unknown bench queries: {unknown}"
-
-
-def test_flag_adjudication_is_emitted_with_flags(tmp_path):
-    """r9 verdict #1: whenever the delta table prints a >1.2x flag list, the
-    SAME generation must emit a machine-written adjudication block that
-    classifies every flag (band-member / pinned-residual / NEEDS-HUMAN) —
-    so a regenerated BENCH_DETAIL.md can never publish an uncovered flag."""
-    fn = _load_delta_fn()
-    # 10 shared queries so the band sample is big enough: nine at jvm ratio
-    # 1.0 (flat machine), one pinned query and one unpinned query at 2.0x
-    prior_q = {f"q{i}": 1.0 for i in range(9)}
-    prior_q["semdedup_drop_np"] = 1.0   # pinned in PLAN_PINS
-    prior_q["zz_custom_op"] = 1.0       # not pinned
-    headline = json.dumps({
-        "metric": "suite_wall_sec", "value": 9.9, "queries": prior_q,
-        "cpu_baseline": {"python_loop_sec": 0.1, "jvm_fixed_work_sec": 1.0},
-    })
-    (tmp_path / "BENCH_r08.json").write_text(
-        json.dumps({"n": 8, "rc": 0, "tail": headline})
-    )
-    now = {f"q{i}": 1.0 for i in range(9)}
-    now["semdedup_drop_np"] = 2.0
-    now["zz_custom_op"] = 2.0
-    out, flags = fn(str(tmp_path), now, 0.1, 1.0)
-    assert set(flags) == {"semdedup_drop_np", "zz_custom_op"}
-    assert "### Flag adjudication (machine-written)" in out
-    adj = out.split("### Flag adjudication", 1)[1]
-    # every flag appears in the block with a verdict; semdedup_drop_np is a
-    # numpy-kernel thunk → classified on the PYTHON axis (r10 verdict #8)
-    assert "| semdedup_drop_np | 2.00x (python) |" in adj
-    assert "pinned-residual (`test_semdedup_pair_join_is_equi_keyed_on_cell`)" in adj
-    assert "| zz_custom_op | 2.00x (jvm) |" in adj
-    zz_row = [l for l in adj.splitlines() if l.startswith("| zz_custom_op")]
-    assert zz_row and "**NEEDS-HUMAN**" in zz_row[0]
-    # band = median jvm ratio (1.00x over the 9 flat queries + 2 flags)
-    assert "band" in adj and "1.00x" in adj
-
-
-def test_flag_adjudication_band_member_and_small_sample_guard(tmp_path):
-    """A flag within 1.2x of the suite-wide band is band-member (machine
-    drift, covered); with fewer than the minimum shared queries per axis the
-    band is refused and an unpinned flag falls through to NEEDS-HUMAN — a
-    2-query 'band' must never launder a real regression."""
-    fn = _load_delta_fn()
-    # large sample, everything drifted ~1.3x together: flags are band-members
-    prior_q = {f"q{i}": 1.0 for i in range(12)}
-    headline = json.dumps({
-        "metric": "suite_wall_sec", "value": 9.9, "queries": prior_q,
-        "cpu_baseline": {"python_loop_sec": 0.1, "jvm_fixed_work_sec": 1.0},
-    })
-    (tmp_path / "BENCH_r08.json").write_text(
-        json.dumps({"n": 8, "rc": 0, "tail": headline})
-    )
-    out, flags = fn(str(tmp_path), {f"q{i}": 1.3 for i in range(12)}, 0.1, 1.0)
-    assert len(flags) == 12
-    adj = out.split("### Flag adjudication", 1)[1]
-    assert adj.count("| band-member |") == 12
-    assert "**NEEDS-HUMAN**" not in adj  # the cell form, not the legend
-    # tiny sample: band unavailable, unpinned flag needs a human
-    (tmp_path / "BENCH_r08.json").write_text(json.dumps({
-        "n": 8, "rc": 0, "tail": json.dumps({
-            "metric": "suite_wall_sec", "value": 1.0,
-            "queries": {"q_only": 1.0},
-            "cpu_baseline": {"python_loop_sec": 0.1,
-                             "jvm_fixed_work_sec": 1.0},
-        })
-    }))
-    out2, flags2 = fn(str(tmp_path), {"q_only": 2.0}, 0.1, 1.0)
-    assert flags2 == ["q_only"]
-    adj2 = out2.split("### Flag adjudication", 1)[1]
-    assert "unavailable" in adj2 and "NEEDS-HUMAN" in adj2
-
-
-def test_scaling_section_verdicts(tmp_path):
-    """Non-canonical sf runs write a scaling table vs the committed
-    canonical detail: sub-linear / scales / SUPER-LINEAR verdicts read
-    against the data growth factor (r9 verdict #2)."""
-    ns = _load_bench_ns()
-    (tmp_path / "BENCH_DETAIL.md").write_text(
-        "# x\n\n```json\n" + json.dumps({
-            "queries": {"q_lin": 1.0, "q_sub": 1.0, "q_bad": 1.0,
-                        "q_new": 0.0},
-            "sf": 0.1,
-        }) + "\n```\n"
-    )
-    out = ns["_scaling_section"](
-        str(tmp_path), {"q_lin": 9.0, "q_sub": 2.0, "q_bad": 30.0,
-                        "q_new": 1.0, "unknown": 5.0}, 1.0)
-    assert "| q_lin | 1.00 | 9.00 | 9.00x | 9.00x (raw) | scales |" in out
-    assert "| q_sub | 1.00 | 2.00 | 2.00x | 2.00x (raw) | sub-linear |" in out
-    assert "| q_bad | 1.00 | 30.00 | 30.00x | 30.00x (raw) | **SUPER-LINEAR**" in out
-    assert "q_new" not in out and "unknown" not in out
-    assert "1 super-linear flag(s). Flags: q_bad (30.00x)" in out
-    # no shared probe -> ratios are explicitly unnormalized
-    assert "unnormalized (no shared probe)" in out
-    # no canonical artifact -> explicit note, no crash
-    assert "no canonical" in ns["_scaling_section"](str(tmp_path / "nope"),
-                                                    {"q": 1.0}, 1.0)
-
-
-def test_scaling_section_machine_normalized_and_downscale_guard(tmp_path):
-    """r10 advice #3 + r11 advice: the scaling table must normalize time
-    ratios by the probe ratio between the two artifacts (per-round host
-    speed swings 1.5-2x — a slow host would otherwise inflate SUPER-LINEAR
-    verdicts), picking the probe PER QUERY (python for
-    PYTHON_AXIS_QUERIES, jvm otherwise — the same axis rule as the
-    round-over-round delta), and a downscale run (growth < 1) must not
-    classify fixed overhead as SUPER-LINEAR."""
-    ns = _load_bench_ns()
-    (tmp_path / "BENCH_DETAIL.md").write_text(
-        "# x\n\n```json\n" + json.dumps({
-            "queries": {"q_lin": 1.0, "q_edge": 1.0, "pq_search": 1.0},
-            "sf": 0.1,
-            "cpu_baseline": {"python_loop_sec": 0.1,
-                             "jvm_fixed_work_sec": 1.0},
-        }) + "\n```\n"
-    )
-    # this host is 2x SLOWER on the jvm probe and 3x slower on python:
-    # jvm-axis queries normalize by 2, python-axis (pq_search) by 3
-    now_cb = {"python_loop_sec": 0.3, "jvm_fixed_work_sec": 2.0}
-    out = ns["_scaling_section"](
-        str(tmp_path), {"q_lin": 24.0, "q_edge": 30.0, "pq_search": 24.0},
-        1.0, now_cb)
-    assert "jvm 2.00x, python 3.00x" in out
-    assert "| q_lin | 1.00 | 24.00 | 24.00x | 12.00x (jvm) | scales |" in out
-    # still super-linear AFTER normalization -> flagged
-    assert ("| q_edge | 1.00 | 30.00 | 30.00x | 15.00x (jvm) | "
-            "**SUPER-LINEAR**") in out
-    # pq_search is PYTHON_AXIS: 24x raw / 3.0 python norm = 8x -> scales,
-    # where the shared jvm probe would have called it 12x
-    assert "| pq_search | 1.00 | 24.00 | 24.00x | 8.00x (python) | scales |" in out
-    # jvm probe missing on one side -> python fallback for jvm-axis queries
-    out_py = ns["_scaling_section"](
-        str(tmp_path), {"q_lin": 24.0}, 1.0, {"python_loop_sec": 0.2})
-    assert "(python)" in out_py and "python 2.00x" in out_py
-    # downscale run: informational only, no SUPER-LINEAR classifier
-    out_down = ns["_scaling_section"](
-        str(tmp_path), {"q_lin": 0.9}, 0.01, now_cb)
-    assert "Downscale run" in out_down
-    assert "SUPER-LINEAR" not in out_down.split("classifier is disabled")[1]
-
-
-def test_python_axis_queries_are_real_bench_thunks():
-    """Every PYTHON_AXIS_QUERIES name must be a real bench thunk (HEADLINE,
-    a thunks[...] literal, or a build[...] timing) — a stale name would
-    silently fall back to jvm-axis classification for that query."""
-    ns = _load_bench_ns()
-    bench_src = open(os.path.join(HERE, "bench.py")).read()
-    unknown = sorted(
-        n for n in ns["PYTHON_AXIS_QUERIES"]
-        if n not in ns["HEADLINE"]
-        and f'thunks["{n}"]' not in bench_src
-        and f'build["{n}"]' not in bench_src
-    )
-    assert not unknown, f"PYTHON_AXIS_QUERIES name unknown thunks: {unknown}"
-
-
-def test_python_axis_flag_classifies_on_python_band(tmp_path):
-    """r10 verdict #8: an Arrow/pandas/numpy-class query that drifted WITH
-    the interpreter (python ratio ~1.0) must not flag at all, even when the
-    jvm axis says 2x — and when it does flag, the verdict row reads against
-    the python band, not the jvm band."""
-    fn = _load_delta_fn()
-    prior_q = {f"q{i}": 1.0 for i in range(9)}
-    prior_q["knn_batch_numpy_top5"] = 1.0  # in PYTHON_AXIS_QUERIES
-    headline = json.dumps({
-        "metric": "suite_wall_sec", "value": 9.9, "queries": prior_q,
-        "cpu_baseline": {"python_loop_sec": 0.1, "jvm_fixed_work_sec": 1.0},
-    })
-    (tmp_path / "BENCH_r08.json").write_text(
-        json.dumps({"n": 8, "rc": 0, "tail": headline})
-    )
-    # python probe doubled (0.1 -> 0.2) and the numpy query doubled with it:
-    # python ratio 1.0 -> NOT flagged, despite jvm ratio 2.0 (jvm probe flat)
-    now = {f"q{i}": 1.0 for i in range(9)}
-    now["knn_batch_numpy_top5"] = 2.0
-    out, flags = fn(str(tmp_path), now, 0.2, 1.0)
-    assert "knn_batch_numpy_top5" not in flags
-    # python probe flat, numpy query doubled alone -> flagged ON python axis
-    out2, flags2 = fn(str(tmp_path), now, 0.1, 1.0)
-    assert flags2 == ["knn_batch_numpy_top5"]
-    adj2 = out2.split("### Flag adjudication", 1)[1]
-    assert "| knn_batch_numpy_top5 | 2.00x (python) |" in adj2
-
-
-def test_root_cause_stale_banner_on_band_mismatch():
-    """r11 verdict #1: the driver's SAME-round bench re-run regenerated the
-    table with different bands while the round tag still matched, so the
-    old prose silently claimed the new numbers. The carry now compares the
-    prose's 'Adjudicated bands:' line against the fresh table's
-    '(this run: ...)' band string and banners on mismatch (or when the
-    line is missing while the fresh table adjudicates flags)."""
-    carry = _load_bench_ns()["_carry_root_causes"]
-    fresh = (
-        "table...\n### Flag adjudication (machine-written)\n"
-        "Band = ... (this run: jvm 0.93x/75q, python 1.21x/75q). ...\n"
-    )
-    prose_ok = (
-        "# x\n## Root-cause adjudication (r11)\n\n"
-        "Adjudicated bands: jvm 0.93x/75q, python 1.21x/75q\n\ncauses\n"
-    )
-    prose_stale = (
-        "# x\n## Root-cause adjudication (r11)\n\n"
-        "Adjudicated bands: jvm 1.42x/74q, python 1.31x/74q\n\ncauses\n"
-    )
-    prose_missing = "# x\n## Root-cause adjudication (r11)\n\ncauses\n"
-    # matching round + matching bands: verbatim
-    assert "STALE" not in carry(prose_ok, 11, fresh_delta_md=fresh)
-    # matching round, band mismatch: banner naming both band strings
-    out = carry(prose_stale, 11, fresh_delta_md=fresh)
-    assert "STALE" in out and "jvm 1.42x/74q" in out and "jvm 0.93x/75q" in out
-    # no recorded bands at all while the fresh table adjudicates: banner
-    assert "STALE" in carry(prose_missing, 11, fresh_delta_md=fresh)
-    # fresh run with NO flags (no band string) never banners on bands
-    assert "STALE" not in carry(prose_stale, 11, fresh_delta_md="table only\n")
-    # banners never stack
-    again = carry("# x\n" + out, 11, fresh_delta_md=fresh)
-    assert again.count("STALE") == 1
-    # round mismatch takes precedence over the band check
-    rd = carry(prose_ok, 12, fresh_delta_md=fresh)
-    assert "covers r11" in rd and rd.count("STALE") == 1
-
-
-def test_committed_bench_detail_adjudication_matches_its_table():
-    """The committed artifact must be self-consistent (r11 verdict #1
-    'Done' bar): the prose section's 'Adjudicated bands:' line equals the
-    machine table's '(this run: ...)' bands, and every flag the machine
-    table marks NEEDS-HUMAN is named in the prose — a regenerated table
-    can never silently orphan its adjudication again."""
-    import re
-
-    import pytest
-
-    body = open(os.path.join(HERE, "BENCH_DETAIL.md")).read()
-    fresh = re.search(r"\(this run: ([^)]+)\)", body)
-    if not fresh:
-        return  # no machine adjudication block -> nothing to reconcile
-    idx = body.index("## Root-cause adjudication")
-    prose_text = body[idx:]
-    if "STALE" in prose_text:
-        # an EXPLICIT banner is the non-silent state the check exists to
-        # create (e.g. the driver's post-round re-run shifted the bands
-        # after the builder's last commit) — the next builder must rewrite
-        # the section; failing the whole suite on the driver's own commit
-        # would punish the machinery for working
-        pytest.skip("adjudication explicitly bannered STALE — rewrite pending")
-    prose = re.search(r"Adjudicated bands: ([^\n]+)", body)
-    assert prose, "BENCH_DETAIL.md has a flag table but no 'Adjudicated bands:' line"
-    assert prose.group(1).strip().rstrip(".") == fresh.group(1).strip(), (
-        "adjudication prose was written against different bands than the "
-        "machine table, with no STALE banner — rewrite the Root-cause "
-        "section (silent orphaning)"
-    )
-    needs = re.findall(r"\| (\S+) \|[^|]+\|[^|]+\|[^|]+\| \*\*NEEDS-HUMAN\*\*", body)
-    unnamed = sorted(n for n in needs if n not in prose_text)
-    assert not unnamed, f"NEEDS-HUMAN flags with no named cause: {unnamed}"
-
-
-def test_best_prior_cites_only_committed_artifacts(tmp_path):
-    """r11 verdict #8: the delta table's best-prior rounds must resolve to
-    committed artifacts — BENCH_r*.json records or the COMMITTED
-    BENCH_DETAIL.md (cited detail@<commit>). A working-tree
-    BENCH_DETAIL.md sitting next to the records must be ignored: it is
-    whatever some prior run left behind, not a reproducible baseline."""
-    import re
-    import subprocess
-
-    fn = _load_delta_fn()
-    # a non-git dir with a (working-tree) detail file: must contribute
-    # NOTHING — only the committed record is cited
-    (tmp_path / "BENCH_r07.json").write_text(json.dumps(
-        {"queries": {"q_a": 2.0},
-         "cpu_baseline": {"python_loop_sec": 0.1}}))
-    (tmp_path / "BENCH_DETAIL.md").write_text(
-        "# detail\n\n```json\n"
-        + json.dumps({"queries": {"q_a": 0.5, "q_only_detail": 0.5},
-                      "cpu_baseline": {"python_loop_sec": 0.1}})
-        + "\n```\n")
-    out, _ = fn(str(tmp_path), {"q_a": 1.0, "q_only_detail": 1.0})
-    assert "prev-detail" not in out and "| detail@" not in out
-    assert "q_only_detail" not in out  # detail-only query has no prior
-    assert "| q_a | 1.00 |" in out and "| r7 |" in out
-    # in the real repo, the detail prior IS mined — from HEAD, labeled with
-    # the commit that last touched the file
-    sha = subprocess.run(
-        ["git", "-C", HERE, "log", "-n1", "--format=%h", "--",
-         "BENCH_DETAIL.md"], capture_output=True, text=True).stdout.strip()
-    blob = subprocess.run(
-        ["git", "-C", HERE, "show", "HEAD:BENCH_DETAIL.md"],
-        capture_output=True, text=True).stdout
-    committed = json.loads(blob.split("```json", 1)[1].split("```", 1)[0])
-    name, base = next(iter(committed["queries"].items()))
-    out2, _ = fn(HERE, {name: base * 100.0})
-    assert f"detail@{sha}" in out2
-    # every round label in the table is r<N> or detail@<committed sha>
-    for m in re.finditer(r"\| (r\d+|detail@[0-9a-f]+|prev-detail) \|", out2):
-        assert m.group(1) != "prev-detail"
-
-
-def test_stale_banner_comes_with_a_machine_written_skeleton():
-    """r12 verdict #1 (structural half): when a regen banners the carried
-    adjudication STALE, it must also emit a rewrite skeleton — per-flag
-    rows pre-filled with axis, band, over-band ratio and pin status from
-    the FRESH table — so the next builder fills in causes instead of
-    rewriting from scratch. The skeleton must never satisfy the
-    bands-equality staleness check itself (it spells the band string
-    without the literal 'Adjudicated bands: ' line), and regens never
-    stack skeletons."""
-    carry = _load_bench_ns()["_carry_root_causes"]
-    fresh = (
-        "table...\n### Flag adjudication (machine-written)\n"
-        "Band = ... (this run: jvm 0.90x/70q, python 1.40x/70q). ...\n"
-        "| flag | ratio (axis) | band | over band | verdict |\n"
-        "|---|---|---|---|---|\n"
-        "| q_pinned | 2.10x (python) | 1.40x | 1.50x | pinned-residual "
-        "(`test_q_pinned_plan`) |\n"
-        "| q_human | 1.90x (python) | 1.40x | 1.36x | **NEEDS-HUMAN** — "
-        "name a root cause below |\n"
-        "| q_band | 1.50x (jvm) | 0.90x | 1.11x | band-member |\n"
-    )
-    prose_stale = (
-        "# x\n## Root-cause adjudication (r11)\n\n"
-        "Adjudicated bands: jvm 1.42x/74q, python 1.31x/74q\n\ncauses\n"
-    )
-    out = carry(prose_stale, 11, fresh_delta_md=fresh)
-    assert "STALE" in out
-    assert "adjudication-skeleton:start" in out
-    # per-flag rows pre-filled: name, ratio, axis, band, over-band, status
-    assert "- q_human 1.90x (python axis), band 1.40x, over band 1.36x" in out
-    assert "**TODO: name the root cause**" in out
-    assert "plan frozen by (`test_q_pinned_plan`)" in out
-    assert "- q_band 1.50x (jvm axis)" in out and "band-member" in out
-    # the fresh band string is spelled for copy-paste...
-    assert "jvm 0.90x/70q, python 1.40x/70q" in out
-    # ...but never as the literal line the staleness check keys on
-    skel = out.split("adjudication-skeleton:start", 1)[1]
-    skel = skel.split("adjudication-skeleton:end", 1)[0]
-    assert "Adjudicated bands: " not in skel
-    # a re-carry of the skeleton-bearing section stays bannered (the
-    # skeleton must not count as a rewrite) and nothing stacks
-    again = carry("# x\n" + out, 11, fresh_delta_md=fresh)
-    assert again.count("STALE") == 1
-    assert again.count("adjudication-skeleton:start") == 1
-    # a matching (rewritten) section gets neither banner nor skeleton
-    prose_ok = (
-        "# x\n## Root-cause adjudication (r11)\n\n"
-        "Adjudicated bands: jvm 0.90x/70q, python 1.40x/70q\n\ncauses\n"
-    )
-    clean = carry(prose_ok, 11, fresh_delta_md=fresh)
-    assert "STALE" not in clean and "adjudication-skeleton" not in clean
-
-
-def _fresh_table(rows):
-    """A minimal fresh delta_md with a '(this run: ...)' band string and
-    the given flag-table rows."""
-    body = ["Band = median (this run: jvm 0.93x/75q, python 1.45x/75q).",
-            "| flag | ratio (axis) | band | over band | verdict |",
-            "|---|---|---|---|---|"]
-    body += rows
-    return "\n".join(body) + "\n"
-
-
-def test_auto_carry_green_pin_in_spread_flag_produces_no_banner():
-    """r14 verdict #2 'Done' bar: a pinned-residual flag whose pin is green
-    and whose raw is in the committed spread is CARRIED by the regen itself
-    — no STALE banner, a machine-written section with the fresh bands."""
-    ns = _load_bench_ns()
-    carry = ns["_carry_root_causes"]
-    fresh = _fresh_table([
-        "| pq_search | 1.93x (python) | 1.45x | 1.34x | pinned-residual "
-        "(`test_pq_search_candidate_selection_is_take_ordered`) |",
-        "| simhash_np | 1.43x (python) | 1.45x | 0.99x | band-member |",
-    ])
-    old = ("# x\n## Root-cause adjudication (r14 builder run)\n\nprose\n\n"
-           "Adjudicated bands: jvm 1.01x/82q, python 0.73x/82q\n")
-    auto = {"pq_search": "CARRIED (machine): plan frozen by `pin` — "
-            "re-run GREEN; raw 0.51s inside [0.48, 0.52]s."}
-    out = carry(old, 15, fresh_delta_md=fresh, auto_carry=auto)
-    assert "STALE" not in out
-    assert "machine carry" in out
-    assert "CARRIED (machine)" in out
-    assert "Adjudicated bands: jvm 0.93x/75q, python 1.45x/75q" in out
-    # band-members are covered without prose
-    assert "simhash_np" in out
-    # committed-artifact consistency test's two checks hold by construction
-    import re
-    prose = re.search(r"Adjudicated bands: ([^\n]+)", out)
-    table = re.search(r"\(this run: ([^)]+)\)", fresh)
-    assert prose.group(1).strip() == table.group(1).strip()
-
-
-def test_auto_carry_does_not_swallow_needs_human_flags():
-    """A NEEDS-HUMAN flag (or a pinned flag that failed the pin/spread
-    conditions, i.e. absent from auto_carry) still banners + skeletons —
-    with carried causes PRE-FILLED for the flags that do qualify."""
-    ns = _load_bench_ns()
-    carry = ns["_carry_root_causes"]
-    fresh = _fresh_table([
-        "| pq_search | 1.93x (python) | 1.45x | 1.34x | pinned-residual "
-        "(`test_pq_search_candidate_selection_is_take_ordered`) |",
-        "| events_hourly | 1.50x (jvm) | 0.93x | 1.61x | **NEEDS-HUMAN** "
-        "— name a root cause below |",
-    ])
-    old = ("# x\n## Root-cause adjudication (r14 builder run)\n\nprose\n\n"
-           "Adjudicated bands: jvm 1.01x/82q, python 0.73x/82q\n")
-    auto = {"pq_search": "CARRIED (machine): plan frozen by `pin`."}
-    out = carry(old, 15, fresh_delta_md=fresh, auto_carry=auto)
-    assert "STALE" in out and "adjudication-skeleton" in out
-    assert "CARRIED (machine)" in out          # pre-filled for the carried
-    assert "TODO: name the root cause" in out  # demanded for the human one
-    # a pinned flag NOT in auto_carry keeps its TODO too
-    out2 = carry(old, 15, fresh_delta_md=fresh, auto_carry={})
-    assert "STALE" in out2 and "TODO: carry or restate" in out2
-
-
-def test_compute_auto_carry_conditions():
-    """_compute_auto_carry demands all three conditions: pinned verdict,
-    committed spread containing the raw, green pin re-run."""
-    import subprocess
-    import tempfile
-
-    ns = _load_bench_ns()
-    fn = ns["_compute_auto_carry"]
-    fresh = _fresh_table([
-        "| pq_search | 1.93x (python) | 1.45x | 1.34x | pinned-residual "
-        "(`test_pq_search_candidate_selection_is_take_ordered`) |",
-        "| simhash_np | 1.43x (python) | 1.45x | 0.99x | band-member |",
-    ])
-    with tempfile.TemporaryDirectory() as tmp:
-        subprocess.run(["git", "init", "-q", tmp], check=True)
-        spath = os.path.join(tmp, "BENCH_SPREADS.json")
-        with open(spath, "w") as f:
-            json.dump({"pq_search": {"lo": 0.48, "hi": 0.52,
-                                     "runs": [0.48, 0.5, 0.52],
-                                     "round": 15, "sf": "0.1"}}, f)
-        subprocess.run(["git", "-C", tmp, "add", "-A"], check=True)
-        subprocess.run(
-            ["git", "-C", tmp, "-c", "user.email=t@t", "-c", "user.name=t",
-             "commit", "-qm", "s"], check=True)
-        # in-spread + green pin -> carried, citing pin and spread
-        out = fn(tmp, fresh, {"pq_search": 0.51},
-                 pins_green_fn=lambda here, pins: True)
-        assert set(out) == {"pq_search"}
-        assert "GREEN" in out["pq_search"] and "[0.48, 0.52]s" in out["pq_search"]
-        # raw out of spread -> not carried (1.15 slack: 0.52*1.15 ≈ 0.60)
-        assert fn(tmp, fresh, {"pq_search": 0.7},
-                  pins_green_fn=lambda here, pins: True) == {}
-        # pin not green -> not carried
-        assert fn(tmp, fresh, {"pq_search": 0.51},
-                  pins_green_fn=lambda here, pins: False) == {}
-        # no committed spread for the flag -> not carried
-        out3 = fn(tmp, _fresh_table([
-            "| lsh_search | 1.90x (python) | 1.45x | 1.31x | "
-            "pinned-residual (`test_x`) |"]), {"lsh_search": 0.5},
-            pins_green_fn=lambda here, pins: True)
-        assert out3 == {}
+def test_committed_detail_counts_every_row():
+    """The committed BENCH_DETAIL.md is the counter baseline the next run
+    diffs against: every timed row carries a job and a stage count."""
+    bench = _bench()
+    with open(os.path.join(HERE, "BENCH_DETAIL.md")) as f:
+        det = bench._detail_json(f.read())
+    assert det is not None
+    rows = set(det["queries"])
+    assert set(det["jobs"]) == rows and set(det["stages"]) == rows
+    assert all(isinstance(v, int) and v >= 0
+               for v in [*det["jobs"].values(), *det["stages"].values()])

@@ -105,3 +105,18 @@ def test_dots_const_matrix_bit_identical_to_column_api(spark):
 def test_dots_const_matrix_rejects_nonfinite(spark):
     with pytest.raises(ValueError):
         V.dots_const_matrix("__d", [[1.0, float("inf")]])
+
+
+def test_dots_const_matrix_rejects_backtick_in_column_name():
+    with pytest.raises(ValueError):
+        V.dots_const_matrix("a`) + 1 + (`b", [[1.0, 2.0]])
+
+
+def test_dots_const_matrix_empty_matrix_is_empty_double_array(spark):
+    import numpy as np
+
+    df = spark.createDataFrame([([1.0, 2.0],)], "v array<double>")
+    for mat in ([], np.zeros((0, 2))):
+        out = df.select(V.dots_const_matrix("v", mat).alias("d"))
+        assert out.schema["d"].dataType.simpleString() == "array<double>"
+        assert out.collect()[0]["d"] == []

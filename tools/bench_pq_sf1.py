@@ -1,12 +1,9 @@
-"""Targeted sf1 re-bench of the PQ family on the post-ties-fix tree (r11
-verdict #4): the committed BENCH_SF1.md (6a17a46) predates the PQ
-ties-at-boundary fix (b3f7949), so its pq_search / pq_search_batch32 /
-ivfpq_search / knn_quantized_top10 rows measure the superseded one-LIMIT
-plan. This tool re-times EXACTLY those thunks (mirroring bench.py's setup:
-same models, seeds, query draw, noop-sink forcing, cold + median-of-3
-warm) at an sf1 dir and appends an addendum section to BENCH_SF1.md with
-scaling verdicts recomputed the r12 way (per-query normalization axis —
-all four are PYTHON_AXIS_QUERIES).
+"""Targeted sf1 re-bench of the PQ family: re-times the pq_build /
+pq_search / pq_search_batch32 / ivfpq_search / knn_quantized_top10 thunks
+exactly as bench.py sets them up (same models, seeds, query draw,
+noop-sink forcing, cold + median-of-3 warm) at an sf1 dir, and prints the
+record plus bench.py's raw scaling table against the committed
+BENCH_DETAIL.md, so those rows can be re-measured without the whole suite.
 
 Usage: python tools/bench_pq_sf1.py [sf1_dir]   (default /tmp/sf1)
 """
@@ -20,7 +17,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import bench  # the canonical helpers: probes, scaling table, _force
+import bench  # the canonical helpers: scaling table, _force
 from vector_db_api_spark import suite
 from vector_db_api_spark.session import get_spark
 
@@ -33,8 +30,6 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf1"
     spark = get_spark("bench-pq-sf1")
     spark.range(1000).selectExpr("sum(id)").collect()
-    jvm = bench._jvm_probe(spark)
-    cb = dict(bench._cpu_baseline(), jvm_fixed_work_sec=jvm)
 
     from vector_db_api_spark.operators.ivf import IVFIndex
     from vector_db_api_spark.operators.pq import PQIndex
@@ -93,9 +88,9 @@ def main() -> None:
         timings[name] = round(sorted(samples)[len(samples) // 2], 3)
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    scaling = bench._scaling_section(HERE, timings, float(sf), cb)
-    record = {"queries": timings, "cpu_baseline": cb, "sf": float(sf),
-              "n_corpus": int(n), "tree": "post-b3f7949 (r12)"}
+    scaling = bench._scaling_section(bench._head_detail(HERE), timings,
+                                     float(sf))
+    record = {"queries": timings, "sf": float(sf), "n_corpus": int(n)}
     print(json.dumps(record))
     print(scaling)
     spark.stop()

@@ -1,6 +1,6 @@
 """Warm-wall scaling measurement for registry entries across two sf dirs.
 
-Generalizes the r12 bench_pq_sf1 pattern: time the SUITE thunks (one
+Generalizes the bench_pq_sf1 pattern: time the SUITE thunks (one
 cold pass, then median of 3 warm, noop-sink forced, JVM GC between
 passes) at a small and a large sf dir in ONE session, and print a
 markdown scaling table ready for a BENCH_SF1.md addendum. Registry
@@ -21,7 +21,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import bench  # canonical helpers: _force, probes
+import bench  # canonical helpers: _force
 from vector_db_api_spark import suite
 from vector_db_api_spark.session import get_spark
 

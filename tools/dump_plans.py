@@ -1,16 +1,16 @@
-"""Dump ``explain("formatted")`` for named suite queries to plans/r15/.
+"""Dump ``explain("formatted")`` for named suite queries to plans/r<round>/.
 
-The r15 optimization round's evidence trail: before touching a query, run
+An optimization round's evidence trail: before touching a query, run
 
-    python tools/r15_plans.py before q1 q2 ...
+    python tools/dump_plans.py <round> before q1 q2 ...
 
 and after the change
 
-    python tools/r15_plans.py after q1 q2 ...
+    python tools/dump_plans.py <round> after q1 q2 ...
 
-Each query writes ``plans/r15/<query>_<tag>.txt``. Runs at sf0.1 (the bench
-scale) on the bench session config so the plans are the ones the bench
-times.
+Each query writes ``plans/r<round>/<query>_<tag>.txt``. Runs at sf0.1 (the
+bench scale; ``SPARK_GRAFT_SF_DIR`` overrides it) on the bench session
+config, so the plans are the ones the bench times.
 """
 
 from __future__ import annotations
@@ -22,10 +22,9 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import SF_DIR  # the bench's scale, so the plans are the timed ones
 from vector_db_api_spark import suite
 from vector_db_api_spark.session import get_spark
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def formatted(df) -> str:
@@ -36,13 +35,15 @@ def formatted(df) -> str:
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
-    assert tag in ("before", "after"), "first arg must be before|after"
+    args = sys.argv[1:]
+    if len(args) < 2 or not args[0].isdigit() or args[1] not in (
+            "before", "after"):
+        sys.exit(__doc__)
+    rnd, tag, *names = args
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out_dir = os.path.join(here, "plans", "r15")
+    out_dir = os.path.join(here, "plans", f"r{rnd}")
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("r15-plans")
+    spark = get_spark(f"r{rnd}-plans")
     spark.sparkContext.setLogLevel("ERROR")
     qs = suite.queries()
     for name in names:

@@ -139,7 +139,16 @@ def dots_const_matrix(col_name: str, matrix) -> Column:
     execution itself was ~0.2s). A single parsed SQL string moves the
     whole tree to the JVM in one call, and the shared ``transform``
     lambda keeps the analyzed tree ~K× smaller than K separate
-    aggregate subtrees."""
+    aggregate subtrees.
+
+    ``col_name`` is spliced into the SQL between backticks, so a name that
+    contains one is rejected rather than escaped. K = 0 gives an empty
+    ``array<double>``: ``transform`` over an empty literal array would type
+    its element as void and fail analysis."""
+    if "`" in col_name:
+        raise ValueError(f"backtick in column name: {col_name!r}")
+    if len(matrix) == 0:
+        return F.array().cast("array<double>")
     mat_sql = "array(%s)" % ",".join(
         "array(%s)" % ",".join(_double_sql(x) for x in row) for row in matrix
     )

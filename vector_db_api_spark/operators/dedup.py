@@ -895,10 +895,13 @@ def connected_components_alternating(
         # not bytes. WindowExec buffers one u-group at a time in a
         # spillable row array, so a hot node degrades to disk instead of
         # OOM — the same worst case the SMJ build side had. The small
-        # star's own (u, m) re-link rows come from the v == min(v) row of
-        # each group (edges are distinct, so exactly one such row per u)
-        # — no second aggregation. Verified: labels identical to the r15
-        # implementation by exceptAll both ways; same round count.
+        # star's own (u, m) re-link rows come from the v == min(v) rows of
+        # each group — no second aggregation. Its input is the large
+        # star's output, a multiset (no distinct), so a group can hold
+        # several such rows; the small star's trailing distinct() is what
+        # restores the set the convergence probe compares. Verified:
+        # labels identical to the r15 implementation by exceptAll both
+        # ways; same round count.
         nbr = (
             e.select(
                 F.explode(

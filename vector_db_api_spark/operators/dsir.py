@@ -119,12 +119,19 @@ def dsir_log_ratios(
     _libm_log = libm_log_udf()
     # the two checkpoint materializations are independent full-corpus
     # featurization scans — run them as concurrent jobs (guide §2.6) so
-    # the fit pays max() of the two walls, not the sum (r16)
+    # the fit pays max() of the two walls, not the sum (r16). The pool
+    # threads inherit the caller's local properties and tags, so both jobs
+    # carry its job group and are cancelled with it.
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    inherit = inheritable_thread_target(target_counts.sparkSession)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_t = pool.submit(lambda: target_counts.localCheckpoint(eager=True))
-        f_r = pool.submit(lambda: raw_counts.localCheckpoint(eager=True))
+        f_t = pool.submit(inherit(
+            lambda: target_counts.localCheckpoint(eager=True)))
+        f_r = pool.submit(inherit(
+            lambda: raw_counts.localCheckpoint(eager=True)))
         target_counts = f_t.result()
         raw_counts = f_r.result()
     # both scalar totals in ONE job (r16, guide §1.2 — the two sequential

@@ -638,22 +638,27 @@ class IVFIndex:
         # sample checkpoint) are mutually independent — submit them as
         # concurrent jobs (guide §2.6) so the route pays max() of their
         # walls, not the sum; each is a driver-blocking round-trip on a
-        # route that is job-latency-bound at any scale (r16)
+        # route that is job-latency-bound at any scale (r16). The pool
+        # threads inherit the caller's local properties and tags, so the
+        # jobs carry its job group and are cancelled with it.
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark import inheritable_thread_target
+
+        inherit = inheritable_thread_target(queries.sparkSession)
         with ThreadPoolExecutor(max_workers=3) as pool:
-            f_n = pool.submit(queries.count)
-            f_probes = pool.submit(
+            f_n = pool.submit(inherit(queries.count))
+            f_probes = pool.submit(inherit(
                 lambda: self.assign_queries(
                     queries, nprobe=p_max, with_rank=True
                 ).localCheckpoint(eager=True)  # reused per candidate p
-            )
+            ))
             # deterministic sample: hash-ordered ids, stable across retries
-            f_sample = pool.submit(
+            f_sample = pool.submit(inherit(
                 lambda: queries.orderBy(
                     F.xxhash64(F.col("query_id"), F.lit(seed))
                 ).limit(sample_queries).localCheckpoint(eager=True)
-            )
+            ))
             n = f_n.result()
             probes = f_probes.result()
             sample = f_sample.result()

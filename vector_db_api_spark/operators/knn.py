@@ -210,8 +210,10 @@ def knn_batch_numpy(
             # DataFrame per query (Q DataFrame constructions + a Q-way
             # concat per batch dominated the kernel at large Q — the
             # corpus-as-queries self-join runs Q = n). argpartition along
-            # axis 0 is the same per-column introselect as the per-query
-            # 1-D call; the selected row SET per query is unchanged.
+            # axis 0 runs the same per-column introselect as the per-query
+            # 1-D call, but which of several rows tied at the k-th score it
+            # keeps is implementation-defined (it may differ between numpy
+            # versions), so at a tied boundary the kept ids can differ.
             if kk < scores.shape[0]:
                 idx = np.argpartition(-scores, kk - 1, axis=0)[:kk]
             else:
