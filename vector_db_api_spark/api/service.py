@@ -58,14 +58,36 @@ class Engine:
         if heal_on_start:
             for table in ("libraries", "documents", "chunks"):
                 self.store.heal(table)
+        # (committed libraries version, {id: Row}) — see _library_rows
+        self._libraries: tuple[int | None, dict] | None = None
 
     # -- helpers -------------------------------------------------------------
 
+    def _library_rows(self) -> dict:
+        """{id: Row} of the libraries snapshot, collected once per committed
+        version. The catalog is read on every call, so a commit by this or
+        a sibling engine is seen at once. The cached rows are read from the
+        committed version they are keyed by, never from the store's current
+        version: a version staged by an open transaction — which any thread
+        sharing the store sees — can be rolled back and its number reused
+        for other rows. While a transaction has staged one, the staged rows
+        are read uncached (read-your-writes)."""
+        def collect(version: int | None = None) -> dict:
+            rows = self.store.read("libraries", version=version).collect()
+            return {r["id"]: r for r in rows}
+
+        if self.store.staged("libraries"):
+            return collect()
+        v = self.store.committed_version("libraries")
+        if self._libraries is None or self._libraries[0] != v:
+            self._libraries = (v, collect(v) if v is not None else {})
+        return self._libraries[1]
+
     def _get_library_row(self, library_id: str):
-        rows = self.store.read("libraries").filter(F.col("id") == library_id).collect()
-        if not rows:
+        row = self._library_rows().get(library_id)
+        if row is None:
             raise NotFoundError(f"library {library_id!r} not found")  # 404
-        return rows[0]
+        return row
 
     def _library_chunks(self, library_id: str) -> DataFrame:
         # manifest-level partition pruning: only this library's directories
@@ -845,6 +867,12 @@ class Engine:
 
     # -- SearchService -------------------------------------------------------
 
+    #: the columns a search hit carries besides ``id`` and ``score``
+    HIT_COLS = (
+        "library_id", "document_id", "position", "text", "tags", "author",
+        "created_at",
+    )
+
     def search(
         self,
         library_id: str,
@@ -869,20 +897,22 @@ class Engine:
         if metric not in METRICS:
             raise ValidationError(f"metric must be one of {METRICS}")
 
-        chunks = self._library_chunks(library_id)
-        hits = self.indexes.search(
-            library_id, chunks, list(query_embedding), k, metric=metric
-        )
-        # hydrate: inner join back to full rows — vanished ids drop, exactly
-        # the reference's dict-lookup-and-skip (services/search.py:46-49)
-        hydrated = hits.join(chunks.drop("embedding"), "id", "inner").select(
+        chunks = self._library_chunks(library_id).select(
             "id", "library_id", "document_id", "position", "text",
             F.col("metadata.tags").alias("tags"),
             F.col("metadata.author").alias("author"),
-            "created_at", "score",
+            "created_at", "embedding",
+        )
+        # the hit columns ride the re-rank, which reads the live chunks
+        # snapshot: vanished ids never surface — the reference's
+        # dict-lookup-and-skip (services/search.py:46-49) — and no second
+        # scan of the partition re-attaches them
+        hits = self.indexes.search(
+            library_id, chunks, list(query_embedding), k, metric=metric,
+            extra_cols=self.HIT_COLS,
         )
         return apply_post_filters(
-            hydrated, doc_ids=doc_ids, tags=tags, author=author,
+            hits, doc_ids=doc_ids, tags=tags, author=author,
             created_after=created_after,
             doc_id_col="document_id", tags_col="tags",
             author_col="author", created_at_col="created_at",

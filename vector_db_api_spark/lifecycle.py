@@ -13,7 +13,8 @@ JSON; the live version is named by a pointer file flipped atomically after
 the tables are fully written (write-new → flip → old readers finish on the
 old snapshot). Flat needs no materialized state. Models are reconstructed
 deterministically: SignLSH from (dim, L, H, seed), IVF from the stored
-centroid matrix.
+centroid matrix — once per version per lifecycle object (see
+:meth:`IndexLifecycle._loaded`); the pointer itself is re-read on every call.
 """
 
 from __future__ import annotations
@@ -23,14 +24,14 @@ import time
 from dataclasses import dataclass, field
 
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from vector_db_api_spark.api.errors import NotFoundError, ValidationError
 from vector_db_api_spark.sources import fsio
-from vector_db_api_spark.operators.ivf import IVFIndex
-from vector_db_api_spark.operators.knn import knn
-from vector_db_api_spark.operators.lsh import SignLSH, build_bucket_table
+from vector_db_api_spark.operators.ivf import FRAME_DDL, IVFIndex, posting_ddl
+from vector_db_api_spark.operators.knn import hydrate_hits, knn
+from vector_db_api_spark.operators.lsh import SignLSH, bucket_ddl, build_bucket_table
 
 # factory defaults — reference indexing/registry.py:47-54.
 # max_kmeans_iters: the reference DTO declares it (api/dto.py:41, default 2)
@@ -68,6 +69,8 @@ class IndexLifecycle:
         # same as the EntityStore catalog — hdfs:// and s3a:// roots work
         self._fs = fsio.fs_for(root, spark)
         self._fs.makedirs(root)
+        # library_id → ((version, built_at), IVF or LSH model)
+        self._loaded_cache: dict[str, tuple] = {}
 
     # -- catalog -------------------------------------------------------------
 
@@ -85,6 +88,59 @@ class IndexLifecycle:
         d = self._lib_dir(library_id)
         self._fs.makedirs(d)
         fsio.write_json_atomic(self._fs, self._pointer(library_id), desc)
+
+    # -- per-version state ----------------------------------------------------
+
+    def _version_dir(self, library_id: str, desc: dict) -> str:
+        return os.path.join(self._lib_dir(library_id), f"v={desc['version']}")
+
+    def _loaded(self, library_id: str, desc: dict) -> IVFIndex | SignLSH:
+        """The model of the version ``desc`` names. Deltas never touch a
+        version's centroids, so they are read once and kept, one
+        entry per library, keyed by ``(version, built_at)``: ``built_at``
+        tells apart the ``v=1`` of a library that was dropped and rebuilt,
+        here or by another engine sharing the root. The caller still reads
+        ``desc`` from the pointer on every call, so a sibling's rebuild is
+        seen on the next request."""
+        key = (desc["version"], desc.get("built_at"))
+        hit = self._loaded_cache.get(library_id)
+        if hit is not None and hit[0] == key:
+            return hit[1]
+        p = desc["params"]
+        if desc["type"] == "lsh":
+            model = SignLSH(
+                dim=desc["dim"],
+                num_tables=p["num_tables"],
+                hyperplanes_per_table=p["hyperplanes_per_table"],
+                seed=p["seed"],
+            )
+        else:
+            model = IVFIndex.from_frame(
+                self.spark.read.schema(FRAME_DDL).parquet(os.path.join(
+                    self._version_dir(library_id, desc), "ivf_centroids"
+                )),
+                nprobe=p["nprobe"],
+            )
+        self._loaded_cache[library_id] = (key, model)
+        return model
+
+    def _probed_cells(
+        self, vdir: str, ivf: IVFIndex, ddl: str, query_vec: list[float]
+    ) -> DataFrame:
+        """The posting rows of the cells ``query_vec`` probes, read from
+        their ``centroid_id=c`` directories only — listing nprobe cells
+        instead of every cell of the version (auto_train sizes ~2√n of
+        them), with the declared schema ``ddl`` (inferring it would list
+        them all). ``basePath`` keeps the partition column; a probed cell
+        that has no directory (no row was ever assigned to it) is skipped."""
+        adir = os.path.join(vdir, "ivf_assignments")
+        cells = [
+            path for c in ivf.probe_centroids(query_vec)
+            if self._fs.isdir(path := os.path.join(adir, f"centroid_id={c}"))
+        ]
+        if not cells:
+            return self.spark.createDataFrame([], ddl)
+        return self.spark.read.schema(ddl).option("basePath", adir).parquet(*cells)
 
     # -- build / publish ------------------------------------------------------
 
@@ -230,12 +286,19 @@ class IndexLifecycle:
         hydration join). New/updated embeddings DO need their new
         bucket/posting rows appended or recall decays — that's this delta.
         Bucket bloat from superseded rows is reclaimed at the next rebuild
-        (``vacuum`` + config swap). Returns the number of delta rows.
+        (``vacuum`` + config swap). Returns the number of posting rows
+        appended, counted as the write runs: one per embedded row for IVF,
+        one per table for LSH — the kernels emit none for a NULL or
+        zero-norm embedding.
         """
         desc = self.current(library_id)
         if desc is None or desc["type"] == "flat":
             return 0  # flat scans the live table — always fresh
-        if batch.isEmpty():
+        # one aggregate answers both questions below
+        stats = batch.agg(
+            F.count(F.lit(1)).alias("rows"), F.count(vec_col).alias("embedded")
+        ).first()
+        if not stats["rows"]:
             return 0
         # mutability contract: in-place serving ends at the first mutation
         # (flip BEFORE the delta lands, so no reader can in-place re-rank a
@@ -243,40 +306,33 @@ class IndexLifecycle:
         # subset: an upsert that replaces an embedded chunk with
         # embedding=NULL contributes no delta row, yet still supersedes a
         # vector the selfcontained tables may carry — only live hydration
-        # can drop it (r10 advice, high).
+        # can drop it.
         self._downgrade_serving(library_id, desc)
-        embedded = batch.filter(F.col(vec_col).isNotNull())
-        if embedded.isEmpty():
+        if not stats["embedded"]:
             return 0
+        embedded = batch.filter(F.col(vec_col).isNotNull())
         include_vectors = desc.get("layout", "idonly") == "selfcontained"
-        vdir = os.path.join(self._lib_dir(library_id), f"v={desc['version']}")
-        p = desc["params"]
+        vdir = self._version_dir(library_id, desc)
+        model = self._loaded(library_id, desc)
+        appended = Observation()
         if desc["type"] == "lsh":
-            model = SignLSH(
-                dim=desc["dim"],
-                num_tables=p["num_tables"],
-                hyperplanes_per_table=p["hyperplanes_per_table"],
-                seed=p["seed"],
-            )
             delta = build_bucket_table(
                 model, embedded, id_col=id_col, vec_col=vec_col,
                 include_vectors=include_vectors,
             )
-            delta.write.mode("append").parquet(os.path.join(vdir, "lsh_buckets"))
-            return delta.count()
-        # ivf: assign against the stored centroids, append partition-locally
-        ivf = IVFIndex.from_frame(
-            self.spark.read.parquet(os.path.join(vdir, "ivf_centroids")),
-            nprobe=p["nprobe"],
-        )
-        delta = ivf.assign(
-            embedded, id_col=id_col, vec_col=vec_col,
-            include_vectors=include_vectors,
-        )
-        delta.write.mode("append").partitionBy("centroid_id").parquet(
-            os.path.join(vdir, "ivf_assignments")
-        )
-        return delta.count()
+            out = delta.observe(appended, F.count(F.lit(1)).alias("rows")).write
+            out.mode("append").parquet(os.path.join(vdir, "lsh_buckets"))
+        else:
+            # ivf: assign against the stored centroids, append partition-locally
+            delta = model.assign(
+                embedded, id_col=id_col, vec_col=vec_col,
+                include_vectors=include_vectors,
+            )
+            out = delta.observe(appended, F.count(F.lit(1)).alias("rows")).write
+            out.mode("append").partitionBy("centroid_id").parquet(
+                os.path.join(vdir, "ivf_assignments")
+            )
+        return appended.get["rows"]
 
     def remove(self, library_id: str, ids: list | DataFrame) -> int:
         """Record deleted chunk ids against the LIVE index version — the
@@ -362,6 +418,7 @@ class IndexLifecycle:
         indexing/registry.py:41-44, called on library delete). Without
         this, a deleted library's index versions leak forever. Returns
         whether anything existed."""
+        self._loaded_cache.pop(library_id, None)
         d = self._lib_dir(library_id)
         if not self._fs.isdir(d):
             return False
@@ -423,42 +480,37 @@ class IndexLifecycle:
     ) -> DataFrame:
         """Dispatch on the live index type; flat (or no index yet) scans
         exactly — the reference's untrained-IVF fallback (ivf.py:96-99)
-        generalized."""
+        generalized. Returns ``(id_col, *extra_cols, score)``: for flat and
+        IVF the extra columns ride the re-rank from ``chunks``; LSH hits,
+        and those of an IVF version served in place, join back to
+        ``chunks`` for them."""
         desc = self.current(library_id)
         if desc is None or desc["type"] == "flat":
             return knn(chunks, query_vec, k, metric=metric, id_col=id_col,
                        vec_col=vec_col, extra_cols=extra_cols)
-        vdir = os.path.join(self._lib_dir(library_id), f"v={desc['version']}")
+        if desc["type"] not in ("lsh", "ivf"):
+            raise NotFoundError(f"no usable index for library {library_id!r}")
+        vdir = self._version_dir(library_id, desc)
+        model = self._loaded(library_id, desc)
         # serving mode: the operators auto-detect the in-place layouts by
         # the vector column's presence, so an idonly-SERVING version whose
         # tables were built selfcontained (downgraded by a mutation) just
-        # drops the column — probes fall back to live hydration, where
-        # deletes drop at the join and updated embeddings win at re-rank
+        # leaves the column out of the read — probes fall back to live
+        # hydration, where deletes drop at the join and updated embeddings
+        # win at re-rank
         in_place = desc.get("layout_serving", "idonly") == "selfcontained"
         if desc["type"] == "lsh":
-            p = desc["params"]
-            model = SignLSH(
-                dim=desc["dim"],
-                num_tables=p["num_tables"],
-                hyperplanes_per_table=p["hyperplanes_per_table"],
-                seed=p["seed"],
-            )
-            buckets = self.spark.read.parquet(os.path.join(vdir, "lsh_buckets"))
-            if not in_place and vec_col in buckets.columns:
-                buckets = buckets.drop(vec_col)
-            return model.search(chunks, buckets, query_vec, k, metric=metric,
+            buckets = self.spark.read.schema(
+                bucket_ddl(chunks, id_col, vec_col, include_vectors=in_place)
+            ).parquet(os.path.join(vdir, "lsh_buckets"))
+            hits = model.search(chunks, buckets, query_vec, k, metric=metric,
                                 id_col=id_col, vec_col=vec_col)
-        if desc["type"] == "ivf":
-            ivf = IVFIndex.from_frame(
-                self.spark.read.parquet(os.path.join(vdir, "ivf_centroids")),
-                nprobe=desc["params"]["nprobe"],
-            )
-            assignments = self.spark.read.parquet(os.path.join(vdir, "ivf_assignments"))
-            if not in_place and vec_col in assignments.columns:
-                assignments = assignments.drop(vec_col)
-            return ivf.search(chunks, assignments, query_vec, k, metric=metric,
-                              id_col=id_col, vec_col=vec_col)
-        raise NotFoundError(f"no usable index for library {library_id!r}")
+            return hydrate_hits(hits, chunks, id_col, extra_cols)
+        ddl = posting_ddl(chunks, id_col, vec_col, include_vectors=in_place)
+        cells = self._probed_cells(vdir, model, ddl, query_vec)
+        return model.search(chunks, cells, query_vec, k, metric=metric,
+                            id_col=id_col, vec_col=vec_col,
+                            extra_cols=extra_cols)
 
     # -- routed self-join with a catalog-persisted decision -------------------
 
@@ -523,11 +575,8 @@ class IndexLifecycle:
                 f"self_join_auto needs a live IVF index for library "
                 f"{library_id!r} (found: {desc and desc['type']!r})"
             )
-        vdir = os.path.join(self._lib_dir(library_id), f"v={desc['version']}")
-        ivf = IVFIndex.from_frame(
-            self.spark.read.parquet(os.path.join(vdir, "ivf_centroids")),
-            nprobe=desc["params"]["nprobe"],
-        )
+        vdir = self._version_dir(library_id, desc)
+        ivf = self._loaded(library_id, desc)
         fp = self.corpus_fingerprint(chunks, id_col=id_col, vec_col=vec_col)
         knobs = {k_: route_kw[k_] for k_ in sorted(route_kw)}
         cache_path = os.path.join(

@@ -34,10 +34,11 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from vector_db_api_spark.operators.knn import knn
+from vector_db_api_spark.operators.knn import empty_hits, hydrate_hits, knn
 
 DEFAULT_NUM_CENTROIDS = 64   # registry.py:51-54 defaults
 DEFAULT_NPROBE = 4
+FRAME_DDL = "centroid_id int, vec array<double>"  # to_frame / from_frame
 
 
 def _spherical_kmeans(
@@ -71,6 +72,23 @@ def _spherical_kmeans(
         if shift < tol:
             break
     return cent
+
+
+def posting_ddl(
+    corpus: DataFrame,
+    id_col: str = "id",
+    vec_col: str = "embedding",
+    include_vectors: bool = False,
+) -> str:
+    """Schema of the :meth:`IVFIndex.assign` posting table over ``corpus``,
+    so a persisted copy can be read without inferring it."""
+    # Match the corpus id type exactly so downstream semi-joins never
+    # implicitly coerce (string=bigint loses precision on large int64).
+    id_type = corpus.schema[id_col].dataType.simpleString()
+    ddl = f"{id_col} {id_type}, centroid_id int"
+    if include_vectors:
+        ddl += f", {vec_col} {corpus.schema[vec_col].dataType.simpleString()}"
+    return ddl
 
 
 class IVFIndex:
@@ -241,7 +259,7 @@ class IVFIndex:
             (int(i), [float(x) for x in self.centroids[i]])
             for i in range(len(self.centroids))
         ]
-        return spark.createDataFrame(rows, "centroid_id int, vec array<double>")
+        return spark.createDataFrame(rows, FRAME_DDL)
 
     @classmethod
     def from_frame(cls, frame: DataFrame, nprobe: int = DEFAULT_NPROBE) -> "IVFIndex":
@@ -296,13 +314,7 @@ class IVFIndex:
         # large centroid matrices (auto_train sizes k ~ 2√n — 100k+ cells at
         # corpus scale) ride a broadcast, not the per-task closure
         shipped = ship_model(corpus, self.centroids)
-        # Match the corpus id type exactly so downstream semi-joins never
-        # implicitly coerce (string=bigint loses precision on large int64).
-        id_type = corpus.schema[id_col].dataType.simpleString()
-        out_schema = f"{id_col} {id_type}, centroid_id int"
-        if include_vectors:
-            vec_type = corpus.schema[vec_col].dataType.simpleString()
-            out_schema += f", {vec_col} {vec_type}"
+        out_schema = posting_ddl(corpus, id_col, vec_col, include_vectors)
 
         def assign_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             cent = shipped.get()
@@ -359,9 +371,12 @@ class IVFIndex:
         vec_col: str = "embedding",
         nprobe: int | None = None,
         prefilter: Column | None = None,
+        extra_cols: Sequence[str] = (),
     ) -> DataFrame:
         """ANN top-k: nprobe centroid filter (partition-prunable) → semi-join
-        → exact re-rank of ALL candidates.
+        → exact re-rank of ALL candidates. Returns ``(id_col, *extra_cols,
+        score)`` like :func:`knn`: ``extra_cols`` of ``corpus`` ride the
+        re-rank, so a caller needs no join back to the corpus for them.
 
         ``prefilter`` (a boolean Column over corpus attributes) makes this a
         FILTERED vector search: the predicate applies to the corpus BEFORE
@@ -374,8 +389,7 @@ class IVFIndex:
         filtered-ANN recall/cost trade."""
         probe = self.probe_centroids(query_vec, nprobe=nprobe)
         if not probe:
-            id_type = corpus.schema[id_col].dataType.simpleString()
-            return corpus.sparkSession.createDataFrame([], f"{id_col} {id_type}, score double")
+            return empty_hits(corpus, id_col, extra_cols)
         if vec_col in assignments.columns and prefilter is None:
             # IVF-Flat posting table (assign include_vectors=True): probed
             # cells already carry their vectors — re-rank in place, no
@@ -385,12 +399,14 @@ class IVFIndex:
             cand_v = assignments.filter(
                 F.col("centroid_id").isin(probe)
             ).select(id_col, vec_col)
-            return knn(cand_v, query_vec, k, metric=metric, id_col=id_col,
+            hits = knn(cand_v, query_vec, k, metric=metric, id_col=id_col,
                        vec_col=vec_col)
+            return hydrate_hits(hits, corpus, id_col, extra_cols)
         cand = assignments.filter(F.col("centroid_id").isin(probe)).select(id_col)
         corpus2 = corpus.filter(prefilter) if prefilter is not None else corpus
         hydrated = corpus2.join(cand, id_col, "left_semi")
-        return knn(hydrated, query_vec, k, metric=metric, id_col=id_col, vec_col=vec_col)
+        return knn(hydrated, query_vec, k, metric=metric, id_col=id_col,
+                   vec_col=vec_col, extra_cols=extra_cols)
 
     def assign_queries(
         self,

@@ -30,6 +30,7 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from vector_db_api_spark.functions import vector as V
 from vector_db_api_spark.operators.topk import topk, topk_per_group
@@ -76,6 +77,36 @@ def knn(
         scored = embedded.withColumn("score", V.similarity(metric, e, q))
     scored = scored.select(id_col, *extra_cols, "score")
     return topk(scored, [F.desc("score"), F.col(id_col).asc()], k)
+
+
+def empty_hits(
+    corpus: DataFrame, id_col: str = "id", extra_cols: Sequence[str] = ()
+) -> DataFrame:
+    """Zero rows of :func:`knn`'s output schema, ``(id_col, *extra_cols,
+    score)`` — for probes that can reach no candidate (a zero query)."""
+    fields = [
+        StructField(c, corpus.schema[c].dataType) for c in (id_col, *extra_cols)
+    ]
+    return corpus.sparkSession.createDataFrame(
+        [], StructType([*fields, StructField("score", DoubleType())])
+    )
+
+
+def hydrate_hits(
+    hits: DataFrame,
+    corpus: DataFrame,
+    id_col: str = "id",
+    extra_cols: Sequence[str] = (),
+) -> DataFrame:
+    """Attach ``extra_cols`` of ``corpus`` to ``(id_col, score)`` hits — for
+    re-ranks that never read the corpus (an in-place posting or bucket
+    table). An inner join on ``id_col``: a hit whose id is not in
+    ``corpus`` drops, and the row order is not kept."""
+    if not extra_cols:
+        return hits
+    return hits.join(corpus.select(id_col, *extra_cols), id_col).select(
+        id_col, *extra_cols, "score"
+    )
 
 
 def knn_batch(

@@ -162,14 +162,7 @@ class SignLSH:
         # ship ONLY the hyperplane matrix (broadcast when large), never the
         # whole model object through the task closure
         shipped = ship_model(corpus, self.hyperplanes)
-        # Derive the id type from the corpus schema so the later candidate
-        # semi-join is an exact-type equi-join (no implicit string↔bigint
-        # coercion that loses precision for large int64 ids).
-        id_type = corpus.schema[id_col].dataType.simpleString()
-        out_schema = f"{id_col} {id_type}, table_id int, signature long"
-        if include_vectors:
-            vec_type = corpus.schema[vec_col].dataType.simpleString()
-            out_schema += f", {vec_col} {vec_type}"
+        out_schema = bucket_ddl(corpus, id_col, vec_col, include_vectors)
 
         def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             hp = shipped.get()
@@ -457,6 +450,24 @@ class SignLSH:
             "exact full scan (pad_to_k=True)", len(rows), k,
         )
         return knn(corpus, query_vec, k, metric=metric, id_col=id_col, vec_col=vec_col)
+
+
+def bucket_ddl(
+    corpus: DataFrame,
+    id_col: str = "id",
+    vec_col: str = "embedding",
+    include_vectors: bool = False,
+) -> str:
+    """Schema of the :meth:`SignLSH.signatures` bucket table over
+    ``corpus``, so a persisted copy can be read without inferring it."""
+    # Derive the id type from the corpus schema so the later candidate
+    # semi-join is an exact-type equi-join (no implicit string↔bigint
+    # coercion that loses precision for large int64 ids).
+    id_type = corpus.schema[id_col].dataType.simpleString()
+    ddl = f"{id_col} {id_type}, table_id int, signature long"
+    if include_vectors:
+        ddl += f", {vec_col} {corpus.schema[vec_col].dataType.simpleString()}"
+    return ddl
 
 
 def build_bucket_table(

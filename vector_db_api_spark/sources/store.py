@@ -154,6 +154,12 @@ class EntityStore:
         raw = fsio.read_json(self._fs, self._pointer_path(table))
         return raw.get("version") if raw is not None else None
 
+    def staged(self, table: str) -> bool:
+        """Whether the open :meth:`transaction` has staged a version of
+        ``table``. Such a version is visible to this writer only, and a
+        rollback deletes it, so the next write can reuse its number."""
+        return self._txn is not None and table in self._txn
+
     def current_version(self, table: str) -> int | None:
         """Live version of ``table``. Inside an open :meth:`transaction`,
         the writer sees its own staged (not yet committed) version —
@@ -162,6 +168,11 @@ class EntityStore:
         the committed catalog until the single commit flip."""
         if self._txn is not None and table in self._txn:
             return self._txn[table]
+        return self.committed_version(table)
+
+    def committed_version(self, table: str) -> int | None:
+        """Version of ``table`` the catalog names, ignoring any version an
+        open :meth:`transaction` has staged."""
         cat = self._load_catalog()
         if cat is not None and table in cat:
             return cat[table]
@@ -244,12 +255,18 @@ class EntityStore:
     def _empty(self, table: str) -> DataFrame:
         return self.spark.createDataFrame([], TABLE_DDL[table])
 
-    def read(self, table: str, partitions: list | None = None) -> DataFrame:
+    def read(
+        self,
+        table: str,
+        partitions: list | None = None,
+        version: int | None = None,
+    ) -> DataFrame:
         """Current snapshot as a DataFrame. ``partitions`` restricts the scan
         to the named partition values at MANIFEST level — only those
         directories are listed/opened, the store-level analogue of static
-        partition pruning (the reference's ``_by_library`` index lookup)."""
-        v = self.current_version(table)
+        partition pruning (the reference's ``_by_library`` index lookup).
+        ``version`` reads that snapshot instead of the current one."""
+        v = self.current_version(table) if version is None else version
         if v is None:
             return self._empty(table)
         manifest = self.load_manifest(table, v)
@@ -298,7 +315,8 @@ class EntityStore:
 
         for rel in fresh.values():
             pdir = os.path.join(self._table_dir(table), rel)
-            ids = self.spark.read.parquet(pdir).select("id")
+            # declared schema: inferring it would open a footer in a job
+            ids = self.spark.read.schema("id string").parquet(pdir)
             n = ids.count()  # parquet metadata count — cheap
             B.write_bloom(pdir, B.build_bloom(ids, "id", n), fs=self._fs)
 

@@ -3968,19 +3968,21 @@ ORDER BY position ASC, id ASC LIMIT 10
 
 
 def q_search_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed search pipeline (services/search.py:18-75): kNN within one
-    library's chunks → hydrate full rows → doc-id post-filter AFTER top-k."""
+    """Composed search pipeline (services/search.py:18-75), shaped like
+    ``Engine.search``: kNN within one library's chunks with the hit columns
+    carried through the re-rank (no join back to the chunks) → doc-id
+    post-filter AFTER top-k."""
     chunks = _base_chunks(spark, sf_dir)
-    lib_chunks = chunks.filter(F.col("library_id") == "src3")
-    hits = KNN.knn(lib_chunks, Q0, 10, metric="cosine", id_col="id")
-    hydrated = hits.join(lib_chunks.drop("embedding"), "id", "inner").select(
+    lib_chunks = chunks.filter(F.col("library_id") == "src3").select(
         "id", "document_id", "position",
-        F.col("metadata.author").alias("author"), "score",
+        F.col("metadata.author").alias("author"), "embedding",
     )
+    hits = KNN.knn(lib_chunks, Q0, 10, metric="cosine", id_col="id",
+                   extra_cols=("document_id", "position", "author"))
     # doc-membership post-filter AFTER top-k (returns < k rows by design);
     # src3 owns docs with doc_id ≡ 3 (mod 20), this keeps the ≡ 3 (mod 40)
     # half of them at every scale factor
-    return hydrated.filter(
+    return hits.filter(
         F.expr("CAST(substring(document_id, 2) AS BIGINT) % 40 = 3")
     )
 
