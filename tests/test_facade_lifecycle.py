@@ -589,3 +589,74 @@ def test_self_join_routing_decision_is_cached_through_the_catalog(
                       sample_queries=32)
     assert dec4["routing_source"] == "measured"
     chunks.unpersist()
+
+
+@pytest.fixture(scope="module")
+def typed(spark, tmp_path_factory):
+    """A facade over library T (dim 2) holding one empty document D."""
+    f = Facade(Engine(spark, str(tmp_path_factory.mktemp("typed"))))
+    assert f.create_library({"id": "T", "name": "t", "embedding_dim": 2})["status"] == 201
+    assert f.create_document("T", {"id": "D"})["status"] == 201
+    return f
+
+
+@pytest.mark.parametrize("bad", [
+    {"position": "x"},
+    {"position": 1.5},
+    {"position": True},
+    {"position": 2**31},
+    {"id": 7},
+    {"text": 5},
+    {"metadata": {"page_number": "two"}},
+    {"metadata": {"tags": "x"}},
+    {"metadata": {"tags": [1]}},
+    {"metadata": {"author": 3}},
+    {"metadata": {"nope": "x"}},
+    {"metadata": ["not", "an", "object"]},
+])
+def test_mistyped_chunk_field_is_a_422(typed, bad):
+    """A chunk field of the wrong type is the reference's Pydantic 422 on
+    every chunk route — never a 500 from Spark's row conversion, never a
+    silent coercion (``position: 1.5`` stored as 1) — and the with-chunks
+    route leaves no document behind."""
+    f = typed
+    chunk = {"id": "c0", "position": 0, "text": "t", "embedding": [1.0, 0.0],
+             "metadata": {"author": "a", "tags": ["x"], "page_number": 1}}
+    chunk.update(bad)
+
+    one = f.upsert_chunk("T", "D", dict(chunk))
+    assert one["status"] == 422, one
+    bulk = f.bulk_upsert_chunks("T", [dict(chunk, document_id="D")])
+    assert bulk["status"] == 422, bulk
+    made = f.create_document_with_chunks("T", {"id": "D2", "chunks": [dict(chunk)]})
+    assert made["status"] == 422, made
+    assert f.get_document("D2")["status"] == 404  # no document left behind
+    assert f.get_chunk(str(chunk["id"]))["status"] == 404
+
+
+def test_well_typed_chunk_metadata_round_trips(typed):
+    f = typed
+    meta = {"author": "ann", "tags": ["x", "ü"], "page_number": 3,
+            "token_count": None}
+    up = f.upsert_chunk("T", "D", {"id": "c0", "position": 2, "text": "t",
+                                   "embedding": [1, 0], "metadata": meta})
+    assert up["status"] == 200, up
+    got = up["data"]
+    assert got["position"] == 2
+    assert got["metadata"]["tags"] == ["x", "ü"]
+    assert got["metadata"]["page_number"] == 3
+    assert got["metadata"]["source_uri"] is None
+
+
+def test_bulk_upsert_writes_one_file(typed):
+    """A request's chunks are one local relation of one partition: written
+    into an empty library they make one file, not one per core the
+    relation's rows would be spread over."""
+    f = typed
+    assert f.create_library({"id": "B", "name": "b", "embedding_dim": 2})["status"] == 201
+    assert f.create_document("B", {"id": "DB"})["status"] == 201
+    chunks = [{"id": f"b{i}", "document_id": "DB", "position": i, "text": "t",
+               "embedding": [1.0, float(i)]} for i in range(16)]
+    assert f.bulk_upsert_chunks("B", chunks)["status"] == 200
+    files = f.engine.store.read("chunks", partitions=["B"]).inputFiles()
+    assert len(files) == 1, files

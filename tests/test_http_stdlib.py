@@ -97,6 +97,11 @@ def test_live_http_crud_search_workflow(server):
     st, out = _req(server, "POST", "/libraries/L1/search",
                    {"query_embedding": [1.0]})
     assert st == 422
+    # a mistyped chunk field is a 422 (Pydantic parity), not a 500
+    st, out = _req(server, "POST", "/libraries/L1/documents/D1/chunks",
+                   {"id": "c4", "position": "x", "text": "typo",
+                    "embedding": [0, 0, 0, 1.0]})
+    assert st == 422 and "position" in out["error"], out
     st, out = _req(server, "GET", "/no/such/route")
     assert st == 404 and "no route" in out["error"]
     # malformed JSON body -> 400, not a hung socket or a 500

@@ -11,6 +11,10 @@ What a warm search may not do: re-collect the libraries table, reload the
 IVF model or re-infer a posting schema (fixed by the committed versions),
 list every cell of the posting table (only the probed cells are read), or
 scan the library partition a second time to re-attach hit columns.
+
+What a write may not do: put its request rows under a pickled Python RDD.
+Built as a JVM local relation (``session.local_frame``), broadcasting or
+collecting them needs no job; the budgets below count that.
 """
 
 from __future__ import annotations
@@ -23,9 +27,11 @@ from vector_db_api_spark.api.service import Engine
 
 DIM = 8
 SEARCH_JOBS = 2
-UPSERT_JOBS = 19
+UPSERT_JOBS = 14
 DELETE_JOBS = 7
-CREATE_JOBS = 22
+CREATE_JOBS = 16
+BULK_JOBS = 12
+LSH_SEARCH_JOBS = 4
 
 
 def _chunk(cid: str, pos: int, v) -> dict:
@@ -92,3 +98,40 @@ def test_create_document_with_chunks_job_budget(spark, served):
     jobs, out = _jobs(spark, lambda: fac.create_document_with_chunks("L", body))
     assert out["status"] == 201
     assert jobs <= CREATE_JOBS, jobs
+
+
+def test_bulk_upsert_chunks_job_budget(spark, served):
+    fac, vecs = served
+    chunks = [dict(_chunk(f"b{i}", i, v), document_id="d0")
+              for i, v in enumerate(vecs[20:36])]
+    jobs, out = _jobs(spark, lambda: fac.bulk_upsert_chunks("L", chunks))
+    assert out["status"] == 200 and out["data"]["upserted"] == 16
+    assert jobs <= BULK_JOBS, jobs
+
+
+def test_warm_lsh_search_job_budget(spark, tmp_path_factory):
+    """The LSH hits, collected by the probe, come back as a local relation
+    whose hydration join keeps them a top-k: no job re-reads them and the
+    final sort needs no shuffle."""
+    rng = np.random.default_rng(6)
+    vecs = rng.standard_normal((240, DIM))
+    fac = Facade(Engine(spark, str(tmp_path_factory.mktemp("serving_lsh"))))
+    assert fac.create_library({
+        "id": "H", "name": "lsh", "embedding_dim": DIM,
+        "index_config": {"type": "lsh", "num_tables": 4,
+                         "hyperplanes_per_table": 4},
+    })["status"] == 201
+    assert fac.create_document_with_chunks("H", {
+        "id": "d0", "chunks": [_chunk(f"c{i}", i, v) for i, v in enumerate(vecs)],
+    })["status"] == 201
+    assert fac.rebuild_index("H")["status"] == 200
+    for q in vecs[:2]:
+        assert fac.search("H", {"query_embedding": list(q), "k": 5})["status"] == 200
+    jobs, out = _jobs(spark, lambda: fac.search(
+        "H", {"query_embedding": list(vecs[3]), "k": 5}))
+    assert out["status"] == 200
+    hits = out["data"]["hits"]
+    assert hits[0]["chunk_id"] == "c3" and hits[0]["text"] == "chunk c3"
+    assert [h["score"] for h in hits] == sorted(
+        (h["score"] for h in hits), reverse=True)
+    assert jobs <= LSH_SEARCH_JOBS, jobs

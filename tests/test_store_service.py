@@ -171,6 +171,38 @@ def test_update_document_metadata_cas(engine):
     assert [r["id"] for r in page.collect()] == ["docA"]
 
 
+def test_update_document_metadata_reads_only_the_candidate_partition(
+    spark, tmp_path, monkeypatch
+):
+    """The CAS lookup of one document id lists and reads only the
+    partitions its bloom sidecar may hold it in — never the whole
+    ``documents`` table — and the 404/409 answers are unchanged."""
+    eng = Engine(spark, str(tmp_path))
+    for lib, doc in (("libP", "docP"), ("libQ", "docQ")):
+        eng.create_library(lib, 4, library_id=lib)
+        eng.create_document(lib, document_id=doc)
+    reads = []
+    real_read = eng.store.read
+
+    def spy(table, partitions=None, version=None):
+        reads.append((table, None if partitions is None else sorted(partitions)))
+        return real_read(table, partitions=partitions, version=version)
+
+    monkeypatch.setattr(eng.store, "read", spy)
+    eng.update_document_metadata("docQ", {"title": "T"}, expected_version=1)
+    assert reads and all(r == ("documents", ["libQ"]) for r in reads), reads
+    reads.clear()
+    with pytest.raises(ConflictError):
+        eng.update_document_metadata("docQ", {"title": "T2"}, expected_version=1)
+    with pytest.raises(NotFoundError):
+        eng.update_document_metadata("ghost", {"title": "T"}, expected_version=1)
+    assert ("documents", None) not in reads, reads
+    monkeypatch.undo()
+    rows = {r["id"]: r for r in eng.store.read("documents").collect()}
+    assert rows["docQ"]["metadata"]["title"] == "T" and rows["docQ"]["version"] == 2
+    assert rows["docP"]["metadata"] is None and rows["docP"]["version"] == 1
+
+
 def test_uuid_defaults(engine):
     lib_id = engine.create_library("autolib", 4)
     doc_id = engine.create_document(lib_id)

@@ -7,30 +7,71 @@ boundary for the Spark engine: dict in → validated DataFrame → service →
 dict out, with EngineError mapped to the same status codes. Wrap it in any
 HTTP framework unchanged (the engine itself stays framework-free).
 
-Schema enforcement replaces Pydantic: ``createDataFrame`` against the
-declared chunk schema rejects unknown/mistyped fields exactly where the
-reference's ``extra="forbid"`` models do (models/entities.py:14,30,43).
+Type enforcement replaces Pydantic and happens here, before any row
+reaches Spark: ``Facade._validate_chunks`` checks every chunk field, the
+metadata struct's keys included, against the declared chunk schema
+(``CHUNK_IN_SCHEMA``) and answers an unknown or mistyped field with a 422,
+where the reference's ``extra="forbid"`` models do (models/entities.py:14,
+30,43). The rows then become a JVM local relation (``session.local_frame``),
+whose Arrow conversion does not type-check them.
 """
 
 from __future__ import annotations
 
+from functools import cache
 from typing import Any
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType, DataType, IntegerType, StringType, StructType,
+)
 
 from vector_db_api_spark.api.errors import EngineError, ValidationError
-from vector_db_api_spark.api.service import Engine
+from vector_db_api_spark.api.service import CHUNK_IN_SCHEMA, Engine
+from vector_db_api_spark.session import local_frame
 
-CHUNK_IN_SCHEMA = (
-    "id string, library_id string, document_id string, position int, "
-    "text string, embedding array<float>, "
-    "metadata struct<source_uri:string,author:string,lang:string,"
-    "mime_type:string,tags:array<string>,page_number:int,token_count:int,"
-    "sha256:string>"
-)
 CHUNK_IN_FIELDS = (
     "id", "library_id", "document_id", "position", "text", "embedding", "metadata"
 )
+
+
+@cache
+def _chunk_in_struct() -> StructType:
+    return StructType.fromDDL(CHUNK_IN_SCHEMA)
+
+
+def _type_error(v: Any, dt: DataType, path: str) -> str | None:
+    """Why ``v`` cannot be a value of ``dt``, or None when it can: JSON
+    null fits every type, an int column takes exactly a 32-bit ``int``
+    (not a bool, not a float), and an object may carry only its struct's
+    fields."""
+    if v is None:
+        return None
+    if isinstance(dt, StructType):
+        if not isinstance(v, dict):
+            return f"{path} must be an object"
+        unknown = set(v) - set(dt.names)
+        if unknown:
+            return f"unknown {path} fields: {sorted(unknown)}"
+        for f in dt.fields:
+            err = _type_error(v.get(f.name), f.dataType, f"{path}.{f.name}")
+            if err:
+                return err
+        return None
+    if isinstance(dt, ArrayType):
+        if not isinstance(v, (list, tuple)):
+            return f"{path} must be a list"
+        for x in v:
+            err = _type_error(x, dt.elementType, f"{path}[]")
+            if err:
+                return err
+        return None
+    if isinstance(dt, StringType):
+        return None if isinstance(v, str) else f"{path} must be a string"
+    if isinstance(dt, IntegerType):
+        ok = type(v) is int and -(2**31) <= v < 2**31
+        return None if ok else f"{path} must be a 32-bit integer"
+    raise TypeError(f"no check for {dt.simpleString()} at {path}")
 
 
 def _ok(payload: Any, status: int = 200) -> dict:
@@ -90,7 +131,13 @@ class Facade:
         parity — JSON clients legitimately send ``[1.0, 0, 0, 0]``, and the
         ints would otherwise surface as a 500 from Spark's FloatType row
         check instead of either working or a 422; found by the r12 stdlib
-        live-HTTP smoke)."""
+        live-HTTP smoke).
+
+        Every other field, the metadata object's keys and types included,
+        is checked against ``CHUNK_IN_SCHEMA``: the rows become an Arrow
+        table, which would truncate ``position: 1.5`` to 1 and answer
+        ``position: "x"`` with a 500."""
+        struct = _chunk_in_struct()
         for c in chunks:
             unknown = set(c) - set(CHUNK_IN_FIELDS)
             if unknown:
@@ -107,6 +154,11 @@ class Facade:
                 except (TypeError, ValueError):
                     raise ValidationError(
                         "chunk.embedding must be a list of numbers")
+            for f in struct.fields:
+                if f.name != "embedding":  # coerced above
+                    err = _type_error(c.get(f.name), f.dataType, f"chunk.{f.name}")
+                    if err:
+                        raise ValidationError(err)
 
     def upsert_chunk(self, library_id: str, document_id: str, body: dict) -> dict:
         """routers/chunks.py:62-77 POST /libraries/{lib}/documents/{doc}/chunks
@@ -168,7 +220,10 @@ class Facade:
         try:
             self._validate_chunks(chunks)
             rows = [tuple(c.get(f) for f in CHUNK_IN_FIELDS) for c in chunks]
-            df = self.engine.spark.createDataFrame(rows, CHUNK_IN_SCHEMA)
+            # one partition: a local relation spreads its rows over every
+            # core, and each slice would become one more file of the
+            # library partition this write rewrites
+            df = local_frame(self.engine.spark, rows, CHUNK_IN_SCHEMA).coalesce(1)
             self.engine.upsert_chunks(library_id, df)
             return _ok({"upserted": len(chunks)})
         except EngineError as e:

@@ -30,7 +30,18 @@ from vector_db_api_spark.lifecycle import IndexConfig, IndexLifecycle
 from vector_db_api_spark.operators import mutations as M
 from vector_db_api_spark.operators.knn import apply_post_filters
 from vector_db_api_spark.operators.listing import list_page, page_stats
+from vector_db_api_spark.session import local_frame
 from vector_db_api_spark.sources.store import CHUNKS_DDL, EntityStore
+
+#: a chunk as a client sends it: the chunks table without its bookkeeping
+#: columns (created_at, updated_at, version)
+CHUNK_IN_SCHEMA = (
+    "id string, library_id string, document_id string, position int, "
+    "text string, embedding array<float>, "
+    "metadata struct<source_uri:string,author:string,lang:string,"
+    "mime_type:string,tags:array<string>,page_number:int,token_count:int,"
+    "sha256:string>"
+)
 
 MAX_K = 1000          # api/dto.py:153
 MAX_EMBEDDING_DIM = 8192  # models/entities.py:54-60
@@ -270,8 +281,8 @@ class Engine:
         libs = self.store.read("libraries").filter(F.col("id") != library_id)
         from vector_db_api_spark.sources.store import DOCUMENTS_DDL
 
-        empty_docs = self.spark.createDataFrame([], DOCUMENTS_DDL)
-        empty_chunks = self.spark.createDataFrame([], CHUNKS_DDL)
+        empty_docs = local_frame(self.spark, [], DOCUMENTS_DDL)
+        empty_chunks = local_frame(self.spark, [], CHUNKS_DDL)
         # one atomic commit for all three tables — a crash can never leave
         # the library gone but its documents/chunks still visible (the
         # reference's single-lock cascade, services/library.py:95-119)
@@ -381,8 +392,8 @@ class Engine:
         lib = self._get_library_row(library_id)  # 404
         dim = lib["embedding_dim"]
         doc_id = self.create_document(library_id, document_id)
-        one = self.spark.createDataFrame(
-            [(doc_id, text)], "document_id string, text string"
+        one = local_frame(
+            self.spark, [(doc_id, text)], "document_id string, text string"
         )
         chunks = chunk_documents(
             one, chunk_tokens, stride, id_col="document_id"
@@ -522,11 +533,6 @@ class Engine:
                 lambda: self.indexes.apply_delta(dst_library_id, moved)
             )
 
-    DOC_META_FIELDS = (
-        "source_uri", "author", "lang", "mime_type", "tags",
-        "title", "summary", "sha256",
-    )
-
     def update_document_metadata(
         self, doc_id: str, fields: dict, expected_version: int
     ) -> None:
@@ -536,8 +542,12 @@ class Engine:
         unknown = set(fields) - set(self.DOC_META_FIELDS)
         if unknown:
             raise ValidationError(f"unknown metadata fields: {sorted(unknown)}")
-        rows = (
-            self.store.read("documents").filter(F.col("id") == doc_id).collect()
+        # bloom-pruned like _id_exists: only the partitions whose sidecar
+        # may hold the id are listed and read, not the whole table
+        parts = self._candidate_partitions("documents", [doc_id])
+        rows = [] if parts == [] else (
+            self.store.read("documents", partitions=parts)
+            .filter(F.col("id") == doc_id).collect()
         )
         if not rows:
             raise NotFoundError(f"document {doc_id!r} not found")
@@ -764,18 +774,15 @@ class Engine:
         check surfaces as the reference's 422."""
         chunk_id = chunk.get("id") or str(uuid.uuid4())
         emb = chunk.get("embedding")
-        row = self.spark.createDataFrame(
+        row = local_frame(
+            self.spark,
             [(
                 chunk_id, library_id, document_id, chunk.get("position"),
                 chunk.get("text"),
                 [float(x) for x in emb] if emb is not None else None,
                 chunk.get("metadata"),
             )],
-            "id string, library_id string, document_id string, position int, "
-            "text string, embedding array<float>, "
-            "metadata struct<source_uri:string,author:string,lang:string,"
-            "mime_type:string,tags:array<string>,page_number:int,"
-            "token_count:int,sha256:string>",
+            CHUNK_IN_SCHEMA,
         )
         self.upsert_chunks(library_id, row, orphan_error=ValidationError)
         return chunk_id

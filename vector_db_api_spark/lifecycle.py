@@ -32,6 +32,7 @@ from vector_db_api_spark.sources import fsio
 from vector_db_api_spark.operators.ivf import FRAME_DDL, IVFIndex, posting_ddl
 from vector_db_api_spark.operators.knn import hydrate_hits, knn
 from vector_db_api_spark.operators.lsh import SignLSH, bucket_ddl, build_bucket_table
+from vector_db_api_spark.session import local_frame
 
 # factory defaults — reference indexing/registry.py:47-54.
 # max_kmeans_iters: the reference DTO declares it (api/dto.py:41, default 2)
@@ -139,7 +140,7 @@ class IndexLifecycle:
             if self._fs.isdir(path := os.path.join(adir, f"centroid_id={c}"))
         ]
         if not cells:
-            return self.spark.createDataFrame([], ddl)
+            return local_frame(self.spark, [], ddl)
         return self.spark.read.schema(ddl).option("basePath", adir).parquet(*cells)
 
     # -- build / publish ------------------------------------------------------
@@ -351,7 +352,6 @@ class IndexLifecycle:
         desc = self.current(library_id)
         if desc is None or desc["type"] == "flat":
             return 0  # flat scans the live table — nothing stale to track
-        spark = self.spark
         vdir = os.path.join(
             self._lib_dir(library_id), f"v={desc['version']}", "tombstones"
         )
@@ -374,7 +374,7 @@ class IndexLifecycle:
         if not ids:
             return 0  # no-op delete: keep in-place serving
         self._downgrade_serving(library_id, desc)
-        tomb = spark.createDataFrame([(str(i),) for i in ids], "id string")
+        tomb = local_frame(self.spark, [(str(i),) for i in ids], "id string")
         tomb.write.mode("append").parquet(vdir)
         return len(ids)
 
@@ -505,7 +505,7 @@ class IndexLifecycle:
             ).parquet(os.path.join(vdir, "lsh_buckets"))
             hits = model.search(chunks, buckets, query_vec, k, metric=metric,
                                 id_col=id_col, vec_col=vec_col)
-            return hydrate_hits(hits, chunks, id_col, extra_cols)
+            return hydrate_hits(hits, chunks, k, id_col, extra_cols)
         ddl = posting_ddl(chunks, id_col, vec_col, include_vectors=in_place)
         cells = self._probed_cells(vdir, model, ddl, query_vec)
         return model.search(chunks, cells, query_vec, k, metric=metric,

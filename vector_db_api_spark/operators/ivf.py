@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from vector_db_api_spark.operators.knn import empty_hits, hydrate_hits, knn
+from vector_db_api_spark.session import local_frame
 
 DEFAULT_NUM_CENTROIDS = 64   # registry.py:51-54 defaults
 DEFAULT_NPROBE = 4
@@ -259,7 +260,7 @@ class IVFIndex:
             (int(i), [float(x) for x in self.centroids[i]])
             for i in range(len(self.centroids))
         ]
-        return spark.createDataFrame(rows, FRAME_DDL)
+        return local_frame(spark, rows, FRAME_DDL)
 
     @classmethod
     def from_frame(cls, frame: DataFrame, nprobe: int = DEFAULT_NPROBE) -> "IVFIndex":
@@ -401,7 +402,7 @@ class IVFIndex:
             ).select(id_col, vec_col)
             hits = knn(cand_v, query_vec, k, metric=metric, id_col=id_col,
                        vec_col=vec_col)
-            return hydrate_hits(hits, corpus, id_col, extra_cols)
+            return hydrate_hits(hits, corpus, k, id_col, extra_cols)
         cand = assignments.filter(F.col("centroid_id").isin(probe)).select(id_col)
         corpus2 = corpus.filter(prefilter) if prefilter is not None else corpus
         hydrated = corpus2.join(cand, id_col, "left_semi")

@@ -34,6 +34,7 @@ from pyspark.sql.types import DoubleType, StructField, StructType
 
 from vector_db_api_spark.functions import vector as V
 from vector_db_api_spark.operators.topk import topk, topk_per_group
+from vector_db_api_spark.session import local_frame
 
 
 def _query_literal(query_vec: Sequence[float]) -> Column:
@@ -87,26 +88,31 @@ def empty_hits(
     fields = [
         StructField(c, corpus.schema[c].dataType) for c in (id_col, *extra_cols)
     ]
-    return corpus.sparkSession.createDataFrame(
-        [], StructType([*fields, StructField("score", DoubleType())])
+    return local_frame(
+        corpus.sparkSession, [],
+        StructType([*fields, StructField("score", DoubleType())]),
     )
 
 
 def hydrate_hits(
     hits: DataFrame,
     corpus: DataFrame,
+    k: int,
     id_col: str = "id",
     extra_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Attach ``extra_cols`` of ``corpus`` to ``(id_col, score)`` hits — for
-    re-ranks that never read the corpus (an in-place posting or bucket
-    table). An inner join on ``id_col``: a hit whose id is not in
-    ``corpus`` drops, and the row order is not kept."""
+    """Attach ``extra_cols`` of ``corpus`` to the ``(id_col, score)`` top-k
+    ``hits`` of :func:`knn` — for re-ranks that never read the corpus (an
+    in-place posting or bucket table). An inner join on ``id_col``: a hit
+    whose id is not in ``corpus`` drops. The joined rows are a top-k again,
+    in knn's order, so a caller's sort by ``(-score, id)`` needs no
+    shuffle."""
     if not extra_cols:
         return hits
-    return hits.join(corpus.select(id_col, *extra_cols), id_col).select(
+    out = hits.join(corpus.select(id_col, *extra_cols), id_col).select(
         id_col, *extra_cols, "score"
     )
+    return topk(out, [F.desc("score"), F.col(id_col).asc()], k)
 
 
 def knn_batch(

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from vector_db_api_spark.operators.knn import knn
 from vector_db_api_spark.operators.topk import topk
+from vector_db_api_spark.session import local_frame
 
 DEFAULT_NUM_TABLES = 8          # registry.py:47-49 defaults
 DEFAULT_HYPERPLANES = 16
@@ -382,7 +383,7 @@ class SignLSH:
         matched = self._probe_filter(buckets, query_vec, id_col, multiprobe=multiprobe)
         if matched is None:
             id_type = buckets.schema[id_col].dataType.simpleString()
-            return spark.createDataFrame([], f"{id_col} {id_type}")
+            return local_frame(spark, [], f"{id_col} {id_type}")
         return matched.distinct()
 
     def search(
@@ -412,8 +413,8 @@ class SignLSH:
         cond = self._probe_condition(query_vec, multiprobe=multiprobe)
         if cond is None:  # zero query → empty result, no jobs (lsh.py:86-87)
             id_type = corpus.schema[id_col].dataType.simpleString()
-            return corpus.sparkSession.createDataFrame(
-                [], f"{id_col} {id_type}, score double"
+            return local_frame(
+                corpus.sparkSession, [], f"{id_col} {id_type}, score double"
             )
         if vec_col in buckets.columns:
             # SELF-CONTAINED bucket table (build_bucket_table
@@ -443,8 +444,7 @@ class SignLSH:
             return hits
         rows = hits.collect()  # ≤ k rows — the search job itself
         if len(rows) >= k:
-            spark = corpus.sparkSession
-            return spark.createDataFrame(rows, hits.schema)
+            return local_frame(corpus.sparkSession, rows, hits.schema)
         logging.getLogger(__name__).warning(
             "SignLSH.search: buckets yielded %d < k=%d hits; falling back to "
             "exact full scan (pad_to_k=True)", len(rows), k,

@@ -15,8 +15,10 @@ Local testing runs on ``local[N]`` but every knob here is chosen for the
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -66,3 +68,33 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence], schema: StructType | str
+) -> DataFrame:
+    """A DataFrame over ``rows`` held in Python (tuples in ``schema``'s field
+    order; a struct value is a dict), planned as a JVM ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>)`` pickles the rows into a Python RDD,
+    so every job that reads them starts Python workers, even for one row.
+    Built from an Arrow table, the rows are copied into the JVM once and
+    broadcasting, collecting or scanning them needs no Python worker and
+    often no job at all. A ``pa.Table`` is passed, never a pandas frame:
+    pandas input falls back to the pickled path when Arrow conversion fails
+    (``arrow.pyspark.fallback.enabled``); an Arrow table never does.
+
+    Values are not type-checked the way ``createDataFrame(<list>)``
+    checks them: Arrow converts a float to an int column by truncation.
+    Callers taking rows from a client validate them first."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = [
+        pa.array([r[i] for r in rows], type=field.type)
+        for i, field in enumerate(arrow)
+    ]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), schema)

@@ -59,6 +59,7 @@ from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 
+from vector_db_api_spark.session import local_frame
 from vector_db_api_spark.sources import fsio
 
 BASE_METADATA = (
@@ -253,7 +254,7 @@ class EntityStore:
     # -- read ---------------------------------------------------------------
 
     def _empty(self, table: str) -> DataFrame:
-        return self.spark.createDataFrame([], TABLE_DDL[table])
+        return local_frame(self.spark, [], TABLE_DDL[table])
 
     def read(
         self,
