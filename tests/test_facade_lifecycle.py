@@ -660,3 +660,52 @@ def test_bulk_upsert_writes_one_file(typed):
     assert f.bulk_upsert_chunks("B", chunks)["status"] == 200
     files = f.engine.store.read("chunks", partitions=["B"]).inputFiles()
     assert len(files) == 1, files
+
+
+@pytest.fixture(scope="module")
+def finite(spark, tmp_path_factory):
+    """A facade over a 4-d flat library F and a 4-d IVF library I, each
+    holding one document of four finite chunks."""
+    f = Facade(Engine(spark, str(tmp_path_factory.mktemp("finite"))))
+    for lib, cfg in (("F", {"type": "flat"}),
+                     ("I", {"type": "ivf", "num_centroids": 2, "nprobe": 2})):
+        assert f.create_library({"id": lib, "name": lib, "embedding_dim": 4,
+                                 "index_config": cfg})["status"] == 201
+        made = f.create_document_with_chunks(lib, {"id": f"{lib}d", "chunks": [
+            {"id": f"{lib}c{i}", "position": i, "text": "t",
+             "embedding": [1.0, float(i), 0.0, 0.0]} for i in range(4)]})
+        assert made["status"] == 201, made
+    return f
+
+
+@pytest.mark.parametrize("lib", ["F", "I"])
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+def test_non_finite_query_is_a_422(finite, lib, bad):
+    """A NaN or infinite query would score every hit NaN, which is not
+    valid JSON; it is rejected like a wrong dimension."""
+    out = finite.search(lib, {"query_embedding": [bad, 1.0, 0.0, 0.0], "k": 3})
+    assert out["status"] == 422, out
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf")])
+def test_non_finite_chunk_embedding_is_a_422(finite, bad):
+    """A non-finite embedding is a 422 on every chunk route, and the
+    with-chunks route leaves no document behind. Stored, a NaN vector
+    would rank first in every flat search of its library."""
+    import json
+
+    f = finite
+    chunk = {"id": "cx", "position": 9, "text": "t",
+             "embedding": [bad, 1.0, 0.0, 0.0]}
+    one = f.upsert_chunk("F", "Fd", dict(chunk))
+    assert one["status"] == 422, one
+    bulk = f.bulk_upsert_chunks("F", [dict(chunk, document_id="Fd")])
+    assert bulk["status"] == 422, bulk
+    made = f.create_document_with_chunks("F", {"id": "Fd2", "chunks": [dict(chunk)]})
+    assert made["status"] == 422, made
+    assert f.get_document("Fd2")["status"] == 404
+    assert f.get_chunk("cx")["status"] == 404
+    hits = f.search("F", {"query_embedding": [1.0, 0.0, 0.0, 0.0], "k": 10})
+    assert hits["status"] == 200
+    json.dumps(hits, allow_nan=False)
+    assert [h["chunk_id"] for h in hits["data"]["hits"]][0] == "Fc0"

@@ -92,6 +92,34 @@ def test_knn_batch_numpy_matches_fold(clustered_df, clustered_vectors):
             assert sf[i] == pytest.approx(sn[i], rel=1e-9)
 
 
+
+@pytest.mark.parametrize("n_parts", [1, 4])
+def test_knn_batch_numpy_breaks_boundary_ties_by_id(spark, n_parts):
+    """Sixty rows drawn from three distinct vectors: every query's k-th
+    score is tied across ~20 rows. The kept ids must be the (-score, id)
+    top-k, the order the registry oracles use, not whichever tied rows
+    argpartition happens to keep. Small-integer coordinates make every
+    dot product exact, so duplicated rows score bit-identically."""
+    rng = np.random.default_rng(5)
+    protos = np.array([[1, 0, 0, 0], [1, 1, 0, 0], [0, 1, 1, 0]], dtype=np.float64)
+    mat = protos[rng.integers(0, 3, size=60)]
+    corpus = spark.createDataFrame(
+        [(i, [float(x) for x in mat[i]]) for i in range(60)],
+        "id bigint, embedding array<double>",
+    ).repartition(n_parts)
+    qs = [("qa", [1.0, 0.0, 0.0, 0.0]), ("qb", [1.0, 1.0, 0.0, 0.0]),
+          ("qc", [0.0, 1.0, 1.0, 0.0])]
+    k = 5
+    got = _group(KNN.knn_batch_numpy(corpus, qs, k).collect(), "query_id")
+    norms = np.linalg.norm(mat, axis=1)
+    ids = np.arange(60)
+    for qid, q in qs:
+        qv = np.asarray(q)
+        scores = (mat @ qv) / (norms * np.linalg.norm(qv))
+        want = ids[np.lexsort((ids, -scores))][:k].tolist()
+        assert sorted(r["id"] for r in got[qid]) == sorted(want), qid
+
+
 def _group(rows, key):
     out: dict = {}
     for r in rows:

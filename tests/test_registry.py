@@ -4,212 +4,46 @@ from __future__ import annotations
 
 from vector_db_api_spark import suite
 
-# operator classes that must stay inside the driver's 50-entry check
-# window — one entry per class, the round-3 composition
-MUST_BE_IN_WINDOW = {
-    "knn_cosine_top10",         # FlatIndex search (+ the vector kernel —
-                                # vec_kernel_scores rotated out r12 after
-                                # its r11 driver-green row; every ANN/kNN
-                                # entry runs the kernels)
-    "search_e2e",               # composed search flagship
-    "minhash_lsh_pairs",        # minhash LSH (exact_duplicates rotated out
-                                # r12: green r11, plan-pinned)
-    "dedup_components",         # connected components
-    "simhash_np",               # simhash banding (r13: np production
-                                # twin takes the slot; expression twin
-                                # green r1-r12, same oracle)
-    "embedding_neardup_mp",     # embedding near-dup (r14: the expression
-                                # multiprobe twin takes the slot of its
-                                # BLAS twin, green r13 — same oracle; one
-                                # in-window rep per round, twins alternate)
-    # r15 rotation (VERDICT r14 #1, extended to the FULL never-checked
-    # ledger): all fifteen never-driver-checked entries enter the window —
-    # the six staged r14 additions plus the nine carried — so the r15
-    # driver run drains the machine ledger to ZERO. Slot-by-slot notes in
-    # suite.py's WINDOW comment; every incoming entry is green in the full
-    # 147/147 sf0.01 sweep and the sf1 sweep on the r14 tree. The five
-    # stream_*_state -> stream_*_compacted swaps and semdedup_drop_np ->
-    # hotcell are SAME-oracle twin handoffs; the ANN layout variants
-    # (selfcontained/flat/quantized, green r12-r14) hand their slots to the
-    # blocked-decon twins + the streaming gate with each family keeping its
-    # batch rep.
-    "doc_semantic_decontaminate_blocked",     # cell-blocked decon fold twin
-    "doc_semantic_decontaminate_blocked_np",  # fused probe+score kernel
-    "stream_semantic_decontaminate_state",    # continuous decon gate
-    "stream_bm25_compacted",        # compaction mid-stream == batch oracle
-    "stream_semdedup_compacted",
-    "stream_span_dedup_compacted",
-    "stream_line_dedup_compacted",
-    "stream_curate_compacted",
-    "semdedup_drop_np_hotcell",     # hot-cell panel tiling, same drop set
-    "knn_batch_numpy_ids_top5",     # ids-only batch twin
-    "doc_temperature_sample",       # temperature-weighted mixture sampling
-    "corpus_vocabulary",            # corpus vocab / token stats
-    "doc_leakage_split",            # train/eval leakage-aware split
-    "events_anomalies",             # rolling-stat anomaly flags
-    "events_pivot",                 # pivoted per-type rollup
-    "doc_semantic_decontaminate",  # decontamination (r14: the embedding
-                                # form takes the slot of the 8-shingle
-                                # doc_decontaminate, green r1-r13; the
-                                # shingle oracle stays out-of-window)
-    "doc_semantic_decontaminate_np",  # BLAS production twin (r14, staged
-                                # green r13 — ids-only oracle projection)
-    "doc_lm_nll_join",          # LM quality scoring (r12: the broadcast-join
-                                # scale twin takes the literal path's slot —
-                                # same oracle verbatim; doc_repetition also
-                                # rotated out r12, np twin shares its oracle)
-    "doc_hybrid_rrf",           # hybrid retrieval
-    "doc_winnowing_np",         # fingerprinting (r13: np production
-                                # twin in; corpus_profile green r1-r12 +
-                                # doc_chunking green r2-r12 rotated out,
-                                # text class keeps doc_token_count_bpe)
-    "doc_repetition_np",        # repetition stats (r13: np production
-                                # twin in, same oracle as doc_repetition)
-    "corpus_clean_modern",      # end-to-end pipeline (r13: the modern
-                                # gates+classifier+dedup composition
-                                # takes corpus_clean_near's slot)
-    "multimodal_embed",         # multimodal decode->embed pipeline (r13:
-                                # takes crud_cas's slot — CAS green
-                                # r1-r12, crud_cas_conflicts keeps the
-                                # conflict oracle out-of-window and both
-                                # crud_engine_* entries stay in-window)
-    "events_zorder",            # Z-order interleaved layout key (r14:
-                                # takes crud_delete_cascade's slot — the
-                                # cascade anti-join runs in-window inside
-                                # both crud_engine_* lifecycles and keeps
-                                # its full oracle out-of-window)
-    "events_sessions",          # sessionization (events_hourly rotated out
-                                # r12: green r1-r11; the hourly rollup
-                                # oracle stays out-of-window since r14)
-    "skew_salted_agg",          # skew mitigation
-    # r15: semdedup_drop_np / stream_bm25_state / stream_curate_state /
-    # stream_semdedup_state handed their slots to same-oracle twins
-    # (hotcell / the three compacted forms) — see suite.py WINDOW notes
-    # round-5 rotation survivors (one rep per class; quantile/histogram/
-    # canonical/profiler rotated out in r6 after their r5 driver-green rows)
-    "doc_quality_model",        # hashed linear quality classifier (r13:
-                                # literal path in; join twin green
-                                # r5-r12, same oracle, pytest-pinned ==)
-    # r12 rotation (VERDICT r11 #2): the ANN production variants a real
-    # user actually calls take the §2.9 window slots — the single-probe
-    # entries (driver-green r6-r11) keep full oracles out-of-window and
-    # stay plan-pinned. r15: the layout/quantized variants (selfcontained /
-    # IVF-Flat / int8, green r12-r14) handed their slots to the blocked-
-    # decon twins + streaming gate; each family keeps its batch rep.
-    "lsh_search_batch_top10",          # one-job 32-query LSH batch
-    "ivf_search_batch_top10",          # one-job 32-query IVF batch
-    "pq_search_batch_top10",           # batch ADC, one codes pass
-    # round-7 rotation: the Engine delete→tombstone→maintenance→move
-    # lifecycle (displaced crud_move_document, its pure-operator subset)
-    "crud_engine_index_delete",
-    # round-8 rotation: DSIR data selection (r7 verdict top item) and the
-    # r6 cross-table-transaction route's first driver window slot
-    # (displaced events_distinct_kmv — KMV estimator still oracle-swept
-    # out-of-window + stream_kmv_state — and ivfpq_search_top10, the
-    # composition of the in-window ivf + pq entries)
-    "doc_dsir_select_fast",     # r13: plain-SUM production twin takes
-                                # the ordered-fold oracle twin's slot
-    # r15: crud_engine_selfcontained (green r12-r14) handed its slot to
-    # doc_leakage_split; the engine class keeps crud_engine_index_delete
-    # round-9 rotation: the paper's actual DSIR sampler (Gumbel
-    # resampling — pass-local since r8, never driver-green) and the
-    # multimodal family's first window slot since r5 (displaced
-    # chunks_by_document — listing class covered by doc_listing_page —
-    # and rel_ship_priority — multi-join agg covered by
-    # rel_revenue_by_nation + rel_pricing_summary)
-    # round-10 rotation (r9 verdict #4 + #5): the last never-driver-checked
-    # families — streaming sketch state, the real multimodal decode oracle,
-    # the tokenizer family, and the local-semantic-embedder pipeline.
-    # Displaced (all keep full value oracles out-of-window): knn_batch_top5
-    # (batch exact-kNN plan exercised by the in-window ANN entries' shared
-    # rerank_pairs tail),
-    # doc_bm25 (oracle shared verbatim with in-window stream_bm25_state),
-    # ivf_search_filtered_top10 (ivf_search_top10 + plan-shape pushdown
-    # pin), events_interval_join (temporal class covered by events_asof +
-    # events_gapfill)
-    "stream_kmv_state",
-    "doc_token_count_bpe",
-    # r15: multimodal_features (green r10-r14) -> events_pivot (class keeps
-    # multimodal_embed); embed_semantic_knn_top10 (green r10-r14) ->
-    # corpus_vocabulary (class keeps embed_subword_knn_top10)
-    # round-11 rotation (r10 verdict #2 + #4): the eight never-driver-
-    # checked relational entries take the rel-class window slots (the
-    # previous three rel headliners were driver-green r1-r10 and keep full
-    # oracles out-of-window), plus the subword (char-ngram) embedder
-    # pipeline, previously pytest-only. Also displaced after their r10
-    # driver-green rows: events_asof/events_gapfill (temporal class keeps
-    # events_hourly + events_sessions), doc_dsir_sample (DSIR keeps
-    # doc_dsir_select), multimodal_neardup (keeps multimodal_features),
-    # doc_winnowing (np twin shares its oracle), emb_quantize_int8
-    # (quantization covered by pq_search_top10)
-    # r14 rotation: six of the eight r11 rel_* entries rotated out after
-    # three consecutive driver-green rounds (r11-r13); the relational
-    # scan/join/agg class keeps these two in-window and all six keep full
-    # value oracles out-of-window. Their slots drain the never-checked
-    # ledger: doc_sample_hash / span_overlap_pairs / doc_pii (below) plus
-    # the r13 operator family and embedding_neardup_mp / events_zorder.
-    # r15: rel_priority_returns (green r11-r14) -> events_anomalies; the
-    # relational class keeps rel_idle_customers
-    "rel_idle_customers",
-    "doc_sample_hash",          # hash-mod deterministic sampling
-    "span_overlap_pairs",       # interval-overlap self-join
-    "doc_pii",                  # PII scrubbing / detection rules
-    "embed_subword_knn_top10",
-    # the new symmetric multi-probe ANN self-join operator (r10 verdict
-    # #3) — first-class, oracle-backed, in-window from its first round
-    # (displaced doc_packing after its r10 driver-green row)
-    "knn_self_join_ivf_sym",
-    # r12 NEW operators, in-window from their first round: cross-document
-    # duplicated-span removal (Lee et al. 2022 substring dedup —
-    # operators/span_dedup.py) and CCNet head/middle/tail perplexity
-    # buckets (operators/lm.py perplexity_buckets). Displaced:
-    # topk_per_label (per-group top-k runs inside every in-window ANN
-    # rerank) and doc_lang_id (driver-green r2-r11; text-analysis class
-    # keeps corpus_profile/doc_chunking/doc_token_count_bpe) — both keep
-    # full value oracles out-of-window.
-    "doc_span_dedup",
-    "doc_ccnet_buckets",
-    # r12 second swap: the other three r12 operators also enter in-window
-    # from their first round — the Gopher gate, the continuous span dedup,
-    # and the four-stage curation composition. Displaced: knn_self_join_top3
-    # / events_hourly / crud_upsert (all driver-green r2-r11, classes still
-    # covered — see the swap notes in suite.py). The never-checked count is
-    # no longer hand-maintained here (the r12 hand claim of <=22 was wrong;
-    # the committed artifacts said 24) — it is machine-derived by
-    # tools/never_checked.py and pinned in
-    # test_never_checked_ledger_is_machine_derived below.
-    # r15: doc_gopher_rules (green r12-r14) -> doc_temperature_sample (the
-    # Gopher gate runs inside corpus_curate_full AND stream_curate_compacted);
-    # stream_span_dedup_state / stream_line_dedup_state / knn_batch_numpy_top5
-    # handed slots to same-oracle/same-class twins (see suite.py WINDOW notes)
-    "corpus_curate_full",
-    # r14 rotation (VERDICT r13 #1): the remaining r13 operators enter the
-    # window after their staged green round — CCNet line-level boilerplate
-    # removal (its streaming keep-first form handed its slot to the
-    # compacted twin in r15)
-    "doc_line_dedup",
-}
+# The driver checks the first 50 entries in this order.
+WINDOW = [
+    "knn_cosine_top10", "doc_span_dedup", "doc_ccnet_buckets",
+    "doc_winnowing_np", "doc_repetition_np", "minhash_lsh_pairs",
+    "dedup_components", "simhash_np", "embedding_neardup_mp",
+    "doc_semantic_decontaminate", "semdedup_drop_np_hotcell",
+    "doc_quality_model", "stream_semdedup_compacted", "lsh_search_batch_top10",
+    "doc_semantic_decontaminate_blocked", "ivf_search_batch_top10",
+    "doc_semantic_decontaminate_blocked_np", "pq_search_batch_top10",
+    "stream_semantic_decontaminate_state", "doc_lm_nll_join",
+    "doc_leakage_split", "doc_dsir_select_fast", "knn_batch_numpy_ids_top5",
+    "doc_hybrid_rrf", "doc_temperature_sample", "events_sessions",
+    "skew_salted_agg", "stream_bm25_compacted", "stream_curate_compacted",
+    "doc_semantic_decontaminate_np", "stream_line_dedup_compacted",
+    "doc_line_dedup", "doc_sample_hash", "span_overlap_pairs", "doc_pii",
+    "events_anomalies", "rel_idle_customers", "stream_span_dedup_compacted",
+    "multimodal_embed", "events_zorder", "crud_engine_index_delete",
+    "search_e2e", "corpus_curate_full", "corpus_clean_modern",
+    "embed_subword_knn_top10", "knn_self_join_ivf_sym", "stream_kmv_state",
+    "events_pivot", "doc_token_count_bpe", "corpus_vocabulary",
+]
+
+
+def test_window_is_declared_explicitly():
+    assert list(suite.SUITE)[:50] == WINDOW
 
 
 def test_window_is_full_and_oracle_backed():
     names = list(suite.SUITE)
-    window = names[:50]
     assert len(names) >= 50
-    missing_oracle = [n for n in window if suite.SUITE[n][1] is None]
+    missing_oracle = [n for n in names[:50] if suite.SUITE[n].oracle is None]
     assert missing_oracle == [], f"rows-only entries inside the window: {missing_oracle}"
 
 
-def test_window_covers_the_distinct_operator_classes():
-    window = set(list(suite.SUITE)[:50])
-    missing = MUST_BE_IN_WINDOW - window
-    assert not missing, f"operator classes fell out of the check window: {missing}"
-
-
 def test_every_oracle_entry_has_a_callable_and_sql():
-    for name, (fn, sql) in suite.SUITE.items():
-        assert callable(fn), name
-        if sql is not None:
-            assert isinstance(sql, str) and "SELECT" in sql.upper(), name
+    for name, entry in suite.SUITE.items():
+        assert callable(entry.fn), name
+        assert isinstance(entry.op_class, str) and entry.op_class, name
+        if entry.oracle is not None:
+            assert isinstance(entry.oracle, str) and "SELECT" in entry.oracle.upper(), name
 
 
 def test_queries_and_oracle_sql_views_agree():
@@ -218,126 +52,23 @@ def test_queries_and_oracle_sql_views_agree():
     assert len(qs) == len(suite.SUITE)
 
 
-def test_never_checked_ledger_is_machine_derived():
-    """r12 verdict #2: the never-driver-checked set must be derived from
-    the committed CORRECTNESS_r*.json artifacts (single source of truth),
-    never hand-counted — the r12 hand ledger said <=22 while the committed
-    artifacts said 24. The rotation policy keeps draining it: while any
-    entries remain unchecked, at least eight of them (or all that remain)
-    must sit inside the 50-entry window so the next driver round checks
-    them."""
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from tools.never_checked import never_checked
-
-    names = list(suite.SUITE)
-    never = never_checked(names)
-    # every unchecked entry is still oracle-backed (it will face the full
-    # value gate when its window round comes, not a weaker rows-only check)
-    assert all(suite.SUITE[n][1] is not None for n in never)
-    # monotone drain: the committed CORRECTNESS_r14.json leaves 15 (the ten
-    # r14 window rotations went green; the six r14 additions staged
-    # out-of-window). Registering new entries adds to this bar knowingly —
-    # update the bound WITH the entry. The r15 rotation puts ALL FIFTEEN
-    # in-window, so CORRECTNESS_r15 drains the ledger to ZERO.
-    assert len(never) <= 15, (
-        f"never-checked grew to {len(never)}: {never}"
-    )
-    in_window = set(never) & set(names[:50])
-    assert len(in_window) >= min(8, len(never)), (
-        f"rotation stalled: only {sorted(in_window)} of {len(never)} "
-        f"never-checked entries are in the check window"
-    )
-
-
-def test_ledger_prose_is_machine_written():
-    """r13 verdict #3: the drain paragraph CORRECTNESS_LOCAL.md embeds
-    must be the VERBATIM output of tools/never_checked.py --prose — the
-    r12 hand ledger and the r13 hand prose each drifted from the
-    committed artifacts within one round of being written."""
-    import os
-    import re
-    import sys
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, root)
-    from tools.never_checked import drain_prose
-
-    md = open(os.path.join(root, "CORRECTNESS_LOCAL.md")).read()
-    m = re.search(
-        r"<!-- never-checked-prose:begin -->\n(.*?)\n"
-        r"<!-- never-checked-prose:end -->",
-        md, re.S,
-    )
-    assert m, "CORRECTNESS_LOCAL.md lost its machine-written ledger block"
-    assert m.group(1) == drain_prose(list(suite.SUITE)), (
-        "ledger prose drifted from tools/never_checked.py --prose — "
-        "regenerate the block, never hand-edit it"
-    )
-
-
-def test_window_is_declared_explicitly():
-    """r15: the window is the WINDOW list in suite.py, and SUITE's insertion
-    order (what the driver actually checks) must match it exactly."""
-    assert len(suite.WINDOW) == 50
-    assert list(suite.SUITE)[:50] == suite.WINDOW
-
-
 def test_rotation_policy_every_class_keeps_a_window_rep():
-    """r14 verdict #8, invariant 1: every operator class present in the
-    registry keeps >=1 rep inside the 50-entry driver window. The ONLY
-    classes allowed to have no rep are the grandfathered exceptions in
-    suite.WINDOW_CLASS_EXCEPTIONS — adding to that dict is a deliberate,
-    reviewed act; a rotation can't silently strand a class."""
-    names = list(suite.SUITE)
-    # the class map must cover the registry exactly (no orphans either way)
-    assert set(suite.OPERATOR_CLASS) == set(names)
-    window = set(names[:50])
-    covered = {suite.OPERATOR_CLASS[n] for n in window}
-    all_classes = set(suite.OPERATOR_CLASS.values())
-    assert all_classes - covered == set(suite.WINDOW_CLASS_EXCEPTIONS), (
+    """Every operator class keeps an entry inside the 50-entry window,
+    except the exceptions suite.WINDOW_CLASS_EXCEPTIONS names, so a change
+    to the window cannot silently strand a class."""
+    entries = list(suite.SUITE.values())
+    covered = {e.op_class for e in entries[:50]}
+    uncovered = {e.op_class for e in entries} - covered
+    assert uncovered == set(suite.WINDOW_CLASS_EXCEPTIONS), (
         f"classes without an in-window rep: "
-        f"{sorted(all_classes - covered - set(suite.WINDOW_CLASS_EXCEPTIONS))}"
-        f" (or a grandfathered exception regained a rep and should be "
-        f"removed from WINDOW_CLASS_EXCEPTIONS)"
+        f"{sorted(uncovered - set(suite.WINDOW_CLASS_EXCEPTIONS))}"
+        f" (or an exception regained a rep and should leave "
+        f"WINDOW_CLASS_EXCEPTIONS)"
     )
-    # and specifically: every entry DISPLACED by a recorded rotation left
-    # its class represented (the form the r11-r15 rotation notes argued)
-    for rnd, swap in suite.ROTATION_LOG.items():
-        for out_name in swap["out"]:
-            cls = suite.OPERATOR_CLASS[out_name]
-            assert cls in covered or cls in suite.WINDOW_CLASS_EXCEPTIONS, (
-                f"r{rnd} displaced {out_name} and left class {cls} "
-                f"unrepresented"
-            )
-
-
-def test_rotation_policy_staged_promotion():
-    """r14 verdict #8, invariant 2: no entry enters the driver window in
-    the round it was first registered — it must sit out-of-window for at
-    least one full-sweep green round first (the r12 ADVICE #4 staged-
-    promotion policy, honored by every rotation since r13)."""
-    for rnd, swap in suite.ROTATION_LOG.items():
-        for in_name in swap["in"]:
-            registered = suite.REGISTERED_ROUND.get(in_name, 0)
-            assert registered < rnd, (
-                f"{in_name} entered the window in r{rnd}, the same round "
-                f"it was registered — stage it out-of-window first"
-            )
-    # the log's "in" entries must actually be in the window for the latest
-    # recorded round (the log can't drift from WINDOW)
-    latest = max(suite.ROTATION_LOG)
-    window = set(list(suite.SUITE)[:50])
-    missing = [n for n in suite.ROTATION_LOG[latest]["in"] if n not in window]
-    assert not missing, f"r{latest} rotation log lists {missing} as promoted, but they are not in WINDOW"
-    stale = [n for n in suite.ROTATION_LOG[latest]["out"] if n in window]
-    assert not stale, f"r{latest} rotation log lists {stale} as displaced, but they are still in WINDOW"
 
 
 def test_sampled_scale_oracles_are_registered_and_seeded():
-    """r14 verdict #7: the two quadratic-oracle self-join entries carry
+    """The two quadratic-oracle self-join entries carry
     SAMPLED full-scale oracle twins (seeded ~1% query subset, portable
     h32 on both engines) so sf1+ sweeps hash real values instead of
     running SPARK-ONLY. Pins: the twins point at real SUITE entries, the
@@ -352,6 +83,6 @@ def test_sampled_scale_oracles_are_registered_and_seeded():
         assert f"% {suite._SJ_SAMPLE_MOD} = 0" in twin["oracle"]
         assert callable(twin["spark_filter"])
         # the sampled oracle keeps the full oracle's compare columns
-        full = suite.SUITE[name][1]
+        full = suite.SUITE[name].oracle
         for col in ("query_id", "vec_id", "score"):
             assert col in twin["oracle"] and col in full

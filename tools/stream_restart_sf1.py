@@ -58,7 +58,7 @@ def _crash_after_state_write(ckpt: str) -> int:
 
 
 def _oracle_ok(con, name: str, df) -> tuple[bool, int]:
-    sql = suite.SUITE[name][1]
+    sql = suite.oracle_sql()[name]
     srows, scols = canon([tuple(r) for r in df.collect()], df.columns)
     res = con.execute(sql)
     drows, dcols = canon(res.fetchall(), [d[0] for d in res.description])

@@ -12,12 +12,18 @@ reaches Spark: ``Facade._validate_chunks`` checks every chunk field, the
 metadata struct's keys included, against the declared chunk schema
 (``CHUNK_IN_SCHEMA``) and answers an unknown or mistyped field with a 422,
 where the reference's ``extra="forbid"`` models do (models/entities.py:14,
-30,43). The rows then become a JVM local relation (``session.local_frame``),
-whose Arrow conversion does not type-check them.
+30,43). Embedding values must also be finite. The rows then become a JVM
+local relation (``session.local_frame``), whose Arrow conversion does not
+type-check them.
+
+Rows handed to ``Engine`` directly, as dicts or DataFrames, are checked
+for neither field types nor finite embeddings. ``Engine.search`` itself
+rejects a non-finite query vector.
 """
 
 from __future__ import annotations
 
+import math
 from functools import cache
 from typing import Any
 
@@ -130,8 +136,9 @@ class Facade:
         Embeddings are coerced to float IN PLACE (Pydantic ``list[float]``
         parity — JSON clients legitimately send ``[1.0, 0, 0, 0]``, and the
         ints would otherwise surface as a 500 from Spark's FloatType row
-        check instead of either working or a 422; found by the r12 stdlib
-        live-HTTP smoke).
+        check instead of either working or a 422). A NaN or infinite
+        value is a 422: a NaN vector would rank first in every flat search
+        of its library, while the IVF kernels skip it.
 
         Every other field, the metadata object's keys and types included,
         is checked against ``CHUNK_IN_SCHEMA``: the rows become an Arrow
@@ -154,6 +161,9 @@ class Facade:
                 except (TypeError, ValueError):
                     raise ValidationError(
                         "chunk.embedding must be a list of numbers")
+                if not all(math.isfinite(x) for x in c["embedding"]):
+                    raise ValidationError(
+                        "chunk.embedding must be finite numbers")
             for f in struct.fields:
                 if f.name != "embedding":  # coerced above
                     err = _type_error(c.get(f.name), f.dataType, f"chunk.{f.name}")

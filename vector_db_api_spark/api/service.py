@@ -17,6 +17,7 @@ is a real rehash, not a silent no-op.
 
 from __future__ import annotations
 
+import math
 import uuid
 from collections.abc import Sequence
 from datetime import datetime
@@ -153,23 +154,14 @@ class Engine:
             raise ValidationError(f"embedding_dim must be in (0, {MAX_EMBEDDING_DIM}]")
         cfg = index_config or IndexConfig()
         lib_id = library_id or str(uuid.uuid4())
-        p = cfg.params
         row = self.spark.sql(
             "SELECT {id} AS id, {name} AS name, {dim} AS embedding_dim, "
-            "named_struct('type', {t}, 'lsh_num_tables', {lt}, "
-            "'lsh_hyperplanes_per_table', {lh}, 'ivf_num_centroids', {ik}, "
-            "'ivf_nprobe', {ip}, 'ivf_max_kmeans_iters', {im}, "
-            "'layout', {lay}) AS index_config, "
             "CAST(NULL AS struct<source_uri:string,author:string,lang:string,"
             "mime_type:string,tags:array<string>,description:string>) AS metadata, "
             "current_timestamp() AS created_at, current_timestamp() AS updated_at, "
             "1 AS version",
-            id=lib_id, name=name, dim=embedding_dim, t=cfg.type,
-            lt=p.get("num_tables", 0), lh=p.get("hyperplanes_per_table", 0),
-            ik=p.get("num_centroids", 0), ip=p.get("nprobe", 0),
-            im=p.get("max_kmeans_iters", 0),
-            lay=p.get("layout") or "idonly",
-        )
+            id=lib_id, name=name, dim=embedding_dim,
+        ).withColumn("index_config", cfg.to_column())
         self.store.write("libraries", self.store.read("libraries").unionByName(row))
         return lib_id
 
@@ -188,21 +180,7 @@ class Engine:
         the other way — a live index whose config change was LOST, which
         rebuild-index would then silently revert."""
         lib = self._get_library_row(library_id)
-        p = config.params
-        new_cfg = F.named_struct(
-            F.lit("type"), F.lit(config.type),
-            F.lit("lsh_num_tables"), F.lit(p.get("num_tables", 0)).cast("int"),
-            F.lit("lsh_hyperplanes_per_table"),
-            F.lit(p.get("hyperplanes_per_table", 0)).cast("int"),
-            F.lit("ivf_num_centroids"), F.lit(p.get("num_centroids", 0)).cast("int"),
-            F.lit("ivf_nprobe"), F.lit(p.get("nprobe", 0)).cast("int"),
-            F.lit("ivf_max_kmeans_iters"),
-            F.lit(p.get("max_kmeans_iters", 0)).cast("int"),
-            # persisted so a later parameterless rebuild_index — including
-            # the maintenance() compaction path — restores in-place serving
-            # instead of silently reverting to idonly (r10 advice)
-            F.lit("layout"), F.lit(p.get("layout") or "idonly"),
-        )
+        new_cfg = config.to_column()
         is_target = F.col("id") == library_id
         libs = (
             self.store.read("libraries")
@@ -245,28 +223,7 @@ class Engine:
         re-hydrated into an IndexConfig and handed to the same
         rebuild-and-swap path as a config change."""
         lib = self._get_library_row(library_id)
-        cfg_row = lib["index_config"]
-        ctype = (cfg_row["type"] if cfg_row else None) or "flat"
-        stored = {
-            "lsh": {
-                "num_tables": cfg_row["lsh_num_tables"],
-                "hyperplanes_per_table": cfg_row["lsh_hyperplanes_per_table"],
-            },
-            "ivf": {
-                "num_centroids": cfg_row["ivf_num_centroids"],
-                "nprobe": cfg_row["ivf_nprobe"],
-                "max_kmeans_iters": cfg_row["ivf_max_kmeans_iters"],
-            },
-        }.get(ctype, {}) if cfg_row else {}
-        # 0 means "unset" in the stored flat struct → fall back to DEFAULTS
-        params = {k: v for k, v in stored.items() if v}
-        # re-apply the persisted layout so maintenance/parameterless
-        # rebuilds PRESERVE selfcontained serving (r10 advice: without
-        # this, a compaction-triggered rebuild silently reverted it)
-        layout = (cfg_row["layout"] if cfg_row else None) or "idonly"
-        if ctype != "flat" and layout != "idonly":
-            params["layout"] = layout
-        cfg = IndexConfig(ctype, params)
+        cfg = IndexConfig.from_row(lib["index_config"])
         return self.indexes.rebuild(
             library_id, self._library_chunks(library_id), cfg, lib["embedding_dim"]
         )
@@ -899,6 +856,9 @@ class Engine:
             raise ValidationError(
                 f"query dim {len(query_embedding)} != library dim {lib['embedding_dim']}"
             )  # 422 — services/search.py:23-24
+        if not all(math.isfinite(x) for x in query_embedding):
+            # a NaN score would outrank every hit and is not valid JSON
+            raise ValidationError("query_embedding must be finite numbers")
         if not (1 <= k <= MAX_K):
             raise ValidationError(f"k must be in [1, {MAX_K}]")  # api/dto.py:153
         if metric not in METRICS:

@@ -24,7 +24,7 @@ import time
 from dataclasses import dataclass, field
 
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from vector_db_api_spark.api.errors import NotFoundError, ValidationError
@@ -46,6 +46,17 @@ DEFAULTS = {
 }
 INDEX_TYPES = tuple(DEFAULTS)
 
+# The libraries table stores a config as one flat struct: (field, the
+# index type it belongs to, the param it holds). 0 stores "unset".
+_STORED_PARAMS = (
+    ("lsh_num_tables", "lsh", "num_tables"),
+    ("lsh_hyperplanes_per_table", "lsh", "hyperplanes_per_table"),
+    ("ivf_num_centroids", "ivf", "num_centroids"),
+    ("ivf_nprobe", "ivf", "nprobe"),
+    ("ivf_max_kmeans_iters", "ivf", "max_kmeans_iters"),
+)
+DEFAULT_LAYOUT = "idonly"
+
 
 @dataclass
 class IndexConfig:
@@ -58,6 +69,32 @@ class IndexConfig:
         merged = dict(DEFAULTS[self.type])
         merged.update(self.params)
         self.params = merged
+
+    def to_column(self) -> Column:
+        """The ``index_config`` struct the libraries table stores. The
+        layout is persisted so a parameterless rebuild (the maintenance
+        compaction path included) keeps in-place serving."""
+        p = self.params
+        fields = [F.lit("type"), F.lit(self.type)]
+        for name, _, key in _STORED_PARAMS:
+            fields += [F.lit(name), F.lit(p.get(key, 0)).cast("int")]
+        fields += [F.lit("layout"), F.lit(p.get("layout") or DEFAULT_LAYOUT)]
+        return F.named_struct(*fields)
+
+    @classmethod
+    def from_row(cls, row) -> IndexConfig:
+        """The config a stored ``index_config`` struct (or None) names:
+        the stored type's nonzero params over DEFAULTS, plus a
+        non-default layout."""
+        if row is None:
+            return cls()
+        ctype = row["type"] or "flat"
+        params = {key: row[name] for name, t, key in _STORED_PARAMS
+                  if t == ctype and row[name]}
+        layout = row["layout"] or DEFAULT_LAYOUT
+        if ctype != "flat" and layout != DEFAULT_LAYOUT:
+            params["layout"] = layout
+        return cls(ctype, params)
 
 
 class IndexLifecycle:
@@ -179,7 +216,7 @@ class IndexLifecycle:
           ``config.params["layout"]`` (the Engine route); not meaningful
           for ``flat`` (no materialized tables) — rejected.
         """
-        layout = layout or config.params.get("layout") or "idonly"
+        layout = layout or config.params.get("layout") or DEFAULT_LAYOUT
         if layout not in ("idonly", "selfcontained"):
             raise ValidationError(f"unknown index layout: {layout!r}")
         if layout == "selfcontained" and config.type == "flat":
@@ -239,8 +276,8 @@ class IndexLifecycle:
             # layout = what the TABLES hold (fixed for this version);
             # layout_serving = how search reads them (downgraded to
             # 'idonly' by the first mutation when selfcontained)
-            "layout": layout if config.type != "flat" else "idonly",
-            "layout_serving": layout if config.type != "flat" else "idonly",
+            "layout": layout if config.type != "flat" else DEFAULT_LAYOUT,
+            "layout_serving": layout if config.type != "flat" else DEFAULT_LAYOUT,
         }
         self._flip(library_id, desc)
         return desc
@@ -255,7 +292,7 @@ class IndexLifecycle:
         correct results for data written BEFORE the mutation; results for
         the mutation itself are correct only under hydration, which is why
         the flip happens before the delta lands."""
-        if desc.get("layout_serving", "idonly") != "selfcontained":
+        if desc.get("layout_serving", DEFAULT_LAYOUT) != "selfcontained":
             return
         import logging
 
@@ -312,7 +349,7 @@ class IndexLifecycle:
         if not stats["embedded"]:
             return 0
         embedded = batch.filter(F.col(vec_col).isNotNull())
-        include_vectors = desc.get("layout", "idonly") == "selfcontained"
+        include_vectors = desc.get("layout", DEFAULT_LAYOUT) == "selfcontained"
         vdir = self._version_dir(library_id, desc)
         model = self._loaded(library_id, desc)
         appended = Observation()
@@ -498,7 +535,7 @@ class IndexLifecycle:
         # leaves the column out of the read — probes fall back to live
         # hydration, where deletes drop at the join and updated embeddings
         # win at re-rank
-        in_place = desc.get("layout_serving", "idonly") == "selfcontained"
+        in_place = desc.get("layout_serving", DEFAULT_LAYOUT) == "selfcontained"
         if desc["type"] == "lsh":
             buckets = self.spark.read.schema(
                 bucket_ddl(chunks, id_col, vec_col, include_vectors=in_place)

@@ -242,17 +242,26 @@ def knn_batch_numpy(
                 raise ValueError(f"Unknown metric: {metric!r}")
             ids = pdf[id_col].to_numpy()
             kk = min(k, scores.shape[0])
-            # r16 (guide §4.2): one vectorized argpartition + gather for
-            # the whole batch instead of a Python loop building one tiny
-            # DataFrame per query (Q DataFrame constructions + a Q-way
-            # concat per batch dominated the kernel at large Q — the
-            # corpus-as-queries self-join runs Q = n). argpartition along
-            # axis 0 runs the same per-column introselect as the per-query
-            # 1-D call, but which of several rows tied at the k-th score it
-            # keeps is implementation-defined (it may differ between numpy
-            # versions), so at a tied boundary the kept ids can differ.
+            # One vectorized argpartition + gather for the whole batch
+            # instead of a Python loop building one tiny DataFrame per
+            # query (Q constructions + a Q-way concat per batch dominated
+            # the kernel at large Q; the corpus-as-queries self-join runs
+            # Q = n). Which of several rows tied at the k-th score
+            # argpartition keeps is implementation-defined, so the columns
+            # whose boundary is tied are re-ranked by the oracle's
+            # (-score, id) rule; untied columns pay one comparison pass.
             if kk < scores.shape[0]:
                 idx = np.argpartition(-scores, kk - 1, axis=0)[:kk]
+                kth = np.take_along_axis(scores, idx, axis=0).min(axis=0)
+                tied = np.flatnonzero((scores >= kth).sum(axis=0) > kk)
+                if tied.size:
+                    id_rank = np.argsort(np.argsort(ids, kind="stable"))
+                    sub = scores[:, tied]
+                    order = np.lexsort(
+                        (np.broadcast_to(id_rank[:, None], sub.shape), -sub),
+                        axis=0,
+                    )
+                    idx[:, tied] = order[:kk]
             else:
                 idx = np.broadcast_to(
                     np.arange(scores.shape[0])[:, None], scores.shape

@@ -2,7 +2,7 @@
 ``(spark, sf_dir) -> DataFrame`` callable plus (where SQL-expressible) a
 bit-exact DuckDB oracle from :mod:`vector_db_api_spark.oracle`.
 
-This is the proving layer the round-1 verdict asked for: each SURVEY.md §2
+This is the proving layer: each SURVEY.md §2
 operator that exists in ``operators/`` / ``functions/`` has a named entry
 here, so the driver's CORRECTNESS run exercises the real engine code paths.
 
@@ -13,6 +13,7 @@ sorts columns by name and hashes values).
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import NamedTuple
 
 import numpy as np
 
@@ -447,9 +448,8 @@ def q_stream_span_dedup_compacted(spark: SparkSession, sf_dir: str) -> DataFrame
     run on the seen-gram state BETWEEN the two availableNow runs (and
     again after): compaction must be INVISIBLE to every subsequent
     batch's dedup decisions (same batch oracle as doc_span_dedup) while
-    physically collapsing the epoch partitions — the r13 verdict #6
-    contract, stream_bm25_compacted's pattern applied to a SET-semantics
-    state."""
+    physically collapsing the epoch partitions: stream_bm25_compacted's
+    pattern applied to a SET-semantics state."""
     import tempfile
 
     from vector_db_api_spark.streaming.dedup import incremental_span_dedup_ingest
@@ -509,8 +509,7 @@ CURATE_MIN_STOPWORDS = 1  # and carry only 'the' from the Gopher stop set)
 
 
 def q_corpus_curate_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full modern curation pipeline in one query, each stage an r12
-    operator: Gopher structure gates (corpus-tuned thresholds) → CCNet
+    """The full modern curation pipeline in one query: Gopher structure gates (corpus-tuned thresholds) → CCNet
     perplexity bucketing on the survivors (self-trained LM, drop the
     'tail' third) → cross-document duplicated-SPAN removal → minhash-LSH
     near-dup components over the CLEANED text, keep the min-id
@@ -595,7 +594,7 @@ SELECT id AS doc_id FROM comp WHERE id = component
 
 
 def q_stream_curate_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed streaming curation (streaming/curate.py, r12 verdict #8):
+    """Composed streaming curation (streaming/curate.py):
     Gopher gate → continuous span dedup → near-dup admission in ONE
     foreachBatch pipeline, drained as two id-ordered availableNow batches
     against shared gram + bucket state. The oracle replays the composed
@@ -737,8 +736,8 @@ def _semdecon_split(spark: SparkSession, sf_dir: str):
 
 
 def q_doc_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-based decontamination (operators/decontaminate.py r13
-    extension): paraphrased benchmark text shares no 8-word shingle with
+    """Embedding-based decontamination (operators/decontaminate.py):
+    paraphrased benchmark text shares no 8-word shingle with
     its source but still sits in the eval doc's cosine ball. Eval side =
     the deterministic fixed-size _semdecon_split benchmark stand-in, so
     the broadcast-NLJ scan stays linear in the corpus; output = the
@@ -777,7 +776,7 @@ def q_doc_semantic_decontaminate_np(
 def q_doc_semantic_decontaminate_blocked(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Cell-blocked production path for LARGE eval sides (r13 verdict #5):
+    """Cell-blocked production path for LARGE eval sides:
     both splits probe their top-SEMDECON_NPROBE cells of the seeded
     _mprobe_centroids and only cell-sharing (train, bench) pairs are
     scored — the corpus rides a BroadcastHashJoin on cell instead of the
@@ -861,7 +860,7 @@ def _sql_doc_semantic_decontaminate_blocked(
     # with the semdecon is_eval split
     cent = _mprobe_centroids()
     # cap at the centroid count, like multiprobe_cells — past K every cell
-    # is already probed and the masked list is all -inf (ADVICE r14 #2)
+    # is already probed and the masked list is all -inf
     nprobe = min(nprobe, len(cent))
     nrm = O.norm("embedding")
     dl = O.dots_const_list("embedding", cent)
@@ -924,7 +923,7 @@ def q_stream_semantic_decontaminate_state(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Continuous semantic decontamination (streaming/dedup.py
-    streaming_semantic_decontaminate, r14): the training split streams in
+    streaming_semantic_decontaminate): the training split streams in
     (availableNow) against the STATIC broadcast eval side; the gate is
     stateless, so the drained epoch-stamped flags union to exactly the
     batch operator's pair set whatever the batch granularity — same
@@ -949,8 +948,8 @@ def q_stream_semantic_decontaminate_state(
     )
     _await_stream(q)
     # read_flags, not a bare parquet read: a corpus with no cross-split
-    # neighbor above the threshold writes ZERO flag partitions (r15
-    # generated-corpus sweep) and the gate's answer is the empty set
+    # neighbor above the threshold (seen on a generated corpus) writes
+    # ZERO flag partitions, and the gate's answer is the empty set
     return read_flags(
         spark, f"{tmp}/flags", "vec_id bigint, bench_id bigint"
     ).select("vec_id", "bench_id")
@@ -1354,8 +1353,8 @@ def _sql_minhash_lsh_pairs() -> str:
 
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup GROUPS: minhash-LSH pairs → connected components via the
-    alternating large-star/small-star algorithm (the production variant
-    since r8 — log²-round convergence regardless of chain length, where
+    alternating large-star/small-star algorithm (the production variant:
+    log²-round convergence regardless of chain length, where
     min-label propagation needs O(diameter) rounds; equivalence with
     propagation is pinned by tests/test_dedup.py). The oracle rebuilds the
     same grouping as a recursive transitive closure + min-over-reachable —
@@ -1832,7 +1831,7 @@ def q_stream_bm25_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q_stream_bm25_state's exact pipeline + compact_epoch_state on both
     the postings and doclens tables before serving: the collapsed
     single-epoch state must score bit-identically against the SAME batch
-    BM25 oracle (the post-compaction re-check VERDICT r4 asked for)."""
+    BM25 oracle: compaction must not change a single score."""
     import tempfile
 
     from vector_db_api_spark.operators.keyword import bm25_scores_postings
@@ -2702,7 +2701,7 @@ def q_doc_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_doc_dsir_select_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production-shape DSIR selection (r8 verdict #4): dsir_fit fits BOTH
+    """Production-shape DSIR selection: dsir_fit fits BOTH
     bucket distributions in ONE corpus featurization scan (the exact twin
     scans twice — bit-identical weight table, pinned by test), and
     dsir_scores_fast reduces per document with a plain partial-aggregated
@@ -3277,7 +3276,7 @@ ORDER BY score DESC, e.doc_id ASC LIMIT 10
 
 
 def q_embed_semantic_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embed → search with the LOCAL SEMANTIC embedder (r9 verdict #5):
+    """embed → search with the LOCAL SEMANTIC embedder:
     hashed bag-of-words random projection (operators/embed.py
     ``hashed_ngram_embedder`` — the no-network twin of the reference's
     Cohere model, tests/integration/test_cohere_embeddings.py), then exact
@@ -3332,9 +3331,9 @@ ORDER BY score DESC, e.doc_id ASC LIMIT 10
 
 def q_embed_subword_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """embed → search with the SUBWORD (char-ngram) semantic embedder —
-    the configuration that actually models morphology (r10 verdict #4:
-    ``learning``/``learn`` overlap through shared ``lea/ear/arn`` grams;
-    the reference's ranking semantics in
+    the configuration that actually models morphology (``learning``/
+    ``learn`` overlap through shared ``lea/ear/arn`` grams; the
+    reference's ranking semantics in
     tests/integration/test_cohere_embeddings.py:233). Features per token,
     in order: the word itself, then its 3-grams, then its 4-grams; vector
     = sequential left-fold sum of md5-uniform feature vectors
@@ -3705,7 +3704,7 @@ SELECT 'chunk', id, 'src0', version FROM chunks0 WHERE document_id = 'd7'
 
 def q_crud_engine_with_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full Engine drive of the TRANSACTIONAL with-chunks route
-    (routers/documents.py:82-101 + the r6 single-catalog commit): build a
+    (routers/documents.py:82-101 + the single-catalog commit): build a
     real store in a tempdir, create a library, POST one with-chunks
     document whose 3 chunk texts are slices of ``documents.doc_id=0``'s
     text, then POST a second with-chunks document whose chunk has the
@@ -3769,7 +3768,7 @@ _ENGINE_CHUNK_SCHEMA = (
 
 def q_crud_engine_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full Engine drive of the DELETE → index-tombstone → maintenance →
-    move lifecycle (r7; reference index.remove + registry.remove,
+    move lifecycle (reference index.remove + registry.remove,
     services/chunk.py:119-139 / indexing/registry.py:41-44):
 
     1. two LSH libraries; doc dA0 (4 chunks, texts sliced from
@@ -3847,7 +3846,7 @@ FROM d, p
 
 
 def q_crud_engine_selfcontained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Engine drive of the r10 opt-in SNAPSHOT layout (r9 verdict #3):
+    """Engine drive of the opt-in SNAPSHOT layout:
     IVF-Flat postings published through the lifecycle, with the mutability
     contract enforced in code (lifecycle.py rebuild/_downgrade_serving):
 
@@ -4113,7 +4112,7 @@ SELECT vec_id, score FROM (
 
 
 def q_lsh_search_selfcontained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Self-contained bucket-table twin of lsh_search_top10 (r9): same
+    """Self-contained bucket-table twin of lsh_search_top10: same
     fixed model, buckets built ``include_vectors=True`` so the probe
     re-ranks IN PLACE — one job, no corpus join (operators/lsh.py). Shares
     lsh_search_top10's replay oracle; plan divergence is the point, value
@@ -4132,7 +4131,7 @@ def q_lsh_search_selfcontained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ivf_flat_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-Flat twin of ivf_search_top10 (r9): postings built
+    """IVF-Flat twin of ivf_search_top10: postings built
     ``include_vectors=True`` (one vector copy in its posting row) so the
     nprobe probe re-ranks in place with no corpus hydration join
     (operators/ivf.py). Shares ivf_search_top10's replay oracle; parity
@@ -4244,9 +4243,9 @@ def _sql_pq_search() -> str:
 
 
 def q_pq_search_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch ADC search (operators/pq.py search_batch, r9): one pass over
+    """Batch ADC search (operators/pq.py search_batch): one pass over
     the codes table answers the whole query batch — map-side per-query
-    partial top-rerank WITH batch-boundary ties (r11: identical codes tie
+    partial top-rerank WITH batch-boundary ties (identical codes tie
     on ADC score), then a global rank()-based cutoff that keeps the whole
     tie class, then exact re-rank. The oracle is a UNION ALL of the proven
     per-query PQ replays. Two queries keep the generated SQL bounded (each
@@ -4584,7 +4583,7 @@ SELECT query_id, vec_id, score FROM ranked WHERE rn <= 10
 
 def q_knn_self_join_ivf_sym(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate kNN SELF-join with SYMMETRIC multi-probe
-    (operators/ivf.py ``IVFIndex.self_join``, r10 verdict #3) under the
+    (operators/ivf.py ``IVFIndex.self_join``) under the
     fixed seeded centroids: every vector probes its 2 nearest cells, a
     pair is a candidate when the probe sets intersect, candidates re-rank
     exactly, top-3 per vector (self included — a vector is its own
@@ -5415,551 +5414,461 @@ FROM binned GROUP BY bin
 # Registry
 # ---------------------------------------------------------------------------
 
-# The driver's correctness gate checks the FIRST 50 entries of this dict
-# (insertion order), so ordering is part of the proof strategy: one entry
-# per DISTINCT operator class comes first (window membership pinned by
-# tests/test_registry.py); past the window sit oracle-backed variants whose
-# semantics are subsumed by an in-window entry — metric/twin/compaction
-# variants, subsumed listing/quantize shapes, and the fixed-model ANN
-# replays. Since round 4 EVERY entry is oracle-backed (0 rows-only); the
-# full registry is swept at sf0.01 AND sf0.1 into CORRECTNESS_LOCAL.md.
-SUITE: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
-    # --- in-window: exact kNN (FlatIndex parity) ---
-    "knn_cosine_top10": (_q_knn("cosine"), _sql_knn("cosine")),
-    # --- in-window: r12 NEW operators, in-window from their first round
-    # (the knn_self_join_ivf_sym precedent). Displaced to make room, both
-    # driver-green r2-r11 (TEN consecutive window rounds) with full value
-    # oracles kept out-of-window: topk_per_label (per-group top-k runs
-    # inside every in-window ANN entry's rerank via topk_per_group) and
-    # doc_lang_id (the n-gram lang-id heuristic stays oracle-swept
-    # out-of-window and pytest-pinned; the text-analysis class keeps
-    # doc_token_count_bpe in-window — corpus_profile/doc_chunking rotated
-    # out r13 after 10 green rounds each) ---
-    "doc_span_dedup": (q_doc_span_dedup, _sql_doc_span_dedup()),
-    "doc_ccnet_buckets": (q_doc_ccnet_buckets, _sql_doc_ccnet_buckets()),
-    # --- in-window: r13 rotation (VERDICT r12 #2: the numpy/production
-    # twins a real user actually runs — pass-local for many rounds but
-    # never driver-checked; the never-checked set is now MACHINE-DERIVED
-    # from committed CORRECTNESS_r*.json by tools/never_checked.py, which
-    # counted 24 where the r12 hand ledger said <=22). Ten swaps, each
-    # displacing a multiply-driver-green entry whose class keeps an
-    # in-window rep (usually the incoming twin itself — the same-oracle
-    # overlap ADVICE r12 #4 asked for; unlike r12's first-round
-    # promotions, every incoming entry here has been green in the local
-    # 136/136 sweeps since at least r8):
-    #   simhash_np            IN for simhash_hamming_pairs (green r1-r12)
-    #   embedding_neardup_mp_np IN for embedding_neardup   (green r1-r12)
-    #   semdedup_drop_np      IN for semdedup_drop         (green r4-r12)
-    #   doc_quality_model     IN for doc_quality_model_join (green r5-r12;
-    #                         SAME oracle — join==literal pinned by pytest)
-    #   doc_dsir_select_fast  IN for doc_dsir_select       (green r8-r12)
-    #   corpus_clean_modern   IN for corpus_clean_near     (green r3-r12)
-    #   doc_winnowing_np      IN for corpus_profile        (green r2-r12;
-    #                         text class keeps doc_token_count_bpe)
-    #   doc_repetition_np     IN for doc_chunking          (green r2-r12;
-    #                         chunking keeps its full oracle + pytest)
-    #   knn_batch_numpy_top5  IN for doc_listing_page      (green r1-r12;
-    #                         listing keeps doc_listing_has_more's oracle
-    #                         + the facade pagination tests)
-    #   multimodal_embed      IN for crud_cas              (green r2-r12;
-    #                         CAS keeps crud_cas_conflicts' oracle +
-    #                         pytest, and both crud_engine_* entries stay)
-    # ---
-    "doc_winnowing_np": (
+
+class Entry(NamedTuple):
+    """One registered operator: the Spark callable, the DuckDB oracle
+    whose rows it must match bit-exactly, and the operator class that
+    the check window's coverage is counted in."""
+
+    fn: Callable[[SparkSession, str], DataFrame]
+    oracle: str | None
+    op_class: str
+
+
+# Every entry is oracle-backed, and tools/check_correctness.py sweeps all
+# of them. Entries that share an oracle are twins of one operator: a numpy
+# or fold production path, a compaction, layout or join variant.
+SUITE: dict[str, Entry] = {
+    "knn_cosine_top10": Entry(_q_knn("cosine"), _sql_knn("cosine"), "knn-exact"),
+    "doc_span_dedup": Entry(q_doc_span_dedup, _sql_doc_span_dedup(), "span-dedup"),
+    "doc_ccnet_buckets": Entry(q_doc_ccnet_buckets, _sql_doc_ccnet_buckets(), "ccnet"),
+    # numpy production twin of doc_winnowing: the same oracle
+    "doc_winnowing_np": Entry(
         q_doc_winnowing_np,
         f"SELECT doc_id, COALESCE(array_to_string(winnow_fps, ','), '') "
         f"AS winnow_fps_csv FROM ({O.winnowing_sql()})",
+        "fingerprinting",
     ),
-    "doc_repetition_np": (
+    # numpy production twin of doc_repetition: the same oracle
+    "doc_repetition_np": Entry(
         lambda spark, sf_dir: __import__(
             "vector_db_api_spark.functions.kernels", fromlist=["repetition_stats_np"]
         ).repetition_stats_np(_docs(spark, sf_dir)),
         _sql_doc_repetition(),
+        "repetition",
     ),
-    # --- in-window: dedup ---
-    "minhash_lsh_pairs": (q_minhash_lsh_pairs, _sql_minhash_lsh_pairs()),
-    "dedup_components": (q_dedup_components, _sql_dedup_components()),
-    "simhash_np": (
+    "minhash_lsh_pairs": Entry(
+        q_minhash_lsh_pairs, _sql_minhash_lsh_pairs(), "dedup-text",
+    ),
+    "dedup_components": Entry(
+        q_dedup_components, _sql_dedup_components(), "dedup-components",
+    ),
+    # numpy production twin of simhash: the same oracle
+    "simhash_np": Entry(
         q_simhash_np,
         f"{O.simhash_sql('documents', 'doc_id', 'text')}",
+        "dedup-simhash",
     ),
-    # r14 rotation: the expression-shaped multiprobe twin takes the slot of
-    # its BLAS production twin embedding_neardup_mp_np (driver-green r13;
-    # SAME ids-only oracle projection — the pair the never-checked ledger
-    # still owed a row)
-    "embedding_neardup_mp": (q_embedding_neardup_mp, _sql_embedding_neardup_mp()),
-    # r14 rotation (VERDICT r13 #1): the five r13 operators enter the window
-    # after their staged green round. Semantic decontamination takes the slot
-    # of doc_decontaminate (the 8-shingle form, driver-green r1-r13; its full
-    # oracle stays out-of-window and pytest pins the shingle rule) — the
-    # decontamination class keeps BOTH forms represented, n-gram via the
-    # out-of-window sweep and embedding-based here.
-    "doc_semantic_decontaminate": (
+    "embedding_neardup_mp": Entry(
+        q_embedding_neardup_mp, _sql_embedding_neardup_mp(), "dedup-embedding",
+    ),
+    "doc_semantic_decontaminate": Entry(
         q_doc_semantic_decontaminate, _sql_doc_semantic_decontaminate(),
+        "decontamination",
     ),
-    # --- in-window: semantic dedup (SemDeDup, round-4 class) ---
-    "semdedup_drop_np": (q_semdedup_drop_np, _sql_semdedup(ids_only=True)),
-    # --- in-window: round-4 family rotation (VERDICT r4 #3: first
-    # driver-checked rows for sketches / profiler / quality model /
-    # canonicalization / continuous semdedup) ---
-    "doc_quality_model": (q_doc_quality_model, _sql_doc_quality_model()),
-    "stream_semdedup_state": (
+    "semdedup_drop_np": Entry(
+        q_semdedup_drop_np, _sql_semdedup(ids_only=True), "semdedup",
+    ),
+    "doc_quality_model": Entry(
+        q_doc_quality_model, _sql_doc_quality_model(), "quality-model",
+    ),
+    "stream_semdedup_state": Entry(
         q_stream_semdedup_state,
         _sql_stream_semdedup_state(),
+        "semdedup-stream",
     ),
-    # --- in-window: r12 rotation (VERDICT r11 #2: the ANN production
-    # variants a real user actually calls — batch paths, self-contained /
-    # IVF-Flat in-place layouts, the int8 quantized two-stage path — plus
-    # the Engine selfcontained lifecycle and the LM broadcast-join scale
-    # twin; NONE had ever had a driver CORRECTNESS row. Displaced, all
-    # driver-green in r11 (or multiple earlier rounds), full value oracles
-    # kept out-of-window: vec_kernel_scores (the kernels run inside every
-    # in-window knn/ANN entry), exact_duplicates (dedup keeps the minhash/
-    # simhash/components/embedding reps; plan pinned in
-    # test_exact_dedup_partial_aggregates), doc_repetition (np twin shares
-    # its oracle verbatim), doc_lm_nll (its join twin shares the oracle
-    # verbatim and takes the slot), lsh/ivf/pq_search_top10 (each ANN
-    # family keeps TWO in-window reps via batch + layout/quantized
-    # variants; the single-probe plans stay plan-pinned),
-    # crud_engine_with_chunks (engine lifecycle keeps
-    # crud_engine_index_delete + the incoming crud_engine_selfcontained)
-    # ---
-    "lsh_search_batch_top10": (q_lsh_search_batch, _sql_lsh_search_batch()),
-    "lsh_search_selfcontained_top10": (
+    "lsh_search_batch_top10": Entry(
+        q_lsh_search_batch, _sql_lsh_search_batch(), "ann-lsh",
+    ),
+    "lsh_search_selfcontained_top10": Entry(
         q_lsh_search_selfcontained, _sql_lsh_search(),
+        "ann-lsh",
     ),
-    "ivf_search_batch_top10": (q_ivf_search_batch, _sql_ivf_search_batch()),
-    "ivf_flat_search_top10": (q_ivf_flat_search, _sql_ivf_search()),
-    "pq_search_batch_top10": (q_pq_search_batch, _sql_pq_search_batch()),
-    "knn_quantized_top10": (q_knn_quantized, _sql_knn_quantized()),
-    "doc_lm_nll_join": (q_doc_lm_nll_join, _sql_doc_lm_nll()),
-    "crud_engine_selfcontained": (
+    "ivf_search_batch_top10": Entry(
+        q_ivf_search_batch, _sql_ivf_search_batch(), "ann-ivf",
+    ),
+    "ivf_flat_search_top10": Entry(q_ivf_flat_search, _sql_ivf_search(), "ann-ivf"),
+    "pq_search_batch_top10": Entry(
+        q_pq_search_batch, _sql_pq_search_batch(), "ann-quantized",
+    ),
+    "knn_quantized_top10": Entry(
+        q_knn_quantized, _sql_knn_quantized(), "ann-quantized",
+    ),
+    "doc_lm_nll_join": Entry(q_doc_lm_nll_join, _sql_doc_lm_nll(), "lm-scoring"),
+    "crud_engine_selfcontained": Entry(
         q_crud_engine_selfcontained,
         _sql_crud_engine_selfcontained(),
+        "crud-engine",
     ),
-    # --- in-window: r8 rotation — DSIR data selection (the r7 verdict's
-    # top item: operators/dsir.py wired end-to-end) and the r6
-    # cross-table-transaction Engine route's first driver-green row;
-    # displaced: events_distinct_kmv (driver-green r5-r7; KMV estimator
-    # still oracle-swept below + stream_kmv_state) and ivfpq_search_top10
-    # (driver-green r6-r7; a composition of in-window ivf + pq) ---
-    "doc_dsir_select_fast": (
+    "doc_dsir_select_fast": Entry(
         q_doc_dsir_select_fast,
         _sql_doc_dsir_select_fast(),
+        "dsir",
     ),
-    # --- in-window: exact kNN batch, numpy production twin (r13) ---
-    "knn_batch_numpy_top5": (q_knn_batch_numpy, _sql_knn_batch_scored()),
-    # --- in-window: hybrid retrieval ---
-    "doc_hybrid_rrf": (q_hybrid_rrf, _sql_hybrid_rrf()),
-    # --- in-window: events / streaming batch-paths / skew ---
-    # r12 in-window swap: the Gopher structure-rule gate takes the slot of
-    # events_hourly (driver-green r1-r11; the windowed-rollup class keeps
-    # events_sessions in-window AND stream_trending_state — the SAME hourly
-    # rollup built in-stream against the batch oracle)
-    "doc_gopher_rules": (q_doc_gopher_rules, _sql_doc_gopher_rules()),
-    "events_sessions": (q_events_sessions, _SQL_EVENTS_SESSIONS),
-    "skew_salted_agg": (q_skew_salted_agg, _SQL_SKEW_SALTED_AGG),
-    # --- in-window: stream-built state vs batch oracle ---
-    "stream_bm25_state": (q_stream_bm25_state, _sql_doc_bm25()),
-    # r14 rotation: the composed streaming curation (Gopher gate → continuous
-    # span dedup → near-dup admission in one foreachBatch) takes the slot of
-    # stream_trending_state (driver-green r1-r13, THIRTEEN consecutive
-    # windows; the streaming-aggregate class keeps stream_kmv_state +
-    # stream_bm25_state in-window and the hourly-rollup oracle stays
-    # out-of-window with full values)
-    "stream_curate_state": (q_stream_curate_state, _sql_stream_curate_state()),
-    # --- in-window: relational family, r11 rotation (r10 verdict #2: the
-    # eight rel_* entries below had NEVER had a driver CORRECTNESS row —
-    # every other rel entry had been green in some round's window).
-    # Displaced to make room, all multiply driver-green and keeping full
-    # value oracles out-of-window: rel_pricing_summary /
-    # rel_revenue_by_nation / rel_customer_running_total (green r1-r10;
-    # the relational class now has EIGHT in-window reps), doc_winnowing
-    # (green r10; np twin shares its oracle verbatim), emb_quantize_int8
-    # (green r10; quantization class covered by in-window pq_search_top10),
-    # events_asof + events_gapfill (green r10; temporal class keeps
-    # events_hourly + events_sessions), doc_dsir_sample (green r10; DSIR
-    # keeps doc_dsir_select), multimodal_neardup (green r10; multimodal
-    # keeps multimodal_features) ---
-    # r14 rotation (VERDICT r13 #1): six of the eight r11 rel_* entries
-    # rotate out after THREE consecutive driver-green rounds (r11-r13); the
-    # relational scan/join/agg class keeps rel_priority_returns +
-    # rel_idle_customers in-window and all six keep full value oracles
-    # out-of-window. Their slots go to the remaining r13 operators and the
-    # five longest-waiting never-driver-checked entries (the r13 verdict's
-    # minimum drain list: embedding_neardup_mp above, plus doc_sample_hash /
-    # span_overlap_pairs / doc_pii / events_zorder below).
-    "doc_semantic_decontaminate_np": (
+    "knn_batch_numpy_top5": Entry(
+        q_knn_batch_numpy, _sql_knn_batch_scored(), "knn-exact",
+    ),
+    "doc_hybrid_rrf": Entry(q_hybrid_rrf, _sql_hybrid_rrf(), "hybrid-retrieval"),
+    "doc_gopher_rules": Entry(q_doc_gopher_rules, _sql_doc_gopher_rules(), "curation"),
+    "events_sessions": Entry(
+        q_events_sessions, _SQL_EVENTS_SESSIONS, "events-temporal-agg",
+    ),
+    "skew_salted_agg": Entry(q_skew_salted_agg, _SQL_SKEW_SALTED_AGG, "skew"),
+    "stream_bm25_state": Entry(q_stream_bm25_state, _sql_doc_bm25(), "bm25"),
+    "stream_curate_state": Entry(
+        q_stream_curate_state, _sql_stream_curate_state(), "curation-stream",
+    ),
+    "doc_semantic_decontaminate_np": Entry(
         q_doc_semantic_decontaminate_np,
         f"SELECT vec_id, bench_id FROM ({_sql_doc_semantic_decontaminate()})",
+        "decontamination",
     ),
-    "stream_line_dedup_state": (
+    "stream_line_dedup_state": Entry(
         q_stream_line_dedup_state, _sql_doc_line_dedup_keep_first(),
+        "line-dedup",
     ),
-    "doc_line_dedup": (q_doc_line_dedup, _sql_doc_line_dedup()),
-    "doc_sample_hash": (q_doc_sample_hash, _sql_doc_sample_hash()),
-    "span_overlap_pairs": (q_span_overlap_pairs, _sql_span_overlap_pairs()),
-    "doc_pii": (q_doc_pii, _sql_doc_pii()),
-    "rel_priority_returns": (q_rel_priority_returns, _SQL_REL_PRIORITY_RETURNS),
-    "rel_idle_customers": (q_rel_idle_customers, _SQL_REL_IDLE_CUSTOMERS),
-    # --- in-window: CRUD / mutation layer + composed search ---
-    # r12 in-window swap: continuous span dedup (stream-built state vs the
-    # SAME batch oracle as doc_span_dedup) takes the slot of crud_upsert
-    # (driver-green r2-r11; the mutation class keeps crud_cas +
-    # crud_delete_cascade in-window, and both crud_engine_* entries drive
-    # upsert_chunks through the Engine on every run)
-    "stream_span_dedup_state": (q_stream_span_dedup_state, _sql_doc_span_dedup()),
-    # r13 in-window swap: the multimodal embed pipeline (decode → feature →
-    # embed over binary columns) takes the slot of crud_cas — see the r13
-    # rotation note at the top of the window
-    "multimodal_embed": (q_multimodal_embed, _sql_multimodal_embed()),
-    # r14 rotation: the Z-order interleaved layout key takes the slot of
-    # crud_delete_cascade (driver-green r1-r13, THIRTEEN windows; the
-    # cascade-delete anti-join still runs in-window inside BOTH
-    # crud_engine_* lifecycles — the Engine delete path IS the cascade —
-    # and the full cascade oracle stays out-of-window)
-    "events_zorder": (q_events_zorder, _sql_events_zorder()),
-    # r7 rotation: the Engine-level delete→tombstone→maintenance→move
-    # lifecycle (subsumes the pure-operator crud_move_document, now past
-    # the window — the engine drive moves a document through store AND index)
-    "crud_engine_index_delete": (
+    "doc_line_dedup": Entry(q_doc_line_dedup, _sql_doc_line_dedup(), "line-dedup"),
+    "doc_sample_hash": Entry(q_doc_sample_hash, _sql_doc_sample_hash(), "sampling"),
+    "span_overlap_pairs": Entry(
+        q_span_overlap_pairs, _sql_span_overlap_pairs(), "span-dedup",
+    ),
+    "doc_pii": Entry(q_doc_pii, _sql_doc_pii(), "pii"),
+    "rel_priority_returns": Entry(
+        q_rel_priority_returns, _SQL_REL_PRIORITY_RETURNS, "relational",
+    ),
+    "rel_idle_customers": Entry(
+        q_rel_idle_customers, _SQL_REL_IDLE_CUSTOMERS, "relational",
+    ),
+    "stream_span_dedup_state": Entry(
+        q_stream_span_dedup_state, _sql_doc_span_dedup(), "span-dedup",
+    ),
+    "multimodal_embed": Entry(
+        q_multimodal_embed, _sql_multimodal_embed(), "multimodal",
+    ),
+    "events_zorder": Entry(q_events_zorder, _sql_events_zorder(), "events-layout"),
+    "crud_engine_index_delete": Entry(
         q_crud_engine_index_delete,
         _SQL_CRUD_ENGINE_INDEX_DELETE,
+        "crud-engine",
     ),
-    "search_e2e": (q_search_e2e, _sql_search_e2e()),
-    # --- in-window: similarity join + end-to-end corpus clean ---
-    # r12 in-window swap: the four-stage curation composition takes the
-    # slot of knn_self_join_top3 (driver-green r2-r11; the self-join class
-    # keeps knn_self_join_ivf_sym in-window, whose exact re-rank tail is
-    # the same rerank_pairs kernel)
-    "corpus_curate_full": (q_corpus_curate_full, _sql_corpus_curate_full()),
-    "corpus_clean_modern": (q_corpus_clean_modern, _sql_corpus_clean_modern()),
-    # --- in-window: r11 rotation slots — the subword (char-ngram) semantic
-    # embedder pipeline (r10 verdict #4: the morphology-modeling recipe,
-    # previously pytest-only; its oracle replays word + 3-gram + 4-gram
-    # feature folds bit-for-bit) and the NEW symmetric multi-probe ANN
-    # self-join (r10 verdict #3; displaced doc_packing after its r10
-    # driver-green row — curation class keeps doc_dsir_select in-window) ---
-    "embed_subword_knn_top10": (q_embed_subword_knn, _sql_embed_subword_knn()),
-    "knn_self_join_ivf_sym": (
+    "search_e2e": Entry(q_search_e2e, _sql_search_e2e(), "search-e2e"),
+    "corpus_curate_full": Entry(
+        q_corpus_curate_full, _sql_corpus_curate_full(), "curation",
+    ),
+    "corpus_clean_modern": Entry(
+        q_corpus_clean_modern, _sql_corpus_clean_modern(), "curation",
+    ),
+    "embed_subword_knn_top10": Entry(
+        q_embed_subword_knn, _sql_embed_subword_knn(), "embedder",
+    ),
+    "knn_self_join_ivf_sym": Entry(
         q_knn_self_join_ivf_sym,
         _sql_knn_self_join_ivf_sym(),
+        "ann-selfjoin",
     ),
-    # --- in-window: r10 rotation (r9 verdict #4 + #5) — the last
-    # never-driver-checked families take window slots: streaming sketch
-    # state (stream_kmv_state), the real multimodal decode oracle
-    # (multimodal_features), the tokenizer family (doc_token_count_bpe),
-    # and the new local-semantic-embedder pipeline (embed_semantic_knn).
-    # Displaced, every one with its full value oracle kept out-of-window:
-    # knn_batch_top5 (batch exact-kNN plan exercised in-window by
-    # knn_self_join_top3), doc_bm25 (oracle shared verbatim with in-window
-    # stream_bm25_state), ivf_search_filtered_top10 (in-window
-    # ivf_search_top10 + the pushdown pinned by test_plan_shapes), and
-    # events_interval_join (temporal-join class covered by events_asof +
-    # events_gapfill) ---
-    "stream_kmv_state": (q_stream_kmv_state, _sql_stream_kmv_state()),
-    "multimodal_features": (q_multimodal_features, _sql_multimodal_features()),
-    "doc_token_count_bpe": (
+    "stream_kmv_state": Entry(q_stream_kmv_state, _sql_stream_kmv_state(), "sketches"),
+    "multimodal_features": Entry(
+        q_multimodal_features, _sql_multimodal_features(), "multimodal",
+    ),
+    "doc_token_count_bpe": Entry(
         q_doc_token_count_bpe,
         f"SELECT doc_id, {O.token_count_bpe('text')} AS n_bpe_tokens FROM documents",
+        "tokenizer",
     ),
-    "embed_semantic_knn_top10": (q_embed_semantic_knn, _sql_embed_semantic_knn()),
-    # ================= past the 50-entry window =================
-    # oracle-backed, subsumed by an in-window entry (still checked by pytest
-    # and by tools/check_correctness.py, which runs ALL entries): the kNN
-    # metric variants (kernel exactness in-window via vec_kernel_scores),
-    # band buckets (minhash_lsh_pairs builds on them), raw simhash
-    # signatures (hamming pairs recompute them), text-stat ratios
-    # (doc_quality composes them), CAS conflict rows (crud_cas in-window),
-    # the BLAS twin of the in-window fold-based embedding_neardup, the
-    # salted-join twin of skew_salted_agg, and corpus_clean (subsumed by
-    # the in-window corpus_clean_near, which composes it).
-    # rotated out in round 5 to open window slots for the round-4 family
-    # (all still oracle-backed and locally swept): vec_norm_argmax ⊂
-    # vec_kernel_scores, embed_knn ⊂ knn_cosine + embed pytest,
-    # ngram_jaccard ⊂ the 4 in-window dedup entries, first_seen /
-    # type_stats ⊂ events_hourly + stream state, pricing_rollup ⊂
-    # pricing_summary, mixture_sample ⊂ temperature_sample pytest.
-    # rotated out in round 12 for the r12 operator family (all five r12
-    # entries are in-window from their first round): knn_self_join_top3 /
-    # events_hourly / crud_upsert were driver-green r2-r11 (see the
-    # in-window swap notes above); topk_per_label / doc_lang_id were
-    # driver-green r2-r11; see the displacement note at the window head)
-    "knn_self_join_top3": (q_knn_self_join, _sql_knn_self_join()),
-    "events_hourly": (q_events_hourly, _SQL_EVENTS_HOURLY),
-    "crud_upsert": (q_crud_upsert, _SQL_CRUD_UPSERT),
-    "topk_per_label": (q_topk_per_label, _sql_topk_per_label()),
-    "doc_lang_id": (
+    "embed_semantic_knn_top10": Entry(
+        q_embed_semantic_knn, _sql_embed_semantic_knn(), "embedder",
+    ),
+    "knn_self_join_top3": Entry(q_knn_self_join, _sql_knn_self_join(), "ann-selfjoin"),
+    "events_hourly": Entry(q_events_hourly, _SQL_EVENTS_HOURLY, "events-temporal-agg"),
+    "crud_upsert": Entry(q_crud_upsert, _SQL_CRUD_UPSERT, "crud-engine"),
+    "topk_per_label": Entry(q_topk_per_label, _sql_topk_per_label(), "knn-exact"),
+    "doc_lang_id": Entry(
         q_doc_lang_id,
         f"SELECT doc_id, {O.lang_id('text')} AS lang_pred FROM documents",
+        "text-analysis",
     ),
-    "vec_norm_argmax": (q_vec_norm_argmax, _sql_vec_norm_argmax()),
-    "embed_knn_top10": (q_embed_knn, _sql_embed_knn()),
-    "ngram_jaccard_pairs": (q_ngram_jaccard_pairs, _sql_ngram_jaccard_pairs()),
-    "events_first_seen": (q_events_first_seen, _SQL_EVENTS_FIRST_SEEN),
-    "events_type_stats": (q_events_type_stats, _SQL_EVENTS_TYPE_STATS),
-    "rel_pricing_rollup": (q_rel_pricing_rollup, _SQL_REL_PRICING_ROLLUP),
-    "doc_mixture_sample": (q_doc_mixture_sample, _sql_doc_mixture_sample()),
-    "embedding_neardup_np": (q_embedding_neardup_np, _sql_embedding_neardup_ids()),
-    # r14 rotation: the BLAS multiprobe production twin rotates out after its
-    # r13 driver-green row — the expression-shaped multiprobe twin (same
-    # ids-only oracle) takes the in-window slot it had been waiting behind
-    "embedding_neardup_mp_np": (
+    "vec_norm_argmax": Entry(q_vec_norm_argmax, _sql_vec_norm_argmax(), "knn-exact"),
+    "embed_knn_top10": Entry(q_embed_knn, _sql_embed_knn(), "knn-exact"),
+    "ngram_jaccard_pairs": Entry(
+        q_ngram_jaccard_pairs, _sql_ngram_jaccard_pairs(), "dedup-text",
+    ),
+    "events_first_seen": Entry(
+        q_events_first_seen, _SQL_EVENTS_FIRST_SEEN, "events-temporal-agg",
+    ),
+    "events_type_stats": Entry(
+        q_events_type_stats, _SQL_EVENTS_TYPE_STATS, "events-temporal-agg",
+    ),
+    "rel_pricing_rollup": Entry(
+        q_rel_pricing_rollup, _SQL_REL_PRICING_ROLLUP, "relational",
+    ),
+    "doc_mixture_sample": Entry(
+        q_doc_mixture_sample, _sql_doc_mixture_sample(), "sampling",
+    ),
+    "embedding_neardup_np": Entry(
+        q_embedding_neardup_np, _sql_embedding_neardup_ids(), "dedup-embedding",
+    ),
+    "embedding_neardup_mp_np": Entry(
         q_embedding_neardup_mp_np,
         f"SELECT left_id, right_id FROM ({_sql_embedding_neardup_mp()})",
+        "dedup-embedding",
     ),
-    "embedding_neardup": (q_embedding_neardup, _sql_embedding_neardup()),
-    "skew_salted_join": (q_skew_salted_join, _SQL_SKEW_SALTED_JOIN),
-    "corpus_clean": (q_corpus_clean, _sql_corpus_clean()),
-    # r10 rotation: displaced from the window (classes covered in-window —
-    # see the r10 rotation comment above) — full value oracles kept
-    "knn_batch_top5": (q_knn_batch, _sql_knn_batch()),
-    "doc_bm25": (q_doc_bm25, _sql_doc_bm25()),
-    "ivf_search_filtered_top10": (
+    "embedding_neardup": Entry(
+        q_embedding_neardup, _sql_embedding_neardup(), "dedup-embedding",
+    ),
+    "skew_salted_join": Entry(q_skew_salted_join, _SQL_SKEW_SALTED_JOIN, "skew"),
+    "corpus_clean": Entry(q_corpus_clean, _sql_corpus_clean(), "curation"),
+    "knn_batch_top5": Entry(q_knn_batch, _sql_knn_batch(), "knn-exact"),
+    "doc_bm25": Entry(q_doc_bm25, _sql_doc_bm25(), "bm25"),
+    "ivf_search_filtered_top10": Entry(
         q_ivf_search_filtered,
         _sql_ivf_search(extra_where=" AND e.label < 5"),
+        "ann-ivf",
     ),
-    "events_interval_join": (q_events_interval_join, _SQL_EVENTS_INTERVAL_JOIN),
-    # r14 rotation: displaced from the window after multi-round green runs
-    # (classes covered in-window — see the r14 swap notes above); every one
-    # keeps its full value oracle here and stays in the local full sweeps
-    "doc_decontaminate": (q_doc_decontaminate, _sql_doc_decontaminate()),
-    "stream_trending_state": (q_stream_trending_state, _SQL_STREAM_TRENDING),
-    "crud_delete_cascade": (q_crud_delete_cascade, _SQL_CRUD_DELETE_CASCADE),
-    "rel_large_orders": (q_rel_large_orders, _SQL_REL_LARGE_ORDERS),
-    "rel_distinct_suppliers": (q_rel_distinct_suppliers, _SQL_REL_DISTINCT_SUPPLIERS),
-    "rel_promo_ratio": (q_rel_promo_ratio, _SQL_REL_PROMO_RATIO),
-    "rel_above_avg_orders": (q_rel_above_avg_orders, _SQL_REL_ABOVE_AVG_ORDERS),
-    "rel_trade_volume": (q_rel_trade_volume, _SQL_REL_TRADE_VOLUME),
-    "rel_disjunctive_parts": (q_rel_disjunctive_parts, _SQL_REL_DISJUNCTIVE_PARTS),
-    "doc_temperature_sample": (q_doc_temperature_sample, _sql_doc_temperature_sample()),
-    "doc_quality": (
+    "events_interval_join": Entry(
+        q_events_interval_join, _SQL_EVENTS_INTERVAL_JOIN, "events-temporal-agg",
+    ),
+    "doc_decontaminate": Entry(
+        q_doc_decontaminate, _sql_doc_decontaminate(), "decontamination",
+    ),
+    "stream_trending_state": Entry(
+        q_stream_trending_state, _SQL_STREAM_TRENDING, "events-temporal-agg",
+    ),
+    "crud_delete_cascade": Entry(
+        q_crud_delete_cascade, _SQL_CRUD_DELETE_CASCADE, "crud-engine",
+    ),
+    "rel_large_orders": Entry(q_rel_large_orders, _SQL_REL_LARGE_ORDERS, "relational"),
+    "rel_distinct_suppliers": Entry(
+        q_rel_distinct_suppliers, _SQL_REL_DISTINCT_SUPPLIERS, "relational",
+    ),
+    "rel_promo_ratio": Entry(q_rel_promo_ratio, _SQL_REL_PROMO_RATIO, "relational"),
+    "rel_above_avg_orders": Entry(
+        q_rel_above_avg_orders, _SQL_REL_ABOVE_AVG_ORDERS, "relational",
+    ),
+    "rel_trade_volume": Entry(q_rel_trade_volume, _SQL_REL_TRADE_VOLUME, "relational"),
+    "rel_disjunctive_parts": Entry(
+        q_rel_disjunctive_parts, _SQL_REL_DISJUNCTIVE_PARTS, "relational",
+    ),
+    "doc_temperature_sample": Entry(
+        q_doc_temperature_sample, _sql_doc_temperature_sample(), "sampling",
+    ),
+    "doc_quality": Entry(
         q_doc_quality,
         f"SELECT doc_id, {O.quality_score('text')} AS quality FROM documents",
+        "quality-model",
     ),
-    "corpus_vocabulary": (q_corpus_vocabulary, _sql_corpus_vocabulary()),
-    "doc_leakage_split": (q_doc_leakage_split, _sql_doc_leakage_split()),
-    "events_anomalies": (q_events_anomalies, _SQL_EVENTS_ANOMALIES),
-    "knn_postfilter": (q_knn_postfilter, _sql_knn_postfilter()),
-    # r11 rotation: displaced from the window (classes covered in-window —
-    # see the r11 rotation comments above) — full value oracles kept
-    "doc_winnowing": (
+    "corpus_vocabulary": Entry(
+        q_corpus_vocabulary, _sql_corpus_vocabulary(), "text-analysis",
+    ),
+    "doc_leakage_split": Entry(
+        q_doc_leakage_split, _sql_doc_leakage_split(), "decontamination",
+    ),
+    "events_anomalies": Entry(
+        q_events_anomalies, _SQL_EVENTS_ANOMALIES, "events-temporal-agg",
+    ),
+    "knn_postfilter": Entry(q_knn_postfilter, _sql_knn_postfilter(), "knn-exact"),
+    "doc_winnowing": Entry(
         q_doc_winnowing,
         f"SELECT doc_id, COALESCE(array_to_string(winnow_fps, ','), '') "
         f"AS winnow_fps_csv FROM ({O.winnowing_sql()})",
+        "fingerprinting",
     ),
-    "rel_pricing_summary": (q_rel_pricing_summary, _SQL_REL_PRICING_SUMMARY),
-    "rel_revenue_by_nation": (q_rel_revenue_by_nation, _SQL_REL_REVENUE_BY_NATION),
-    "rel_customer_running_total": (
+    "rel_pricing_summary": Entry(
+        q_rel_pricing_summary, _SQL_REL_PRICING_SUMMARY, "relational",
+    ),
+    "rel_revenue_by_nation": Entry(
+        q_rel_revenue_by_nation, _SQL_REL_REVENUE_BY_NATION, "relational",
+    ),
+    "rel_customer_running_total": Entry(
         q_rel_customer_running_total,
         _SQL_REL_CUSTOMER_RUNNING_TOTAL,
+        "relational",
     ),
-    "emb_quantize_int8": (q_emb_quantize_int8, _sql_emb_quantize_int8()),
-    "doc_packing": (q_doc_packing, _sql_doc_packing()),
-    "events_asof": (q_events_asof, _SQL_EVENTS_ASOF),
-    "events_gapfill": (q_events_gapfill, _SQL_EVENTS_GAPFILL),
-    "doc_dsir_sample": (q_doc_dsir_sample, _sql_doc_dsir_sample()),
-    "multimodal_neardup": (q_multimodal_neardup, _sql_multimodal_neardup()),
-    "events_pivot": (q_events_pivot, _SQL_EVENTS_PIVOT),
-    "knn_euclidean_top10": (_q_knn("euclidean"), _sql_knn("euclidean")),
-    "knn_dot_top10": (_q_knn("dot_product"), _sql_knn("dot_product")),
-    "rel_top_customers": (q_rel_top_customers, _SQL_REL_TOP_CUSTOMERS),
-    "doc_fingerprints": (
+    "emb_quantize_int8": Entry(
+        q_emb_quantize_int8, _sql_emb_quantize_int8(), "ann-quantized",
+    ),
+    "doc_packing": Entry(q_doc_packing, _sql_doc_packing(), "curation"),
+    "events_asof": Entry(q_events_asof, _SQL_EVENTS_ASOF, "events-temporal-agg"),
+    "events_gapfill": Entry(
+        q_events_gapfill, _SQL_EVENTS_GAPFILL, "events-temporal-agg",
+    ),
+    "doc_dsir_sample": Entry(q_doc_dsir_sample, _sql_doc_dsir_sample(), "dsir"),
+    "multimodal_neardup": Entry(
+        q_multimodal_neardup, _sql_multimodal_neardup(), "multimodal",
+    ),
+    "events_pivot": Entry(q_events_pivot, _SQL_EVENTS_PIVOT, "events-temporal-agg"),
+    "knn_euclidean_top10": Entry(
+        _q_knn("euclidean"), _sql_knn("euclidean"), "knn-exact",
+    ),
+    "knn_dot_top10": Entry(_q_knn("dot_product"), _sql_knn("dot_product"), "knn-exact"),
+    "rel_top_customers": Entry(
+        q_rel_top_customers, _SQL_REL_TOP_CUSTOMERS, "relational",
+    ),
+    "doc_fingerprints": Entry(
         q_doc_fingerprints,
         f"SELECT doc_id, md5({O.normalize_text('text')}) AS fp_md5, "
         f"sha256(text) AS fp_sha256 FROM documents",
+        "fingerprinting",
     ),
-    "doc_text_stats": (
+    "doc_text_stats": Entry(
         q_doc_text_stats,
         f"SELECT doc_id, {O.punct_ratio('text')} AS punct_ratio, "
         f"{O.stopword_ratio('text')} AS stopword_ratio, "
         f"{O.mean_token_len('text')} AS mean_token_len FROM documents",
+        "text-analysis",
     ),
-    "minhash_band_buckets": (q_minhash_band_buckets, _sql_minhash_band_buckets()),
-    "simhash": (q_simhash, f"{O.simhash_sql('documents', 'doc_id', 'text')}"),
-    "crud_cas_conflicts": (q_crud_cas_conflicts, _SQL_CRUD_CAS_CONFLICTS),
-    # rotated out of the window in r7 (driver-green r3-r6; subsumed by the
-    # Engine-level crud_engine_index_delete, which moves through store+index)
-    "crud_move_document": (q_crud_move_document, _SQL_CRUD_MOVE_DOCUMENT),
-    # r12 rotation: displaced from the window after multi-round driver-green
-    # rows — full value oracles kept; the production batch / layout /
-    # quantized ANN variants, the LM join twin, and the Engine
-    # selfcontained lifecycle took their slots (VERDICT r11 #2)
-    "vec_kernel_scores": (q_vec_kernel_scores, _sql_vec_kernel_scores()),
-    "exact_duplicates": (q_exact_duplicates, _sql_exact_duplicates()),
-    "doc_repetition": (q_doc_repetition, _sql_doc_repetition()),
-    "doc_lm_nll": (q_doc_lm_nll, _sql_doc_lm_nll()),
-    "lsh_search_top10": (q_lsh_search, _sql_lsh_search()),
-    "ivf_search_top10": (q_ivf_search, _sql_ivf_search()),
-    "pq_search_top10": (q_pq_search, _sql_pq_search()),
-    "crud_engine_with_chunks": (
+    "minhash_band_buckets": Entry(
+        q_minhash_band_buckets, _sql_minhash_band_buckets(), "dedup-text",
+    ),
+    "simhash": Entry(
+        q_simhash, f"{O.simhash_sql('documents', 'doc_id', 'text')}", "dedup-simhash",
+    ),
+    "crud_cas_conflicts": Entry(
+        q_crud_cas_conflicts, _SQL_CRUD_CAS_CONFLICTS, "crud-engine",
+    ),
+    "crud_move_document": Entry(
+        q_crud_move_document, _SQL_CRUD_MOVE_DOCUMENT, "crud-engine",
+    ),
+    "vec_kernel_scores": Entry(
+        q_vec_kernel_scores, _sql_vec_kernel_scores(), "knn-exact",
+    ),
+    "exact_duplicates": Entry(
+        q_exact_duplicates, _sql_exact_duplicates(), "dedup-text",
+    ),
+    "doc_repetition": Entry(q_doc_repetition, _sql_doc_repetition(), "repetition"),
+    "doc_lm_nll": Entry(q_doc_lm_nll, _sql_doc_lm_nll(), "lm-scoring"),
+    "lsh_search_top10": Entry(q_lsh_search, _sql_lsh_search(), "ann-lsh"),
+    "ivf_search_top10": Entry(q_ivf_search, _sql_ivf_search(), "ann-ivf"),
+    "pq_search_top10": Entry(q_pq_search, _sql_pq_search(), "ann-quantized"),
+    "crud_engine_with_chunks": Entry(
         q_crud_engine_with_chunks,
         _SQL_CRUD_ENGINE_WITH_CHUNKS,
+        "crud-engine",
     ),
-    "doc_token_count": (
+    "doc_token_count": Entry(
         q_doc_token_count,
         f"SELECT doc_id, {O.token_count('text')} AS n_tokens FROM documents",
+        "tokenizer",
     ),
-    "minhash_signatures": (q_minhash_signatures, _sql_minhash_signatures()),
-    "simhash_dup_groups": (q_simhash_dup_groups, _sql_simhash_dup_groups()),
-    "doc_listing_has_more": (q_doc_listing_has_more, _SQL_DOC_LISTING_HAS_MORE),
-    "emb_quantize_roundtrip": (q_emb_quantize_roundtrip, _sql_emb_quantize_roundtrip()),
-    "knn_batch_numpy_ids_top5": (q_knn_batch_numpy_ids, _sql_knn_batch_ids()),
-    # r13 rotation: displaced from the window after 10-12 green rounds
-    # each (see the r13 rotation note at the top of the window) — full
-    # value oracles kept; simhash class keeps simhash_np in-window
-    "doc_chunking": (q_doc_chunking, _sql_doc_chunking()),
-    "simhash_hamming_pairs": (q_simhash_hamming_pairs, _sql_simhash_hamming_pairs()),
-    "corpus_profile": (q_corpus_profile, _sql_corpus_profile()),
-    # round-6 rotation: displaced to make room for the ANN search family —
-    # each was driver-green in r5 and keeps its full value oracle here
-    "events_quantile_sketch": (
+    "minhash_signatures": Entry(
+        q_minhash_signatures, _sql_minhash_signatures(), "dedup-text",
+    ),
+    "simhash_dup_groups": Entry(
+        q_simhash_dup_groups, _sql_simhash_dup_groups(), "dedup-simhash",
+    ),
+    "doc_listing_has_more": Entry(
+        q_doc_listing_has_more, _SQL_DOC_LISTING_HAS_MORE, "listing",
+    ),
+    "emb_quantize_roundtrip": Entry(
+        q_emb_quantize_roundtrip, _sql_emb_quantize_roundtrip(), "ann-quantized",
+    ),
+    "knn_batch_numpy_ids_top5": Entry(
+        q_knn_batch_numpy_ids, _sql_knn_batch_ids(), "knn-exact",
+    ),
+    "doc_chunking": Entry(q_doc_chunking, _sql_doc_chunking(), "tokenizer"),
+    "simhash_hamming_pairs": Entry(
+        q_simhash_hamming_pairs, _sql_simhash_hamming_pairs(), "dedup-simhash",
+    ),
+    "corpus_profile": Entry(q_corpus_profile, _sql_corpus_profile(), "text-analysis"),
+    "events_quantile_sketch": Entry(
         q_events_quantile_sketch,
         _sql_events_quantile_sketch(),
+        "sketches",
     ),
-    "events_value_histogram": (
+    "events_value_histogram": Entry(
         q_events_value_histogram,
         _sql_events_value_histogram(),
+        "sketches",
     ),
-    "dedup_canonical": (q_dedup_canonical, _sql_dedup_canonical()),
-    "events_table_profile": (q_events_table_profile, _sql_events_table_profile()),
-    "multimodal_stats": (q_multimodal_stats, _SQL_MULTIMODAL_STATS),
-    # r13 rotation: listing page (green r1-r12; doc_listing_has_more +
-    # chunks_by_document keep the family's oracles) and CAS (green
-    # r1-r12; crud_cas_conflicts keeps the conflict oracle) displaced
-    "doc_listing_page": (q_doc_listing_page, _SQL_DOC_LISTING_PAGE),
-    "crud_cas": (q_crud_cas, _SQL_CRUD_CAS),
-    # r9 rotation: displaced from the window (classes covered in-window by
-    # doc_listing_page and rel_revenue_by_nation/rel_pricing_summary) —
-    # full value oracles kept
-    "chunks_by_document": (q_chunks_by_document, _sql_chunks_by_document()),
-    "rel_ship_priority": (q_rel_ship_priority, _SQL_REL_SHIP_PRIORITY),
-    # SemDeDup expression-shaped oracle twin (the BLAS production twin
-    # semdedup_drop_np is in-window since r13; shared drop set)
-    "semdedup_drop": (q_semdedup_drop, _sql_semdedup()),
-    # hot-cell panel tiling, same oracle (exact blocked gram — round 5)
-    "semdedup_drop_np_hotcell": (
+    "dedup_canonical": Entry(q_dedup_canonical, _sql_dedup_canonical(), "dedup-text"),
+    "events_table_profile": Entry(
+        q_events_table_profile, _sql_events_table_profile(), "sketches",
+    ),
+    "multimodal_stats": Entry(q_multimodal_stats, _SQL_MULTIMODAL_STATS, "multimodal"),
+    "doc_listing_page": Entry(q_doc_listing_page, _SQL_DOC_LISTING_PAGE, "listing"),
+    "crud_cas": Entry(q_crud_cas, _SQL_CRUD_CAS, "crud-engine"),
+    "chunks_by_document": Entry(
+        q_chunks_by_document, _sql_chunks_by_document(), "listing",
+    ),
+    "rel_ship_priority": Entry(
+        q_rel_ship_priority, _SQL_REL_SHIP_PRIORITY, "relational",
+    ),
+    # expression-shaped oracle twin of semdedup_drop_np: the same drop set
+    "semdedup_drop": Entry(q_semdedup_drop, _sql_semdedup(), "semdedup"),
+    # hot-cell panel tiling (exact blocked gram), the same drop set
+    "semdedup_drop_np_hotcell": Entry(
         q_semdedup_drop_np_hotcell,
         _sql_semdedup(ids_only=True),
+        "semdedup",
     ),
-    # post-compaction re-checks (round 5): epoch-collapsed state must serve
-    # bit-identically against the SAME oracles as the uncompacted streams
-    "stream_bm25_compacted": (q_stream_bm25_compacted, _sql_doc_bm25()),
-    "stream_semdedup_compacted": (
+    # post-compaction re-checks: epoch-collapsed state must serve
+    # bit-identically against the oracles of the uncompacted streams
+    "stream_bm25_compacted": Entry(q_stream_bm25_compacted, _sql_doc_bm25(), "bm25"),
+    "stream_semdedup_compacted": Entry(
         q_stream_semdedup_compacted,
         _sql_stream_semdedup_state(),
+        "semdedup-stream",
     ),
-    # (the five r13 operators moved IN-window for r14 after their staged
-    # green round — see the r14 rotation notes at their window slots)
-    # broadcast-join scale twin of the in-window doc_quality_model (shared
-    # oracle; join==literal bit-equality additionally pinned by pytest)
-    "doc_quality_model_join": (q_doc_quality_model_join, _sql_doc_quality_model()),
-    # near-dup pipeline composition (corpus_clean_modern is in-window r13)
-    "corpus_clean_near": (q_corpus_clean_near, _sql_corpus_clean_near()),
-    # r8 rotation: displaced from the window (driver-green r5-r7 / r6-r7;
-    # KMV class stays covered by stream_kmv_state's shared estimator and
-    # IVFPQ by its in-window ivf + pq constituents) — full value oracles kept
-    "events_distinct_kmv": (q_events_distinct_kmv, _sql_events_distinct_kmv()),
-    "ivfpq_search_top10": (q_ivfpq_search, _sql_ivfpq_search()),
-    # ordered-fold expression-shaped DSIR oracle twin (the plain-SUM
-    # production twin doc_dsir_select_fast is in-window since r13)
-    "doc_dsir_select": (q_doc_dsir_select, _sql_doc_dsir_select()),
-    # --- r14 additions (staged out-of-window one green round, the r12
-    # ADVICE #4 policy) ---
-    # cell-blocked semantic decontamination (r13 verdict #5): the production
-    # path when the eval side outgrows the exact NLJ; its oracle replays the
-    # same multiprobe blocking, and recall vs the exact twin is a pinned
-    # pytest number + a BENCH_SCALE sweep (tools/semdecon_crossover.py)
-    "doc_semantic_decontaminate_blocked": (
+    # broadcast-join scale twin of doc_quality_model: the same oracle,
+    # and join == literal bit-equality is pinned by pytest
+    "doc_quality_model_join": Entry(
+        q_doc_quality_model_join, _sql_doc_quality_model(), "quality-model",
+    ),
+    "corpus_clean_near": Entry(
+        q_corpus_clean_near, _sql_corpus_clean_near(), "curation",
+    ),
+    "events_distinct_kmv": Entry(
+        q_events_distinct_kmv, _sql_events_distinct_kmv(), "sketches",
+    ),
+    "ivfpq_search_top10": Entry(q_ivfpq_search, _sql_ivfpq_search(), "ann-quantized"),
+    "doc_dsir_select": Entry(q_doc_dsir_select, _sql_doc_dsir_select(), "dsir"),
+    # cell-blocked semantic decontamination, the production path once
+    # the eval side outgrows the exact nested-loop join. Its oracle
+    # replays the same multiprobe blocking; recall against the exact
+    # twin is a pinned pytest number (tools/semdecon_crossover.py).
+    "doc_semantic_decontaminate_blocked": Entry(
         q_doc_semantic_decontaminate_blocked,
         _sql_doc_semantic_decontaminate_blocked(),
+        "decontamination",
     ),
-    "doc_semantic_decontaminate_blocked_np": (
+    "doc_semantic_decontaminate_blocked_np": Entry(
         q_doc_semantic_decontaminate_blocked_np,
         "SELECT vec_id, bench_id FROM "
         f"({_sql_doc_semantic_decontaminate_blocked()})",
+        "decontamination",
     ),
-    # set-state compaction twins (r13 verdict #6): compact_set_state run
-    # mid-stream must be invisible to every later batch — same oracles as
-    # the uncompacted streams (the stream_bm25_compacted pattern for the
-    # monotone seen-gram / seen-line / seen-bucket states)
-    "stream_span_dedup_compacted": (
+    # set-state compaction run mid-stream must be invisible to every
+    # later batch: the oracles of the uncompacted streams
+    "stream_span_dedup_compacted": Entry(
         q_stream_span_dedup_compacted, _sql_doc_span_dedup(),
+        "span-dedup",
     ),
-    "stream_line_dedup_compacted": (
+    "stream_line_dedup_compacted": Entry(
         q_stream_line_dedup_compacted, _sql_doc_line_dedup_keep_first(),
+        "line-dedup",
     ),
-    "stream_curate_compacted": (
+    "stream_curate_compacted": Entry(
         q_stream_curate_compacted, _sql_stream_curate_state(),
+        "curation-stream",
     ),
-    # continuous semantic decontamination gate (stateless; flags union to
-    # the batch answer — the _np id-projection oracle)
-    "stream_semantic_decontaminate_state": (
+    # continuous (stateless) decontamination gate: its flags union to
+    # the batch answer, the id projection of the exact oracle
+    "stream_semantic_decontaminate_state": Entry(
         q_stream_semantic_decontaminate_state,
         f"SELECT vec_id, bench_id FROM ({_sql_doc_semantic_decontaminate()})",
+        "decontamination-stream",
     ),
 }
 
 
 # ---------------------------------------------------------------------------
-# Driver check window — EXPLICIT since r15
+# Driver check window
 # ---------------------------------------------------------------------------
-# The driver's correctness gate checks the FIRST 50 entries of SUITE in
-# insertion order. Through r14 the window was the dict's literal ordering
-# (the "in-window:" comments above are that history); from r15 the window is
-# declared HERE and SUITE is reordered to match, so a rotation edits this
-# list + ROTATION_LOG and never moves dict entries around. The two
-# invariants every rotation since r13 has honored are machine-pinned by
-# tests/test_registry.py::test_rotation_* against OPERATOR_CLASS /
-# ROTATION_LOG / REGISTERED_ROUND below:
-#   (1) every displaced entry's operator class keeps >=1 in-window rep;
-#   (2) staged promotion — no entry enters the window in the round it was
-#       first registered (it must have >=1 full-sweep green round first).
-#
-# r15 rotation (VERDICT r14 #1, extended): ALL FIFTEEN never-driver-checked
-# entries enter the window, draining the machine ledger to ZERO after the
-# r15 driver run — the six staged r14 additions (both blocked-decon twins,
-# the three set-state compaction twins, the streaming semantic gate) plus
-# the nine carried (semdedup_drop_np_hotcell, knn_batch_numpy_ids_top5,
-# stream_bm25_compacted, stream_semdedup_compacted, doc_temperature_sample,
-# corpus_vocabulary, doc_leakage_split, events_anomalies, events_pivot).
-# Every incoming entry is green in the full 147/147 sf0.01 sweep AND the
-# sf1 sweep on the r14 final tree. Displaced (slot -> incoming), with the
-# class-coverage argument per slot:
-#   stream_bm25_state        -> stream_bm25_compacted      (SAME batch
-#       oracle _sql_doc_bm25; green many rounds thru r14)
-#   stream_semdedup_state    -> stream_semdedup_compacted  (same oracle;
-#       green r4-r14)
-#   stream_span_dedup_state  -> stream_span_dedup_compacted (same oracle;
-#       green r12-r14)
-#   stream_line_dedup_state  -> stream_line_dedup_compacted (same oracle;
-#       green r14 — the embedding_neardup_mp_np precedent: a single-green
-#       entry may hand its slot to its SAME-oracle twin)
-#   stream_curate_state      -> stream_curate_compacted    (same oracle;
-#       green r14, same precedent)
-#   knn_batch_numpy_top5     -> knn_batch_numpy_ids_top5   (exact-kNN batch
-#       class keeps knn_cosine_top10 + the incoming ids twin; green r13-r14)
-#   semdedup_drop_np         -> semdedup_drop_np_hotcell   (same ids-only
-#       oracle / shared drop set; green r13-r14)
-#   lsh_search_selfcontained_top10 -> doc_semantic_decontaminate_blocked
-#       (LSH family keeps lsh_search_batch_top10; green r12-r14)
-#   ivf_flat_search_top10    -> doc_semantic_decontaminate_blocked_np
-#       (IVF family keeps ivf_search_batch_top10; green r12-r14)
-#   knn_quantized_top10      -> stream_semantic_decontaminate_state
-#       (quantized class keeps pq_search_batch_top10; green r12-r14)
-#   rel_priority_returns     -> events_anomalies  (rel class keeps
-#       rel_idle_customers; green r11-r14)
-#   embed_semantic_knn_top10 -> corpus_vocabulary (embedder class keeps
-#       embed_subword_knn_top10; green r10-r14)
-#   crud_engine_selfcontained -> doc_leakage_split (engine class keeps
-#       crud_engine_index_delete, the same store+index lifecycle; green
-#       r12-r14)
-#   doc_gopher_rules         -> doc_temperature_sample (the Gopher gate runs
-#       in-window inside BOTH corpus_curate_full and stream_curate_compacted;
-#       green r12-r14)
-#   multimodal_features      -> events_pivot (multimodal class keeps
-#       multimodal_embed, whose pipeline composes the same decode+feature
-#       kernels; green r10-r14)
+# The driver's correctness gate checks the first 50 entries of SUITE in
+# insertion order. The window is declared here and SUITE is reordered to
+# match, so changing the window edits this list, never the dict above. It
+# holds at least one entry of every operator class except those in
+# WINDOW_CLASS_EXCEPTIONS. Twins of one operator share a class, so one of
+# them holds the slot and the others keep their oracles in the full sweep.
 WINDOW: list[str] = [
     "knn_cosine_top10",
     "doc_span_dedup",
@@ -6019,248 +5928,23 @@ SUITE = {
 }
 
 
-# Operator-class map for the rotation policy (invariant 1). Classes are at
-# the granularity the r10-r14 rotation notes argued coverage at — fine
-# enough that "keeps a rep" is meaningful (each ANN family is its own
-# class; batch/stream/compacted forms of one operator share a class),
-# coarse enough that production/oracle twins and layout variants of one
-# operator land together. tests/test_registry.py pins: every class keeps
-# >=1 in-window rep, EXCEPT the documented pre-policy exception set.
-OPERATOR_CLASS: dict[str, str] = {
-    # exact kNN + the vector kernels / per-group top-k that every entry's
-    # rerank tail runs
-    **dict.fromkeys(
-        [
-            "knn_cosine_top10", "knn_euclidean_top10", "knn_dot_top10",
-            "knn_batch_top5", "knn_batch_numpy_top5", "knn_batch_numpy_ids_top5",
-            "knn_postfilter", "embed_knn_top10", "vec_norm_argmax",
-            "vec_kernel_scores", "topk_per_label",
-        ],
-        "knn-exact",
-    ),
-    **dict.fromkeys(
-        ["lsh_search_top10", "lsh_search_batch_top10",
-         "lsh_search_selfcontained_top10"],
-        "ann-lsh",
-    ),
-    **dict.fromkeys(
-        ["ivf_search_top10", "ivf_search_batch_top10", "ivf_flat_search_top10",
-         "ivf_search_filtered_top10"],
-        "ann-ivf",
-    ),
-    **dict.fromkeys(
-        ["pq_search_top10", "pq_search_batch_top10", "knn_quantized_top10",
-         "ivfpq_search_top10", "emb_quantize_int8", "emb_quantize_roundtrip"],
-        "ann-quantized",
-    ),
-    **dict.fromkeys(
-        ["knn_self_join_top3", "knn_self_join_ivf_sym"], "ann-selfjoin",
-    ),
-    **dict.fromkeys(
-        ["embed_semantic_knn_top10", "embed_subword_knn_top10"], "embedder",
-    ),
-    "search_e2e": "search-e2e",
-    **dict.fromkeys(
-        ["minhash_lsh_pairs", "minhash_band_buckets", "minhash_signatures",
-         "ngram_jaccard_pairs", "exact_duplicates", "dedup_canonical"],
-        "dedup-text",
-    ),
-    "dedup_components": "dedup-components",
-    **dict.fromkeys(
-        ["simhash", "simhash_np", "simhash_dup_groups",
-         "simhash_hamming_pairs"],
-        "dedup-simhash",
-    ),
-    **dict.fromkeys(
-        ["embedding_neardup", "embedding_neardup_np", "embedding_neardup_mp",
-         "embedding_neardup_mp_np"],
-        "dedup-embedding",
-    ),
-    **dict.fromkeys(
-        ["semdedup_drop", "semdedup_drop_np", "semdedup_drop_np_hotcell"],
-        "semdedup",
-    ),
-    **dict.fromkeys(
-        ["stream_semdedup_state", "stream_semdedup_compacted"],
-        "semdedup-stream",
-    ),
-    **dict.fromkeys(
-        ["doc_decontaminate", "doc_semantic_decontaminate",
-         "doc_semantic_decontaminate_np", "doc_semantic_decontaminate_blocked",
-         "doc_semantic_decontaminate_blocked_np", "doc_leakage_split"],
-        "decontamination",
-    ),
-    "stream_semantic_decontaminate_state": "decontamination-stream",
-    **dict.fromkeys(
-        ["doc_span_dedup", "span_overlap_pairs", "stream_span_dedup_state",
-         "stream_span_dedup_compacted"],
-        "span-dedup",
-    ),
-    **dict.fromkeys(
-        ["doc_line_dedup", "stream_line_dedup_state",
-         "stream_line_dedup_compacted"],
-        "line-dedup",
-    ),
-    **dict.fromkeys(
-        ["doc_quality_model", "doc_quality_model_join", "doc_quality"],
-        "quality-model",
-    ),
-    **dict.fromkeys(
-        ["doc_gopher_rules", "corpus_curate_full", "corpus_clean",
-         "corpus_clean_near", "corpus_clean_modern", "doc_packing"],
-        "curation",
-    ),
-    **dict.fromkeys(
-        ["stream_curate_state", "stream_curate_compacted"], "curation-stream",
-    ),
-    "doc_ccnet_buckets": "ccnet",
-    **dict.fromkeys(["doc_lm_nll", "doc_lm_nll_join"], "lm-scoring"),
-    **dict.fromkeys(
-        ["doc_dsir_select", "doc_dsir_select_fast", "doc_dsir_sample"], "dsir",
-    ),
-    **dict.fromkeys(
-        ["doc_sample_hash", "doc_temperature_sample", "doc_mixture_sample"],
-        "sampling",
-    ),
-    "doc_hybrid_rrf": "hybrid-retrieval",
-    **dict.fromkeys(
-        ["doc_bm25", "stream_bm25_state", "stream_bm25_compacted"], "bm25",
-    ),
-    **dict.fromkeys(
-        ["doc_token_count", "doc_token_count_bpe", "doc_chunking"], "tokenizer",
-    ),
-    **dict.fromkeys(
-        ["doc_text_stats", "corpus_profile", "corpus_vocabulary",
-         "doc_lang_id"],
-        "text-analysis",
-    ),
-    **dict.fromkeys(
-        ["doc_fingerprints", "doc_winnowing", "doc_winnowing_np"],
-        "fingerprinting",
-    ),
-    **dict.fromkeys(["doc_repetition", "doc_repetition_np"], "repetition"),
-    "doc_pii": "pii",
-    **dict.fromkeys(
-        ["multimodal_stats", "multimodal_features", "multimodal_neardup",
-         "multimodal_embed"],
-        "multimodal",
-    ),
-    **dict.fromkeys(
-        ["rel_pricing_rollup", "rel_large_orders", "rel_distinct_suppliers",
-         "rel_promo_ratio", "rel_above_avg_orders", "rel_trade_volume",
-         "rel_disjunctive_parts", "rel_pricing_summary",
-         "rel_revenue_by_nation", "rel_customer_running_total",
-         "rel_top_customers", "rel_ship_priority", "rel_priority_returns",
-         "rel_idle_customers"],
-        "relational",
-    ),
-    **dict.fromkeys(
-        ["events_hourly", "events_type_stats", "events_first_seen",
-         "events_sessions", "events_pivot", "events_anomalies", "events_asof",
-         "events_gapfill", "events_interval_join", "stream_trending_state"],
-        "events-temporal-agg",
-    ),
-    "events_zorder": "events-layout",
-    **dict.fromkeys(
-        ["events_distinct_kmv", "events_quantile_sketch",
-         "events_value_histogram", "events_table_profile", "stream_kmv_state"],
-        "sketches",
-    ),
-    **dict.fromkeys(["skew_salted_agg", "skew_salted_join"], "skew"),
-    **dict.fromkeys(
-        ["crud_upsert", "crud_cas", "crud_cas_conflicts", "crud_delete_cascade",
-         "crud_move_document", "crud_engine_with_chunks",
-         "crud_engine_selfcontained", "crud_engine_index_delete"],
-        "crud-engine",
-    ),
-    **dict.fromkeys(
-        ["doc_listing_page", "doc_listing_has_more", "chunks_by_document"],
-        "listing",
-    ),
-}
-
-# Classes with no in-window rep, each with the round the exception was
-# grandfathered and why. New exceptions require editing this dict — the
-# policy test fails otherwise.
+# Classes with no in-window entry, each with what covers it instead. A new
+# exception is a deliberate edit here; tests/test_registry.py fails
+# otherwise.
 WINDOW_CLASS_EXCEPTIONS: dict[str, str] = {
-    # r13 displaced doc_listing_page (green r1-r12) for the exact-kNN numpy
-    # batch twin; pagination stays covered by doc_listing_has_more's
-    # out-of-window oracle + the facade pagination pytest suite. Pre-dates
-    # the policy test; kept as the single grandfathered exception.
-    "listing": "r13 — facade pagination pytest + out-of-window oracle",
+    "listing": "facade pagination pytest + out-of-window oracle",
 }
-
-# Rotation record (invariants are tested against this, r14+). "out" entries
-# left the 50-entry window that round; "in" entries took their slots.
-ROTATION_LOG: dict[int, dict[str, list[str]]] = {
-    14: {
-        "out": [
-            "doc_decontaminate", "stream_trending_state",
-            "crud_delete_cascade", "rel_large_orders",
-            "rel_distinct_suppliers", "rel_promo_ratio",
-            "rel_above_avg_orders", "rel_trade_volume",
-            "rel_disjunctive_parts", "embedding_neardup_mp_np",
-        ],
-        "in": [
-            "doc_semantic_decontaminate", "doc_semantic_decontaminate_np",
-            "stream_curate_state", "stream_line_dedup_state",
-            "doc_line_dedup", "doc_sample_hash", "span_overlap_pairs",
-            "doc_pii", "events_zorder", "embedding_neardup_mp",
-        ],
-    },
-    15: {
-        "out": [
-            "stream_bm25_state", "stream_semdedup_state",
-            "stream_span_dedup_state", "stream_line_dedup_state",
-            "stream_curate_state", "knn_batch_numpy_top5",
-            "semdedup_drop_np", "lsh_search_selfcontained_top10",
-            "ivf_flat_search_top10", "knn_quantized_top10",
-            "rel_priority_returns", "embed_semantic_knn_top10",
-            "crud_engine_selfcontained", "doc_gopher_rules",
-            "multimodal_features",
-        ],
-        "in": [
-            "stream_bm25_compacted", "stream_semdedup_compacted",
-            "stream_span_dedup_compacted", "stream_line_dedup_compacted",
-            "stream_curate_compacted", "knn_batch_numpy_ids_top5",
-            "semdedup_drop_np_hotcell", "doc_semantic_decontaminate_blocked",
-            "doc_semantic_decontaminate_blocked_np",
-            "stream_semantic_decontaminate_state", "events_anomalies",
-            "corpus_vocabulary", "doc_leakage_split",
-            "doc_temperature_sample", "events_pivot",
-        ],
-    },
-}
-
-# First round each entry was REGISTERED in SUITE, for entries registered
-# r13+ (the staged-promotion policy starts there; everything older was
-# registered many rounds before any window promotion it received).
-REGISTERED_ROUND: dict[str, int] = {
-    "doc_semantic_decontaminate": 13,
-    "doc_semantic_decontaminate_np": 13,
-    "stream_curate_state": 13,
-    "doc_line_dedup": 13,
-    "stream_line_dedup_state": 13,
-    "doc_semantic_decontaminate_blocked": 14,
-    "doc_semantic_decontaminate_blocked_np": 14,
-    "stream_span_dedup_compacted": 14,
-    "stream_line_dedup_compacted": 14,
-    "stream_curate_compacted": 14,
-    "stream_semantic_decontaminate_state": 14,
-}
-
 
 # ---------------------------------------------------------------------------
-# Sampled full-scale oracles (r14 verdict #7): the two self-join entries'
-# registry oracles replay the FULL n² pair space — exactly right at driver
-# scale, quadratic by construction at sf1+, which is why every full-scale
-# sweep since r10 ran them SPARK-ONLY/excluded. Each now carries a SAMPLED
-# twin: a seeded ~1% of query ids (portable h32, identical literal on both
-# engines) replayed EXACTLY — top-k rows, real value hashing — while the
-# oracle cost drops from n² to n²/100. The Spark side still computes the
-# full join; `spark_filter` restricts its OUTPUT to the sampled queries so
-# the compare stays row-for-row. tools/check_correctness.py --sampled
-# consumes this; the driver-scale entries are untouched.
+# Sampled full-scale oracles: the two self-join entries' registry oracles
+# replay the full n² pair space, exact at driver scale but quadratic at
+# sf1 and above. Each carries a sampled twin: a seeded ~1% of query ids
+# (portable h32, the same literal on both engines) replayed exactly, top-k
+# rows and value hashes, at n²/100 oracle cost. The Spark side still
+# computes the full join; `spark_filter` restricts its output to the
+# sampled queries so the compare stays row-for-row.
+# tools/check_correctness.py --sampled consumes this; the driver-scale
+# entries are untouched.
 # ---------------------------------------------------------------------------
 
 _SJ_SAMPLE_MOD = 100  # ~1% of queries
@@ -6359,8 +6043,8 @@ SAMPLED_SCALE_ORACLES: dict[str, dict] = {
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: fn for name, (fn, _) in SUITE.items()}
+    return {name: e.fn for name, e in SUITE.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {name: sql for name, (_, sql) in SUITE.items() if sql is not None}
+    return {name: e.oracle for name, e in SUITE.items() if e.oracle is not None}
