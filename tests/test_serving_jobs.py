@@ -12,12 +12,31 @@ IVF model or re-infer a posting schema (fixed by the committed versions),
 list every cell of the posting table (only the probed cells are read), or
 scan the library partition a second time to re-attach hit columns.
 
-What a write may not do: put its request rows under a pickled Python RDD.
-Built as a JVM local relation (``session.local_frame``), broadcasting or
-collecting them needs no job; the budgets below count that.
+What a write may not do: put its request rows under a pickled Python RDD
+(built as a JVM local relation, ``session.local_frame``, collecting them
+runs no job), or re-derive on the cluster what the driver holds: the
+dim, finite and orphan checks and the global-id bloom walk run over the
+collected request rows, an add-only write's id sidecar is the previous
+one OR the new ids, the IVF delta is assigned on the driver, and the
+upsert reply is built from the request and the write's observed stamps.
+The jobs that remain:
+
+- ``upsert_chunk`` and a 16-chunk ``bulk_upsert_chunks`` (4): the MERGE
+  partition write — up to three jobs under AQE, among them the broadcast
+  of the partition's stored ids for the replace join and the write
+  itself — then the posting append of the IVF delta;
+- ``delete_chunk`` (4): the ``isEmpty`` presence probe, the partition
+  write, the collect of the partition's ids for the exact sidecar (a
+  delete removes an id, so the previous bitmap cannot be OR-ed), the
+  tombstone append;
+- ``create_document_with_chunks`` with 16 chunks (5): the documents
+  partition write, then the chunks upsert's four.
 """
 
 from __future__ import annotations
+
+import ast
+import pathlib
 
 import numpy as np
 import pytest
@@ -27,10 +46,10 @@ from vector_db_api_spark.api.service import Engine
 
 DIM = 8
 SEARCH_JOBS = 2
-UPSERT_JOBS = 14
-DELETE_JOBS = 7
-CREATE_JOBS = 16
-BULK_JOBS = 12
+UPSERT_JOBS = 4
+DELETE_JOBS = 4
+CREATE_JOBS = 5
+BULK_JOBS = 4
 LSH_SEARCH_JOBS = 4
 
 
@@ -135,3 +154,34 @@ def test_warm_lsh_search_job_budget(spark, tmp_path_factory):
     assert [h["score"] for h in hits] == sorted(
         (h["score"] for h in hits), reverse=True)
     assert jobs <= LSH_SEARCH_JOBS, jobs
+
+
+PKG = pathlib.Path(__file__).resolve().parent.parent / "vector_db_api_spark"
+
+
+def _limit_one_counts(path: pathlib.Path) -> list[int]:
+    """Lines of ``<frame>.limit(1).count()`` calls in ``path``."""
+    tree = ast.parse(path.read_text(), filename=str(path))
+    return [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "count"
+        and isinstance(inner := node.func.value, ast.Call)
+        and isinstance(inner.func, ast.Attribute)
+        and inner.func.attr == "limit"
+        and [getattr(a, "value", None) for a in inner.args] == [1]
+    ]
+
+
+def test_existence_probes_use_is_empty():
+    """An existence probe is ``isEmpty()``, one job: ``limit(1).count()``
+    runs the limit and then the count, two."""
+    files = [*(PKG / "api").glob("*.py"), PKG / "lifecycle.py"]
+    found = {
+        str(p.relative_to(PKG)): lines
+        for p in sorted(files)
+        if (lines := _limit_one_counts(p))
+    }
+    assert not found, f"limit(1).count() probes (use isEmpty()): {found}"

@@ -16,9 +16,9 @@ where the reference's ``extra="forbid"`` models do (models/entities.py:14,
 local relation (``session.local_frame``), whose Arrow conversion does not
 type-check them.
 
-Rows handed to ``Engine`` directly, as dicts or DataFrames, are checked
-for neither field types nor finite embeddings. ``Engine.search`` itself
-rejects a non-finite query vector.
+Rows handed to ``Engine`` directly, as dicts or DataFrames, are not
+type-checked. The engine itself rejects a non-finite chunk embedding
+(``upsert_chunks``) or query vector (``search``).
 """
 
 from __future__ import annotations
@@ -34,6 +34,7 @@ from pyspark.sql.types import (
 
 from vector_db_api_spark.api.errors import EngineError, ValidationError
 from vector_db_api_spark.api.service import CHUNK_IN_SCHEMA, Engine
+from vector_db_api_spark.lifecycle import IndexConfig
 from vector_db_api_spark.session import local_frame
 
 CHUNK_IN_FIELDS = (
@@ -96,8 +97,6 @@ class Facade:
 
     def create_library(self, body: dict) -> dict:
         try:
-            from vector_db_api_spark.lifecycle import IndexConfig
-
             cfg = None
             if "index_config" in body:
                 ic = dict(body["index_config"])
@@ -172,16 +171,12 @@ class Facade:
 
     def upsert_chunk(self, library_id: str, document_id: str, body: dict) -> dict:
         """routers/chunks.py:62-77 POST /libraries/{lib}/documents/{doc}/chunks
-        — create or update ONE chunk (id optional). Returns the chunk id;
-        the reference returns the full ChunkOut, so the created row is
-        echoed back via the point get."""
+        — create or update ONE chunk (id optional). The reference returns
+        the full ChunkOut: the stored row, without its embedding, which the
+        engine builds from the request and the write (no read-back)."""
         try:
             self._validate_chunks([body])
-            chunk_id = self.engine.upsert_chunk(library_id, document_id, body)
-            # partition-pruned echo: the route knows the library, so the
-            # point get lists only that partition (O(touched), like the write)
-            got = self._point_get("chunks", chunk_id, library_id=library_id)
-            return _ok(got.get("data", {"id": chunk_id}), 200)
+            return _ok(self.engine.upsert_chunk(library_id, document_id, body), 200)
         except EngineError as e:
             return _err(e)
 
@@ -230,10 +225,13 @@ class Facade:
         try:
             self._validate_chunks(chunks)
             rows = [tuple(c.get(f) for f in CHUNK_IN_FIELDS) for c in chunks]
-            # one partition: a local relation spreads its rows over every
-            # core, and each slice would become one more file of the
-            # library partition this write rewrites
-            df = local_frame(self.engine.spark, rows, CHUNK_IN_SCHEMA).coalesce(1)
+            df = local_frame(self.engine.spark, rows, CHUNK_IN_SCHEMA)
+            if len(rows) > Engine.GLOBAL_ID_CHECK_MAX_DRIVER_IDS:
+                # the engine collects a smaller batch and writes it as one
+                # partition; a larger one keeps the request's frame, and a
+                # local relation spreads its rows over every core: each
+                # slice would become one more file of the library partition
+                df = df.coalesce(1)
             self.engine.upsert_chunks(library_id, df)
             return _ok({"upserted": len(chunks)})
         except EngineError as e:
@@ -275,8 +273,6 @@ class Facade:
             unknown = set(body) - {"type", "params"}
             if unknown:
                 raise ValidationError(f"unknown fields: {sorted(unknown)}")
-            from vector_db_api_spark.lifecycle import IndexConfig
-
             cfg = IndexConfig(body.get("type", "flat"), dict(body.get("params") or {}))
             out = self.engine.update_index_config(library_id, cfg)
             return _ok(out)
@@ -306,7 +302,9 @@ class Facade:
             if not chunks_in:
                 raise ValidationError("at least one chunk is required")
             self._validate_chunks(chunks_in)  # validate before creating anything
-            with self.engine.store.transaction():
+            # the engine's write lock spans the transaction: no other write
+            # of this engine may allocate a version between its two writes
+            with self.engine.write_lock, self.engine.store.transaction():
                 doc = self.create_document(
                     library_id,
                     {k: body[k] for k in ("id", "metadata") if body.get(k) is not None},
@@ -389,22 +387,10 @@ class Facade:
         ``max_kmeans_iters`` field the reference accepts but never executes
         — this engine honors it at rebuild, lifecycle.py DEFAULTS note)."""
         out = self._point_get("libraries", library_id)
-        if "data" not in out:
-            return out
-        flat = out["data"].get("index_config") or {}
-        t = flat.get("type", "flat")
-        out["data"]["index_config"] = {
-            "type": t,
-            "lsh": {
-                "num_tables": flat.get("lsh_num_tables"),
-                "hyperplanes_per_table": flat.get("lsh_hyperplanes_per_table"),
-            } if t == "lsh" else None,
-            "ivf": {
-                "num_centroids": flat.get("ivf_num_centroids"),
-                "nprobe": flat.get("ivf_nprobe"),
-                "max_kmeans_iters": flat.get("ivf_max_kmeans_iters"),
-            } if t == "ivf" else None,
-        }
+        if "data" in out:
+            out["data"]["index_config"] = IndexConfig.reply(
+                out["data"].get("index_config")
+            )
         return out
 
     def get_document(

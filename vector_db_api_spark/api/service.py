@@ -17,13 +17,16 @@ is a real rehash, not a silent no-op.
 
 from __future__ import annotations
 
+import functools
 import math
+import threading
 import uuid
 from collections.abc import Sequence
 from datetime import datetime
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from vector_db_api_spark.api.errors import ConflictError, NotFoundError, ValidationError
 from vector_db_api_spark.functions import vector as V
@@ -32,6 +35,7 @@ from vector_db_api_spark.operators import mutations as M
 from vector_db_api_spark.operators.knn import apply_post_filters
 from vector_db_api_spark.operators.listing import list_page, page_stats
 from vector_db_api_spark.session import local_frame
+from vector_db_api_spark.sources import bloom as B
 from vector_db_api_spark.sources.store import CHUNKS_DDL, EntityStore
 
 #: a chunk as a client sends it: the chunks table without its bookkeeping
@@ -44,9 +48,21 @@ CHUNK_IN_SCHEMA = (
     "sha256:string>"
 )
 
+_NON_FINITE = "{} chunk(s) have NaN, infinite or NULL embedding values"
+_ORPHAN = "{} chunk(s) reference documents not in library {!r}"
+
 MAX_K = 1000          # api/dto.py:153
 MAX_EMBEDDING_DIM = 8192  # models/entities.py:54-60
 METRICS = V.METRICS
+
+
+def _writes(method):
+    """Run an Engine mutation under the engine's write lock."""
+    @functools.wraps(method)
+    def locked(self, *args, **kwargs):
+        with self.write_lock:
+            return method(self, *args, **kwargs)
+    return locked
 
 
 class Engine:
@@ -63,8 +79,8 @@ class Engine:
         # debris that would errorifexists-wedge the next mutation. The
         # engine is the table's single writer, so construction is the safe
         # moment to clear unpublished leftovers. Pass heal_on_start=False
-        # when several engines share one store root (DEPLOYMENT.md's
-        # shard-by-library layout): a sibling engine's in-flight generation
+        # when several engines share one store root (DEPLOYMENT.md,
+        # "Concurrent writes"): a sibling engine's in-flight generation
         # is indistinguishable from crash debris, so only the deployment's
         # designated bootstrap process should heal.
         if heal_on_start:
@@ -72,6 +88,13 @@ class Engine:
                 self.store.heal(table)
         # (committed libraries version, {id: Row}) — see _library_rows
         self._libraries: tuple[int | None, dict] | None = None
+        # Every mutation holds this lock, so the writes of one engine run
+        # one at a time: each allocates the next table-wide version, and the
+        # store's driver caches (id sidecars, document-id sets) are derived
+        # write by write. Reentrant, so a caller can hold it across several
+        # mutations, as Facade.create_document_with_chunks does around its
+        # transaction. Readers do not take it.
+        self.write_lock = threading.RLock()
 
     # -- helpers -------------------------------------------------------------
 
@@ -118,8 +141,6 @@ class Engine:
         """Partitions that MIGHT hold any of ``ids``, from the per-partition
         bloom sidecars — driver-side, no Spark jobs. None means "can't
         prune" (no per-partition manifest yet); [] means provably nowhere."""
-        from vector_db_api_spark.sources import bloom as B
-
         blooms = self.store.partition_blooms(table)
         if not blooms:
             return None if self.store.current_version(table) is not None else []
@@ -139,10 +160,11 @@ class Engine:
         if parts == []:
             return False
         df = self.store.read(table, partitions=parts)
-        return bool(df.filter(F.col("id") == id_).limit(1).count())
+        return not df.filter(F.col("id") == id_).isEmpty()
 
     # -- LibraryService ------------------------------------------------------
 
+    @_writes
     def create_library(
         self,
         name: str,
@@ -165,6 +187,7 @@ class Engine:
         self.store.write("libraries", self.store.read("libraries").unionByName(row))
         return lib_id
 
+    @_writes
     def update_index_config(self, library_id: str, config: IndexConfig) -> dict:
         """Config swap → full rebuild → atomic publish
         (services/library.py:58-93). The reference's ``update_config`` also
@@ -216,6 +239,7 @@ class Engine:
         _, more = page_stats(libs, offset=offset, limit=limit)
         return page, more
 
+    @_writes
     def rebuild_index(self, library_id: str) -> dict:
         """POST /libraries/{id}/rebuild-index (routers/libraries.py:110-123):
         rebuild under the CURRENT stored config — the reference re-applies
@@ -228,6 +252,7 @@ class Engine:
             library_id, self._library_chunks(library_id), cfg, lib["embedding_dim"]
         )
 
+    @_writes
     def delete_library(self, library_id: str) -> None:
         """Cascade delete (services/library.py:95-119). ``libraries`` is a
         tiny catalog table → full rewrite; ``documents``/``chunks`` are
@@ -259,6 +284,7 @@ class Engine:
         "summary", "sha256",
     )
 
+    @_writes
     def create_document(
         self,
         library_id: str,
@@ -318,9 +344,11 @@ class Engine:
             "documents",
             self._library_documents(library_id).unionByName(row),
             [library_id],
+            adds=[doc_id],
         )
         return doc_id
 
+    @_writes
     def ingest_document_text(
         self,
         library_id: str,
@@ -386,10 +414,10 @@ class Engine:
                 ).alias("metadata"),
             )
         )
-        n = shaped.count()
-        self.upsert_chunks(library_id, shaped)
+        n = self.upsert_chunks(library_id, shaped)
         return {"document_id": doc_id, "chunks": n}
 
+    @_writes
     def delete_document(self, library_id: str, doc_id: str) -> None:
         """Scoped cascade delete (services/document.py:139-158): silently
         no-ops unless the document exists AND belongs to ``library_id`` — a
@@ -397,13 +425,12 @@ class Engine:
         # partition-pruned existence probe: only this library's partition is
         # listed — a doc homed elsewhere is absent from it, which IS the
         # wrong-library no-op semantics (services/document.py:141-142)
-        in_lib = (
+        absent = (
             self.store.read("documents", partitions=[library_id])
             .filter((F.col("id") == doc_id) & (F.col("library_id") == library_id))
-            .limit(1)
-            .count()
+            .isEmpty()
         )
-        if not in_lib:
+        if absent:
             return  # reference returns silently — services/document.py:141-142
         # chunk.library_id == its document's library_id is a store invariant
         # (upsert forces it, move rewrites both) → the cascade touches
@@ -428,6 +455,7 @@ class Engine:
                 lambda: self.indexes.remove(library_id, doomed)
             )
 
+    @_writes
     def move_document(
         self, doc_id: str, src_library_id: str, dst_library_id: str
     ) -> None:
@@ -444,14 +472,9 @@ class Engine:
         # the move touches exactly the src and dst partitions of both tables
         touched = [src_library_id, dst_library_id]
         docs = self.store.read("documents", partitions=touched)
-        in_src = (
-            docs.filter(
-                (F.col("id") == doc_id) & (F.col("library_id") == src_library_id)
-            )
-            .limit(1)
-            .count()
-        )
-        if not in_src:
+        if docs.filter(
+            (F.col("id") == doc_id) & (F.col("library_id") == src_library_id)
+        ).isEmpty():
             raise NotFoundError(
                 f"document {doc_id!r} not found in library {src_library_id!r}"
             )
@@ -490,6 +513,7 @@ class Engine:
                 lambda: self.indexes.apply_delta(dst_library_id, moved)
             )
 
+    @_writes
     def update_document_metadata(
         self, doc_id: str, fields: dict, expected_version: int
     ) -> None:
@@ -541,7 +565,7 @@ class Engine:
                 F.when(is_target, F.current_timestamp()).otherwise(F.col("updated_at")),
             )
         )
-        self.store.write_partitions("documents", updated, [lib_id])
+        self.store.write_partitions("documents", updated, [lib_id], adds=[])
 
     def list_documents(
         self,
@@ -571,31 +595,147 @@ class Engine:
 
     # -- ChunkService --------------------------------------------------------
 
+    @_writes
     def upsert_chunks(
         self,
         library_id: str,
         incoming: DataFrame,
         orphan_error: type = NotFoundError,
-    ) -> None:
+    ) -> int:
         """Bulk upsert with full validation (services/chunk.py:76-116):
-        library exists (404), chunks belong to existing documents of that
-        library (404/422), embedding dims match (422). ``library_id`` is
+        library exists (404), embedding dims match and values are finite
+        (422), chunks belong to existing documents of that library
+        (404/422), ids live in no other library (409). ``library_id`` is
         FORCED onto every incoming row (services/chunk.py:95) — a row
         carrying another library's id must not land in the wrong partition.
         MERGE-style rewrite + version bump, then the written batch's index
         delta is appended to the live LSH/IVF index (the reference applies
         ``index.add``/``update`` per upsert, services/chunk.py:40-70) — see
-        ``IndexLifecycle.apply_delta`` for why append-only is sufficient."""
+        ``IndexLifecycle.apply_delta`` for why append-only is sufficient.
+        Returns the number of rows upserted."""
+        return self._upsert(library_id, incoming, orphan_error)[0]
+
+    def _upsert(
+        self,
+        library_id: str,
+        incoming: DataFrame,
+        orphan_error: type,
+        echo_id: str | None = None,
+    ) -> tuple[int, dict | None]:
+        """``upsert_chunks``; with ``echo_id``, also that id's stored row
+        without its embedding: the request row as Spark holds it, plus the
+        version and timestamps the MERGE wrote, observed during the write.
+
+        A batch of at most GLOBAL_ID_CHECK_MAX_DRIVER_IDS rows is collected
+        once — no job for a local relation — and continues as a local
+        relation of those rows, so its lineage runs once. Every check then
+        runs in Python on the collected rows, the index delta is assigned
+        on the driver, and the chunks sidecar is derived from the previous
+        one. A larger batch keeps the distributed checks."""
         lib = self._get_library_row(library_id)
         dim = lib["embedding_dim"]
-        incoming = incoming.withColumn("library_id", F.lit(library_id))
-        bad_dim = incoming.filter(
-            F.col("embedding").isNotNull() & (F.size("embedding") != dim)
-        ).count()
+        # the client columns, in CHUNK_IN_SCHEMA's order and types: the
+        # collected rows below are positional
+        incoming = incoming.select(*[
+            (F.lit(library_id) if f.name == "library_id" else F.col(f.name))
+            .cast(f.dataType).alias(f.name)
+            for f in StructType.fromDDL(CHUNK_IN_SCHEMA).fields
+        ])
+        rows = incoming.limit(self.GLOBAL_ID_CHECK_MAX_DRIVER_IDS + 1).collect()
+        if len(rows) > self.GLOBAL_ID_CHECK_MAX_DRIVER_IDS:
+            rows, ids = None, None
+            n = self._check_batch(library_id, incoming, dim, orphan_error)
+        else:
+            # one partition: a local relation spreads its rows over every
+            # core, and each slice would become one more file of the
+            # library partition this write rewrites
+            incoming = local_frame(self.spark, rows, CHUNK_IN_SCHEMA).coalesce(1)
+            ids = sorted({r["id"] for r in rows if r["id"] is not None})
+            n = self._check_rows(library_id, rows, dim, orphan_error)
+        # global id integrity: the reference keys chunks in ONE dict
+        # (repos/chunks.py:8), so an id is globally unique. The
+        # partition-scoped merge below only replaces ids within THIS
+        # library — an id already living in another library would silently
+        # become two rows. Reusing an id across libraries is rejected as a
+        # 409 (deliberate, documented deviation from the reference's
+        # implicit cross-library move, which would need an O(2-partition)
+        # rewrite nobody asks for through this API).
+        self._check_global_chunk_ids(library_id, incoming, ids)
+        # copy-on-write merge: library_id is forced on every row above, so
+        # the MERGE's scope is exactly one partition — only that partition
+        # is read for the anti-join and only it is rewritten; a one-chunk
+        # upsert on a 100 TB table is a KB-scale write (the reference's
+        # per-library write lock, services/chunk.py:87-88, as IO scope).
+        merged = M.upsert(self._library_chunks(library_id), incoming)
+        echo = None
+        if echo_id is not None:
+            echo = Observation()
+            mine = F.col("id") == echo_id
+            merged = merged.observe(echo, *[
+                F.max(F.when(mine, F.col(c))).alias(c)
+                for c in ("created_at", "updated_at", "version")
+            ])
+        self.store.write_partitions("chunks", merged, [library_id], adds=ids)
+        # keep the live ANN index fresh: hash/assign ONLY the written batch.
+        # Deferred through after_commit: inside a transaction
+        # (Facade.create_document_with_chunks, which composes document
+        # create + this bulk upsert in one store txn; the Engine-level
+        # transactional callers are delete_library / delete_document /
+        # move_document), the live index must not absorb a delta whose
+        # chunk rows may yet roll back — the hook runs only after the
+        # catalog flip publishes them (immediately when no transaction is
+        # open).
+        self.store.after_commit(
+            lambda: self.indexes.apply_delta(library_id, incoming, rows=rows)
+        )
+        if echo is None:
+            return n, None
+        out = next(r for r in rows if r["id"] == echo_id).asDict(recursive=True)
+        del out["embedding"]
+        return n, {**out, **echo.get}
+
+    def _check_rows(
+        self, library_id: str, rows: list, dim: int, orphan_error: type
+    ) -> int:
+        """The batch checks over collected rows, in Python: no job. The
+        library's document ids are the store's cached set for its live
+        documents partition."""
+        embedded = [r["embedding"] for r in rows if r["embedding"] is not None]
+        bad_dim = sum(len(e) != dim for e in embedded)
         if bad_dim:
             raise ValidationError(
                 f"{bad_dim} chunk(s) have embedding dim != {dim}"
             )  # 422 — services/chunk.py:98-99
+        non_finite = sum(
+            not all(x is not None and math.isfinite(x) for x in e)
+            for e in embedded
+        )
+        if non_finite:
+            raise ValidationError(_NON_FINITE.format(non_finite))
+        docs = self.store.partition_ids("documents", library_id)
+        orphan = sum(r["document_id"] not in docs for r in rows)
+        if orphan:
+            raise orphan_error(_ORPHAN.format(orphan, library_id))
+        return len(rows)
+
+    def _check_batch(
+        self, library_id: str, incoming: DataFrame, dim: int, orphan_error: type
+    ) -> int:
+        """The batch checks of :meth:`_check_rows` as Spark jobs, for a
+        batch too large to collect."""
+        emb = F.col("embedding")
+        stats = incoming.agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.count_if(emb.isNotNull() & (F.size(emb) != dim)).alias("bad_dim"),
+            F.count_if(F.exists(emb, lambda x: x.isNull() | F.isnan(x)
+                                | (F.abs(x) == float("inf")))).alias("non_finite"),
+        ).first()
+        if stats["bad_dim"]:
+            raise ValidationError(
+                f"{stats['bad_dim']} chunk(s) have embedding dim != {dim}"
+            )  # 422 — services/chunk.py:98-99
+        if stats["non_finite"]:
+            raise ValidationError(_NON_FINITE.format(stats["non_finite"]))
         docs = self._library_documents(library_id)
         orphan = incoming.join(
             docs.select(F.col("id").alias("document_id")), "document_id", "left_anti"
@@ -604,51 +744,24 @@ class Engine:
             # bulk surfaces orphans as 404 (services/chunk.py:77-83); the
             # single-chunk route passes ValidationError for the reference's
             # 422 'not found or not in library' (services/chunk.py:28-30)
-            raise orphan_error(
-                f"{orphan} chunk(s) reference documents not in library {library_id!r}"
-            )
-        # global id integrity (r6 review): the reference keys chunks in ONE
-        # dict (repos/chunks.py:8), so an id is globally unique. The
-        # partition-scoped merge below only replaces ids within THIS
-        # library — an id already living in another library would silently
-        # become two rows. Reusing an id across libraries is rejected as a
-        # 409 (deliberate, documented deviation from the reference's
-        # implicit cross-library move, which would need an O(2-partition)
-        # rewrite nobody asks for through this API).
-        self._check_global_chunk_ids(library_id, incoming)
-        # copy-on-write merge: library_id is forced on every row above, so
-        # the MERGE's scope is exactly one partition — only that partition
-        # is read for the anti-join and only it is rewritten; a one-chunk
-        # upsert on a 100 TB table is a KB-scale write (the reference's
-        # per-library write lock, services/chunk.py:87-88, as IO scope).
-        merged = M.upsert(self._library_chunks(library_id), incoming)
-        self.store.write_partitions("chunks", merged, [library_id])
-        # keep the live ANN index fresh: hash/assign ONLY the written batch.
-        # Deferred through after_commit (r6 advice): inside a transaction
-        # (Facade.create_document_with_chunks, api/facade.py:205, which
-        # composes document create + this bulk upsert in one store txn; the
-        # Engine-level transactional callers are delete_library /
-        # delete_document / move_document), the live index must not absorb a
-        # delta whose chunk rows may yet roll back — the hook runs only
-        # after the catalog flip publishes them (immediately when no
-        # transaction is open).
-        self.store.after_commit(
-            lambda: self.indexes.apply_delta(library_id, incoming)
-        )
+            raise orphan_error(_ORPHAN.format(orphan, library_id))
+        return stats["rows"]
 
-    #: batches with more distinct ids than this skip the driver-side bloom
-    #: walk and go straight to the distributed semi-join check. 10k keeps
-    #: the worst-case pure-Python walk at ~10k ids × partitions × k bit
-    #: probes (r7 advice: 100k ids on a 1000-library store was ~10^9
-    #: probes — slower than just running the semi-join)
-    GLOBAL_ID_CHECK_MAX_DRIVER_IDS = 10_000
+    #: batches with more rows than this skip the driver-side checks — the
+    #: collect, the bloom walk, the driver-side index delta — and run them
+    #: as distributed jobs. 10k keeps the worst-case pure-Python bloom walk
+    #: at ~10k ids × partitions × k bit probes (100k ids on a 1000-library
+    #: store was ~10^9 probes — slower than just running the semi-join)
+    GLOBAL_ID_CHECK_MAX_DRIVER_IDS = B.MAX_DRIVER_IDS
 
     #: verify scans with more ids than this use a left_semi join instead of
     #: an ``isin`` literal list (a 10k-literal In-expression bloats the plan
     #: and codegen; the semi-join broadcasts the tiny id frame instead)
     GLOBAL_ID_CHECK_MAX_ISIN_IDS = 1_000
 
-    def _check_global_chunk_ids(self, library_id: str, incoming: DataFrame) -> None:
+    def _check_global_chunk_ids(
+        self, library_id: str, incoming: DataFrame, ids: list | None
+    ) -> None:
         """409 when any incoming id already lives in ANOTHER library.
 
         Scale path (r6 advice: the old check listed every partition and
@@ -659,28 +772,21 @@ class Engine:
         bloom hit (a true duplicate, or a ~0.3% false positive) pays a
         partition-pruned verify scan of that one partition; partitions
         without a sidecar (legacy generations) join the verify scan too.
-        Batches over GLOBAL_ID_CHECK_MAX_DRIVER_IDS distinct ids use the
-        distributed semi-join instead (collecting millions of ids to walk
-        blooms would itself be the bottleneck)."""
-        ids = [
-            r["id"]
-            for r in incoming.select("id").distinct()
-            .limit(self.GLOBAL_ID_CHECK_MAX_DRIVER_IDS + 1).collect()
-        ]
-        if len(ids) > self.GLOBAL_ID_CHECK_MAX_DRIVER_IDS:
+        ``ids`` is None for a batch over GLOBAL_ID_CHECK_MAX_DRIVER_IDS
+        rows, which uses the distributed semi-join instead (collecting
+        millions of ids to walk blooms would itself be the bottleneck)."""
+        if ids is None:
             others = self.store.read("chunks").filter(
                 F.col("library_id") != library_id
             )
             # no broadcast hint here: this branch only runs above
-            # GLOBAL_ID_CHECK_MAX_DRIVER_IDS distinct ids, so the id frame
-            # is unbounded (a bulk load can carry millions) — let AQE pick
+            # GLOBAL_ID_CHECK_MAX_DRIVER_IDS rows, so the id frame is
+            # unbounded (a bulk load can carry millions) — let AQE pick
             # broadcast vs shuffle from the measured size at runtime
-            foreign = (
-                others.join(incoming.select("id").distinct(), "id", "left_semi")
-                .limit(1)
-                .count()
-            )
-            if foreign:
+            clean = others.join(
+                incoming.select("id").distinct(), "id", "left_semi"
+            ).isEmpty()
+            if not clean:
                 raise ConflictError("chunk id(s) already exist in another library")
             return
         cand = self._candidate_partitions("chunks", ids)
@@ -697,65 +803,63 @@ class Engine:
             # bounded branch (≤ GLOBAL_ID_CHECK_MAX_DRIVER_IDS ids): the id
             # frame is provably tiny, so hint the broadcast explicitly —
             # without stats Spark can otherwise plan a sort-merge join
-            foreign = (
-                others.join(
-                    F.broadcast(incoming.select("id").distinct()),
-                    "id", "left_semi",
-                )
-                .limit(1)
-                .count()
-            )
+            clean = others.join(
+                F.broadcast(incoming.select("id").distinct()), "id", "left_semi"
+            ).isEmpty()
         else:
-            foreign = others.filter(F.col("id").isin(ids)).limit(1).count()
-        if foreign:
+            clean = others.filter(F.col("id").isin(ids)).isEmpty()
+        if not clean:
             raise ConflictError(
                 "chunk id(s) already exist in another library"
             )  # 409 — global-id invariant (repos/chunks.py:8)
 
+    @_writes
     def upsert_chunk(
         self,
         library_id: str,
         document_id: str,
         chunk: dict,
-    ) -> str:
+    ) -> dict:
         """Single-chunk upsert (routers/chunks.py:62-77 + services/
         chunk.py:23-74): id optional (uuid4 when absent); the document must
         exist AND belong to the library (the reference raises
         ValidationError here, not NotFound — services/chunk.py:28-30); dim
         checked against the library. Rides the same validated bulk path with
         a 1-row frame, so the written partition delta is one row and the
-        live index delta is applied. Returns the chunk id.
+        live index delta is applied.
+
+        Returns the stored row without its embedding — what a point get of
+        the id answers right after — from the request row plus the
+        version and timestamps the MERGE wrote, so nothing is read back.
 
         Validation rides the bulk path once (no duplicated lib/doc reads —
         r6 review finding): 404 missing library first, then the orphan
         check surfaces as the reference's 422."""
         chunk_id = chunk.get("id") or str(uuid.uuid4())
         emb = chunk.get("embedding")
-        row = local_frame(
-            self.spark,
-            [(
-                chunk_id, library_id, document_id, chunk.get("position"),
-                chunk.get("text"),
-                [float(x) for x in emb] if emb is not None else None,
-                chunk.get("metadata"),
-            )],
-            CHUNK_IN_SCHEMA,
+        row = (
+            chunk_id, library_id, document_id, chunk.get("position"),
+            chunk.get("text"),
+            [float(x) for x in emb] if emb is not None else None,
+            chunk.get("metadata"),
         )
-        self.upsert_chunks(library_id, row, orphan_error=ValidationError)
-        return chunk_id
+        frame = local_frame(self.spark, [row], CHUNK_IN_SCHEMA)
+        return self._upsert(
+            library_id, frame, ValidationError, echo_id=chunk_id
+        )[1]
 
+    @_writes
     def delete_chunk(self, library_id: str, chunk_id: str) -> None:
         """DELETE chunk (routers/chunks.py:95-107 + services/
         chunk.py:119-139): silent no-op when the chunk is missing or belongs
         to a different library; otherwise a copy-on-write rewrite of that
         one partition."""
-        present = (
+        absent = (
             self._library_chunks(library_id)
             .filter(F.col("id") == chunk_id)
-            .limit(1)
-            .count()
+            .isEmpty()
         )
-        if not present:
+        if absent:
             return  # reference returns silently — services/chunk.py:120-122
         new_part = M.delete_chunks(self._library_chunks(library_id), [chunk_id])
         self.store.write_partitions("chunks", new_part, [library_id])
@@ -771,6 +875,7 @@ class Engine:
     #: "what's wrong" #2); the full count rides a separate count() job.
     CAS_CONFLICT_SAMPLE = 10
 
+    @_writes
     def update_chunks_cas(self, updates: DataFrame) -> DataFrame:
         """CAS update_on_version (repos/chunks.py:38-60): applies matching
         rows, raises ConflictError when any row misses. The error carries a
@@ -887,6 +992,7 @@ class Engine:
 
     # -- maintenance ---------------------------------------------------------
 
+    @_writes
     def maintenance(
         self,
         keep: int = 2,

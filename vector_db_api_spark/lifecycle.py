@@ -96,6 +96,22 @@ class IndexConfig:
             params["layout"] = layout
         return cls(ctype, params)
 
+    @staticmethod
+    def reply(stored: dict | None) -> dict:
+        """The reference's nested ``IndexConfigOut`` (api/dto.py:36-49) of
+        a stored ``index_config`` struct, as a dict: ``{type, lsh: {…} |
+        null, ivf: {…} | null}``, the section of the stored type carrying
+        its stored params as they are."""
+        stored = stored or {}
+        ctype = stored.get("type", "flat")
+        out = {"type": ctype}
+        for section in ("lsh", "ivf"):
+            out[section] = {
+                key: stored.get(name)
+                for name, t, key in _STORED_PARAMS if t == section
+            } if ctype == section else None
+        return out
+
 
 class IndexLifecycle:
     """Catalog + build/publish/load for per-library index versions."""
@@ -311,6 +327,7 @@ class IndexLifecycle:
         batch: DataFrame,
         id_col: str = "id",
         vec_col: str = "embedding",
+        rows: list | None = None,
     ) -> int:
         """Append a written chunk batch's index delta to the LIVE index
         version — the reference's per-upsert ``index.add``/``update``
@@ -328,14 +345,23 @@ class IndexLifecycle:
         appended, counted as the write runs: one per embedded row for IVF,
         one per table for LSH — the kernels emit none for a NULL or
         zero-norm embedding.
+
+        ``rows``: the batch's rows, when the caller holds them on the
+        driver. An IVF delta is then assigned there (``assign_rows``, the
+        executors' kernel) and appended as a local relation: one job, no
+        Python worker.
         """
         desc = self.current(library_id)
         if desc is None or desc["type"] == "flat":
             return 0  # flat scans the live table — always fresh
-        # one aggregate answers both questions below
-        stats = batch.agg(
-            F.count(F.lit(1)).alias("rows"), F.count(vec_col).alias("embedded")
-        ).first()
+        if rows is None:
+            # one aggregate answers both questions below
+            stats = batch.agg(
+                F.count(F.lit(1)).alias("rows"), F.count(vec_col).alias("embedded")
+            ).first()
+        else:
+            stats = {"rows": len(rows),
+                     "embedded": sum(r[vec_col] is not None for r in rows)}
         if not stats["rows"]:
             return 0
         # mutability contract: in-place serving ends at the first mutation
@@ -348,10 +374,15 @@ class IndexLifecycle:
         self._downgrade_serving(library_id, desc)
         if not stats["embedded"]:
             return 0
-        embedded = batch.filter(F.col(vec_col).isNotNull())
         include_vectors = desc.get("layout", DEFAULT_LAYOUT) == "selfcontained"
         vdir = self._version_dir(library_id, desc)
         model = self._loaded(library_id, desc)
+        if desc["type"] == "ivf" and rows is not None:
+            ddl = posting_ddl(batch, id_col, vec_col, include_vectors)
+            return self._append_postings(
+                vdir, model, rows, ddl, id_col, vec_col, include_vectors
+            )
+        embedded = batch.filter(F.col(vec_col).isNotNull())
         appended = Observation()
         if desc["type"] == "lsh":
             delta = build_bucket_table(
@@ -371,6 +402,34 @@ class IndexLifecycle:
                 os.path.join(vdir, "ivf_assignments")
             )
         return appended.get["rows"]
+
+    def _append_postings(
+        self,
+        vdir: str,
+        model: IVFIndex,
+        rows: list,
+        ddl: str,
+        id_col: str,
+        vec_col: str,
+        include_vectors: bool,
+    ) -> int:
+        """The IVF delta of driver-held ``rows``: cells assigned with the
+        executors' kernel, posting rows appended as one local relation (one
+        file per cell, as the one-partition executor batch wrote them)."""
+        embedded = [r for r in rows if r[vec_col] is not None]
+        keep, cells = model.assign_rows([r[vec_col] for r in embedded])
+        kept = (r for r, k in zip(embedded, keep) if k)
+        postings = [
+            (r[id_col], int(c), *([r[vec_col]] if include_vectors else []))
+            for r, c in zip(kept, cells)
+        ]
+        if postings:
+            local_frame(self.spark, postings, ddl).coalesce(1).write.mode(
+                "append"
+            ).partitionBy("centroid_id").parquet(
+                os.path.join(vdir, "ivf_assignments")
+            )
+        return len(postings)
 
     def remove(self, library_id: str, ids: list | DataFrame) -> int:
         """Record deleted chunk ids against the LIVE index version — the

@@ -75,6 +75,22 @@ def _spherical_kmeans(
     return cent
 
 
+def nearest_cells(
+    mat: np.ndarray, centroids: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """The assignment kernel: ``(keep, cells)`` — which rows of ``mat``
+    have a nonzero norm (NULL-free, zero vectors get no cell), and the cell
+    of each kept row: its highest dot with the unit ``centroids``, the
+    lowest cell id on a tie (``argmax``). One function for the executor
+    batches of :meth:`IVFIndex.assign` and the driver's
+    :meth:`IVFIndex.assign_rows`, so equal float64 input gives equal
+    cells."""
+    norms = np.linalg.norm(mat, axis=1)
+    keep = norms > 0
+    unit = mat[keep] / norms[keep, None]
+    return keep, (unit @ centroids.T).argmax(axis=1).astype(np.int32)
+
+
 def posting_ddl(
     corpus: DataFrame,
     id_col: str = "id",
@@ -323,12 +339,9 @@ class IVFIndex:
                 if pdf.empty:
                     continue
                 mat = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-                norms = np.linalg.norm(mat, axis=1)
-                keep = norms > 0
+                keep, best = nearest_cells(mat, cent)
                 if not keep.any():
                     continue
-                unit = mat[keep] / norms[keep, None]
-                best = (unit @ cent.T).argmax(axis=1).astype(np.int32)
                 cols = {id_col: pdf[id_col].to_numpy()[keep], "centroid_id": best}
                 if include_vectors:
                     cols[vec_col] = pdf[vec_col].to_numpy()[keep]
@@ -337,6 +350,17 @@ class IVFIndex:
         return corpus.filter(F.col(vec_col).isNotNull()).mapInPandas(
             assign_batches, schema=out_schema
         )
+
+    def assign_rows(
+        self, vectors: Sequence[Sequence[float]]
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """:meth:`assign` over non-NULL vectors held on the driver:
+        ``(keep, cells)`` as :func:`nearest_cells` returns them. The values
+        are rounded to float32 first, as the stored ``array<float>`` the
+        executors read is, so a request's float64 JSON numbers land in the
+        cells :meth:`assign` gives the stored rows."""
+        mat = np.asarray(vectors, dtype=np.float32).astype(np.float64)
+        return nearest_cells(mat, self.centroids)
 
     # -- search --------------------------------------------------------------
 

@@ -18,14 +18,28 @@ Design points:
   carries it forward with the data for free: an untouched partition's bloom
   stays valid because its files are immutable. Spark ignores ``_``-prefixed
   files in a parquet directory (the ``_SUCCESS`` convention).
-- Blooms are rebuilt EXACTLY for every touched partition on each
-  ``write_partitions`` — the mutation already rewrites those partitions in
-  full, so one extra column-pruned pass over just-written id values is a
-  constant factor, and exactness means deletes never leave stale bits.
+- Every sidecar is EXACT: its bitmap has precisely the bits of the ids its
+  partition holds, for ``m_bits = size_bits(n)`` with ``n`` the
+  partition's row count. So deletes never leave stale bits, and a sidecar
+  is a pure function of the partition's id set and row count.
+- Two ways to build one, byte-identical by that definition. The bloom of
+  a union of id sets is the OR of their blooms (a bit is set iff some id
+  of either set sets it), so a write that only ADDS or REPLACES ids — an
+  upsert, a document create, a metadata update — publishes
+  ``previous bitmap | bits(added ids)`` with :func:`add_ids`, on the
+  driver, with no job. That equals :func:`build_bloom` over the new
+  partition exactly when ``size_bits(n)`` did not change, since the bit
+  positions depend on ``m_bits``. :func:`build_bloom`, which reads the
+  written ids, runs instead when the sizing grows, when the partition had
+  no sidecar (a legacy generation), and for every write that removes ids
+  (deletes, cascades, moves): OR-ing cannot clear the bits of a removed
+  id. ``n`` comes from the write itself (an ``Observation``), not a count
+  job.
 - Hashing is plain ``md5`` with the Kirsch-Mitzenmacher double-hash scheme
   (k positions from one digest), computed IN PYTHON both when building
-  (inside an Arrow-batched ``mapInPandas``) and when testing membership on
-  the driver — bit-identical by construction, no dependence on JVM hash
+  (inside an Arrow-batched ``mapInPandas`` for a large partition, else on
+  the driver) and when testing membership on the driver —
+  bit-identical by construction, no dependence on JVM hash
   internals.
 - A missing sidecar (legacy generation, non-id table) simply means "no
   summary": callers fall back to the scan for that partition. False
@@ -51,6 +65,11 @@ BITS_PER_ELEMENT = 12  # fpr ~= 0.3% at k=7
 NUM_HASHES = 7
 MIN_BITS = 1 << 11          # 2 Kib floor: tiny partitions still round up
 MAX_BITS = 1 << 26          # 8 MiB ceiling; beyond, fpr degrades gracefully
+#: the most ids the driver hashes itself: :func:`build_bloom` collects a
+#: partition of at most this many rows instead of running a distributed
+#: pass, and the engine checks a write batch of at most this many rows on
+#: the driver (``Engine.GLOBAL_ID_CHECK_MAX_DRIVER_IDS``)
+MAX_DRIVER_IDS = 10_000
 
 
 def hash_pair(value: str) -> tuple[int, int]:
@@ -75,13 +94,40 @@ def size_bits(n_rows: int) -> int:
     return m
 
 
-def build_bloom(ids: DataFrame, id_col: str, n_rows: int) -> dict:
-    """Bloom descriptor for a DataFrame's id column.
+def _set_bits(bitmap, ids, m_bits: int) -> None:
+    """OR the bits of every non-NULL id in ``ids`` into ``bitmap``."""
+    for v in ids:
+        if v is None:
+            continue
+        for pos in _positions(str(v), m_bits):
+            bitmap[pos >> 3] |= 1 << (pos & 7)
 
-    One distributed pass: each Arrow batch ORs its ids into a per-task
-    bitmap (numpy), tasks yield their bitmap once, and the driver ORs the
-    ≤ #tasks partial bitmaps — bounded driver memory, no position shuffle.
+
+def _descriptor(bitmap: bytes, m_bits: int, n_rows: int) -> dict:
+    return {
+        "format": 1,
+        "m_bits": m_bits,
+        "k": NUM_HASHES,
+        "n": n_rows,
+        "bitmap": base64.b64encode(bitmap).decode("ascii"),
+    }
+
+
+def build_bloom(ids: DataFrame, id_col: str, n_rows: int) -> dict:
+    """Exact bloom descriptor for a DataFrame's id column of ``n_rows``
+    rows.
+
+    Up to MAX_DRIVER_IDS rows, the ids are collected (one job, no Python
+    worker) and hashed on the driver: a serving engine runs few Python
+    jobs, so a distributed pass would mostly pay for starting its workers.
+    Above, one distributed pass: each Arrow batch ORs its ids into a
+    per-task bitmap (numpy), tasks yield their bitmap once, and the driver
+    ORs the ≤ #tasks partial bitmaps — bounded driver memory, no position
+    shuffle. Both set the bits :func:`_positions` gives.
     """
+    if n_rows <= MAX_DRIVER_IDS:
+        collected = (r[0] for r in ids.select(id_col).collect())
+        return add_ids(empty_bloom(n_rows), collected, n_rows)
     import numpy as np
     import pandas as pd
 
@@ -92,12 +138,9 @@ def build_bloom(ids: DataFrame, id_col: str, n_rows: int) -> dict:
         bitmap = np.zeros(n_bytes, dtype=np.uint8)
         any_rows = False
         for pdf in batches:
-            for v in pdf[id_col]:
-                if v is None:
-                    continue
+            if pdf[id_col].notna().any():
                 any_rows = True
-                for pos in _positions(str(v), m_bits):
-                    bitmap[pos >> 3] |= 1 << (pos & 7)
+            _set_bits(bitmap, pdf[id_col], m_bits)
         if any_rows:
             yield pd.DataFrame({"bitmap": [bitmap.tobytes()]})
 
@@ -105,13 +148,34 @@ def build_bloom(ids: DataFrame, id_col: str, n_rows: int) -> dict:
     acc = np.zeros(n_bytes, dtype=np.uint8)
     for row in parts.collect():
         acc |= np.frombuffer(row["bitmap"], dtype=np.uint8)
-    return {
-        "format": 1,
-        "m_bits": m_bits,
-        "k": NUM_HASHES,
-        "n": n_rows,
-        "bitmap": base64.b64encode(acc.tobytes()).decode("ascii"),
-    }
+    return _descriptor(acc.tobytes(), m_bits, n_rows)
+
+
+def empty_bloom(n_rows: int) -> dict:
+    """The decoded bloom of an empty id set, sized for ``n_rows``."""
+    m_bits = size_bits(n_rows)
+    return {"format": 1, "m_bits": m_bits, "k": NUM_HASHES, "n": 0,
+            "bitmap": bytes(m_bits // 8)}
+
+
+def add_ids(prev: dict, ids, n_rows: int) -> dict | None:
+    """The descriptor :func:`build_bloom` would build over ``prev``'s id
+    set plus ``ids``, now ``n_rows`` rows: ``prev``'s bitmap OR the bits of
+    ``ids``, built on the driver. ``prev`` is decoded (:func:`load_bloom`).
+    None when ``size_bits(n_rows)`` differs from ``prev``'s size — the
+    positions then differ and only the exact build is byte-identical."""
+    m_bits = size_bits(n_rows)
+    if prev["m_bits"] != m_bits or prev["k"] != NUM_HASHES:
+        return None
+    bitmap = bytearray(prev["bitmap"])
+    _set_bits(bitmap, ids, m_bits)
+    return _descriptor(bytes(bitmap), m_bits, n_rows)
+
+
+def decode(bloom: dict) -> dict:
+    """A descriptor with its bitmap decoded to bytes, as :func:`load_bloom`
+    returns it."""
+    return dict(bloom, bitmap=base64.b64decode(bloom["bitmap"]))
 
 
 def write_bloom(partition_dir: str, bloom: dict, fs=None) -> None:
@@ -133,8 +197,7 @@ def load_bloom(partition_dir: str, fs=None) -> dict | None:
     try:
         if raw is None or raw.get("format") != 1:
             return None
-        raw["bitmap"] = base64.b64decode(raw["bitmap"])
-        return raw
+        return decode(raw)
     except (KeyError, ValueError):
         return None
 

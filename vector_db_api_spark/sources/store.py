@@ -53,11 +53,13 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections.abc import Sequence
 from contextlib import contextmanager
 from functools import reduce
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from vector_db_api_spark.session import local_frame
 from vector_db_api_spark.sources import fsio
@@ -128,6 +130,11 @@ class EntityStore:
         self._txn: dict[str, int] | None = None
         # side-effects queued by after_commit() while a transaction is open
         self._post_commit: list = []
+        # (table, generation-relative partition path) → decoded id sidecar /
+        # id set; the path is immutable once written, so neither goes stale
+        # (rolled-back staged paths are dropped, _remove_versions_above)
+        self._bloom_cache: dict[tuple[str, str], dict | None] = {}
+        self._id_cache: dict[tuple[str, str], frozenset] = {}
         self._fs.makedirs(root)
 
     # -- pointer management -------------------------------------------------
@@ -306,45 +313,96 @@ class EntityStore:
 
     # -- partition id blooms ------------------------------------------------
 
-    def _write_partition_blooms(self, table: str, fresh: dict) -> None:
-        """Exact ``_ID_BLOOM.json`` sidecar for every just-written partition
-        dir (see sources/bloom.py). Rebuilt per touched partition — the
-        write was already O(partition), one extra column-pruned id pass is
-        a constant factor; untouched partitions keep their sidecar because
-        the manifest re-references their immutable dirs."""
+    def _write_partition_blooms(
+        self,
+        table: str,
+        fresh: dict,
+        counts: dict,
+        old: dict,
+        adds: list | None,
+    ) -> None:
+        """``_ID_BLOOM.json`` sidecar for every just-written partition dir
+        (see sources/bloom.py); untouched partitions keep theirs because the
+        manifest re-references their immutable dirs. ``counts`` holds each
+        partition's row count, observed during the write. When the write
+        only added or replaced ``adds`` and the previous sidecar keeps its
+        size, the new one is that sidecar OR the added ids' bits, built on
+        the driver; otherwise one column-pruned pass over the written ids
+        builds it exactly."""
         from vector_db_api_spark.sources import bloom as B
 
-        for rel in fresh.values():
+        for part, rel in fresh.items():
             pdir = os.path.join(self._table_dir(table), rel)
-            # declared schema: inferring it would open a footer in a job
-            ids = self.spark.read.schema("id string").parquet(pdir)
-            n = ids.count()  # parquet metadata count — cheap
-            B.write_bloom(pdir, B.build_bloom(ids, "id", n), fs=self._fs)
+            n = counts[part] if part in counts else self._ids(pdir).count()
+            bloom = known = None
+            if adds is not None:
+                if part in old:
+                    prev = self._cached_bloom(table, old[part])
+                    known = self._id_cache.get((table, old[part]))
+                else:  # a new partition: its previous id set is empty
+                    prev, known = B.empty_bloom(n), frozenset()
+                if prev is not None:
+                    bloom = B.add_ids(prev, adds, n)
+            if bloom is None:
+                bloom = B.build_bloom(self._ids(pdir), "id", n)
+            B.write_bloom(pdir, bloom, fs=self._fs)
+            self._bloom_cache[(table, rel)] = B.decode(bloom)
+            if known is not None:
+                self._id_cache[(table, rel)] = known | frozenset(adds)
+            if part in old:  # superseded: one entry per live partition
+                self._bloom_cache.pop((table, old[part]), None)
+                self._id_cache.pop((table, old[part]), None)
+
+    def _ids(self, pdir: str) -> DataFrame:
+        # declared schema: inferring it would open a footer in a job
+        return self.spark.read.schema("id string").parquet(pdir)
+
+    def _cached_bloom(self, table: str, rel: str) -> dict | None:
+        """The decoded sidecar of a generation-relative partition path,
+        cached: the path is immutable once written (see
+        :meth:`_remove_versions_above` for the one exception)."""
+        from vector_db_api_spark.sources import bloom as B
+
+        key = (table, rel)
+        if key not in self._bloom_cache:
+            self._bloom_cache[key] = B.load_bloom(
+                os.path.join(self._table_dir(table), rel), fs=self._fs
+            )
+        return self._bloom_cache[key]
 
     def partition_blooms(self, table: str) -> dict:
-        """{partition value: decoded bloom or None} over the LIVE manifest.
-        Decoded sidecars are cached by their generation-relative path —
-        immutable once written, so the cache never goes stale."""
-        from vector_db_api_spark.sources import bloom as B
-
+        """{partition value: decoded bloom or None} over the LIVE manifest."""
         v = self.current_version(table)
         if v is None:
             return {}
         manifest = self.load_manifest(table, v)
         if _ALL in manifest:
             return {}
-        cache = getattr(self, "_bloom_cache", None)
-        if cache is None:
-            cache = self._bloom_cache = {}
-        out = {}
-        for part, rel in manifest.items():
-            key = (table, rel)
-            if key not in cache:
-                cache[key] = B.load_bloom(
-                    os.path.join(self._table_dir(table), rel), fs=self._fs
-                )
-            out[part] = cache[key]
-        return out
+        return {part: self._cached_bloom(table, rel) for part, rel in manifest.items()}
+
+    def partition_ids(self, table: str, part: str) -> frozenset:
+        """The ids of one live partition, collected once per
+        generation-relative path and cached like the sidecars (a write that
+        only adds ids derives the new path's set from the old one). An
+        absent partition holds none."""
+        v = self.current_version(table)
+        manifest = {} if v is None else self.load_manifest(table, v)
+        if _ALL in manifest:
+            return frozenset(
+                r["id"] for r in self.read(table, partitions=[part])
+                .filter(F.col(PARTITION_COLS[table][0]) == part)
+                .select("id").collect()
+            )
+        rel = manifest.get(str(part))
+        if rel is None:
+            return frozenset()
+        key = (table, rel)
+        if key not in self._id_cache:
+            pdir = os.path.join(self._table_dir(table), rel)
+            self._id_cache[key] = frozenset(
+                r["id"] for r in self._ids(pdir).collect()
+            )
+        return self._id_cache[key]
 
     # -- write --------------------------------------------------------------
 
@@ -365,7 +423,7 @@ class EntityStore:
             writer = writer.partitionBy(*parts)
             writer.parquet(path)
             manifest = self._scan_generation(table, gen, parts)
-            self._write_partition_blooms(table, manifest)
+            self._write_partition_blooms(table, manifest, {}, {}, None)
         else:
             writer.parquet(path)
             manifest = {_ALL: gen}
@@ -373,7 +431,13 @@ class EntityStore:
         self._publish(table, nxt)
         return nxt
 
-    def write_partitions(self, table: str, df: DataFrame, touched: list) -> int:
+    def write_partitions(
+        self,
+        table: str,
+        df: DataFrame,
+        touched: list,
+        adds: Sequence[str] | None = None,
+    ) -> int:
         """Partition-scoped copy-on-write publish — the O(touched) mutation
         path. ``df`` is the complete NEW content of the ``touched``
         partition values (possibly empty → those partitions are dropped);
@@ -385,6 +449,11 @@ class EntityStore:
         (services/chunk.py:87-88) already promises mutations are scoped to
         one library, and the manifest turns that promise into IO.
 
+        ``adds``: the ids this write adds to or replaces in its one touched
+        partition, given only when it removes none — then the partition's
+        id sidecar is derived from the previous one on the driver (see
+        sources/bloom.py) instead of by a pass over the written ids.
+
         Safety: rows landing outside ``touched`` would silently vanish on
         the next read (their partition entry still points at old data), so
         the written generation is checked against ``touched`` and the
@@ -394,6 +463,9 @@ class EntityStore:
         parts = PARTITION_COLS.get(table)
         if not parts:
             raise ValueError(f"table {table!r} is not partitioned; use write()")
+        touched_keys = sorted({str(t) for t in touched})
+        if adds is not None and len(touched_keys) != 1:
+            raise ValueError("adds needs exactly one touched partition")
         cur = self.current_version(table)
         nxt = 1 if cur is None else cur + 1
         old = {} if cur is None else self.load_manifest(table, cur)
@@ -402,16 +474,26 @@ class EntityStore:
 
         gen = f"v={nxt}"
         path = os.path.join(self._table_dir(table), gen)
-        df.write.mode("errorifexists").partitionBy(*parts).parquet(path)
+        # each touched partition's row count, observed while the write runs
+        # (no job of its own): it sizes the partition's id sidecar
+        counts = Observation()
+        observed = df.observe(counts, *[
+            F.count_if(F.col(parts[0]) == t).alias(str(i))
+            for i, t in enumerate(touched_keys)
+        ])
+        observed.write.mode("errorifexists").partitionBy(*parts).parquet(path)
         fresh = self._scan_generation(table, gen, parts)
-        touched_keys = {str(t) for t in touched}
-        stray = set(fresh) - touched_keys
+        stray = set(fresh) - set(touched_keys)
         if stray:
             self._fs.rmtree(path)
             raise ValueError(
                 f"write_partitions: rows outside touched partitions {sorted(stray)}"
             )
-        self._write_partition_blooms(table, fresh)
+        n = counts.get
+        self._write_partition_blooms(
+            table, fresh, {t: n[str(i)] for i, t in enumerate(touched_keys)},
+            old, adds,
+        )
         manifest = {k: p for k, p in old.items() if k not in touched_keys}
         manifest.update(fresh)
         self._write_manifest(table, nxt, manifest)
@@ -583,21 +665,22 @@ class EntityStore:
                         self._fs.remove(os.path.join(mdir, name))
                         if int(core) not in removed:
                             removed.append(int(core))
-        # Drop cached blooms for the removed generations: the cache key
-        # (table, 'v=N/part') assumes the path is immutable, but a rolled-
-        # back txn deletes staged v=N and the NEXT write recreates the same
-        # rel with different rows — a stale cached bloom would then yield
-        # false negatives and silently bypass the global-id 409 check
-        # (r7 advice).
-        cache = getattr(self, "_bloom_cache", None)
-        if cache and removed:
+        # Drop cached sidecars and id sets of the removed generations: the
+        # cache key (table, 'v=N/part') assumes the path is immutable, but a
+        # rolled-back txn deletes staged v=N and the NEXT write recreates
+        # the same rel with different rows — a stale cached bloom would then
+        # yield false negatives and silently bypass the global-id 409 check,
+        # a stale id set would pass an orphan chunk.
+        if removed:
             prefixes = tuple(f"v={v}/" for v in removed)
             exact = {f"v={v}" for v in removed}
-            for key in [
-                k for k in cache
-                if k[0] == table and (k[1].startswith(prefixes) or k[1] in exact)
-            ]:
-                del cache[key]
+            for cache in (self._bloom_cache, self._id_cache):
+                for key in [
+                    k for k in cache
+                    if k[0] == table
+                    and (k[1].startswith(prefixes) or k[1] in exact)
+                ]:
+                    del cache[key]
         return sorted(removed)
 
     def compact(self, table: str) -> int:
