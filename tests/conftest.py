@@ -7,10 +7,13 @@ property-style top-k checks.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import numpy as np
 import pytest
 
 from vector_db_api_spark.session import get_spark
+from vector_db_api_spark.sources import store as S
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -47,3 +50,19 @@ def clustered_df(spark, clustered_vectors):
     return spark.createDataFrame(
         rows, "id bigint, embedding array<float>, label int"
     ).cache()
+
+
+@pytest.fixture
+def on_spark():
+    """A context manager under which every ``Engine.search`` is planned on
+    Spark: no partition fits a snapshot budget of -1 bytes, so none is
+    searched on the driver (``EntityStore.partition_rows``)."""
+    @contextmanager
+    def spark_path():
+        saved, S.SNAPSHOT_BYTES = S.SNAPSHOT_BYTES, -1
+        try:
+            yield
+        finally:
+            S.SNAPSHOT_BYTES = saved
+
+    return spark_path

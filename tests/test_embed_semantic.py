@@ -97,7 +97,7 @@ def test_embed_index_search_ranking_all_index_types(spark, tmp_path_factory):
         eng.rebuild_index("L")
         for query, expected in QUERIES:
             qv = model([query])[0].tolist()
-            hits = eng.search("L", qv, k=3).collect()
+            hits = eng.search("L", qv, k=3)
             assert 0 < len(hits) <= 3
             for h in hits:  # score present and non-negative (ref :165-170)
                 assert isinstance(h["score"], float) and h["score"] >= 0.0

@@ -179,7 +179,7 @@ def test_ingest_document_text_end_to_end(spark, tmp_path_factory):
     chunk1_text = " ".join(f"tok{i}" for i in range(12, 28))
     qv = fake_md5_embedder(16)([chunk1_text])[0].tolist()
     out = eng.search("L2", qv, k=1)
-    hit = out.collect()[0]
+    hit = out[0]
     assert hit["id"] == "DT:1"
 
     # validation: empty text 422, unknown field 422, missing library 404
@@ -431,7 +431,7 @@ def test_selfcontained_layout_lifecycle(spark, tmp_path_factory):
         vdir = f"{eng.indexes._lib_dir('S')}/v={desc['version']}"
         table = "lsh_buckets" if cfg.type == "lsh" else "ivf_assignments"
         assert "embedding" in spark.read.parquet(f"{vdir}/{table}").columns
-        hits = eng.search("S", q, k=2).collect()
+        hits = eng.search("S", q, k=2)
         assert [h["id"] for h in hits] == ["s0", "s1"], cfg.type
         assert hits[0]["score"] == 1.0
 
@@ -446,12 +446,12 @@ def test_selfcontained_layout_lifecycle(spark, tmp_path_factory):
         desc = eng.indexes.current("S")
         assert desc["layout"] == "selfcontained"          # tables unchanged
         assert desc["layout_serving"] == "idonly"         # serving flipped
-        hits = [h["id"] for h in eng.search("S", q, k=2).collect()]
+        hits = [h["id"] for h in eng.search("S", q, k=2)]
         assert hits == ["s1", "s2"], (cfg.type, hits)
 
         # mutation #2 (delete): stays downgraded, deleted id never surfaces
         eng.delete_chunk("S", "s2")
-        hits = [h["id"] for h in eng.search("S", q, k=3).collect()]
+        hits = [h["id"] for h in eng.search("S", q, k=3)]
         assert "s2" not in hits and hits[0] == "s1", (cfg.type, hits)
 
         # restore the snapshot layout for the next loop iteration's config
@@ -465,7 +465,7 @@ def test_selfcontained_layout_lifecycle(spark, tmp_path_factory):
         "ivf", {"num_centroids": 2, "nprobe": 2, "layout": "selfcontained"}))
     desc = eng.indexes.current("S")
     assert desc["layout_serving"] == "selfcontained"
-    assert [h["id"] for h in eng.search("S", q, k=2).collect()] == ["s0", "s1"]
+    assert [h["id"] for h in eng.search("S", q, k=2)] == ["s0", "s1"]
     # parameterless rebuild-index re-applies the stored config INCLUDING
     # the persisted layout (r10 advice #5: without persistence, the
     # maintenance() compaction rebuild silently reverted a selfcontained
@@ -484,7 +484,7 @@ def test_selfcontained_layout_lifecycle(spark, tmp_path_factory):
     assert desc["layout"] == "selfcontained"
     assert desc["layout_serving"] == "idonly", (
         "null-embedding upsert must downgrade in-place serving")
-    hits = [h["id"] for h in eng.search("S", q, k=4).collect()]
+    hits = [h["id"] for h in eng.search("S", q, k=4)]
     assert "s1" not in hits, hits  # superseded vector must NOT surface
 
     # restore s1, rebuild back to in-place serving

@@ -107,7 +107,7 @@ def _crud_lifecycle(spark, root: str) -> dict:
     eng.update_index_config(
         "A", IndexConfig("lsh", {"num_tables": 2, "hyperplanes_per_table": 4})
     )
-    hits = [r["id"] for r in eng.search("A", [1.0, 1.0, 0.0, 0.0], k=2).collect()]
+    hits = [r["id"] for r in eng.search("A", [1.0, 1.0, 0.0, 0.0], k=2)]
     eng.delete_chunk("A", "a0")
     n_tomb = eng.indexes.tombstone_count("A")
     rep = eng.maintenance(keep=1, index_max_dead_fraction=0.05)
@@ -147,7 +147,7 @@ def test_engine_full_lifecycle_on_file_scheme_root(spark, tmp_path):
         (r["id"], r["library_id"], r["position"], r["version"])
         for r in eng2.store.read("chunks").collect()
     ) == plain["rows"]
-    dst = [r["id"] for r in eng2.search("B", [1.0, 1.0, 0.0, 0.0], k=3).collect()]
+    dst = [r["id"] for r in eng2.search("B", [1.0, 1.0, 0.0, 0.0], k=3)]
     assert len(dst) == 3 and all(i.startswith("a") for i in dst)
 
 

@@ -9,8 +9,10 @@ tests can't sweep.
 from __future__ import annotations
 
 import math
+import struct
 import sys
 
+import numpy as np
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -19,6 +21,8 @@ from pyspark.sql import functions as F
 
 from vector_db_api_spark.functions import hashing as H
 from vector_db_api_spark.functions import vector as V
+from vector_db_api_spark.operators.knn import knn, knn_scores, top_k_order
+from vector_db_api_spark.session import local_frame
 
 FINITE = st.floats(
     min_value=-100.0, max_value=100.0, allow_nan=False, allow_infinity=False
@@ -282,3 +286,25 @@ def test_kmv_merge_equals_whole_for_any_partition(spark, values, nparts):
         return
     merged = kmv_merge_states(states, ["g"], k=k).collect()
     assert [r["kmin"] for r in merged] == [r["kmin"] for r in whole]
+
+
+# stored embeddings are float32; zero rows and repeated rows are drawn often
+F32 = st.floats(min_value=-1e3, max_value=1e3, width=32)
+ROW3 = st.one_of(st.just([0.0, 0.0, 0.0]), st.just([1.0, -2.0, 0.5]),
+                 st.lists(F32, min_size=3, max_size=3))
+
+
+@SLOW
+@given(mat=st.lists(ROW3, min_size=1, max_size=12),
+       q=st.one_of(st.just([0.0, 0.0, 0.0]), st.lists(FINITE, min_size=3, max_size=3)),
+       metric=st.sampled_from(V.METRICS), k=st.integers(1, 14))
+def test_driver_knn_equals_spark_knn(spark, mat, q, metric, k):
+    """The driver-side re-rank — ``knn_scores`` then ``top_k_order`` —
+    returns ``knn``'s ids in its order, with the same score bits."""
+    ids = [f"r{i:02d}" for i in range(len(mat))]
+    frame = local_frame(spark, list(zip(ids, mat)), "id string, embedding array<float>")
+    want = [(r["id"], struct.pack(">d", r["score"]))
+            for r in knn(frame, q, k, metric=metric).collect()]
+    scores = knn_scores(np.asarray(mat, dtype=np.float32), q, metric)
+    got = [(ids[j], struct.pack(">d", scores[j])) for j in top_k_order(scores, ids, k)]
+    assert got == want

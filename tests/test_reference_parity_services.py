@@ -132,7 +132,7 @@ def _ref_search(ref_stack, q, k, filters=None):
 def test_search_matches_reference(workload, ref_stack, our_engine):
     q = workload[2]["embedding"]
     want = _ref_search(ref_stack, q, 5)
-    got = our_engine.search("L", q, k=5).collect()
+    got = our_engine.search("L", q, k=5)
     assert [r["id"] for r in got] == [str(h["chunk_id"]) for h in want]
     for g, w in zip(got, want):
         assert g["score"] == pytest.approx(w["score"], abs=1e-9)
@@ -143,7 +143,7 @@ def test_postfilter_semantics_match_reference(workload, ref_stack, our_engine):
     # filter AFTER top-k on both sides: results may shrink below k, and the
     # surviving ids must be identical
     want = _ref_search(ref_stack, q, 8, filters={"tags": ["even"], "author": "alice"})
-    got = our_engine.search("L", q, k=8, tags=["even"], author="alice").collect()
+    got = our_engine.search("L", q, k=8, tags=["even"], author="alice")
     assert [r["id"] for r in got] == [str(h["chunk_id"]) for h in want]
     assert len(got) < 8  # the filter genuinely shrank the page on both sides
 
@@ -152,7 +152,7 @@ def test_doc_filter_matches_reference(workload, ref_stack, our_engine):
     q = workload[9]["embedding"]
     doc_b = ref_stack["doc_ids"]["B"]
     want = _ref_search(ref_stack, q, 10, filters={"doc_ids": [doc_b]})
-    got = our_engine.search("L", q, k=10, doc_ids=["B"]).collect()
+    got = our_engine.search("L", q, k=10, doc_ids=["B"])
     assert [r["id"] for r in got] == [str(h["chunk_id"]) for h in want]
     assert all(r["document_id"] == "B" for r in got)
 
@@ -180,7 +180,7 @@ def test_reupsert_rescores_on_both_sides(workload, ref_stack, our_engine):
     our_engine.upsert_chunks("L", our_engine.spark.createDataFrame(rows, CHUNK_SCHEMA))
 
     want = _ref_search(ref_stack, new_vec, 3)
-    got = our_engine.search("L", new_vec, k=3).collect()
+    got = our_engine.search("L", new_vec, k=3)
     assert str(want[0]["chunk_id"]) == got[0]["id"] == str(target["id"])
     assert got[0]["score"] == pytest.approx(want[0]["score"], abs=1e-9)
     # version bumped to 2 on our side (reference bumps via update_on_version)
@@ -214,7 +214,7 @@ def test_delete_document_cascades_on_both_sides(workload, ref_stack, our_engine)
     our_engine.delete_document("L", "B")
     q = workload[9]["embedding"]
     want = _ref_search(ref_stack, q, N)
-    got = our_engine.search("L", q, k=N).collect()
+    got = our_engine.search("L", q, k=N)
     assert [r["id"] for r in got] == [str(h["chunk_id"]) for h in want]
     assert all(r["document_id"] == "A" for r in got)
 

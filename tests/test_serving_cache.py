@@ -3,8 +3,12 @@ read from.
 
 An ``Engine`` caches the libraries rows per committed ``libraries`` version,
 and its ``IndexLifecycle`` caches each library's IVF/LSH model per
-``(version, built_at)``. In every case below the cached engine's
-answers must equal those of a fresh ``Engine`` on the same root. Also pins
+``(version, built_at)``. Its store holds the row snapshot of each small
+chunks partition per generation-relative path, and its lifecycle the
+posting ids of each IVF version's files, so these libraries are searched
+on the driver. In every case below the cached engine's answers must equal
+those of a fresh ``Engine`` on the same root, and where ``on_spark`` is
+passed, its own answers on the Spark path. Also pins
 ``IndexLifecycle.apply_delta``'s return value.
 """
 
@@ -48,11 +52,21 @@ def _search(fac: Facade, lib: str, q) -> dict:
     return fac.search(lib, {"query_embedding": [float(x) for x in q], "k": 5})
 
 
-def _assert_like_fresh(fac: Facade, lib: str, queries) -> None:
+def _assert_like_fresh(fac: Facade, lib: str, queries, on_spark=None) -> None:
     fresh = _fresh(fac)
     for q in queries:
-        assert _search(fac, lib, q) == _search(fresh, lib, q)
+        mine = _search(fac, lib, q)
+        assert mine == _search(fresh, lib, q)
+        if on_spark is not None:
+            with on_spark():
+                assert mine == _search(fac, lib, q)
     assert fac.get_library(lib) == fresh.get_library(lib)
+
+
+def _on_driver(fac: Facade, lib: str) -> bool:
+    """Whether the engine holds ``lib``'s snapshot for a driver search."""
+    dim = fac.engine._get_library_row(lib)["embedding_dim"]
+    return fac.engine.store.partition_rows("chunks", lib, dim)[0] is not None
 
 
 def _centroids(fac: Facade, lib: str) -> np.ndarray:
@@ -70,7 +84,7 @@ def vecs():
     return np.random.default_rng(7).standard_normal((96, DIM))
 
 
-def test_rolled_back_libraries_version_is_not_cached(fac, vecs):
+def test_rolled_back_libraries_version_is_not_cached(fac, vecs, on_spark):
     """A transaction stages libraries v+1 (library X) and rolls back; a
     committed write then reuses v+1 for library Y. X must be gone."""
     _library(fac, "A", vecs[:32])
@@ -87,12 +101,36 @@ def test_rolled_back_libraries_version_is_not_cached(fac, vecs):
         eng._get_library_row("X")
     assert eng._get_library_row("Y")["name"] == "Y"
     assert _search(fac, "X", vecs[0])["status"] == 404
-    _assert_like_fresh(fac, "Y", vecs[:1])
-    _assert_like_fresh(fac, "A", vecs[:3])
+    _assert_like_fresh(fac, "Y", vecs[:1], on_spark)
+    assert _on_driver(fac, "A")
+    _assert_like_fresh(fac, "A", vecs[:3], on_spark)
+
+
+def test_rolled_back_chunks_version_is_not_served(fac, vecs, on_spark):
+    """A transaction upserts chunk x (the write derives a snapshot for its
+    staged path) and rolls back; a committed upsert of y then reuses the
+    path. Searches must see y and never x."""
+    _library(fac, "C", vecs[:32])
+    _search(fac, "C", vecs[0])
+    eng = fac.engine
+    staged = eng.store.current_version("chunks") + 1
+    with pytest.raises(RuntimeError, match="roll back"):
+        with eng.write_lock, eng.store.transaction():
+            assert fac.upsert_chunk("C", "C-d0", _chunk("C-x", 0, vecs[40]))["status"] == 200
+            raise RuntimeError("roll back")
+    # the committed partition keeps its snapshot through the rollback
+    assert eng.store.cached_rows("chunks", "C") is not None
+    assert fac.upsert_chunk("C", "C-d0", _chunk("C-y", 0, vecs[41]))["status"] == 200
+    assert eng.store.current_version("chunks") == staged
+    assert _on_driver(fac, "C")
+    hits = {h["chunk_id"] for h in _search(fac, "C", vecs[40])["data"]["hits"]}
+    assert "C-x" not in hits
+    assert _search(fac, "C", vecs[41])["data"]["hits"][0]["chunk_id"] == "C-y"
+    _assert_like_fresh(fac, "C", vecs[38:42], on_spark)
 
 
 def test_read_overlapping_a_rolled_back_transaction_caches_committed_rows(
-        fac, monkeypatch):
+        fac, monkeypatch, on_spark):
     """Thread T1 stages libraries v+1 (library X) right after this thread's
     read has found no staged version; T1 then rolls back and a committed
     write reuses v+1 for library Y. The store's transaction is shared by
@@ -138,6 +176,7 @@ def test_read_overlapping_a_rolled_back_transaction_caches_committed_rows(
         eng._get_library_row("X")
     assert eng._get_library_row("Y")["name"] == "Y"
     assert fac.get_library("Y") == _fresh(fac).get_library("Y")
+    _assert_like_fresh(fac, "Y", [[1.0] * DIM], on_spark)
 
 
 def test_library_deleted_and_recreated_under_the_same_id(fac, vecs):
@@ -173,7 +212,7 @@ def test_update_index_config_and_rebuild_index(fac, vecs):
         "num_tables": 4, "hyperplanes_per_table": 3}})["status"] == 200
     assert fac.engine.indexes.current("U")["type"] == "lsh"
     _assert_like_fresh(fac, "U", vecs[:6])
-    hits = fac.engine.search("U", [float(x) for x in vecs[5]], k=3).collect()
+    hits = fac.engine.search("U", [float(x) for x in vecs[5]], k=3)
     assert hits[0]["id"] == "U-c5" and hits[0]["document_id"] == "U-d0"
     assert hits[0]["created_at"] is not None
 
@@ -196,7 +235,7 @@ def test_drop_then_rebuild_reuses_v1_with_new_centroids(fac, vecs):
     _assert_like_fresh(fac, "D", vecs[40:46])
 
 
-def test_sibling_engine_rebuild_is_seen_on_the_next_call(fac, vecs):
+def test_sibling_engine_rebuild_is_seen_on_the_next_call(fac, vecs, on_spark):
     """Engine A caches v=1; sibling B drops and rebuilds the index over
     changed data (v=1 again, new built_at), then changes its config."""
     _library(fac, "S", vecs[:48])
@@ -210,12 +249,33 @@ def test_sibling_engine_rebuild_is_seen_on_the_next_call(fac, vecs):
     assert sibling.rebuild_index("S")["status"] == 200
     assert fac.engine.indexes.current("S")["version"] == 1
     assert np.array_equal(_centroids(fac, "S"), _centroids(sibling, "S"))
-    _assert_like_fresh(fac, "S", vecs[44:50])
+    assert _on_driver(fac, "S")
+    _assert_like_fresh(fac, "S", vecs[44:50], on_spark)
     assert sibling.update_index_config("S", {"type": "ivf", "params": {
         "num_centroids": 6, "nprobe": 1}})["status"] == 200
     assert fac.get_library("S")["data"]["index_config"]["ivf"]["num_centroids"] == 6
     assert fac.engine._get_library_row("S")["index_config"]["ivf_num_centroids"] == 6
-    _assert_like_fresh(fac, "S", vecs[44:50])
+    _assert_like_fresh(fac, "S", vecs[44:50], on_spark)
+
+
+def test_sibling_engine_writes_are_seen_on_the_next_call(fac, vecs, on_spark):
+    """Engine A holds the snapshot and the posting ids; sibling B upserts
+    (appending posting files A never wrote) and deletes, with no rebuild.
+    A's next search loads B's partition and reads B's posting files."""
+    _library(fac, "P", vecs[:48])
+    for q in vecs[:3]:
+        _search(fac, "P", q)
+    sibling = _fresh(fac)
+    assert sibling.bulk_upsert_chunks("P", [
+        {**_chunk(f"P-n{i}", 100 + i, v), "document_id": "P-d0"}
+        for i, v in enumerate(vecs[48:56])])["status"] == 200
+    assert sibling.delete_chunk("P", "P-d0", "P-c3")["status"] == 204
+    assert _on_driver(fac, "P")
+    assert _search(fac, "P", vecs[50])["data"]["hits"][0]["chunk_id"] == "P-n2"
+    assert "P-c3" not in {
+        h["chunk_id"] for h in _search(fac, "P", vecs[3])["data"]["hits"]}
+    _assert_like_fresh(fac, "P", vecs[:6], on_spark)
+    _assert_like_fresh(fac, "P", vecs[48:56], on_spark)
 
 
 def test_selfcontained_version_hydrates_hits_until_first_mutation(fac, vecs):

@@ -91,7 +91,7 @@ def engine(spark, tmp_path_factory):
 
 
 def test_search_flat_hydrated(engine):
-    hits = engine.search("libA", [1.0, 0.0, 0.0, 0.0], k=2).collect()
+    hits = engine.search("libA", [1.0, 0.0, 0.0, 0.0], k=2)
     assert [r["id"] for r in hits] == ["c1", "c2"]
     assert hits[0]["text"] == "alpha"  # full-row hydration
     assert hits[0]["score"] == pytest.approx(1.0)
@@ -133,10 +133,10 @@ def test_cas_conflict_raises_and_preserves(engine):
 def test_index_swap_lsh_then_ivf(engine):
     d1 = engine.update_index_config("libA", IndexConfig("lsh", {"hyperplanes_per_table": 4}))
     assert (d1["type"], d1["version"]) == ("lsh", 1)
-    assert [r["id"] for r in engine.search("libA", [1.0, 0, 0, 0], k=1).collect()] == ["c1"]
+    assert [r["id"] for r in engine.search("libA", [1.0, 0, 0, 0], k=1)] == ["c1"]
     d2 = engine.update_index_config("libA", IndexConfig("ivf", {"num_centroids": 2}))
     assert (d2["type"], d2["version"]) == ("ivf", 2)
-    assert [r["id"] for r in engine.search("libA", [0.0, 1.0, 0, 0], k=1).collect()] == ["c2"]
+    assert [r["id"] for r in engine.search("libA", [0.0, 1.0, 0, 0], k=1)] == ["c2"]
 
 
 def test_unknown_index_type_rejected():
@@ -271,7 +271,7 @@ def test_upsert_forces_library_id(engine):
     row = eng.store.read("chunks").filter(F.col("id") == "cforce").collect()[0]
     assert row["library_id"] == "libA"
     # and it is searchable in libA
-    got = [r["id"] for r in eng.search("libA", [0.5, 0.5, 0.0, 0.0], k=1).collect()]
+    got = [r["id"] for r in eng.search("libA", [0.5, 0.5, 0.0, 0.0], k=1)]
     assert got == ["cforce"]
     eng.delete_document("libA", "docForce")  # leave libA as the fixture built it
 
@@ -302,7 +302,7 @@ def test_upsert_refreshes_live_lsh_index(engine):
             [("l2", "libLive", "docLive", 1, "late", [0.0, 0.0, 1.0, 0.0])],
         ),
     )
-    got = [r["id"] for r in eng.search("libLive", [0.0, 0.0, 1.0, 0.0], k=1).collect()]
+    got = [r["id"] for r in eng.search("libLive", [0.0, 0.0, 1.0, 0.0], k=1)]
     assert got == ["l2"]
     eng.delete_library("libLive")
 
@@ -985,7 +985,7 @@ def test_index_delta_deferred_until_transaction_commit(spark, tmp_path):
             "L", _chunk_rows(spark, [("c2", "L", "d", 2, "y", [0.0, 0.0, 1.0, 0.0])])
         )
     assert spark.read.parquet(os.path.join(vdir, "lsh_buckets")).count() > n_before
-    got = [r["id"] for r in eng.search("L", [0.0, 0.0, 1.0, 0.0], k=1).collect()]
+    got = [r["id"] for r in eng.search("L", [0.0, 0.0, 1.0, 0.0], k=1)]
     assert got == ["c2"]
 
 
@@ -1019,7 +1019,7 @@ def test_index_follows_deletes_and_moves(spark, tmp_path):
     eng.delete_chunk("A", "c0")
     eng.delete_chunk("A", "c1")
     assert eng.indexes.tombstone_count("A") == 2
-    hits = [r["id"] for r in eng.search("A", [1.0, 0.0, 0.0, 0.0], k=3).collect()]
+    hits = [r["id"] for r in eng.search("A", [1.0, 0.0, 0.0, 0.0], k=3)]
     assert len(hits) == 3 and not {"c0", "c1"} & set(hits)
 
     # 2 dead / 5 indexed → over a 0.2 threshold: maintenance rebuilds,
@@ -1036,7 +1036,7 @@ def test_index_follows_deletes_and_moves(spark, tmp_path):
 
     # move: dst index absorbs the rows without a rebuild, src tombstones
     eng.move_document("dA", "A", "B")
-    got = [r["id"] for r in eng.search("B", [0.0, 0.0, 1.0, 0.0], k=1).collect()]
+    got = [r["id"] for r in eng.search("B", [0.0, 0.0, 1.0, 0.0], k=1)]
     assert got == ["c4"]
     assert eng.indexes.tombstone_count("A") == 3  # c2, c3, c4 departed
 

@@ -120,3 +120,27 @@ def test_dots_const_matrix_empty_matrix_is_empty_double_array(spark):
         out = df.select(V.dots_const_matrix("v", mat).alias("d"))
         assert out.schema["d"].dataType.simpleString() == "array<double>"
         assert out.collect()[0]["d"] == []
+
+
+def test_const_array_bit_identical_to_per_element_literals(spark):
+    """The query literal is one parsed expression; each element must be
+    the double ``F.lit(float(x))`` gives, down to the sign of zero, the
+    smallest subnormal and the largest finite values."""
+    import struct
+
+    vals = [-0.0, 0.0, 5e-324, -5e-324, 1e-07, 2.5e-310, 1.7e308, -1.7e308,
+            1.7976931348623157e308, 1e16, 0.1, -3.5e5, 123456789.123]
+    old = spark.range(1).select(
+        F.array(*[F.lit(float(x)) for x in vals]).alias("a")).first()["a"]
+    new = spark.range(1).select(V.const_array(vals).alias("a")).first()["a"]
+
+    def bits(xs):
+        return [struct.pack(">d", x) for x in xs]
+
+    assert bits(new) == bits(old) == bits(vals)
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+def test_const_array_rejects_nonfinite(bad):
+    with pytest.raises(ValueError):
+        V.const_array([1.0, bad])

@@ -1,7 +1,8 @@
 """The request-size write path: checks over the collected request rows,
-id sidecars derived by OR, the IVF delta assigned on the driver and the
-upsert reply built without a read-back. Each is held equal to the
-distributed computation it replaces."""
+id sidecars derived by OR or from a derived partition snapshot, the IVF
+delta assigned on the driver and the upsert reply built without a
+read-back. Each is held equal to the distributed computation it
+replaces."""
 
 from __future__ import annotations
 
@@ -249,7 +250,8 @@ def test_sidecars_equal_exact_build(spark, tmp_path_factory, steps):
     metadata updates, chunk deletes and with-chunks creates. After every
     step each live sidecar is the exact build's. Library A starts just
     under the first size_bits boundary, and the first step grows it past,
-    so every sequence takes the exact build there once."""
+    so every sequence takes the exact build there once; every delete
+    builds its sidecar from the held snapshot's ids."""
     fac = Facade(Engine(spark, str(tmp_path_factory.mktemp("sidecars"))))
     eng = fac.engine
     for lib in "AB":
@@ -280,6 +282,10 @@ def test_sidecars_equal_exact_build(spark, tmp_path_factory, steps):
             versions[doc] += 1
         elif kind == "delete":
             for k in keys:
+                # the writes derived the partition's snapshot, so the delete's
+                # exact sidecar is built from the snapshot's remaining ids
+                assert (eng.store.cached_rows("chunks", lib) is not None
+                        or lib not in eng.store.partition_blooms("chunks"))
                 assert fac.delete_chunk(lib, doc, f"{lib}{k}")["status"] == 204
         else:
             out = fac.create_document_with_chunks(lib, {

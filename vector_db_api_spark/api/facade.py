@@ -444,7 +444,7 @@ class Facade:
                 "hits": [
                     {"chunk_id": r["id"], "document_id": r["document_id"],
                      "score": r["score"], "text": r["text"]}
-                    for r in hits.collect()
+                    for r in hits
                 ]
             })
         except EngineError as e:

@@ -18,25 +18,33 @@ is a real rehash, not a silent no-op.
 from __future__ import annotations
 
 import functools
+import logging
 import math
 import threading
+import time
 import uuid
 from collections.abc import Sequence
 from datetime import datetime
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+import numpy as np
+
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructType, TimestampType
 
 from vector_db_api_spark.api.errors import ConflictError, NotFoundError, ValidationError
 from vector_db_api_spark.functions import vector as V
-from vector_db_api_spark.lifecycle import IndexConfig, IndexLifecycle
+from vector_db_api_spark.lifecycle import DEFAULT_LAYOUT, IndexConfig, IndexLifecycle
 from vector_db_api_spark.operators import mutations as M
-from vector_db_api_spark.operators.knn import apply_post_filters
+from vector_db_api_spark.operators.knn import (
+    apply_post_filters, knn_scores, row_post_filter, top_k_order,
+)
 from vector_db_api_spark.operators.listing import list_page, page_stats
 from vector_db_api_spark.session import local_frame
 from vector_db_api_spark.sources import bloom as B
-from vector_db_api_spark.sources.store import CHUNKS_DDL, EntityStore
+from vector_db_api_spark.sources.store import CHUNKS_DDL, EntityStore, PartitionRows
+
+_log = logging.getLogger(__name__)
 
 #: a chunk as a client sends it: the chunks table without its bookkeeping
 #: columns (created_at, updated_at, version)
@@ -667,15 +675,34 @@ class Engine:
         # upsert on a 100 TB table is a KB-scale write (the reference's
         # per-library write lock, services/chunk.py:87-88, as IO scope).
         merged = M.upsert(self._library_chunks(library_id), incoming)
-        echo = None
-        if echo_id is not None:
-            echo = Observation()
-            mine = F.col("id") == echo_id
-            merged = merged.observe(echo, *[
+        # the stamps the MERGE wrote on one of its rows, observed during the
+        # write: the echo's, and — all rows of one MERGE share one
+        # current_timestamp() — the stamp of the partition's next snapshot
+        # (EntityStore.partition_rows), which a batch of distinct ids derives
+        derivable = rows is not None and bool(ids) and len(ids) == len(rows)
+        stamp_id = echo_id
+        if stamp_id is None and derivable:
+            stamp_id = ids[0]
+        stamps = derive = None
+        if stamp_id is not None:
+            stamps = Observation()
+            mine = F.col("id") == stamp_id
+            merged = merged.observe(stamps, *[
                 F.max(F.when(mine, F.col(c))).alias(c)
                 for c in ("created_at", "updated_at", "version")
-            ])
-        self.store.write_partitions("chunks", merged, [library_id], adds=ids)
+            ], F.max(F.when(mine, F.unix_micros("updated_at"))).alias("stamp"))
+        if derivable:
+            def derive(prev: PartitionRows | None) -> PartitionRows:
+                if prev is None:
+                    prev = PartitionRows.empty(dim)
+                return prev.merged([
+                    (r["id"], r["document_id"], r["position"], r["text"],
+                     *((None, None) if (m := r["metadata"]) is None
+                       else (m["tags"], m["author"])), r["embedding"])
+                    for r in rows
+                ], stamps.get["stamp"])
+        self.store.write_partitions(
+            "chunks", merged, [library_id], adds=ids, rows=derive)
         # keep the live ANN index fresh: hash/assign ONLY the written batch.
         # Deferred through after_commit: inside a transaction
         # (Facade.create_document_with_chunks, which composes document
@@ -688,11 +715,13 @@ class Engine:
         self.store.after_commit(
             lambda: self.indexes.apply_delta(library_id, incoming, rows=rows)
         )
-        if echo is None:
+        if echo_id is None:
             return n, None
         out = next(r for r in rows if r["id"] == echo_id).asDict(recursive=True)
         del out["embedding"]
-        return n, {**out, **echo.get}
+        observed = dict(stamps.get)
+        del observed["stamp"]
+        return n, {**out, **observed}
 
     def _check_rows(
         self, library_id: str, rows: list, dim: int, orphan_error: type
@@ -853,16 +882,27 @@ class Engine:
         """DELETE chunk (routers/chunks.py:95-107 + services/
         chunk.py:119-139): silent no-op when the chunk is missing or belongs
         to a different library; otherwise a copy-on-write rewrite of that
-        one partition."""
-        absent = (
-            self._library_chunks(library_id)
-            .filter(F.col("id") == chunk_id)
-            .isEmpty()
-        )
+        one partition.
+
+        When the partition's snapshot is held (``EntityStore.cached_rows``),
+        the presence check reads it and the write derives the next one,
+        whose ids build the exact sidecar: two jobs fewer."""
+        held = self.store.cached_rows("chunks", library_id)
+        if held is not None:
+            absent = chunk_id not in held.ids
+        else:
+            absent = (
+                self._library_chunks(library_id)
+                .filter(F.col("id") == chunk_id)
+                .isEmpty()
+            )
         if absent:
             return  # reference returns silently — services/chunk.py:120-122
         new_part = M.delete_chunks(self._library_chunks(library_id), [chunk_id])
-        self.store.write_partitions("chunks", new_part, [library_id])
+        self.store.write_partitions(
+            "chunks", new_part, [library_id],
+            rows=lambda prev: None if prev is None else prev.without([chunk_id]),
+        )
         # the reference's index.remove (services/chunk.py:119-139): record
         # the dead id so maintenance can compact the index once deletes
         # pile up (search is already delete-consistent — live re-rank)
@@ -952,10 +992,18 @@ class Engine:
         tags: Sequence[str] | None = None,
         author: str | None = None,
         created_after: datetime | None = None,
-    ) -> DataFrame:
+    ) -> list[Row]:
         """The flagship composed query (services/search.py:18-75):
         404 → 422 dim → 422 k/metric → index dispatch → top-k → hydrate full
-        chunk rows → post-filter AFTER top-k (may return < k rows)."""
+        chunk rows → post-filter AFTER top-k (may return < k rows). The hits
+        come back as collected ``Row``s.
+
+        A flat or IVF library whose chunks partition the driver holds
+        (``EntityStore.partition_rows``: a small one) is searched there, in
+        no Spark job; every other search, LSH and in-place serving included,
+        is planned on Spark and collected. Both return the same rows, scores
+        bit for bit. One log line a call says which ran."""
+        t0 = time.perf_counter()
         lib = self._get_library_row(library_id)
         if len(query_embedding) != lib["embedding_dim"]:
             raise ValidationError(
@@ -969,6 +1017,59 @@ class Engine:
         if metric not in METRICS:
             raise ValidationError(f"metric must be one of {METRICS}")
 
+        query = [float(x) for x in query_embedding]
+        desc = self.indexes.current(library_id)
+        keep = row_post_filter(doc_ids, tags, author, created_after)
+        snap = how = None
+        if keep is not None and (desc is None or desc["type"] == "flat" or (
+                desc["type"] == "ivf"
+                and desc.get("layout_serving", DEFAULT_LAYOUT) == DEFAULT_LAYOUT)):
+            snap, how = self.store.partition_rows(
+                "chunks", library_id, lib["embedding_dim"])
+            if snap is None:  # the posting ids only serve a held snapshot
+                self.indexes.drop_posting_ids(library_id)
+        if snap is None:
+            out = self._spark_search(
+                library_id, query, k, metric, doc_ids, tags, author, created_after
+            ).collect()
+        else:
+            out = self._driver_search(library_id, desc, snap, query, k, metric, keep)
+        _log.info(
+            "search library=%s index=%s served=%s snapshot=%s k=%d hits=%d ms=%.1f",
+            library_id, "flat" if desc is None else desc["type"],
+            "spark" if snap is None else "driver", how or "-", k, len(out),
+            1e3 * (time.perf_counter() - t0),
+        )
+        return out
+
+    def _driver_search(
+        self, library_id: str, desc: dict | None, snap: PartitionRows,
+        query: list[float], k: int, metric: str, keep,
+    ) -> list[Row]:
+        """The hits of a held snapshot: every embedded row is a candidate
+        for flat, for IVF those whose id is in a probed cell's postings (the
+        Spark path's semi-join); scored by ``knn_scores``, the top ``k``
+        taken by ``top_k_order``, then post-filtered by ``keep``."""
+        cand = snap.embedded
+        if desc is not None and desc["type"] == "ivf":
+            posted = self.indexes.probed_ids(library_id, desc, query)
+            cand = cand & np.fromiter(
+                (i in posted for i in snap.ids), bool, len(snap.ids))
+        idx = np.flatnonzero(cand)
+        scores = knn_scores(snap.emb[idx], query, metric)
+        ids = [snap.ids[i] for i in idx]
+        hit = Row("id", *self.HIT_COLS, "score")
+        ts = TimestampType()
+        out = []
+        for j in top_k_order(scores, ids, k):
+            h = hit(ids[j], library_id, *snap.hits[idx[j]], float(scores[j]))
+            if keep(h):  # created_at in microseconds, then as collect() gives it
+                out.append(hit(*h[:7], ts.fromInternal(h[7]), h[8]))
+        return out
+
+    def _spark_search(
+        self, library_id, query, k, metric, doc_ids, tags, author, created_after
+    ) -> DataFrame:
         chunks = self._library_chunks(library_id).select(
             "id", "library_id", "document_id", "position", "text",
             F.col("metadata.tags").alias("tags"),
@@ -980,7 +1081,7 @@ class Engine:
         # dict-lookup-and-skip (services/search.py:46-49) — and no second
         # scan of the partition re-attaches them
         hits = self.indexes.search(
-            library_id, chunks, list(query_embedding), k, metric=metric,
+            library_id, chunks, query, k, metric=metric,
             extra_cols=self.HIT_COLS,
         )
         return apply_post_filters(

@@ -126,6 +126,18 @@ def _double_sql(x) -> str:
     return repr(f) + "D"
 
 
+def const_array(values) -> Column:
+    """``array<double>`` of constant ``values``, built as ONE parsed
+    expression: the same doubles as ``F.array(*[F.lit(float(x)) ...])``
+    (see :func:`_double_sql`), in 3 py4j calls instead of about four per
+    element (263 calls at d=64, 3,079 at d=768). Non-finite values are
+    rejected. No values give ``F.array()``, as the per-element build
+    did."""
+    if len(values) == 0:
+        return F.array()
+    return F.expr("array(%s)" % ",".join(_double_sql(x) for x in values))
+
+
 def dots_const_matrix(col_name: str, matrix) -> Column:
     """``array<double>`` of sequential-fold dots of column ``col_name``
     with each ROW of a constant matrix — the same values as
@@ -181,7 +193,7 @@ def cosine_similarity_const(vec: ColumnOrName, qvec) -> Column:
     if qn == 0.0:
         return F.lit(0.0)  # zero query → 0 for every row (utils.py:10-15)
     e = _c(vec)
-    q = F.array(*[F.lit(float(x)) for x in qvec])
+    q = const_array(qvec)
     ne = norm(e)
     return F.when(ne == 0.0, F.lit(0.0)).otherwise(dot(e, q) / (ne * F.lit(qn)))
 
@@ -190,5 +202,4 @@ def similarity_const(metric: str, vec: ColumnOrName, qvec) -> Column:
     """Metric dispatch against a constant query (driver-known vector)."""
     if metric == "cosine":
         return cosine_similarity_const(vec, qvec)
-    q = F.array(*[F.lit(float(x)) for x in qvec])
-    return similarity(metric, vec, q)
+    return similarity(metric, vec, const_array(qvec))

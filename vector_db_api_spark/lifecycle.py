@@ -22,7 +22,7 @@ from __future__ import annotations
 import os
 import time
 from dataclasses import dataclass, field
-
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -125,6 +125,9 @@ class IndexLifecycle:
         self._fs.makedirs(root)
         # library_id → ((version, built_at), IVF or LSH model)
         self._loaded_cache: dict[str, tuple] = {}
+        # library_id → ((version, built_at), {(cell, posting file name): ids})
+        # of the IVF versions searched on the driver (probed_ids)
+        self._postings: dict[str, tuple] = {}
 
     # -- catalog -------------------------------------------------------------
 
@@ -195,6 +198,83 @@ class IndexLifecycle:
         if not cells:
             return local_frame(self.spark, [], ddl)
         return self.spark.read.schema(ddl).option("basePath", adir).parquet(*cells)
+
+    def _cell_files(self, adir: str, cell: int) -> list[str]:
+        """Names of the posting files of one cell directory (none when it
+        does not exist), skipping what Spark skips: ``_``/``.`` names."""
+        cdir = os.path.join(adir, f"centroid_id={cell}")
+        if not self._fs.isdir(cdir):
+            return []
+        return [f for f in self._fs.listdir(cdir) if not f.startswith(("_", "."))]
+
+    def _posting_files(self, library_id: str, desc: dict) -> dict | None:
+        """The posting-id cache of the version ``desc`` names, when one is
+        held (see :meth:`probed_ids`)."""
+        hit = self._postings.get(library_id)
+        key = (desc["version"], desc.get("built_at"))
+        return hit[1] if hit is not None and hit[0] == key else None
+
+    def probed_ids(
+        self, library_id: str, desc: dict, query_vec: list[float]
+    ) -> frozenset:
+        """The ids in the posting files of the cells ``query_vec`` probes on
+        the IVF version ``desc`` — the candidates before the semi-join with
+        the live chunks, stale postings included.
+
+        The probed cell directories are listed on every call, as the Spark
+        path lists them, so files another engine appended are seen. Each
+        file's ids are read once and kept per ``(cell, file name)``: Spark
+        never rewrites a part file it appended, and a rebuild writes a new
+        version. Files not seen yet are read in one job; the first call on
+        a version reads every cell's, so later probes of other cells find
+        them held. :meth:`_append_postings` adds this engine's deltas as it
+        writes them."""
+        cells = self._loaded(library_id, desc).probe_centroids(query_vec)
+        if not cells:
+            return frozenset()
+        adir = os.path.join(self._version_dir(library_id, desc), "ivf_assignments")
+        files = self._posting_files(library_id, desc)
+        if files is None:
+            files = {}
+            self._postings[library_id] = (
+                (desc["version"], desc.get("built_at")), files)
+            every = sorted(
+                int(d.split("=", 1)[1]) for d in self._fs.listdir(adir)
+                if d.startswith("centroid_id=")
+            ) if self._fs.isdir(adir) else []
+            files.update(self._read_postings(
+                adir, [(c, f) for c in every for f in self._cell_files(adir, c)]))
+        listed = [(c, f) for c in cells for f in self._cell_files(adir, c)]
+        unseen = [cf for cf in listed if cf not in files]
+        if unseen:
+            files.update(self._read_postings(adir, unseen))
+        return frozenset().union(*(files[cf] for cf in listed))
+
+    def drop_posting_ids(self, library_id: str) -> None:
+        """Forget the posting ids :meth:`probed_ids` keeps for a library
+        whose search went to Spark: they are read again, in one job, when
+        a snapshot of it is held once more."""
+        self._postings.pop(library_id, None)
+
+    def _read_postings(self, adir: str, names: list) -> dict:
+        """{(cell, file name): ids} of the given posting files, in one job.
+        The files are read in groups of at most 32, each one scan Spark
+        lists on the driver (more paths than
+        ``parallelPartitionDiscovery.threshold`` would list in a job of its
+        own), and the scans are unioned."""
+        if not names:
+            return {}
+        paths = [os.path.join(adir, f"centroid_id={c}", f) for c, f in names]
+        scans = [
+            self.spark.read.schema("id string, centroid_id int")
+            .option("basePath", adir).parquet(*paths[i:i + 32])
+            .select("id", "centroid_id", F.col("_metadata.file_name").alias("f"))
+            for i in range(0, len(paths), 32)
+        ]
+        out: dict[tuple, set] = {cf: set() for cf in names}
+        for r in reduce(DataFrame.unionByName, scans).collect():
+            out[(r["centroid_id"], r["f"])].add(r["id"])
+        return {cf: frozenset(ids) for cf, ids in out.items()}
 
     # -- build / publish ------------------------------------------------------
 
@@ -296,6 +376,12 @@ class IndexLifecycle:
             "layout_serving": layout if config.type != "flat" else DEFAULT_LAYOUT,
         }
         self._flip(library_id, desc)
+        if config.type == "ivf":
+            # what _loaded would read back: ivf_centroids stores these
+            # doubles exactly, and from_frame normalizes them again
+            self._loaded_cache[library_id] = (
+                (version, desc["built_at"]), IVFIndex(ivf.centroids, nprobe=p["nprobe"])
+            )
         return desc
 
     def _downgrade_serving(self, library_id: str, desc: dict) -> None:
@@ -380,7 +466,8 @@ class IndexLifecycle:
         if desc["type"] == "ivf" and rows is not None:
             ddl = posting_ddl(batch, id_col, vec_col, include_vectors)
             return self._append_postings(
-                vdir, model, rows, ddl, id_col, vec_col, include_vectors
+                vdir, model, rows, ddl, id_col, vec_col, include_vectors,
+                files=self._posting_files(library_id, desc),
             )
         embedded = batch.filter(F.col(vec_col).isNotNull())
         appended = Observation()
@@ -412,10 +499,17 @@ class IndexLifecycle:
         id_col: str,
         vec_col: str,
         include_vectors: bool,
+        files: dict | None = None,
     ) -> int:
         """The IVF delta of driver-held ``rows``: cells assigned with the
         executors' kernel, posting rows appended as one local relation (one
-        file per cell, as the one-partition executor batch wrote them)."""
+        file per cell, as the one-partition executor batch wrote them).
+
+        ``files``: the version's posting-id cache (:meth:`probed_ids`), to
+        which each touched cell's new file is added with the ids written to
+        it. The file is the one name its cell's listing gained across the
+        append; a cell that gained more (a sibling appended too) is left for
+        the next search to read."""
         embedded = [r for r in rows if r[vec_col] is not None]
         keep, cells = model.assign_rows([r[vec_col] for r in embedded])
         kept = (r for r, k in zip(embedded, keep) if k)
@@ -423,12 +517,19 @@ class IndexLifecycle:
             (r[id_col], int(c), *([r[vec_col]] if include_vectors else []))
             for r, c in zip(kept, cells)
         ]
-        if postings:
-            local_frame(self.spark, postings, ddl).coalesce(1).write.mode(
-                "append"
-            ).partitionBy("centroid_id").parquet(
-                os.path.join(vdir, "ivf_assignments")
-            )
+        if not postings:
+            return 0
+        adir = os.path.join(vdir, "ivf_assignments")
+        touched = sorted({p[1] for p in postings})
+        before = {c: set(self._cell_files(adir, c)) for c in touched} if (
+            files is not None) else {}
+        local_frame(self.spark, postings, ddl).coalesce(1).write.mode(
+            "append"
+        ).partitionBy("centroid_id").parquet(adir)
+        for c, known in before.items():
+            new = set(self._cell_files(adir, c)) - known
+            if len(new) == 1:
+                files[(c, new.pop())] = frozenset(p[0] for p in postings if p[1] == c)
         return len(postings)
 
     def remove(self, library_id: str, ids: list | DataFrame) -> int:
@@ -515,6 +616,7 @@ class IndexLifecycle:
         this, a deleted library's index versions leak forever. Returns
         whether anything existed."""
         self._loaded_cache.pop(library_id, None)
+        self._postings.pop(library_id, None)
         d = self._lib_dir(library_id)
         if not self._fs.isdir(d):
             return False

@@ -28,17 +28,13 @@ from datetime import datetime
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from vector_db_api_spark.functions import vector as V
 from vector_db_api_spark.operators.topk import topk, topk_per_group
 from vector_db_api_spark.session import local_frame
-
-
-def _query_literal(query_vec: Sequence[float]) -> Column:
-    return F.array(*[F.lit(float(x)) for x in query_vec])
 
 
 def knn(
@@ -66,7 +62,7 @@ def knn(
         if qn == 0.0:
             scored = embedded.withColumn("score", F.lit(0.0))
         else:
-            q = _query_literal(query_vec)
+            q = V.const_array(query_vec)
             scored = embedded.withColumn("__ne", V.norm(e)).withColumn(
                 "score",
                 F.when(F.col("__ne") == 0.0, F.lit(0.0)).otherwise(
@@ -74,10 +70,98 @@ def knn(
                 ),
             )
     else:
-        q = V.as_double_array(_query_literal(query_vec))
+        q = V.as_double_array(V.const_array(query_vec))
         scored = embedded.withColumn("score", V.similarity(metric, e, q))
     scored = scored.select(id_col, *extra_cols, "score")
     return topk(scored, [F.desc("score"), F.col(id_col).asc()], k)
+
+
+def knn_scores(emb, query_vec: Sequence[float], metric: str = "cosine"):
+    """The scores :func:`knn` gives the rows of a float32 matrix held on the
+    driver, bit for bit: each metric is the same left fold over the
+    dimension in float64 as the ``aggregate``/``zip_with`` expressions,
+    one IEEE operation at a time (``acc = acc + e[:, j] * q[j]``, no fused
+    multiply-add, no pairwise summation), the query norm is
+    ``V.const_norm``'s, and a zero norm scores 0.0 under cosine."""
+    import numpy as np
+
+    q = [float(x) for x in query_vec]
+    e = np.asfortranarray(emb, dtype=np.float64)
+
+    def fold(term) -> np.ndarray:
+        acc = np.zeros(e.shape[0])
+        for j in range(len(q)):
+            acc = acc + term(e[:, j], q[j])
+        return acc
+
+    if metric == "cosine":
+        qn = V.const_norm(q)
+        if qn == 0.0:
+            return np.zeros(e.shape[0])
+        dot = fold(lambda x, y: x * y)
+        ne = np.sqrt(fold(lambda x, _: x * x))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            return np.where(ne == 0.0, 0.0, dot / (ne * qn))
+    if metric == "euclidean":
+        return 1.0 / (1.0 + np.sqrt(fold(lambda x, y: (x - y) * (x - y))))
+    if metric == "dot_product":
+        return fold(lambda x, y: x * y)
+    raise ValueError(f"Unknown metric: {metric!r}; expected one of {V.METRICS}")
+
+
+def top_k_order(scores, ids: Sequence, k: int) -> list[int]:
+    """Positions of the top ``k`` of ``scores`` in :func:`knn`'s order —
+    score descending with NaN first, as Spark sorts doubles, then id
+    ascending (NULL first). Only the rows scoring at least the k-th best
+    are sorted in Python."""
+    import numpy as np
+
+    s = np.where(np.isnan(scores), np.inf, scores)
+    cand = range(len(s))
+    if len(s) > k:
+        cand = np.flatnonzero(s >= -np.partition(-s, k - 1)[k - 1])
+
+    def key(i):
+        x, id_ = float(scores[i]), ids[i]
+        return (x == x, -x if x == x else 0.0, id_ is not None, id_ or "")
+
+    return sorted(cand, key=key)[:k]
+
+
+def row_post_filter(
+    doc_ids: Sequence[str] | None = None,
+    tags: Sequence[str] | None = None,
+    author: str | None = None,
+    created_after: datetime | None = None,
+):
+    """:func:`apply_post_filters` as a predicate over one hit held on the
+    driver (a mapping of the hit columns, ``created_at`` in microseconds
+    since the epoch), with SQL's three-valued semantics: a NULL column
+    fails every filter on it. None when a filter value is one the driver
+    would not compare as Spark does — only strings, and a ``datetime`` for
+    ``created_after``, are taken."""
+    from pyspark.sql.types import TimestampType
+
+    if (tags is not None and not all(isinstance(t, str) for t in tags)) or (
+        author is not None and not isinstance(author, str)
+    ) or (created_after is not None and not isinstance(created_after, datetime)):
+        return None
+    docs = None if doc_ids is None else {str(d) for d in doc_ids}
+    wanted = None if tags is None else set(tags)
+    # F.lit(datetime)'s conversion: a naive value is local time
+    after = None if created_after is None else TimestampType().toInternal(created_after)
+
+    def keep(h) -> bool:
+        return (
+            (docs is None or h["document_id"] in docs)
+            and (wanted is None or (h["tags"] is not None
+                                    and not wanted.isdisjoint(h["tags"])))
+            and (author is None or h["author"] == author)
+            and (after is None or (h["created_at"] is not None
+                                   and h["created_at"] > after))
+        )
+
+    return keep
 
 
 def empty_hits(

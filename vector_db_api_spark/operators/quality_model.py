@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from vector_db_api_spark.functions import hashing as H
 from vector_db_api_spark.functions import text as T
+from vector_db_api_spark.functions import vector as V
 
 
 def _tokens(text_col: str):
@@ -63,7 +64,7 @@ def score_quality_linear(
 
     Empty/null-text docs carry no features and score ``bias`` exactly —
     gate them with a length filter upstream if they must not pass."""
-    w = F.array(*[F.lit(float(x)) for x in weights])
+    w = V.const_array(weights)
     d = len(weights)
     toks = _tokens(text_col)
     terms = F.transform(toks, lambda t: F.element_at(w, bucket_of(t, d) + 1))

@@ -34,16 +34,10 @@ Giant clusters are the skew risk; the paper's answer (and ours) is a larger
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vector_db_api_spark.functions import vector as V
-
-
-def _const_vec(vals: Sequence[float]) -> F.Column:
-    return F.array(*[F.lit(float(x)) for x in vals])
 
 
 def assign_diversity(

@@ -52,16 +52,22 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import time
-from collections.abc import Sequence
+from collections import OrderedDict
+from collections.abc import Callable, Sequence
 from contextlib import contextmanager
 from functools import reduce
+from typing import NamedTuple
 from urllib.parse import unquote
+
+import numpy as np
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from vector_db_api_spark.session import local_frame
+from vector_db_api_spark.sources import bloom as B
 from vector_db_api_spark.sources import fsio
 
 BASE_METADATA = (
@@ -95,6 +101,115 @@ TABLE_DDL = {"libraries": LIBRARIES_DDL, "documents": DOCUMENTS_DDL, "chunks": C
 PARTITION_COLS = {"chunks": ["library_id"], "documents": ["library_id"]}
 
 _ALL = "__ALL__"  # manifest key for non-partitioned tables: whole generation
+
+#: bytes all cached chunk-partition snapshots (:meth:`EntityStore.
+#: partition_rows`) may hold on the driver together; the least recently
+#: used go first, and a larger snapshot stays on Spark. Set where reading a
+#: snapshot stops paying for itself when it is evicted before its next
+#: search (tools/snapshot_crossover.py, BENCH_SCALE.md, 4 vCPUs): 10,000
+#: rows of 1,536-d, 60 MiB, load and search in 543 ms against a 592 ms
+#: Spark search; 10,000 of 3,072-d, 118 MiB, in 1,034 against 954 ms
+SNAPSHOT_BYTES = 64 << 20
+
+
+class PartitionRows(NamedTuple):
+    """One chunks partition as a driver-side search reads it: each row's
+    id, its hit columns ``(document_id, position, text, tags, author,
+    created_at)`` with ``created_at`` in microseconds since the epoch, and
+    the embeddings as stored, one float32 row each (zeros where a row has
+    none, which ``embedded`` marks). Ids are unique and not NULL, every
+    embedding has the library's dim and only finite values: a partition
+    that breaks any of this is never held (see :meth:`load`)."""
+
+    ids: list
+    hits: list
+    emb: np.ndarray
+    embedded: np.ndarray
+
+    @classmethod
+    def empty(cls, dim: int) -> "PartitionRows":
+        return cls([], [], np.zeros((0, dim), np.float32), np.zeros(0, bool))
+
+    @classmethod
+    def load(cls, frame: DataFrame, dim: int) -> "PartitionRows | None":
+        """The snapshot of a partition's rows (one job), or None when they
+        break the invariants above."""
+        t = frame.select(
+            "id", "document_id", "position", "text",
+            F.col("metadata.tags").alias("tags"),
+            F.col("metadata.author").alias("author"),
+            F.unix_micros("created_at").alias("created_at"), "embedding",
+        ).toArrow()
+        ids = t.column("id").to_pylist()
+        if None in ids or len(set(ids)) != len(ids):
+            return None
+        emb = t.column("embedding").combine_chunks()
+        embedded = ~np.asarray(emb.is_null(), dtype=bool)
+        values = emb.flatten()
+        lengths = np.asarray(emb.value_lengths().fill_null(dim))
+        if values.null_count or (lengths != dim).any():
+            return None
+        mat = np.zeros((len(ids), dim), np.float32)
+        mat[embedded] = values.to_numpy().reshape(-1, dim)
+        if not np.isfinite(mat).all():
+            return None
+        cols = [t.column(c).to_pylist() for c in (
+            "document_id", "position", "text", "tags", "author", "created_at")]
+        return cls(ids, list(zip(*cols)), mat, embedded)
+
+    @staticmethod
+    def base_bytes(n: int, dim: int) -> int:
+        """What :meth:`nbytes` counts of ``n`` rows before their texts:
+        the matrix and ~100 bytes a row of Python objects."""
+        return 4 * n * dim + 100 * n
+
+    def nbytes(self) -> int:
+        """About what the snapshot holds: :meth:`base_bytes` and its texts."""
+        texts = sum(len(h[2]) for h in self.hits if h[2] is not None)
+        return self.base_bytes(*self.emb.shape) + texts
+
+    def without(self, ids) -> "PartitionRows":
+        """The partition after ``ids`` are deleted."""
+        gone = set(ids)
+        keep = [i for i, x in enumerate(self.ids) if x not in gone]
+        return PartitionRows(
+            [self.ids[i] for i in keep], [self.hits[i] for i in keep],
+            self.emb[keep], self.embedded[keep],
+        )
+
+    def merged(self, rows: list, stamp: int) -> "PartitionRows":
+        """The partition after a MERGE of ``rows`` — ``(id, document_id,
+        position, text, tags, author, embedding)`` with distinct ids —
+        stamped ``stamp`` (:func:`operators.mutations.upsert`): a replaced
+        id keeps its ``created_at`` unless that is NULL, every other row
+        takes the stamp."""
+        new = {r[0] for r in rows}
+        keep = [i for i, x in enumerate(self.ids) if x not in new]
+        created = {x: h[5] for x, h in zip(self.ids, self.hits) if x in new}
+        mat = np.zeros((len(rows), self.emb.shape[1]), np.float32)
+        for j, r in enumerate(rows):
+            if r[6] is not None:
+                mat[j] = r[6]
+        c = [created.get(r[0]) for r in rows]
+        return PartitionRows(
+            [self.ids[i] for i in keep] + [r[0] for r in rows],
+            [self.hits[i] for i in keep]
+            + [(*r[1:6], stamp if s is None else s) for r, s in zip(rows, c)],
+            np.concatenate([self.emb[keep], mat]),
+            np.concatenate([self.embedded[keep],
+                            np.array([r[6] is not None for r in rows], bool)]),
+        )
+
+
+def _fits(n: int, dim: int) -> bool:
+    """Whether a partition of ``n`` rows of ``dim``-wide embeddings may be
+    one the driver holds and searches (:meth:`EntityStore.partition_rows`):
+    at most ``bloom.MAX_DRIVER_IDS`` rows — at d=64 a snapshot of 10,000
+    loads and searches in 165–177 ms against a 293–330 ms Spark search, one
+    of 40,000 in 443–529 ms against 476–484 (BENCH_SCALE.md) — and the part
+    of its size known before a load within SNAPSHOT_BYTES. The whole size
+    is checked once the rows are read (:meth:`EntityStore._hold`)."""
+    return n <= B.MAX_DRIVER_IDS and PartitionRows.base_bytes(n, dim) <= SNAPSHOT_BYTES
 
 
 def _ddl_field_names(ddl: str) -> list[str]:
@@ -135,6 +250,13 @@ class EntityStore:
         # (rolled-back staged paths are dropped, _remove_versions_above)
         self._bloom_cache: dict[tuple[str, str], dict | None] = {}
         self._id_cache: dict[tuple[str, str], frozenset] = {}
+        # the same key → [PartitionRows or None (not servable: its rows
+        # break PartitionRows' invariants or alone exceed SNAPSHOT_BYTES),
+        # how it was made: "loaded"/"derived", "hit" once served, its
+        # nbytes()], in LRU order under SNAPSHOT_BYTES; searches read it
+        # without the engine's write lock
+        self._rows: OrderedDict[tuple[str, str], list] = OrderedDict()
+        self._rows_lock = threading.Lock()
         self._fs.makedirs(root)
 
     # -- pointer management -------------------------------------------------
@@ -320,6 +442,7 @@ class EntityStore:
         counts: dict,
         old: dict,
         adds: list | None,
+        rows: Callable | None = None,
     ) -> None:
         """``_ID_BLOOM.json`` sidecar for every just-written partition dir
         (see sources/bloom.py); untouched partitions keep theirs because the
@@ -328,12 +451,23 @@ class EntityStore:
         only added or replaced ``adds`` and the previous sidecar keeps its
         size, the new one is that sidecar OR the added ids' bits, built on
         the driver; otherwise one column-pruned pass over the written ids
-        builds it exactly."""
-        from vector_db_api_spark.sources import bloom as B
-
+        builds it exactly — unless ``rows`` derived the partition's new
+        snapshot (see :meth:`write_partitions`), whose ids it then hashes
+        on the driver."""
         for part, rel in fresh.items():
             pdir = os.path.join(self._table_dir(table), rel)
             n = counts[part] if part in counts else self._ids(pdir).count()
+            derived = None
+            if rows is not None:
+                # an absent partition derives from nothing (None); a present
+                # one only from its held snapshot
+                prev = self._held_rows(table, old[part]) if part in old else None
+                if part not in old or prev is not None:
+                    derived = rows(prev)
+                if derived is not None and len(derived.ids) == n:
+                    self._put_rows((table, rel), derived, "derived")
+                else:
+                    derived = None
             bloom = known = None
             if adds is not None:
                 if part in old:
@@ -343,15 +477,22 @@ class EntityStore:
                     prev, known = B.empty_bloom(n), frozenset()
                 if prev is not None:
                     bloom = B.add_ids(prev, adds, n)
+            if bloom is None and derived is not None:
+                bloom = B.add_ids(B.empty_bloom(n), derived.ids, n)
             if bloom is None:
                 bloom = B.build_bloom(self._ids(pdir), "id", n)
             B.write_bloom(pdir, bloom, fs=self._fs)
             self._bloom_cache[(table, rel)] = B.decode(bloom)
             if known is not None:
                 self._id_cache[(table, rel)] = known | frozenset(adds)
-            if part in old:  # superseded: one entry per live partition
-                self._bloom_cache.pop((table, old[part]), None)
-                self._id_cache.pop((table, old[part]), None)
+
+    def _forget(self, keys: list) -> None:
+        """Drop every cache entry of superseded partition paths."""
+        with self._rows_lock:
+            for key in keys:
+                self._bloom_cache.pop(key, None)
+                self._id_cache.pop(key, None)
+                self._rows.pop(key, None)
 
     def _ids(self, pdir: str) -> DataFrame:
         # declared schema: inferring it would open a footer in a job
@@ -361,8 +502,6 @@ class EntityStore:
         """The decoded sidecar of a generation-relative partition path,
         cached: the path is immutable once written (see
         :meth:`_remove_versions_above` for the one exception)."""
-        from vector_db_api_spark.sources import bloom as B
-
         key = (table, rel)
         if key not in self._bloom_cache:
             self._bloom_cache[key] = B.load_bloom(
@@ -404,6 +543,90 @@ class EntityStore:
             )
         return self._id_cache[key]
 
+    # -- partition row snapshots -------------------------------------------
+
+    def partition_rows(
+        self, table: str, part: str, dim: int
+    ) -> tuple[PartitionRows | None, str | None]:
+        """``(snapshot, how)`` of one committed partition for a search on the
+        driver: ``how`` is ``"loaded"`` when this call read it (one job),
+        ``"derived"`` when a write derived it and this is its first use,
+        else ``"hit"``. ``(None, None)`` leaves the search to Spark: the
+        partition's sidecar is missing or counts more than
+        ``bloom.MAX_DRIVER_IDS`` rows, its snapshot would not fit
+        SNAPSHOT_BYTES, its rows break :class:`PartitionRows`' invariants,
+        or an open transaction has staged the table (its rows are this
+        writer's until the commit). A snapshot found too large only once
+        read (its texts count too) answers the search that read it, and its
+        path is marked, so later searches go to Spark without reading it.
+
+        Keyed like the sidecars by the generation-relative path, which
+        names immutable files: a sibling engine's write publishes a new
+        path, and the next search loads it. Only committed paths are
+        loaded, so no entry can outlive a rollback, and a load is held only
+        while the catalog still names its path."""
+        if self.staged(table):
+            return None, None
+        v = self.committed_version(table)
+        manifest = {} if v is None else self.load_manifest(table, v)
+        if _ALL in manifest:
+            return None, None
+        rel = manifest.get(str(part))
+        if rel is None:  # no partition: the library holds no rows
+            return (PartitionRows.empty(dim), "hit") if _fits(0, dim) else (None, None)
+        bloom = self._cached_bloom(table, rel)
+        if bloom is None or not _fits(bloom["n"], dim):
+            return None, None
+        key = (table, rel)
+        with self._rows_lock:
+            entry = self._rows.get(key)
+            if entry is not None:
+                self._rows.move_to_end(key)
+                how, entry[1] = entry[1], "hit"
+                return (entry[0], how) if entry[0] is not None else (None, None)
+        pdir = os.path.join(self._table_dir(table), rel)
+        rows = PartitionRows.load(
+            self.spark.read.schema(TABLE_DDL[table]).parquet(pdir), dim
+        )
+        with self._rows_lock:
+            # a write that superseded the path during the load forgets it
+            # after its flip (write_partitions), so it is not held again
+            if self.committed_version(table) == v:
+                self._hold(key, rows, "hit")
+        return (rows, "loaded") if rows is not None else (None, None)
+
+    def cached_rows(self, table: str, part: str) -> PartitionRows | None:
+        """The held snapshot of ``part`` as this writer reads it (staged
+        versions included), or None; never loads."""
+        v = self.current_version(table)
+        rel = None if v is None else self.load_manifest(table, v).get(str(part))
+        return self._held_rows(table, rel)
+
+    def _held_rows(self, table: str, rel: str | None) -> PartitionRows | None:
+        with self._rows_lock:
+            entry = self._rows.get((table, rel))
+        return None if entry is None else entry[0]
+
+    def _put_rows(self, key: tuple, rows: PartitionRows | None, how: str) -> None:
+        with self._rows_lock:
+            self._hold(key, rows, how)
+
+    def _hold(self, key: tuple, rows: PartitionRows | None, how: str) -> None:
+        """Hold ``rows`` under ``key`` (the caller holds ``_rows_lock``),
+        then evict the least recently used snapshots past SNAPSHOT_BYTES.
+        A snapshot that alone exceeds it is held as None, not servable;
+        such marks take no bytes and are not evicted."""
+        size = 0 if rows is None else rows.nbytes()
+        if size > SNAPSHOT_BYTES:
+            rows, size = None, 0
+        self._rows[key] = [rows, how, size]
+        self._rows.move_to_end(key)
+        total = sum(e[2] for e in self._rows.values())
+        for old in [k for k, e in self._rows.items() if e[2]]:
+            if total <= SNAPSHOT_BYTES:
+                break
+            total -= self._rows.pop(old)[2]
+
     # -- write --------------------------------------------------------------
 
     def write(self, table: str, df: DataFrame) -> int:
@@ -437,6 +660,7 @@ class EntityStore:
         df: DataFrame,
         touched: list,
         adds: Sequence[str] | None = None,
+        rows: Callable[[PartitionRows | None], PartitionRows | None] | None = None,
     ) -> int:
         """Partition-scoped copy-on-write publish — the O(touched) mutation
         path. ``df`` is the complete NEW content of the ``touched``
@@ -454,6 +678,12 @@ class EntityStore:
         id sidecar is derived from the previous one on the driver (see
         sources/bloom.py) instead of by a pass over the written ids.
 
+        ``rows``: how the one touched partition's snapshot
+        (:meth:`partition_rows`) follows from its previous one — None for
+        an absent partition — when that is held; the result is held for the
+        new path if its row count is the write's. The partition's exact
+        sidecar is then built from its ids, with no job.
+
         Safety: rows landing outside ``touched`` would silently vanish on
         the next read (their partition entry still points at old data), so
         the written generation is checked against ``touched`` and the
@@ -464,8 +694,8 @@ class EntityStore:
         if not parts:
             raise ValueError(f"table {table!r} is not partitioned; use write()")
         touched_keys = sorted({str(t) for t in touched})
-        if adds is not None and len(touched_keys) != 1:
-            raise ValueError("adds needs exactly one touched partition")
+        if (adds is not None or rows is not None) and len(touched_keys) != 1:
+            raise ValueError("adds and rows need exactly one touched partition")
         cur = self.current_version(table)
         nxt = 1 if cur is None else cur + 1
         old = {} if cur is None else self.load_manifest(table, cur)
@@ -492,12 +722,18 @@ class EntityStore:
         n = counts.get
         self._write_partition_blooms(
             table, fresh, {t: n[str(i)] for i, t in enumerate(touched_keys)},
-            old, adds,
+            old, adds, rows,
         )
         manifest = {k: p for k, p in old.items() if k not in touched_keys}
         manifest.update(fresh)
         self._write_manifest(table, nxt, manifest)
         self._publish(table, nxt)
+        # the superseded paths' entries go once the catalog names the new
+        # ones: a rollback keeps the old paths live, and a search that
+        # resolved an old path before the flip holds nothing after it (see
+        # partition_rows)
+        superseded = [(table, old[t]) for t in touched_keys if t in old]
+        self.after_commit(lambda: self._forget(superseded))
         return nxt
 
     def after_commit(self, fn) -> None:
@@ -665,22 +901,24 @@ class EntityStore:
                         self._fs.remove(os.path.join(mdir, name))
                         if int(core) not in removed:
                             removed.append(int(core))
-        # Drop cached sidecars and id sets of the removed generations: the
-        # cache key (table, 'v=N/part') assumes the path is immutable, but a
-        # rolled-back txn deletes staged v=N and the NEXT write recreates
-        # the same rel with different rows — a stale cached bloom would then
-        # yield false negatives and silently bypass the global-id 409 check,
-        # a stale id set would pass an orphan chunk.
+        # Drop cached sidecars, id sets and row snapshots of the removed
+        # generations: the cache key (table, 'v=N/part') assumes the path is
+        # immutable, but a rolled-back txn deletes staged v=N and the NEXT
+        # write recreates the same rel with different rows — a stale cached
+        # bloom would then yield false negatives and silently bypass the
+        # global-id 409 check, a stale id set would pass an orphan chunk, a
+        # stale snapshot would answer searches with rolled-back rows.
         if removed:
             prefixes = tuple(f"v={v}/" for v in removed)
             exact = {f"v={v}" for v in removed}
-            for cache in (self._bloom_cache, self._id_cache):
-                for key in [
-                    k for k in cache
-                    if k[0] == table
-                    and (k[1].startswith(prefixes) or k[1] in exact)
-                ]:
-                    del cache[key]
+            with self._rows_lock:
+                for cache in (self._bloom_cache, self._id_cache, self._rows):
+                    for key in [
+                        k for k in cache
+                        if k[0] == table
+                        and (k[1].startswith(prefixes) or k[1] in exact)
+                    ]:
+                        del cache[key]
         return sorted(removed)
 
     def compact(self, table: str) -> int:

@@ -3814,7 +3814,7 @@ def q_crud_engine_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     eng.delete_document("A", "dA1")
     n_tomb_before = eng.indexes.tombstone_count("A")
     assert n_tomb_before == 3, n_tomb_before
-    live = [r["id"] for r in eng.search("A", [0.5, 1.0, 0.0, 0.0], k=3).collect()]
+    live = [r["id"] for r in eng.search("A", [0.5, 1.0, 0.0, 0.0], k=3)]
     assert len(live) == 3 and "a0" not in live and not any(
         i.startswith("b") for i in live
     ), live  # full k from live rows — no phantom, no shortfall
@@ -3822,7 +3822,7 @@ def q_crud_engine_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert rep["indexes"]["A"]["rebuilt"] is True, rep
     n_tomb_after = eng.indexes.tombstone_count("A")
     eng.move_document("dA0", "A", "B")
-    dst = [r["id"] for r in eng.search("B", [1.0, 1.0, 0.0, 0.0], k=3).collect()]
+    dst = [r["id"] for r in eng.search("B", [1.0, 1.0, 0.0, 0.0], k=3)]
     assert sorted(dst) == ["a1", "a2", "a3"], dst  # served WITHOUT a rebuild
     return eng.store.read("chunks").select(
         "library_id", "position",
@@ -3887,7 +3887,7 @@ def q_crud_engine_selfcontained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def snap(step: str, k: int) -> None:
         desc = eng.indexes.current("S")
-        for h in eng.search("S", q, k=k).collect():
+        for h in eng.search("S", q, k=k):
             out.append((step, h["id"], float(h["score"]),
                         desc["layout"], desc["layout_serving"]))
 
